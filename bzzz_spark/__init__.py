@@ -1,8 +1,7 @@
 """bzzz_spark — a PySpark-native inverted-index + BM25 search engine.
 
 A from-scratch rebuild of the capabilities of jackdoe/bzzz (a Clojure/Java
-HTTP wrapper around Lucene 4.10 — see /root/reference) re-expressed on the
-Spark execution model:
+HTTP wrapper around Lucene 4.10) re-expressed on the Spark execution model:
 
 - SPIMI-style per-partition index build over transcript tables
   (``bzzz_spark.build``): tokenize with a pinned StandardAnalyzer-equivalent
@@ -14,9 +13,11 @@ Spark execution model:
   analog of Lucene's per-leaf search + priority-queue merge.
 - The reference's query DSL (term/bool/range/match-all/filtered/
   constant-score/dis-max/wildcard/fuzzy/query-parser), facets, paging,
-  sorts, and highlighting (``bzzz_spark.query``, ``bzzz_spark.functions``).
-- Training-data pipeline operators: dedup (exact/minhash-LSH/simhash/
-  n-gram-jaccard), embedding similarity search, text analysis
+  sorts, and highlighting (``bzzz_spark.query``).
+- In-process serving of the on-disk index, one shard or many
+  (``bzzz_spark.serve``).
+- Training-data pipeline operators: C4/Gopher cleaning, PII masking,
+  sampling, sequence packing, bigram-LM perplexity, multimodal plumbing
   (``bzzz_spark.functions``).
 
 Everything is DataFrame/SQL-first; Python appears only in vectorized

@@ -37,6 +37,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bzzz_spark import BM25_B, BM25_K1
 from bzzz_spark.build.indexer import (
     BzzzIndex,
     IndexConfig,
@@ -78,6 +79,21 @@ def _save_manifest(out_dir: str, m: dict) -> None:
     os.replace(tmp, p)  # atomic on POSIX
 
 
+def _manifest_config(m: dict) -> dict:
+    """The manifest's IndexConfig dict.  Older manifests also record
+    k1/b; the block-max bounds on disk were scored with those, and the
+    kernels score with the BM25 constants, so any other value would make
+    pruning unsafe."""
+    cfg_d = dict(m["config"])
+    for key, const in (("k1", BM25_K1), ("b", BM25_B)):
+        if cfg_d.pop(key, const) != const:
+            raise ValueError(
+                f"index manifest has BM25 {key}={m['config'][key]}; this "
+                f"engine scores only with {key}={const} — rebuild the index"
+            )
+    return cfg_d
+
+
 def build_and_write(
     table: DataFrame,
     out_dir: str,
@@ -102,7 +118,7 @@ def build_and_write(
     # read_index reconstructs a config matching the on-disk postings
     cfg_d = cfg.to_dict()
     cfg_d["merge_mode"] = "shuffle"
-    if "config" in m and m["config"] != cfg_d:
+    if "config" in m and _manifest_config(m) != cfg_d:
         raise ValueError(
             "resume config mismatch: manifest has a different IndexConfig — "
             "delete the output dir or pass the original config"
@@ -183,7 +199,7 @@ def build_and_write(
         )
         postings = encode_postings(rows, n_docs, avgdl, cfg)
         chunk_path = os.path.join(out_dir, "postings", f"chunk={ci}")
-        # serving-oriented file layout, measured in tools/cold_io_bench:
+        # serving-oriented file layout, measured on cold reads:
         # - range-partition by term_id so each FILE holds a contiguous
         #   term slice — a term query's isin filter then skips whole
         #   files via their footer stats instead of reading a slice of
@@ -263,10 +279,10 @@ def write_index(
 
     This is the fast-build → serve handoff: build_index's aligned merge
     is the quick path (no checkpointing), and this writes its frames
-    with the serving-oriented file discipline measured in
-    tools/cold_io_bench — postings range-partitioned + sorted by
-    term_id with small row groups (tight min/max stats → a term query
-    reads only its own blocks' bytes), docs sorted by docid, the
+    with the serving-oriented file discipline measured on cold reads —
+    postings range-partitioned + sorted by term_id with small row
+    groups (tight min/max stats → a term query reads only its own
+    blocks' bytes), docs sorted by docid, the
     dictionary sorted by term for pruned lookups.  The reference's
     analog is Lucene's commit + forceMerge producing the segment files
     its searchers then mmap (src/bzzz/index_store.clj).
@@ -274,9 +290,9 @@ def write_index(
     Serving writes re-segment to FAT segments by default: the Spark
     path wants many small segments (one narrow task each), but the
     in-process serving loop pays a fixed numpy-kernel cost per segment
-    — tools/serve_segsize_bench measured 512k-doc segments halving hot
-    p50 vs the 32k build default (0.206 → 0.097 s at 10× base).  The
-    relabel is pure metadata (segment := docid // new_size groups whole
+    — 512k-doc segments measured half the hot p50 of the 32k build
+    default (0.206 → 0.097 s at 10× base).  The relabel is pure
+    metadata (segment := docid // new_size groups whole
     old segments; blocks never span segments) and is only valid for the
     docid//segment_size numbering, so aligned-merge indexes (whose docs
     carry explicit segment ids) keep their layout.  Pass
@@ -347,7 +363,7 @@ def load_config(out_dir: str) -> IndexConfig:
     m = _load_manifest(out_dir)
     if not m.get("complete"):
         raise ValueError(f"index at {out_dir} is incomplete — resume the build")
-    cfg_d = dict(m["config"])
+    cfg_d = _manifest_config(m)
     cfg_d["key_cols"] = tuple(cfg_d["key_cols"])
     # manifests written before merge_mode was persisted are always
     # shuffle-built (the checkpoint path never used aligned numbering)

@@ -42,7 +42,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from bzzz_spark import BM25_B, BM25_K1
 from bzzz_spark.analysis.tokenizer import standard_tokenize
 from bzzz_spark.build.codec import encode_varints, varint_lengths as _varint_lengths
 from bzzz_spark.build.ids import assign_sequential_ids
@@ -78,8 +77,6 @@ def postings_schema(store_positions: bool, docvalue_cols: tuple = ()) -> str:
 
 @dataclass
 class IndexConfig:
-    k1: float = BM25_K1
-    b: float = BM25_B
     block_size: int = 128
     segment_size: int = 1 << 16
     num_partitions: int | None = None
@@ -127,8 +124,8 @@ class IndexConfig:
 
     def to_dict(self) -> dict:
         return {
-            "k1": self.k1, "b": self.b, "block_size": self.block_size,
-            "segment_size": self.segment_size, "store_text": self.store_text,
+            "block_size": self.block_size, "segment_size": self.segment_size,
+            "store_text": self.store_text,
             "key_cols": list(self.key_cols), "text_col": self.text_col,
             "ts_col": self.ts_col, "merge_mode": self.merge_mode,
             "store_positions": self.store_positions,
@@ -297,44 +294,22 @@ def build_docs(table: DataFrame, cfg: IndexConfig) -> DataFrame:
 
 
 def build_tf(
-    docs: DataFrame, mode: str = "arrayagg", with_positions: bool = False,
-    dv_cols: tuple = (),
+    docs: DataFrame, with_positions: bool = False, dv_cols: tuple = (),
 ) -> DataFrame:
     """(term, docid, dl, tf[, positions]) — the SPIMI local-combining step.
 
-    mode="arrayagg" (default): tf is computed INSIDE each doc's token
-    array with JVM array functions — a narrow, shuffle-free stage.
-    Per-doc cost is O(distinct × len); for transcript-length docs
-    (tens of tokens) this is far cheaper than shuffling ~one row per
-    (term, doc) pair: the explode→groupBy alternative shuffles a
-    near-unique key set (measured 3× slower end-to-end at 2M turns).
-
-    mode="shuffle": classic explode + partial-agg + shuffle — keep for
-    corpora with very long documents, where O(distinct × len) per doc
-    would degenerate.
+    tf is computed INSIDE each doc's token array with JVM array
+    functions — a narrow, shuffle-free stage.  Per-doc cost is
+    O(distinct × len); for transcript-length docs (tens of tokens) this
+    is far cheaper than shuffling ~one row per (term, doc) pair: the
+    explode→groupBy alternative shuffles a near-unique key set
+    (measured 3× slower end-to-end at 2M turns).
 
     with_positions adds a sorted ``positions: array<int>`` column (the
     0-based token offsets of the term within the doc; size == tf) —
-    still entirely JVM-side in both modes.
+    still entirely JVM-side.
     """
     dv = list(dv_cols)
-    if mode == "shuffle":
-        if with_positions:
-            return (
-                docs.select(
-                    "docid", "dl", *dv,
-                    F.posexplode("tokens").alias("pos", "term"),
-                )
-                .groupBy("term", "docid", "dl", *dv)
-                .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
-                .withColumn("tf", F.size("positions").cast("long"))
-                .select("term", "docid", "dl", "tf", "positions", *dv)
-            )
-        return (
-            docs.select("docid", "dl", *dv, F.explode("tokens").alias("term"))
-            .groupBy("term", "docid", "dl", *dv)
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
     toks = F.col("tokens")
     if with_positions:
         idxs = F.sequence(F.lit(0), F.size(toks) - 1)
@@ -448,7 +423,6 @@ def _make_block_encoder(n_docs: int, avgdl: float, cfg: IndexConfig):
     bytes deterministic.
     """
     block_size = cfg.block_size
-    k1, b = cfg.k1, cfg.b
     store_pos = cfg.store_positions
     dv_cols = list(cfg.docvalue_cols)
 
@@ -483,7 +457,7 @@ def _make_block_encoder(n_docs: int, avgdl: float, cfg: IndexConfig):
         # maxima via reduceat
         dl_int = dl.astype(np.int64)
         dl_eff = np.where(dl_int == 0, avgdl, dl).astype(np.float64)
-        scores = score_np(tf, dl_eff, dfreq.astype(np.float64), n_docs, avgdl, k1, b)
+        scores = score_np(tf, dl_eff, dfreq.astype(np.float64), n_docs, avgdl)
         block_max_score = np.maximum.reduceat(scores, bstarts)
         block_max_tf = np.maximum.reduceat(tf, bstarts)
 

@@ -27,8 +27,7 @@ Spark primitives and a pinned, oracle-checkable smoothing rule:
 Kneser-Ney itself is deliberately NOT replicated: its backoff weights
 make the score a function of global discount statistics that shift
 with every corpus increment, while add-k over counts is exactly
-reproducible in ANSI SQL — the DuckDB oracle in __spark_entry__.py
-(entry ``d_ppl``) mirrors this module term for term.  The *signal*
+reproducible in ANSI SQL or plain Python, term for term.  The *signal*
 (relative ranking of clean vs junk text) is what the pipeline filters
 on, and that survives the smoothing swap.
 

@@ -4,9 +4,9 @@ The reference never configures a Similarity, so Lucene 4.10 scores with
 classic TF-IDF (reference: src/java/bzzz/java/query/ExpressionContext.java:263-270
 holds its only explicit scoring math).  Our build spec pins modern BM25
 (k1=1.2, b=0.75) instead; this module is the ONE place the formula
-lives.  Engine kernels (numpy), the pure-Python oracle, the Spark
-Column expression, and the DuckDB oracle-SQL snippet are all generated
-from the same definition:
+lives.  The build's block-max bounds (numpy), the kernels, the
+pure-Python oracle and the Spark Column expressions all use the same
+definition:
 
     idf(N, df)        = ln(1 + (N - df + 0.5) / (df + 0.5))
     tfc(tf, dl, avgdl) = tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl))
@@ -40,23 +40,17 @@ def idf_np(N: float, df: np.ndarray) -> np.ndarray:
     return np.log(1.0 + (N - df + 0.5) / (df + 0.5))
 
 
-def tf_component_np(
-    tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float = BM25_K1, b: float = BM25_B
-) -> np.ndarray:
-    return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+def tf_component_np(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
+    return tf * (BM25_K1 + 1.0) / (
+        tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)
+    )
 
 
 def score_np(
-    tf: np.ndarray,
-    dl: np.ndarray,
-    df: float,
-    N: float,
-    avgdl: float,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
+    tf: np.ndarray, dl: np.ndarray, df: float, N: float, avgdl: float
 ) -> np.ndarray:
     return idf_np(N, np.asarray(df, dtype=np.float64)) * tf_component_np(
-        tf.astype(np.float64), dl.astype(np.float64), avgdl, k1, b
+        tf.astype(np.float64), dl.astype(np.float64), avgdl
     )
 
 
@@ -90,17 +84,3 @@ def score_col(
     )
     return idf_c * tfc
 
-
-# ANSI-SQL fragment (DuckDB + Spark SQL) over columns tf, dl, df and
-# scalars n (corpus size), avgdl — identical formula for the oracle.
-SCORE_SQL = (
-    "ln(1.0 + (({n}) - ({df}) + 0.5) / (({df}) + 0.5)) * "
-    "(({tf}) * {k1_plus_1} / (({tf}) + {k1} * (1.0 - {b} + {b} * ({dl}) / ({avgdl}))))"
-)
-
-
-def score_sql(tf: str, dl: str, df: str, n: str, avgdl: str) -> str:
-    return SCORE_SQL.format(
-        tf=tf, dl=dl, df=df, n=n, avgdl=avgdl,
-        k1=BM25_K1, k1_plus_1=BM25_K1 + 1.0, b=BM25_B,
-    )

@@ -45,16 +45,6 @@ def haversine_m(
     return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(a))
 
 
-# ANSI-SQL mirror (DuckDB + Spark SQL) of haversine_m for oracle checks.
-def haversine_sql(lat: str, lon: str, clat: float, clon: float) -> str:
-    return (
-        f"2.0 * {EARTH_RADIUS_M} * asin(sqrt("
-        f"pow(sin(radians(({clat}) - ({lat})) / 2.0), 2) + "
-        f"cos(radians({lat})) * cos(radians({clat})) * "
-        f"pow(sin(radians(({clon}) - ({lon})) / 2.0), 2)))"
-    )
-
-
 def _bbox_cond(lat: Column, lon: Column, clat: float, clon: float,
                radius_m: float) -> Column:
     """Cheap bounding-box pre-filter around a circle — the codegen'd

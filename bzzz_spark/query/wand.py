@@ -1534,12 +1534,6 @@ def _any_plan(
     return KernelPlan(kernel, tuple(tids))
 
 
-def _any_topk(
-    index: BzzzIndex, keys: list[str], boost: float, k: int
-) -> DataFrame:
-    return _run_plan(index, _any_plan(index, keys, boost, k))
-
-
 def _multiterm_plan(
     index: BzzzIndex, node: ast.Query, k: int
 ) -> KernelPlan:

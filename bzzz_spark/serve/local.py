@@ -22,7 +22,7 @@ Division of labor at 100 TB:
     stay on disk and are fetched per-query via parquet row-group
     pruning on term_id (postings files are written term_id-sorted, so
     a query reads only its own terms' blocks — the same pruned-bytes
-    property tools/cold_io_bench.py measures for the Spark reader).
+    property the Spark reader gets from the same layout).
   * Scatter/gather across shards: serve.scatter.ShardedIndex — N
     LocalIndex shards (built with GLOBAL stats) + exact k-way merge,
     one LocalIndex = one shard, mirroring one reference node.

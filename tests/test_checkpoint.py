@@ -1,11 +1,13 @@
 """Resumable checkpointed build (FIXTURES.md §5 resume invariance;
 reference analog: rollback-on-error loop, core_test.clj:699-714)."""
 
+import json
 import math
+import os
 
 import pytest
 
-from bzzz_spark.build.checkpoint import build_and_write, read_index
+from bzzz_spark.build.checkpoint import build_and_write, load_config, read_index
 from bzzz_spark.build.indexer import IndexConfig, build_index
 from bzzz_spark.fixtures import to_spark
 from bzzz_spark.query import ast
@@ -119,6 +121,55 @@ def test_config_mismatch_rejected(spark, small_pdf, tmp_path):
     build_and_write(df, out, IndexConfig(**CFG), n_chunks=2, max_chunks=1)
     with pytest.raises(ValueError, match="config mismatch"):
         build_and_write(df, out, IndexConfig(block_size=32, segment_size=64))
+
+
+def _set_manifest_bm25(out, k1, b):
+    """Rewrite the manifest as older builds wrote it: with k1/b keys."""
+    p = os.path.join(out, "manifest.json")
+    with open(p) as f:
+        m = json.load(f)
+    m["config"].update(k1=k1, b=b)
+    with open(p, "w") as f:
+        json.dump(m, f)
+
+
+def test_manifest_with_bm25_constants_opens(spark, small_pdf, small_oracle, tmp_path):
+    """Manifests that still record k1=1.2/b=0.75 resume and open."""
+    from bzzz_spark.serve.local import LocalIndex, local_search
+
+    df = to_spark(spark, small_pdf)
+    out = str(tmp_path / "idx")
+    build_and_write(df, out, IndexConfig(**CFG), n_chunks=2, max_chunks=1)
+    _set_manifest_bm25(out, 1.2, 0.75)
+    assert build_and_write(df, out, IndexConfig(**CFG), n_chunks=2)["complete"]
+    _set_manifest_bm25(out, 1.2, 0.75)
+    cfg_d = IndexConfig(**CFG, merge_mode="shuffle").to_dict()
+    assert load_config(out).to_dict() == cfg_d
+    q = ast.Term("data")
+    want = [d for d, _ in small_oracle.search(q, size=5)]
+    got = search(read_index(spark, out), q, size=5).collect()
+    assert [r["docid"] for r in got] == want
+    assert local_search(LocalIndex(out), q, size=5)["docid"].tolist() == want
+
+
+def test_manifest_with_other_bm25_rejected(spark, small_pdf, tmp_path):
+    """Block-max bounds baked with another k1/b would disagree with the
+    kernels' scores: such an index neither resumes nor opens."""
+    out = str(tmp_path / "idx")
+    os.makedirs(out)
+    cfg_d = IndexConfig(**CFG, merge_mode="shuffle").to_dict()
+
+    def write_manifest(complete):
+        with open(os.path.join(out, "manifest.json"), "w") as f:
+            json.dump({"stages": {}, "chunks": {}, "complete": complete,
+                       "config": {**cfg_d, "k1": 2.0, "b": 0.75}}, f)
+
+    write_manifest(complete=False)
+    with pytest.raises(ValueError, match="k1=2.0"):
+        build_and_write(to_spark(spark, small_pdf), out, IndexConfig(**CFG))
+    write_manifest(complete=True)
+    with pytest.raises(ValueError, match="k1=2.0"):
+        load_config(out)
 
 
 def test_per_segment_metrics(spark, small_pdf, tmp_path):

@@ -1,31 +1,14 @@
-"""Training-data pipeline operators: dedup tiers, ANN, text analysis,
-multimodal plumbing, explain."""
+"""Multimodal plumbing, explain and facets."""
 
 import math
 
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from bzzz_spark.functions.dedup import (
-    exact_duplicates,
-    minhash_lsh_pairs,
-    minhash_signatures,
-    ngram_jaccard_pairs,
-    simhash,
-    simhash_pairs,
-)
 from bzzz_spark.functions.multimodal import (
     attach_payload,
     extract_features,
     frame_sample,
 )
-from bzzz_spark.functions.similarity import (
-    brute_force_topk,
-    cosine_near_dup_pairs,
-    ivf_topk,
-)
-from bzzz_spark.functions.text import text_profile
 
 
 @pytest.fixture(scope="module")
@@ -41,176 +24,6 @@ def docs_df(spark):
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
 
-
-def test_exact_duplicates(docs_df):
-    groups = exact_duplicates(docs_df).collect()
-    assert len(groups) == 1
-    g = groups[0]
-    assert g["canonical_id"] == 0 and g["n_dups"] == 3
-    assert g["ids"] == [0, 1, 2]
-
-
-def test_ngram_jaccard_near_dup(docs_df):
-    pairs = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(docs_df, threshold=0.3).collect()
-    }
-    assert (0, 1) in pairs and pairs[(0, 1)] == 1.0
-    assert (0, 3) in pairs and 0.3 <= pairs[(0, 3)] < 1.0
-    assert not any(4 in p for p in pairs)
-
-
-def test_minhash_signatures_identical_for_dups(docs_df):
-    sigs = {r["id"]: r["sig"] for r in minhash_signatures(docs_df).collect()}
-    assert sigs[0] == sigs[1] == sigs[2]
-    assert sigs[0] != sigs[4]
-
-
-def test_minhash_lsh_pairs_contain_dups(docs_df):
-    pairs = {(r["id_a"], r["id_b"])
-             for r in minhash_lsh_pairs(docs_df, num_hashes=8, bands=4).collect()}
-    assert {(0, 1), (0, 2), (1, 2)} <= pairs
-
-
-def test_simhash_near_dup_distance(docs_df):
-    sigs = {r["id"]: r["simhash"] for r in simhash(docs_df).collect()}
-    assert sigs[0] == sigs[1]
-    ham03 = bin(sigs[0] ^ sigs[3]).count("1")
-    ham04 = bin(sigs[0] ^ sigs[4]).count("1")
-    assert ham03 < ham04  # near-dup closer than unrelated doc
-    pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in simhash_pairs(docs_df, max_hamming=8).collect()}
-    assert pairs.get((0, 1)) == 0
-
-
-@pytest.fixture(scope="module")
-def emb_df(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    base = rng.standard_normal((20, 8)).astype("float32")
-    base[1] = base[0] + 0.001  # near-dup pair (0, 1)
-    rows = [(i, [float(x) for x in base[i]]) for i in range(20)]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_brute_force_topk_self_first(emb_df):
-    qs = [(0, [float(x) for x in emb_df.filter("vec_id=0").first()["embedding"]])]
-    rows = brute_force_topk(emb_df, qs, k=3).collect()
-    assert [r["vec_id"] for r in rows][:2] == [0, 1]  # self then near-dup
-    assert rows[0]["cos"] == 1.0 and rows[0]["rank"] == 1
-
-
-def test_ivf_fullprobe_equals_bruteforce(emb_df):
-    q = [(0, [float(x) for x in emb_df.filter("vec_id=0").first()["embedding"]])]
-    bf = [(r["vec_id"], r["cos"]) for r in brute_force_topk(emb_df, q, k=5).collect()]
-    ivf = [(r["vec_id"], r["cos"]) for r in
-           ivf_topk(emb_df, q, k=5, nlist=4, nprobe=4).collect()]
-    assert bf == ivf
-
-
-def test_ivf_pruned_is_subset(emb_df):
-    q = [(0, [float(x) for x in emb_df.filter("vec_id=0").first()["embedding"]])]
-    pruned = ivf_topk(emb_df, q, k=5, nlist=4, nprobe=1).collect()
-    assert 1 <= len(pruned) <= 5
-    assert pruned[0]["vec_id"] == 0  # query's own bucket always probed first
-
-
-def test_batched_topk_parity_and_single_scan(emb_df):
-    """Queries-as-data (VERDICT r2 #4): 100 query vectors must cost the
-    SAME number of Spark jobs as 2 (one corpus scan serves all), and
-    every query's top-k must equal an exact numpy reference."""
-    import numpy as np
-
-    rows = sorted(emb_df.collect(), key=lambda r: r["vec_id"])
-    mat = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
-    vids = np.array([r["vec_id"] for r in rows])
-    mn = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    rng = np.random.RandomState(3)
-    qs = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(100)]
-
-    sc = emb_df.sparkSession.sparkContext
-    tracker = sc.statusTracker()
-
-    def run(queries, group):
-        sc.setJobGroup(group, "probe", True)
-        try:
-            out = brute_force_topk(emb_df, queries, k=3).collect()
-        finally:
-            sc.setJobGroup(None, None, False)
-        return out, len(tracker.getJobIdsForGroup(group))
-
-    _, n2 = run(qs[:2], "emb-batch-2")
-    got, n100 = run(qs, "emb-batch-100")
-    assert n100 <= n2, f"job count grew with query count: {n2} -> {n100}"
-    by_q: dict[int, list] = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append(
-            (r["rank"], r["vec_id"], r["cos"])
-        )
-    for qid, qv in qs:
-        q = np.asarray(qv)
-        cos = np.round(mn @ (q / np.linalg.norm(q)), 6)
-        order = np.lexsort((vids, -cos))[:3]
-        want = [(i + 1, int(vids[j]), float(cos[j]))
-                for i, j in enumerate(order)]
-        assert sorted(by_q[qid]) == want, f"query {qid} mismatch"
-
-
-def test_ivf_bucketed_partition_pruning(emb_df, tmp_path):
-    """Persisted IVF table (VERDICT r2 #6): probes must read ONLY the
-    probed buckets' files (parquet partition pruning), results must
-    match the in-memory path, centroids must round-trip exactly."""
-    import numpy as np
-
-    from bzzz_spark.functions.similarity import (
-        _probe_set, ivf_topk_bucketed, read_bucketed, train_centroids,
-        write_bucketed,
-    )
-    from pyspark.sql import functions as F
-
-    spark = emb_df.sparkSession
-    path = str(tmp_path / "ivf")
-    cents = write_bucketed(emb_df, path, nlist=4)
-    _, cents2 = read_bucketed(spark, path)
-    assert np.array_equal(cents, cents2)
-    assert np.array_equal(
-        cents, train_centroids(emb_df, 4)
-    )  # deterministic training → reproducible buckets
-
-    q = [(0, [float(x) for x in emb_df.filter("vec_id=0").first()["embedding"]])]
-    got = ivf_topk_bucketed(spark, path, q, k=5, nprobe=1)
-    allowed, union = _probe_set(cents, q, nprobe=1)
-    assert len(union) == 1
-    # the executed scan touches only the probed bucket's partition dirs
-    df, _ = read_bucketed(spark, path)
-    files = (
-        df.filter(F.col("bucket").isin(union))
-        .select(F.input_file_name().alias("f"))
-        .distinct()
-        .collect()
-    )
-    assert files and all(f"bucket={union[0]}" in r["f"] for r in files)
-    mem = ivf_topk(emb_df, q, k=5, nlist=4, nprobe=1).collect()
-    assert [(r["vec_id"], r["cos"]) for r in got.collect()] == [
-        (r["vec_id"], r["cos"]) for r in mem
-    ]
-
-
-def test_cosine_near_dup_pairs(emb_df):
-    pairs = {(r["id_a"], r["id_b"]): r["cos"]
-             for r in cosine_near_dup_pairs(emb_df, threshold=0.999).collect()}
-    assert (0, 1) in pairs
-
-
-def test_text_profile_values(docs_df):
-    rows = {r["doc_id"]: r for r in text_profile(docs_df).collect()}
-    assert rows[0]["n_tokens"] == 12
-    assert rows[0]["fingerprint"] == rows[2]["fingerprint"]  # normalized dup
-    assert rows[0]["lang_pred"] == "en"
-    assert rows[5]["lang_pred"] == "de"
-    assert rows[6]["lang_pred"] == "es"
-    assert 0.0 <= rows[4]["quality"] <= 1.0
 
 
 def test_multimodal_plumbing(spark, docs_df):
@@ -291,193 +104,3 @@ def test_facet_counts_multi_and_tokens(small_index, small_oracle):
     wt = sorted(occ.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
     assert gt == wt
 
-
-def test_ivf_trained_centroids_recall(spark):
-    """Trained (sampled k-means) centroids must give >=0.9 recall@10 at
-    nprobe = nlist/4 on clustered embeddings — the configuration where
-    seeded-random centroids fall over."""
-    import numpy as np
-
-    from bzzz_spark.functions.similarity import (
-        brute_force_topk,
-        ivf_topk,
-        train_centroids,
-    )
-
-    rng = np.random.RandomState(11)
-    centers = rng.standard_normal((8, 16))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    rows = []
-    for i in range(400):
-        v = centers[i % 8] + 0.15 * rng.standard_normal(16)
-        rows.append((i, [float(x) for x in v]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    emb.cache().count()
-
-    qs = [(i, rows[i][1]) for i in range(5)]
-    bf = brute_force_topk(emb, qs, k=10).collect()
-    iv = ivf_topk(emb, qs, k=10, nlist=8, nprobe=2, train=True).collect()
-    bf_sets = {}
-    for r in bf:
-        bf_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-    iv_sets = {}
-    for r in iv:
-        iv_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-    recalls = [
-        len(bf_sets[q] & iv_sets.get(q, set())) / len(bf_sets[q])
-        for q in bf_sets
-    ]
-    assert sum(recalls) / len(recalls) >= 0.9, recalls
-
-    # determinism: same table + seed -> identical centroids
-    c1 = train_centroids(emb, 8)
-    c2 = train_centroids(emb, 8)
-    assert np.allclose(c1, c2)
-
-
-def test_repeated_ngram_spans_hand_checked(spark):
-    """Lee et al.-style span dedup: hand-computed spans, overlap
-    merging, frac, and clean-doc absence."""
-    from bzzz_spark.functions.dedup import repeated_ngram_spans
-
-    rows = [
-        ("A", "the quick brown fox jumps over a lazy dog"),   # 9 toks
-        ("B", "xx yy the quick brown fox zz"),                # 7 toks
-        ("C", "totally unrelated content here now"),          # clean
-        ("D", "a b c d e f"),                                 # overlap-merge
-        ("E", "a b c d e g"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id string, text string")
-    out = {
-        r["doc_id"]: r
-        for r in repeated_ngram_spans(df, n=4, min_df=2).collect()
-    }
-    assert set(out) == {"A", "B", "D", "E"}
-    # A and B share exactly the 4-gram "the quick brown fox"
-    assert [(s["start"], s["end"]) for s in out["A"]["spans"]] == [(0, 4)]
-    assert [(s["start"], s["end"]) for s in out["B"]["spans"]] == [(2, 6)]
-    assert math.isclose(out["A"]["repeated_token_frac"], 4 / 9)
-    assert math.isclose(out["B"]["repeated_token_frac"], 4 / 7)
-    # D and E share "a b c d" and "b c d e": windows [0,4) and [1,5)
-    # must merge into one [0,5) span
-    for k, ntok in (("D", 6), ("E", 6)):
-        assert [(s["start"], s["end"]) for s in out[k]["spans"]] == [(0, 5)]
-        assert out[k]["n_tokens"] == ntok
-        assert math.isclose(out[k]["repeated_token_frac"], 5 / 6)
-    # min_df above the corpus multiplicity flags nothing
-    assert repeated_ngram_spans(df, n=4, min_df=3).count() == 0
-    # docs shorter than n never appear
-    tiny = spark.createDataFrame(
-        [("T1", "a b"), ("T2", "a b")], "doc_id string, text string"
-    )
-    assert repeated_ngram_spans(tiny, n=4, min_df=2).count() == 0
-
-
-def test_shingles_short_doc_no_crash(spark):
-    """Docs shorter than the shingle width must yield an empty array,
-    not crash (Spark's sequence(1, 0) descends through 0, which
-    slice() rejects)."""
-    from bzzz_spark.functions.text import shingles
-
-    df = spark.createDataFrame(
-        [("S", "one two"), ("L", "one two three four five")],
-        "doc_id string, text string",
-    )
-    rows = {r["doc_id"]: r["sh"]
-            for r in df.select("doc_id", shingles("text", 3).alias("sh")).collect()}
-    assert rows["S"] == []
-    assert "one two three" in rows["L"]
-
-
-def test_intra_doc_repetition(spark):
-    from bzzz_spark.functions.text import intra_doc_repetition
-
-    df = spark.createDataFrame(
-        [
-            ("loop", "a b c a b c a b c"),   # 7 grams, 3 distinct -> 4/7
-            ("clean", "one two three four"),  # 2 grams, distinct -> 0
-            ("tiny", "x y"),                  # < n tokens -> 0
-        ],
-        "doc_id string, text string",
-    )
-    got = {r["doc_id"]: r["rep"] for r in df.select(
-        "doc_id", intra_doc_repetition("text", 3).alias("rep")).collect()}
-    assert math.isclose(got["loop"], 4 / 7)
-    assert got["clean"] == 0.0
-    assert got["tiny"] == 0.0
-
-
-def test_strip_repeated_spans(spark):
-    from bzzz_spark.functions.dedup import strip_repeated_spans
-
-    df = spark.createDataFrame(
-        [
-            ("A", "intro words shared boiler plate text here tail"),
-            ("B", "other shared boiler plate text here end bit"),
-            ("C", "completely unique document body"),
-        ],
-        "doc_id string, text string",
-    )
-    out = {r["doc_id"]: r for r in
-           strip_repeated_spans(df, n=5, min_df=2).collect()}
-    # A tokens: intro words [shared boiler plate text here] tail
-    assert out["A"]["text_clean"] == "intro words tail"
-    assert out["B"]["text_clean"] == "other end bit"
-    assert out["C"]["text_clean"] == "completely unique document body"
-    assert out["C"]["repeated_token_frac"] == 0.0
-    assert out["A"]["repeated_token_frac"] > 0.5
-
-
-def test_decontaminate_hand_checked(spark):
-    """n-gram collision decontamination: hand-computed hit counts,
-    short-doc safety, and the no-collision case."""
-    from bzzz_spark.functions.dedup import decontaminate
-
-    docs = spark.createDataFrame(
-        [
-            # 6 toks → 3 distinct 4-grams; grams 1 and 2 hit the bench
-            ("A", "q1 q2 q3 q4 q5 q6"),
-            # clean doc, same length
-            ("B", "c1 c2 c3 c4 c5 c6"),
-            # shorter than n → 0 grams, never contaminated
-            ("C", "q1 q2 q3"),
-            # exact benchmark copy → every gram hits
-            ("D", "q2 q3 q4 q5"),
-        ],
-        "doc_id string, text string",
-    )
-    bench = spark.createDataFrame(
-        [("eval-1", "q2 q3 q4 q5")], "bid string, text string"
-    )
-    out = {
-        r["doc_id"]: r
-        for r in decontaminate(docs, bench, n=4).collect()
-    }
-    assert set(out) == {"A", "B", "C", "D"}
-    a = out["A"]
-    assert (a["n_grams"], a["hit_grams"], a["contaminated"]) == (3, 1, True)
-    assert math.isclose(a["contaminated_frac"], round(1 / 3, 6))
-    b = out["B"]
-    assert (b["n_grams"], b["hit_grams"], b["contaminated"]) == (3, 0, False)
-    c = out["C"]
-    assert (c["n_grams"], c["hit_grams"], c["contaminated"]) == (0, 0, False)
-    assert c["contaminated_frac"] == 0.0
-    d = out["D"]
-    assert (d["n_grams"], d["hit_grams"], d["contaminated"]) == (1, 1, True)
-    assert d["contaminated_frac"] == 1.0
-
-
-def test_decontaminate_broadcasts_benchmark(spark):
-    """Scale shape: the benchmark gram set must reach the corpus join as
-    a broadcast — the corpus side is never shuffled for the membership
-    test."""
-    from bzzz_spark.functions.dedup import decontaminate
-
-    docs = spark.createDataFrame(
-        [(str(i), f"tok{i} a b c d e f g h") for i in range(50)],
-        "doc_id string, text string",
-    )
-    bench = spark.createDataFrame([("e", "a b c d e f g h")],
-                                  "bid string, text string")
-    plan = decontaminate(docs, bench, n=8)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan

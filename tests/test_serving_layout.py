@@ -1,8 +1,8 @@
 """write_index serving-segment preset: fat segments are the measured
-serving sweet spot (tools/serve_segsize_bench: 512k-doc segments halve
-hot p50 at 10× base), so serving writes re-segment by default — pure
-metadata (segment := docid // new_size merges whole old segments) with
-bit-identical query results, pinned here."""
+serving sweet spot (512k-doc segments halve hot p50 at 10× base), so
+serving writes re-segment by default — pure metadata (segment :=
+docid // new_size merges whole old segments) with bit-identical query
+results, pinned here."""
 
 import math
 

@@ -33,17 +33,16 @@ def _build_zip(tmp_path):
 
 def test_zip_imports_without_repo(tmp_path):
     zpath = _build_zip(tmp_path)
-    code = (
-        f"import sys; sys.path.insert(0, {zpath!r}); "
-        "import bzzz_spark.build.indexer, bzzz_spark.query.wand, "
-        "bzzz_spark.functions.lm; print('ok')"
-    )
+    import package as pkg
+
+    mods = pkg.zip_modules(zpath)
+    assert {"bzzz_spark.build.indexer", "bzzz_spark.query.wand"} <= set(mods)
     env = dict(os.environ, PYTHONPATH="")
     out = subprocess.run(
-        [sys.executable, "-c", code],
+        [sys.executable, "-c", pkg.import_all_code(zpath)],
         capture_output=True, text=True, cwd="/", env=env, timeout=120,
     )
-    assert out.stdout.strip() == "ok", out.stderr[-2000:]
+    assert out.stdout.strip() == "zip-import-ok", out.stderr[-2000:]
 
 
 @pytest.mark.skipif(SPARK_SUBMIT is None, reason="spark-submit not on PATH")

@@ -33,22 +33,34 @@ def build_zip(out: str) -> str:
     return out
 
 
+def zip_modules(path: str) -> list[str]:
+    """Dotted names of every module in the zip (packages by their own
+    name), so the import check covers whatever the package holds."""
+    with zipfile.ZipFile(path) as z:
+        names = [n[: -len(".py")].replace("/", ".") for n in z.namelist()
+                 if n.endswith(".py")]
+    return sorted(n.removesuffix(".__init__") for n in names)
+
+
+def import_all_code(path: str) -> str:
+    """Python source that imports every module of the zip from the zip
+    alone and then prints ``zip-import-ok``."""
+    return (
+        f"import importlib, sys; sys.path.insert(0, {path!r}); "
+        f"[importlib.import_module(m) for m in {zip_modules(path)!r}]; "
+        "print('zip-import-ok')"
+    )
+
+
 def check_zip(path: str) -> None:
     """Import the package from the zip alone (executor simulation)."""
     import subprocess
 
-    code = (
-        "import sys; sys.path.insert(0, %r); "
-        "import bzzz_spark, bzzz_spark.build.indexer, "
-        "bzzz_spark.query.executor, bzzz_spark.query.wand, "
-        "bzzz_spark.analysis.tokenizer, bzzz_spark.functions.dedup; "
-        "print('zip-import-ok', bzzz_spark.__name__)" % path
-    )
     env = dict(os.environ)
     env["PYTHONPATH"] = ""  # make sure the repo dir can't leak in
     out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True,
-        cwd="/", env=env,
+        [sys.executable, "-c", import_all_code(path)],
+        capture_output=True, text=True, cwd="/", env=env,
     )
     if "zip-import-ok" not in out.stdout:
         raise SystemExit(f"zip import failed:\n{out.stdout}\n{out.stderr}")
