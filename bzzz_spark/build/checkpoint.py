@@ -41,24 +41,12 @@ from bzzz_spark import BM25_B, BM25_K1
 from bzzz_spark.build.indexer import (
     BzzzIndex,
     IndexConfig,
+    _full_tf,
     build_dictionary,
     build_docs,
-    build_field_tf,
-    build_tf,
+    build_posting_rows,
     encode_postings,
 )
-
-
-def _full_tf(docs, cfg: IndexConfig):
-    """Text tf plus extra-field legs (shuffle mode — no segment
-    stamping needed; the repartition in encode_postings owns layout)."""
-    tf = build_tf(docs, with_positions=cfg.store_positions,
-                  dv_cols=cfg.docvalue_cols)
-    if cfg.extra_fields:
-        tf = tf.withColumn("dl", F.col("dl").cast("double"))
-        for leg in build_field_tf(docs, cfg):
-            tf = tf.unionByName(leg)
-    return tf
 
 MANIFEST = "manifest.json"
 
@@ -83,8 +71,11 @@ def _manifest_config(m: dict) -> dict:
     """The manifest's IndexConfig dict.  Older manifests also record
     k1/b; the block-max bounds on disk were scored with those, and the
     kernels score with the BM25 constants, so any other value would make
-    pruning unsafe."""
+    pruning unsafe.  They may also name the posting-merge strategy they
+    were built with (popped below): the query side never reads segment
+    numbering, so every such index opens."""
     cfg_d = dict(m["config"])
+    cfg_d.pop("merge_mode", None)
     for key, const in (("k1", BM25_K1), ("b", BM25_B)):
         if cfg_d.pop(key, const) != const:
             raise ValueError(
@@ -92,6 +83,44 @@ def _manifest_config(m: dict) -> dict:
                 f"engine scores only with {key}={const} — rebuild the index"
             )
     return cfg_d
+
+
+def _write_postings(
+    postings: DataFrame, path: str, n_docs: int, avgdl: float,
+    cfg: IndexConfig,
+) -> None:
+    """Write encoded blocks in the serving-oriented file layout,
+    measured on cold reads:
+
+    - range-partition by term_id so each FILE holds a contiguous term
+      slice — a term query's isin filter then skips whole files via
+      their footer stats instead of reading a slice of every
+      hash-partitioned file.  One extra shuffle of the ENCODED blocks
+      (the index is ~2-3% of corpus bytes — the one-time serving-layout
+      cost, Lucene's forceMerge analog); ~32 MB target per file,
+      deterministic for resume (range sampling is seeded; content
+      comparison is order-insensitive).
+    - sort within files + SMALL row groups: tight term_id min/max per
+      row group.  Granularity is what matters: encoded block rows
+      average ~200-300 B, so a 2 MB row group holds ~10k rows and a rare
+      term's read rounds up to half a chunk (measured); 128 KB groups
+      hold ~500 rows → a term reads a few hundred block rows regardless
+      of corpus size.  (The 128 MB default collapses a small file into
+      ONE row group, silently disabling stats pruning altogether.)
+
+    The file count assumes ~3 B per token occurrence (doc_gaps + tfs +
+    dls varints) over ``n_docs`` docs; positions add one varint per
+    occurrence, roughly doubling encoded bytes."""
+    per_tok = 6 if cfg.store_positions else 3
+    bytes_est = n_docs * max(avgdl, 1.0) * per_tok
+    n_files = max(1, min(1024, math.ceil(bytes_est / (32 << 20))))
+    (
+        postings.repartitionByRange(n_files, "term_id")
+        .sortWithinPartitions("term_id", "segment", "block_id")
+        .write.mode("overwrite")
+        .option("parquet.block.size", 128 * 1024)
+        .parquet(path)
+    )
 
 
 def build_and_write(
@@ -112,12 +141,7 @@ def build_and_write(
     m = _load_manifest(out_dir)
     if m.get("complete"):
         return m
-    # the checkpointed build always uses the term-partitioned shuffle
-    # merge (resumed chunks must be bit-identical regardless of the docs
-    # parquet's file-split layout) — record that, whatever cfg says, so
-    # read_index reconstructs a config matching the on-disk postings
     cfg_d = cfg.to_dict()
-    cfg_d["merge_mode"] = "shuffle"
     if "config" in m and _manifest_config(m) != cfg_d:
         raise ValueError(
             "resume config mismatch: manifest has a different IndexConfig — "
@@ -185,51 +209,12 @@ def build_and_write(
         docs = spark.read.parquet(docs_path).filter(
             (F.col("docid") >= doc_lo) & (F.col("docid") < doc_hi)
         )
-        dictionary = spark.read.parquet(dict_path)
-        tf = _full_tf(docs, cfg)
-        extra = (["positions"] if cfg.store_positions else []) + list(
-            cfg.docvalue_cols
-        )
-        rows = (
-            tf.join(dictionary.select("term", "term_id", "df"), "term")
-            .withColumn(
-                "segment", (F.col("docid") / F.lit(cfg.segment_size)).cast("int")
-            )
-            .select("term_id", "segment", "docid", "tf", "dl", "df", *extra)
+        rows = build_posting_rows(
+            _full_tf(docs, cfg), spark.read.parquet(dict_path), cfg
         )
         postings = encode_postings(rows, n_docs, avgdl, cfg)
         chunk_path = os.path.join(out_dir, "postings", f"chunk={ci}")
-        # serving-oriented file layout, measured on cold reads:
-        # - range-partition by term_id so each FILE holds a contiguous
-        #   term slice — a term query's isin filter then skips whole
-        #   files via their footer stats instead of reading a slice of
-        #   every hash-partitioned file.  One extra shuffle of the
-        #   ENCODED blocks (the index is ~2-3% of corpus bytes — the
-        #   one-time serving-layout cost, Lucene's forceMerge analog);
-        #   ~32 MB target per file, deterministic for resume (range
-        #   sampling is seeded; content comparison is order-insensitive)
-        # - sort within files + SMALL row groups: tight term_id min/max
-        #   per row group.  Granularity is what matters: encoded block
-        #   rows average ~200-300 B, so a 2 MB row group holds ~10k
-        #   rows and a rare term's read rounds up to half a chunk
-        #   (measured); 128 KB groups hold ~500 rows → a term reads a
-        #   few hundred block rows regardless of corpus size.  (The
-        #   128 MB default collapses a small file into ONE row group,
-        #   silently disabling stats pruning altogether.)
-        # ~3 B per token occurrence (doc_gaps + tfs + dls varints);
-        # positions add one varint per occurrence, roughly doubling
-        # encoded bytes — keep the ~32 MB file target honest for
-        # positional indexes
-        per_tok = 6 if getattr(cfg, "store_positions", False) else 3
-        bytes_est = (doc_hi - doc_lo) * max(avgdl, 1.0) * per_tok
-        n_files = max(1, min(1024, math.ceil(bytes_est / (32 << 20))))
-        (
-            postings.repartitionByRange(n_files, "term_id")
-            .sortWithinPartitions("term_id", "segment", "block_id")
-            .write.mode("overwrite")
-            .option("parquet.block.size", 128 * 1024)
-            .parquet(chunk_path)
-        )
+        _write_postings(postings, chunk_path, doc_hi - doc_lo, avgdl, cfg)
         metrics = (
             spark.read.parquet(chunk_path)
             .groupBy("segment")
@@ -277,13 +262,13 @@ def write_index(
     layout (the same directory shape build_and_write produces, readable
     by read_index and serve.local.LocalIndex).
 
-    This is the fast-build → serve handoff: build_index's aligned merge
-    is the quick path (no checkpointing), and this writes its frames
-    with the serving-oriented file discipline measured on cold reads —
-    postings range-partitioned + sorted by term_id with small row
-    groups (tight min/max stats → a term query reads only its own
-    blocks' bytes), docs sorted by docid, the
-    dictionary sorted by term for pruned lookups.  The reference's
+    This is the fast-build → serve handoff: build_index is the quick
+    path (no checkpointing), and build_sharded calls this once per
+    shard.  It writes the frames with the serving-oriented file
+    discipline measured on cold reads — postings range-partitioned +
+    sorted by term_id with small row groups (tight min/max stats → a
+    term query reads only its own blocks' bytes), docs sorted by docid,
+    the dictionary sorted by term for pruned lookups.  The reference's
     analog is Lucene's commit + forceMerge producing the segment files
     its searchers then mmap (src/bzzz/index_store.clj).
 
@@ -293,19 +278,15 @@ def write_index(
     — 512k-doc segments measured half the hot p50 of the 32k build
     default (0.206 → 0.097 s at 10× base).  The relabel is pure
     metadata (segment := docid // new_size groups whole
-    old segments; blocks never span segments) and is only valid for the
-    docid//segment_size numbering, so aligned-merge indexes (whose docs
-    carry explicit segment ids) keep their layout.  Pass
+    old segments; blocks never span segments).  Pass
     serving_segment_size=None to keep the build segmentation.
     """
-    spark = index.postings.sparkSession
     os.makedirs(out_dir, exist_ok=True)
     n_docs, avgdl = index.scalar_stats()
     cfg = index.config
     postings, docs = index.postings, index.docs
     if (
         serving_segment_size
-        and cfg.merge_mode == "shuffle"
         and serving_segment_size > cfg.segment_size
         and serving_segment_size % cfg.segment_size == 0
     ):
@@ -320,15 +301,9 @@ def write_index(
         from dataclasses import replace
 
         cfg = replace(cfg, segment_size=int(serving_segment_size))
-    per_tok = 6 if getattr(cfg, "store_positions", False) else 3
-    bytes_est = n_docs * max(avgdl, 1.0) * per_tok
-    n_files = max(1, min(1024, math.ceil(bytes_est / (32 << 20))))
-    (
-        postings.repartitionByRange(n_files, "term_id")
-        .sortWithinPartitions("term_id", "segment", "block_id")
-        .write.mode("overwrite")
-        .option("parquet.block.size", 128 * 1024)
-        .parquet(os.path.join(out_dir, "postings", "chunk=0"))
+    _write_postings(
+        postings, os.path.join(out_dir, "postings", "chunk=0"),
+        n_docs, avgdl, cfg,
     )
     (
         docs.repartitionByRange(
@@ -365,9 +340,6 @@ def load_config(out_dir: str) -> IndexConfig:
         raise ValueError(f"index at {out_dir} is incomplete — resume the build")
     cfg_d = _manifest_config(m)
     cfg_d["key_cols"] = tuple(cfg_d["key_cols"])
-    # manifests written before merge_mode was persisted are always
-    # shuffle-built (the checkpoint path never used aligned numbering)
-    cfg_d.setdefault("merge_mode", "shuffle")
     cfg_d["extra_fields"] = tuple(
         tuple(x) for x in cfg_d.get("extra_fields", [])
     )

@@ -81,18 +81,6 @@ class IndexConfig:
     segment_size: int = 1 << 16
     num_partitions: int | None = None
     store_text: bool = True
-    # posting-merge strategy:
-    #   "aligned" — segments are aligned to the docs frame's partitions
-    #     (docids are per-partition contiguous after assign_sequential_ids),
-    #     so posting rows never shuffle: tokenize → explode →
-    #     broadcast-join dictionary → sortWithinPartitions → encode, all
-    #     narrow.  Requires the dictionary to fit in a broadcast
-    #     (fine to ~tens of millions of terms).
-    #   "shuffle" — classic term-partitioned shuffle merge; works for
-    #     unbounded vocabularies and docs read back from parquet whose
-    #     partition layout is file-split-dependent (the checkpointed
-    #     build uses this so resumed chunks stay bit-identical).
-    merge_mode: str = "aligned"
     # positional postings (phrase-query substrate).  Off by default: the
     # north-rule posting layout is (docid, tf) blocks, and positions add
     # ~2x encode work + bytes.  Indexes built with it answer Phrase
@@ -127,7 +115,7 @@ class IndexConfig:
             "block_size": self.block_size, "segment_size": self.segment_size,
             "store_text": self.store_text,
             "key_cols": list(self.key_cols), "text_col": self.text_col,
-            "ts_col": self.ts_col, "merge_mode": self.merge_mode,
+            "ts_col": self.ts_col,
             "store_positions": self.store_positions,
             "extra_fields": [list(x) for x in self.extra_fields],
             "docvalue_cols": list(self.docvalue_cols),
@@ -363,14 +351,17 @@ def field_tokens_col(fname: str, analyzer: str):
     return F.transform(toks, lambda t: F.concat(F.lit(fname + ":"), t))
 
 
-def build_field_tf(docs: DataFrame, cfg: IndexConfig) -> list[DataFrame]:
-    """One tf leg per extra field: (term='<field>:<token>', docid, dl,
-    tf[, positions]).  dl is the norms-disabled SENTINEL 0 (a real
-    posting always has dl ≥ 1): the encoder and the query-time scorer
-    both substitute avgdl, making the BM25 length factor exactly 1 —
-    Lucene's omit-norms.  Each leg derives NARROWLY from docs (partition
-    ids preserved → aligned segment numbering stays valid per leg)."""
-    legs = []
+def _full_tf(docs: DataFrame, cfg: IndexConfig) -> DataFrame:
+    """Text tf plus one leg per extra field (term='<field>:<token>').
+
+    A field leg's dl is the norms-disabled SENTINEL 0 (a real posting
+    always has dl ≥ 1): the encoder and the query-time scorer both
+    substitute avgdl, making the BM25 length factor exactly 1 —
+    Lucene's omit-norms."""
+    tf = build_tf(docs, with_positions=cfg.store_positions,
+                  dv_cols=cfg.docvalue_cols)
+    if cfg.extra_fields:
+        tf = tf.withColumn("dl", F.col("dl").cast("double"))
     for fname, analyzer in cfg.extra_fields:
         leg_docs = docs.select(
             "docid",
@@ -378,13 +369,11 @@ def build_field_tf(docs: DataFrame, cfg: IndexConfig) -> list[DataFrame]:
             *cfg.docvalue_cols,
             field_tokens_col(fname, analyzer).alias("tokens"),
         )
-        legs.append(
-            build_tf(
-                leg_docs, with_positions=cfg.store_positions,
-                dv_cols=cfg.docvalue_cols,
-            )
+        tf = tf.unionByName(
+            build_tf(leg_docs, with_positions=cfg.store_positions,
+                     dv_cols=cfg.docvalue_cols)
         )
-    return legs
+    return tf
 
 
 def build_tf_positioned(docs: DataFrame, positioned_col: str = "ptokens") -> DataFrame:
@@ -573,30 +562,34 @@ def _make_block_encoder(n_docs: int, avgdl: float, cfg: IndexConfig):
     return encode
 
 
+def _segment_col(cfg: IndexConfig):
+    """segment = docid // segment_size — the skew salt."""
+    return (F.col("docid") / F.lit(cfg.segment_size)).cast("int")
+
+
 def build_posting_rows(
     tf: DataFrame, dictionary: DataFrame, cfg: IndexConfig
 ) -> DataFrame:
-    """(term_id, segment, docid, tf, dl, df[, positions]) — segment is
-    the skew salt."""
-    extra = ["positions"] if "positions" in tf.columns else []
-    extra += list(cfg.docvalue_cols)
+    """(term_id, segment, docid, tf, dl, df, *rest) — segment is the
+    skew salt; rest is whatever else tf carries (positions, doc values),
+    in tf's column order."""
+    rest = [c for c in tf.columns if c not in ("term", "docid", "tf", "dl")]
     return (
         tf.join(dictionary.select("term", "term_id", "df"), "term")
-        .withColumn(
-            "segment", (F.col("docid") / F.lit(cfg.segment_size)).cast("int")
-        )
-        .select("term_id", "segment", "docid", "tf", "dl", "df", *extra)
+        .withColumn("segment", _segment_col(cfg))
+        .select("term_id", "segment", "docid", "tf", "dl", "df", *rest)
     )
 
 
 def encode_postings(
     posting_rows: DataFrame, n_docs: int, avgdl: float, cfg: IndexConfig
 ) -> DataFrame:
-    """Term-partitioned shuffle merge (merge_mode="shuffle").
+    """Term-partitioned shuffle merge: repartition the posting rows by
+    (term_id, segment), sort by docid within each group and encode.
 
-    Handles unbounded vocabularies; the price is a full shuffle of the
-    (term, doc) pair stream, which measured as the build's dominant
-    I/O cost (shuffle-write contention at high thread counts)."""
+    Handles unbounded vocabularies, and the segment salt bounds the
+    postings of any one term a task holds at segment_size.  The price
+    is a full shuffle of the (term, doc) pair stream."""
     spark = posting_rows.sparkSession
     n_part = cfg.num_partitions or spark.sparkContext.defaultParallelism
     arranged = posting_rows.repartition(
@@ -608,112 +601,26 @@ def encode_postings(
     )
 
 
-def _aligned_segment_col(parts: list, segment_size: int):
-    """segment = seg_base[pid] + (docid - doc_lo[pid]) // segment_size,
-    from the per-partition (pid, lo, cnt) rows.  Valid on any frame
-    derived NARROWLY from the docs frame (partition ids preserved)."""
-    seg_base, lo_map, acc = {}, {}, 0
-    for r in sorted(parts, key=lambda r: r["pid"]):
-        seg_base[r["pid"]] = acc
-        lo_map[r["pid"]] = int(r["lo"])
-        acc += -(-int(r["cnt"]) // segment_size)  # ceil
-    pid = F.spark_partition_id()
-    base_expr = F.element_at(
-        F.create_map(*[F.lit(x) for kv in sorted(seg_base.items()) for x in kv]),
-        pid,
-    )
-    lo_expr = F.element_at(
-        F.create_map(*[F.lit(x) for kv in sorted(lo_map.items()) for x in kv]),
-        pid,
-    )
-    return (
-        base_expr + F.floor((F.col("docid") - lo_expr) / segment_size)
-    ).cast("int")
-
-
-def collect_doc_partitions(docs: DataFrame) -> list:
-    """One row per partition: (pid, lo=min docid, cnt) — docids are
-    contiguous per partition by construction (assign_sequential_ids).
-
-    The aligned merge's correctness rests on these ranges: every frame
-    derived narrowly from docs must see the same (pid → docid range)
-    mapping.  The invariant check below turns any narrow-breaking change
-    upstream (a repartition, a filter before this projection, an
-    unpersist) into an immediate error instead of silent segment
-    corruption: sorted by pid, the (lo, lo+cnt) ranges must tile
-    [0, n_docs) exactly — contiguous, non-overlapping, pid-ordered."""
-    rows = (
-        docs.select(F.spark_partition_id().alias("pid"), "docid")
-        .groupBy("pid")
-        .agg(F.min("docid").alias("lo"), F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    )
-    acc = 0
-    for r in sorted(rows, key=lambda r: r["pid"]):
-        if int(r["lo"]) != acc:
-            raise RuntimeError(
-                "aligned-merge invariant violated: partition docid ranges "
-                f"do not tile [0, n): pid={r['pid']} starts at {r['lo']}, "
-                f"expected {acc}.  A non-narrow transformation was applied "
-                "to the docs frame between id assignment and the encode."
-            )
-        acc += int(r["cnt"])
-    return rows
-
-
-def encode_postings_aligned(
-    parts: list,
-    tf: DataFrame,
-    dictionary: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    cfg: IndexConfig,
-) -> DataFrame:
-    """Shuffle-free posting encode (merge_mode="aligned").
-
-    assign_sequential_ids leaves docids CONTIGUOUS per partition
-    (docid = partition_offset + local_rank), so defining segments
-    relative to each partition's offset makes every segment wholly
-    owned by one partition.  The pair stream then never shuffles:
-
-      tf (narrow from docs) → broadcast-join dictionary (term_id, df)
-        → segment = seg_base[pid] + (docid - doc_lo[pid]) // segment_size
-        → sortWithinPartitions(term_id, segment, docid) → Arrow encoder
-
-    The only wide ops left in the whole build are the docid range
-    shuffle (3M doc rows, not 75M pair rows) and the tiny dictionary
-    aggregation.  Segment numbering differs from the shuffle path
-    (per-partition tails may be short); nothing query-visible depends
-    on it — blocks carry their own first/last docid bounds.
-    """
-    extra = ["positions"] if "positions" in tf.columns else []
-    extra += list(cfg.docvalue_cols)
-    if "segment" in tf.columns:
-        # multi-field builds stamp the segment per tf LEG before the
-        # union (spark_partition_id is only meaningful per leg — after a
-        # union, partition ids renumber and the pid→range map would lie)
-        seg_tf = tf
-    else:
-        seg_tf = tf.withColumn(
-            "segment", _aligned_segment_col(parts, cfg.segment_size)
-        )
-    rows = (
-        seg_tf
-        .join(F.broadcast(dictionary.select("term", "term_id", "df")), "term")
-        .select("term_id", "segment", "docid", "tf", "dl", "df", *extra)
-    )
-    arranged = rows.sortWithinPartitions("term_id", "segment", "docid")
-    return arranged.mapInPandas(
-        _make_block_encoder(n_docs, avgdl, cfg),
-        schema=postings_schema(cfg.store_positions, cfg.docvalue_cols),
-    )
+def _avgdl(tf: DataFrame, n_docs: int) -> float:
+    """avgdl without a second tokenize pass over the text: (Σ tf over
+    text-leg rows) / n_docs — the same number as avg(dl) over all docs,
+    since empty docs contribute 0 to both.  The tf agg doubles as a
+    persisted tf's materializing action.  (Profiled at local[32]/1M
+    turns: docs.agg(avg(dl)) re-ran the tokenizer for 5.4 s of a 40 s
+    build.)"""
+    tot = tf.agg(
+        F.sum(F.when(F.col("dl") > 0, F.col("tf")).otherwise(F.lit(0)))
+        .alias("tot")
+    ).collect()[0]["tot"]
+    return (float(tot or 0) / n_docs) if n_docs else 0.0
 
 
 def build_index(transcripts: DataFrame, cfg: IndexConfig | None = None) -> BzzzIndex:
     """In-memory (unmaterialized) index build — tests and small corpora.
 
-    For the checkpointed, resumable on-disk build use
-    :func:`bzzz_spark.build.checkpoint.build_and_write`.
+    The same steps as every on-disk writer: tf → dictionary + stats →
+    posting rows → encode_postings.  For the checkpointed, resumable
+    on-disk build use :func:`bzzz_spark.build.checkpoint.build_and_write`.
     """
     cfg = cfg or IndexConfig()
     docs = build_docs(transcripts, cfg)
@@ -737,66 +644,20 @@ def build_index(transcripts: DataFrame, cfg: IndexConfig | None = None) -> BzzzI
     # cache footprint (GC pressure measurably hurt wide builds).
     # tf feeds BOTH the dictionary and the posting rows — persist it so
     # the tokenize + in-array tf pass runs once (measured ~40% of the
-    # encode phase when recomputed).  Extra-field legs are unioned in
-    # with the norms-disabled dl sentinel 0.
-    legs = [build_tf(docs, with_positions=cfg.store_positions,
-                     dv_cols=cfg.docvalue_cols)]
-    if cfg.extra_fields:
-        legs[0] = legs[0].withColumn("dl", F.col("dl").cast("double"))
-        legs.extend(build_field_tf(docs, cfg))
-    parts = None
-    if cfg.merge_mode == "aligned":
-        parts = collect_doc_partitions(docs)
-        # stamp segments per leg BEFORE any union: spark_partition_id is
-        # only meaningful on frames derived narrowly from docs
-        legs = [
-            leg.withColumn(
-                "segment", _aligned_segment_col(parts, cfg.segment_size)
-            )
-            for leg in legs
-        ]
-    tf = legs[0]
-    for leg in legs[1:]:
-        tf = tf.unionByName(leg)
-    tf = tf.persist()
-    # corpus stats WITHOUT a second tokenize pass over the text: n_docs
-    # from the aligned partition ranges (already collected, one row per
-    # partition) or a narrow count on the persisted id-arranged frame;
-    # avgdl = (Σ tf over text-leg rows) / n_docs — the same number as
-    # avg(dl) over all docs, since empty docs contribute 0 to both.
-    # The tf agg doubles as tf's materializing action.  (Profiled at
-    # local[32]/1M turns: the old docs.agg(avg(dl)) re-ran the
-    # tokenizer for 5.4 s of a 40 s build.)
-    n_docs = (
-        sum(int(r["cnt"]) for r in parts)
-        if parts is not None
-        else docs.count()
-    )
-    tot_row = tf.agg(
-        F.sum(F.when(F.col("dl") > 0, F.col("tf")).otherwise(F.lit(0)))
-        .alias("tot")
-    ).collect()[0]
-    avgdl = (float(tot_row["tot"] or 0) / n_docs) if n_docs else 0.0
+    # encode phase when recomputed).
+    tf = _full_tf(docs, cfg).persist()
+    n_docs = docs.count()
+    avgdl = _avgdl(tf, n_docs)
     dictionary = build_dictionary(tf, cfg)
     dictionary.cache()
-    if cfg.merge_mode == "aligned":
-        postings = encode_postings_aligned(parts, tf, dictionary, n_docs, avgdl, cfg)
-        # docs carry their segment so the query side never needs the
-        # docid//segment_size formula (which aligned numbering breaks)
-        docs = docs.withColumn(
-            "segment", _aligned_segment_col(parts, cfg.segment_size)
-        )
-    else:
-        posting_rows = build_posting_rows(tf.drop("segment"), dictionary, cfg)
-        postings = encode_postings(posting_rows, n_docs, avgdl, cfg)
-        docs = docs.withColumn(
-            "segment", (F.col("docid") / cfg.segment_size).cast("int")
-        )
+    postings = encode_postings(
+        build_posting_rows(tf, dictionary, cfg), n_docs, avgdl, cfg
+    )
     stats = docs.sparkSession.createDataFrame(
         [(n_docs, avgdl)], "n_docs long, avgdl double"
     )
     return BzzzIndex(
-        docs=docs.drop("tokens"),
+        docs=docs.withColumn("segment", _segment_col(cfg)).drop("tokens"),
         dictionary=dictionary,
         postings=postings,
         stats=stats,

@@ -458,7 +458,7 @@ def _tfc(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
 
 
 def _make_kernel(qmeta: dict, mode: str, msm: int, k: int, avgdl: float,
-                 segment_size: int, neg_tids: list[int] | None = None,
+                 neg_tids: list[int] | None = None,
                  ranges: list | None = None, stats: dict | None = None,
                  phrases: list | None = None,
                  termsets: list | None = None,
@@ -1528,9 +1528,7 @@ def _any_plan(
     if not tids:
         return _EMPTY_PLAN
     qmeta = {tid: (0.0, float(boost)) for tid in tids}
-    kernel = _make_kernel(
-        qmeta, "any", 1, k, 1.0, index.config.segment_size
-    )
+    kernel = _make_kernel(qmeta, "any", 1, k, 1.0)
     return KernelPlan(kernel, tuple(tids))
 
 
@@ -1836,9 +1834,8 @@ def plan_candidates(
         | {int(t) for tids, _b in opt_set_specs for t in tids}
         | {tid for entries, _m in group_specs for tid, _w in entries}
     )
-    seg_size = index.config.segment_size
-    kernel = _make_kernel(qmeta, shape.mode, shape.msm, k, avgdl, seg_size,
-                          neg_tids, shape.ranges, phrases=phrase_specs,
+    kernel = _make_kernel(qmeta, shape.mode, shape.msm, k, avgdl, neg_tids,
+                          shape.ranges, phrases=phrase_specs,
                           termsets=termset_specs,
                           opts=opt_meta, opt_msm=shape.opt_msm,
                           tie=shape.tie, opt_phrases=opt_phrase_specs,

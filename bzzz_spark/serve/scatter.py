@@ -14,28 +14,27 @@ Per-shard Lucene scores with SHARD-LOCAL idf/norms stats, so the
 reference's merged ranking drifts from a single index's.  We fix that
 the way distributed Lucene deployments do (Elasticsearch's
 dfs_query_then_fetch, made static): `build_sharded` runs ONE global
-pass for docids + dictionary (global df) + stats (global n_docs,
-avgdl), then encodes each shard's postings AGAINST THOSE GLOBAL STATS.
+build — docids, dictionary (global df), stats (global n_docs, avgdl)
+and a single posting encode whose groups never cross a shard — so
+every shard's postings are encoded AGAINST THOSE GLOBAL STATS.
 Every shard therefore scores — and block-max-prunes, the baked
 block_max_score bounds being globally correct — exactly as the single
 fat index would, docids are GLOBAL (assigned before routing), and the
 gather's (score desc, docid asc) merge reproduces the single-index
 result bit-for-bit, ties included.
 
-Scale shape: the global pass is the standard distributed build; each
-shard's postings encode is a distributed job over ~1/n of the corpus
-(the checkpoint module's chunk discipline — total work ≈ one build
-plus one extra tokenize pass), and shards can build concurrently.  In
-this process the scatter loop is serial per shard (kernels convoy on
-the GIL under threads — measured in serve.local); in deployment each
-shard is its own process/host, so query wall-clock is max(shard) +
-merge, not sum.
+Scale shape: the build is the standard distributed build plus a
+per-shard write of its slice of the encoded blocks.  In this process
+the scatter loop is serial per shard (kernels convoy on the GIL under
+threads — measured in serve.local); in deployment each shard is its
+own process/host, so query wall-clock is max(shard) + merge, not sum.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import time
 from dataclasses import replace
 
 import numpy as np
@@ -71,82 +70,92 @@ def build_sharded(
     """Build N serving shards (out_dir/shard=i/, each a complete
     LocalIndex directory) that together answer EXACTLY like one index.
 
-    One global pass assigns docids (dense over key_cols — the same
-    order a single build uses), computes the dictionary (global df per
-    term) and the corpus stats; each shard then re-derives tf for its
-    routed docs (hash(route_col) — default the first key column, the
-    reference's doc-id routing) and encodes postings with the GLOBAL
-    stats, so per-posting scores and block-max bounds match the
-    single-index build exactly.  Every shard carries the full (shared)
-    dictionary and global stats; its docs/postings hold only its slice.
+    The steps are the single build's, run once over the whole corpus:
+    docs with GLOBAL docids (dense over key_cols — the same order a
+    single build uses), tf, the dictionary (global df per term) and
+    corpus stats, posting rows and ONE encode_postings pass.  Each doc
+    is routed by hash(route_col) — default the first key column, the
+    reference's doc-id routing — and the encode groups by
+    segment * n_shards + shard, so no block spans two shards and every
+    block equals the one a per-shard encode with the GLOBAL stats would
+    write: per-posting scores and block-max bounds match the
+    single-index build exactly.  The encoded blocks are persisted, then
+    write_index writes each shard's slice.  Every shard carries the
+    full (shared) dictionary and global stats; its docs/postings hold
+    only its slice.  sharded.json records each stage's took_sec.
     """
     from pyspark.sql import functions as F
 
-    from bzzz_spark.build.checkpoint import _full_tf, write_index
+    from bzzz_spark.build.checkpoint import write_index
     from bzzz_spark.build.indexer import (
         BzzzIndex,
         IndexConfig,
+        _avgdl,
+        _full_tf,
+        _segment_col,
         build_dictionary,
         build_docs,
+        build_posting_rows,
         encode_postings,
     )
 
-    if int(n_shards) <= 0:
+    n = int(n_shards)
+    if n <= 0:
         raise ValueError(f"n_shards must be positive, got {n_shards}")
     cfg = cfg or IndexConfig()
-    # shard postings use the docid//segment_size numbering (the
-    # checkpoint/shuffle discipline) — record that in the per-shard
-    # manifests whatever the caller's merge_mode preference was
-    cfg = replace(cfg, merge_mode="shuffle")
     route = route_col or cfg.key_cols[0]
     os.makedirs(out_dir, exist_ok=True)
+    took = {}
+    t0 = time.perf_counter()
 
     docs = build_docs(table, cfg).persist()  # GLOBAL docids, key order
-    tf = _full_tf(docs, cfg).persist()
     n_docs = docs.count()
-    tot = tf.agg(
-        F.sum(F.when(F.col("dl") > 0, F.col("tf")).otherwise(F.lit(0)))
-        .alias("t")
-    ).collect()[0]["t"]
-    avgdl = (float(tot or 0) / n_docs) if n_docs else 0.0
+    took["docs"] = time.perf_counter() - t0
+    t0 = time.perf_counter()
+    # the shard tag rides through tf like a doc value
+    tagged = docs.withColumn("__shard", shard_id(route, n))
+    tf = _full_tf(
+        tagged, replace(cfg, docvalue_cols=(*cfg.docvalue_cols, "__shard"))
+    ).persist()
+    avgdl = _avgdl(tf, n_docs)
     dictionary = build_dictionary(tf, cfg).persist()
     dictionary.count()
-    # tf is dead once the dictionary materialized: the per-shard loops
-    # below re-derive tf from their docs slice, so free the largest
-    # cached frame BEFORE the heavy encode phase
+    took["dictionary"] = time.perf_counter() - t0
+    t0 = time.perf_counter()
+    rows = build_posting_rows(tf, dictionary, cfg)
+    folded = rows.withColumn(
+        "segment", F.col("segment") * n + F.col("__shard")
+    ).drop("__shard")
+    blocks = (
+        encode_postings(folded, n_docs, avgdl, cfg)
+        .withColumn("shard", F.pmod("segment", F.lit(n)))
+        .withColumn("segment", F.expr(f"segment div {n}").cast("int"))
+        .persist()
+    )
+    blocks.count()
     tf.unpersist()
+    took["encode"] = time.perf_counter() - t0
+    t0 = time.perf_counter()
     stats = docs.sparkSession.createDataFrame(
         [(n_docs, avgdl)], "n_docs long, avgdl double"
     )
-    extra = (["positions"] if cfg.store_positions else []) + list(
-        cfg.docvalue_cols
-    )
-    for i in range(n_shards):
-        docs_i = docs.filter(shard_id(route, n_shards) == i)
-        rows = (
-            _full_tf(docs_i, cfg)
-            .join(dictionary.select("term", "term_id", "df"), "term")
-            .withColumn(
-                "segment",
-                (F.col("docid") / F.lit(cfg.segment_size)).cast("int"),
-            )
-            .select("term_id", "segment", "docid", "tf", "dl", "df", *extra)
-        )
+    for i in range(n):
         idx = BzzzIndex(
-            docs=docs_i.withColumn(
-                "segment",
-                (F.col("docid") / F.lit(cfg.segment_size)).cast("int"),
-            ).drop("tokens"),
+            docs=docs.filter(shard_id(route, n) == i)
+            .withColumn("segment", _segment_col(cfg))
+            .drop("tokens"),
             dictionary=dictionary,
-            postings=encode_postings(rows, n_docs, avgdl, cfg),
+            postings=blocks.filter(F.col("shard") == i).drop("shard"),
             stats=stats,
             config=cfg,
         )
         write_index(idx, os.path.join(out_dir, f"shard={i}"))
+    took["write"] = time.perf_counter() - t0
+    blocks.unpersist()
     docs.unpersist()
     dictionary.unpersist()
-    m = {"n_shards": int(n_shards), "route_col": route,
-         "n_docs": int(n_docs)}
+    m = {"n_shards": n, "route_col": route, "n_docs": int(n_docs),
+         "stages": {k: {"took_sec": round(v, 3)} for k, v in took.items()}}
     tmp = os.path.join(out_dir, SHARD_MANIFEST + ".tmp")
     with open(tmp, "w") as f:
         json.dump(m, f)

@@ -46,6 +46,7 @@ from bzzz_spark.build.ids import assign_sequential_ids
 from bzzz_spark.build.indexer import (
     BzzzIndex,
     IndexConfig,
+    build_posting_rows,
     build_tf,
     encode_postings,
 )
@@ -131,13 +132,8 @@ class StreamingIndexer:
         # batch-local df in block metadata: bounds are advisory on the
         # live path (wand_safe=False), exact scoring happens query-time
         batch_df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        posting_rows = (
-            tf.join(termmap, "term")
-            .join(batch_df, "term")
-            .withColumn(
-                "segment", (F.col("docid") / self.cfg.segment_size).cast("int")
-            )
-            .select("term_id", "segment", "docid", "tf", "dl", "df")
+        posting_rows = build_posting_rows(
+            tf, termmap.join(batch_df, "term"), self.cfg
         )
         delta = encode_postings(
             posting_rows, int(stats["n"]), float(stats["avgdl"] or 0.0), self.cfg

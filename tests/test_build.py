@@ -79,10 +79,9 @@ def test_block_invariants(small_index):
         s = seg_span.setdefault(row["segment"], [int(d.min()), int(d.max())])
         s[0] = min(s[0], int(d.min()))
         s[1] = max(s[1], int(d.max()))
-    # the skew-salt invariant, valid in BOTH merge modes: a segment is a
+    # the skew-salt invariant: a segment (docid // segment_size) is a
     # contiguous docid range holding at most segment_size docs, and
-    # segments do not overlap (in "shuffle" mode segment == docid //
-    # segment_size; in "aligned" mode segments are partition-relative)
+    # segments do not overlap
     spans = sorted(seg_span.values())
     for lo, hi in spans:
         assert hi - lo < cfg.segment_size

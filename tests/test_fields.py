@@ -113,33 +113,6 @@ def test_field_validation_accepts_extra_fields(field_index):
         validate_fields(field_index, ast.Term("x", field_name="nope"))
 
 
-def test_aligned_and_shuffle_multifield_content_identical(spark, small_transcripts):
-    from bzzz_spark.build.codec import decode_block
-
-    def content(ix):
-        out = {}
-        n_post = 0
-        for r in ix.postings.collect():
-            d, tf = decode_block(
-                r["first_docid"], r["count"], r["doc_gaps"], r["tfs"]
-            )
-            n_post += int(r["count"])
-            out.setdefault(r["term_id"], {}).update(
-                dict(zip(d.tolist(), tf.tolist()))
-            )
-        return out, n_post
-
-    base = dict(block_size=16, segment_size=64, num_partitions=4,
-                extra_fields=EXTRA)
-    a = build_index(small_transcripts, IndexConfig(**base, merge_mode="aligned"))
-    s = build_index(small_transcripts, IndexConfig(**base, merge_mode="shuffle"))
-    # term_ids are assigned identically (same dictionary ordering)
-    ca, na = content(a)
-    cs, ns = content(s)
-    assert ca == cs
-    assert na == ns == sum(len(v) for v in ca.values())
-
-
 def test_query_parser_field_syntax_end_to_end(field_index, field_oracle):
     node = __import__(
         "bzzz_spark.query.parser", fromlist=["parse_query_string"]

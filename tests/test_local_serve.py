@@ -172,7 +172,7 @@ def test_checkpoint_build_inlines_docvalues(served):
 
 def test_write_index_serving_handoff(spark, small_transcripts,
                                       small_oracle, tmp_path):
-    """Fast build (aligned merge, no checkpointing) → write_index →
+    """Fast build (no checkpointing) → write_index →
     LocalIndex: the build-on-Spark / serve-in-process handoff.  Hits
     must match the oracle, and the phrase must actually match docs (a
     0-row parity check proves nothing)."""

@@ -24,10 +24,7 @@ def shuffle_index(spark, small_transcripts):
 
     idx = build_index(
         small_transcripts,
-        IndexConfig(
-            block_size=16, segment_size=64, num_partitions=4,
-            merge_mode="shuffle",
-        ),
+        IndexConfig(block_size=16, segment_size=64, num_partitions=4),
     )
     idx.postings.cache().count()
     return idx
@@ -53,14 +50,6 @@ def test_serving_write_opt_out_keeps_build_segments(tmp_path, shuffle_index):
     out = str(tmp_path / "thin")
     write_index(shuffle_index, out, serving_segment_size=None)
     assert load_config(out).segment_size == 64
-
-
-def test_aligned_index_keeps_layout(tmp_path, small_index):
-    """Aligned-merge segment numbering is not docid//segment_size, so
-    the relabel must not apply."""
-    out = str(tmp_path / "aligned")
-    write_index(small_index, out)
-    assert load_config(out).segment_size == small_index.config.segment_size
 
 
 def test_resegmented_results_identical(tmp_path, shuffle_index, small_oracle):
@@ -107,7 +96,7 @@ def test_facet_array_and_analyzer_semantics(spark, tmp_path):
     idx = build_index(
         df,
         IndexConfig(key_cols=("doc_id",), text_col="text", ts_col=None,
-                    block_size=8, segment_size=16, merge_mode="shuffle"),
+                    block_size=8, segment_size=16),
     )
     out = str(tmp_path / "arrfacet")
     write_index(idx, out)

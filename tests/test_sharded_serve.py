@@ -64,15 +64,59 @@ def _close(a, b):
         assert math.isclose(sa, sb, rel_tol=1e-9, abs_tol=1e-12), (a, b)
 
 
+def _decoded_postings(li):
+    """[(term_id, docid, tf)] decoded from every block of one index,
+    and the summed block counts."""
+    from bzzz_spark.build.codec import decode_block
+
+    t = li._post_ds.to_table(
+        columns=["term_id", "first_docid", "count", "doc_gaps", "tfs"]
+    ).to_pylist()
+    out = []
+    for r in t:
+        d, tf = decode_block(
+            r["first_docid"], r["count"], r["doc_gaps"], r["tfs"]
+        )
+        out.extend(zip([r["term_id"]] * len(d), d.tolist(), tf.tolist()))
+    return out, sum(r["count"] for r in t)
+
+
 @pytest.mark.parametrize("n", [2, 5])
 def test_shards_cover_the_corpus(fleet, n):
     """Routing partitions the corpus: shard doc counts sum to the
-    total, global stats are identical on every shard."""
-    _, single, sharded = fleet
+    total, global stats are identical on every shard.  At block level
+    the one-pass encode keeps every block inside its shard: each
+    decoded docid routes to the shard holding it, and the shards'
+    postings together are exactly the single index's."""
+    from bzzz_spark.serve.scatter import shard_id
+
+    sidx, single, sharded = fleet
     got = sum(s._docs_ds.count_rows() for s in sharded[n].shards)
     assert got == single._docs_ds.count_rows()
     stats = {s.scalar_stats() for s in sharded[n].shards}
     assert stats == {single.scalar_stats()}
+
+    route = {
+        r["docid"]: r["shard"]
+        for r in sidx.docs.select(
+            "docid", shard_id(sharded[n].route_col, n).alias("shard")
+        ).collect()
+    }
+    union, n_blocks_postings = {}, 0
+    for i, s in enumerate(sharded[n].shards):
+        rows, count = _decoded_postings(s)
+        assert {route[d] for _t, d, _tf in rows} == {i}
+        for t, d, tf in rows:
+            union.setdefault(t, {})[d] = tf
+        n_blocks_postings += count
+    want_rows, want_count = _decoded_postings(single)
+    want = {}
+    for t, d, tf in want_rows:
+        want.setdefault(t, {})[d] = tf
+    assert union == want
+    # no posting sits in two shards' blocks: the dict above would hide it
+    assert n_blocks_postings == sum(len(v) for v in union.values())
+    assert n_blocks_postings == want_count
 
 
 @pytest.mark.parametrize("n", [2, 5])

@@ -325,7 +325,7 @@ def test_or_kernel_maxscore_prunes_head_blocks(spark):
         F.col("term_id").isin(sorted(qmeta))
     ).toPandas()
     stats: dict = {}
-    kernel = _make_kernel(qmeta, "or", 1, 2, avgdl, 1 << 14, stats=stats)
+    kernel = _make_kernel(qmeta, "or", 1, 2, avgdl, stats=stats)
     out = kernel(blocks).sort_values(
         ["score", "docid"], ascending=[False, True]
     ).head(2)
@@ -430,7 +430,7 @@ def test_any_kernel_stops_at_k_smallest_docids(spark):
     blocks = idx.postings.filter(F.col("term_id").isin(tids)).toPandas()
     stats: dict = {}
     kernel = _make_kernel(
-        {t: (0.0, 1.0) for t in tids}, "any", 1, 5, 1.0, 1 << 14,
+        {t: (0.0, 1.0) for t in tids}, "any", 1, 5, 1.0,
         stats=stats,
     )
     out = kernel(blocks)
@@ -480,7 +480,7 @@ def test_and_kernel_blockmax_prunes_rare_blocks(spark):
         F.col("term_id").isin(sorted(qmeta))
     ).toPandas()
     stats: dict = {}
-    kernel = _make_kernel(qmeta, "and", 2, 1, avgdl, 1 << 14, stats=stats)
+    kernel = _make_kernel(qmeta, "and", 2, 1, avgdl, stats=stats)
     out = kernel(blocks).sort_values(
         ["score", "docid"], ascending=[False, True]
     ).head(1)
@@ -690,7 +690,7 @@ def test_mixed_kernel_prunes_head_term_blocks(spark):
         F.col("term_id").isin([head_tid] + leg_tids)
     ).toPandas()
     stats: dict = {}
-    kernel = _make_kernel(qmeta, "and", 1, 10, avgdl, 1 << 14, stats=stats,
+    kernel = _make_kernel(qmeta, "and", 1, 10, avgdl, stats=stats,
                           phrases=[(leg_tids, 0, w_p)])
     out = kernel(blocks)
     assert sorted(out["docid"].tolist()) == [77, 301]
@@ -790,7 +790,7 @@ def test_multiterm_conjunct_prunes_head_blocks(spark):
         F.col("term_id").isin([head_tid, *set_tids])
     ).toPandas()
     stats: dict = {}
-    kernel = _make_kernel(qmeta, "and", 1, 10, avgdl, 1 << 14, stats=stats,
+    kernel = _make_kernel(qmeta, "and", 1, 10, avgdl, stats=stats,
                           termsets=[(set_tids, 1.0)])
     out = kernel(blocks)
     assert sorted(out["docid"].tolist()) == [77, 301]
@@ -920,7 +920,7 @@ def test_req_opt_kernel_prunes_optional_head_blocks(spark):
         F.col("term_id").isin([rare_tid, head_tid])
     ).toPandas()
     stats: dict = {}
-    kernel = _make_kernel(qmeta, "and", 1, 10, avgdl, 1 << 14, stats=stats,
+    kernel = _make_kernel(qmeta, "and", 1, 10, avgdl, stats=stats,
                           opts=opts, opt_msm=0)
     out = kernel(blocks)
     assert sorted(out["docid"].tolist()) == [60, 140]
@@ -1009,7 +1009,7 @@ def test_required_disjunction_in_conjunction_rides_kernel(spark):
                                             for t in ("alpha", "beta")])
     ).toPandas()
     stats: dict = {}
-    kernel = _make_kernel(qmeta, "and", 1, 10, avgdl, 1 << 14, stats=stats,
+    kernel = _make_kernel(qmeta, "and", 1, 10, avgdl, stats=stats,
                           opts=opts, opt_msm=1)
     out = kernel(blocks)
     assert sorted(out["docid"].tolist()) == [60, 140]
@@ -1155,7 +1155,7 @@ def test_group_conjunct_prunes_member_blocks(spark):
         F.col("term_id").isin([rare_tid] + [t for t, _w in entries])
     ).toPandas()
     stats: dict = {}
-    kernel = _make_kernel(qmeta, "and", 1, 10, avgdl, 1 << 14, stats=stats,
+    kernel = _make_kernel(qmeta, "and", 1, 10, avgdl, stats=stats,
                           groups=[(entries, 1)])
     out = kernel(blocks)
     # doc 250 has rare but no group member -> gated out
@@ -1268,7 +1268,7 @@ def test_dismax_kernel_prunes_head_blocks(spark):
         F.col("term_id").isin([rare_tid, head_tid])
     ).toPandas()
     stats: dict = {}
-    kernel = _make_kernel(qmeta, "dismax", 1, 2, avgdl, 1 << 14,
+    kernel = _make_kernel(qmeta, "dismax", 1, 2, avgdl,
                           stats=stats, tie=0.3)
     out = kernel(blocks).sort_values(
         ["score", "docid"], ascending=[False, True]
@@ -1456,7 +1456,7 @@ def test_phrase_or_kernel_prunes_head_blocks(spark):
         F.col("term_id").isin(sorted([head_tid] + leg_tids))
     ).toPandas()
     stats: dict = {}
-    kernel = _make_kernel(qmeta, "or", 1, 2, avgdl, 1 << 14, stats=stats,
+    kernel = _make_kernel(qmeta, "or", 1, 2, avgdl, stats=stats,
                           phrases=[(leg_tids, 0, w_p)])
     out = kernel(blocks).sort_values(
         ["score", "docid"], ascending=[False, True]
@@ -1569,7 +1569,7 @@ def test_multiterm_disjunction_prunes_set_blocks(spark):
     stats: dict = {}
     # constant boost 0.1 far below the rare term's scores: the set
     # clause processes after θ is established and stops admitting
-    kernel = _make_kernel(qmeta, "or", 1, 2, avgdl, 1 << 14, stats=stats,
+    kernel = _make_kernel(qmeta, "or", 1, 2, avgdl, stats=stats,
                           termsets=[(set_tids, 0.1)])
     out = kernel(blocks).sort_values(
         ["score", "docid"], ascending=[False, True]

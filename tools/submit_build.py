@@ -47,7 +47,6 @@ def main() -> None:
         block_size=args.block_size,
         store_text=not args.no_store_text,
         num_partitions=spark.sparkContext.defaultParallelism,
-        merge_mode="shuffle",  # checkpointed build: see IndexConfig docs
     )
     manifest = build_and_write(table, args.output, cfg, n_chunks=args.chunks)
     print(json.dumps(manifest, indent=2, sort_keys=True))
