@@ -15,7 +15,8 @@ increasing):
 
 Both encode and decode are O(bytes) with no per-value Python loop:
 encode scatters the 7-bit groups of all values in ≤10 vector passes;
-decode reassembles with a cumsum-based group labeling.
+decode gathers them back in one pass per byte position (one pass when
+every value fits a byte, the common case for gaps, tfs and lengths).
 """
 
 from __future__ import annotations
@@ -55,23 +56,23 @@ def encode_varints(values: np.ndarray) -> bytes:
 def decode_varints(data: bytes, count: int | None = None) -> np.ndarray:
     """Decode LEB128 bytes back to an int64 array."""
     buf = np.frombuffer(data, dtype=np.uint8)
-    if buf.size == 0:
-        return np.empty(0, dtype=np.int64)
-    is_end = (buf & 0x80) == 0
-    # group id of each byte: number of terminators strictly before it
-    gid = np.zeros(buf.size, dtype=np.int64)
-    np.cumsum(is_end[:-1], out=gid[1:])
-    n_groups = int(is_end.sum())
-    # position of each byte within its group
-    group_start = np.zeros(n_groups, dtype=np.int64)
-    group_start[1:] = np.flatnonzero(is_end)[:-1] + 1
-    pos = np.arange(buf.size, dtype=np.int64) - group_start[gid]
-    vals = np.zeros(n_groups, dtype=np.uint64)
-    contrib = (buf & np.uint64(0x7F)).astype(np.uint64) << (
-        np.uint64(7) * pos.astype(np.uint64)
-    )
-    np.add.at(vals, gid, contrib)  # 7-bit groups never overlap → add == or
-    out = vals.astype(np.int64)
+    ends = np.flatnonzero(buf < 0x80)  # the last byte of each value
+    if ends.size == buf.size:
+        out = buf.astype(np.int64)  # every value fits one byte
+    else:
+        if ends.size == 0 or ends[-1] != buf.size - 1:
+            raise ValueError("varint stream ends inside a value")
+        starts = np.empty_like(ends)
+        starts[0] = 0
+        starts[1:] = ends[:-1] + 1
+        lens = ends - starts + 1
+        vals = (buf[starts] & 0x7F).astype(np.uint64)
+        for j in range(1, int(lens.max())):
+            m = np.flatnonzero(lens > j)
+            vals[m] |= (buf[starts[m] + j] & 0x7F).astype(np.uint64) << (
+                np.uint64(7 * j)
+            )
+        out = vals.astype(np.int64)
     if count is not None and out.size != count:
         raise ValueError(f"decoded {out.size} values, expected {count}")
     return out
@@ -156,28 +157,26 @@ def decode_block(
 
 def decode_blocks_batch(
     firsts, counts, doc_gaps_list, tfs_list
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+) -> tuple[np.ndarray, np.ndarray]:
     """Decode MANY blocks in one vectorized pass — the per-block
     decode_block loop costs ~0.1 ms of Python/numpy call overhead per
     block (a block holds ≤128 postings, so the arrays are tiny), which
     dominates wide queries that touch thousands of blocks.  All blocks'
     varint streams concatenate into ONE decode (LEB128 values are
-    self-delimiting), and docids reconstruct with a single segmented
-    cumsum.  Returns (docids, tfs, block_index_per_posting), rows in
-    block order (docids sorted only within each block)."""
+    self-delimiting), and docids reconstruct with a single cumsum over
+    all blocks, rebased per block.  Returns (docids, tfs), rows in block
+    order (docids sorted only within each block)."""
     counts = np.asarray(counts, dtype=np.int64)
-    if counts.size == 0:
-        z = np.empty(0, dtype=np.int64)
-        return z, z.copy(), z.copy()
     n = int(counts.sum())
-    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    gaps = decode_varints(b"".join(doc_gaps_list))
+    if n == 0:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+    starts = np.cumsum(counts) - counts
     arr = np.zeros(n, dtype=np.int64)
     mask = np.ones(n, dtype=bool)
     mask[starts] = False
-    arr[mask] = gaps
+    arr[mask] = decode_varints(b"".join(doc_gaps_list))
     cs = np.cumsum(arr)
-    seg = np.repeat(np.arange(counts.size), counts)
-    docids = np.asarray(firsts, dtype=np.int64)[seg] + (cs - cs[starts][seg])
+    docids = cs + np.repeat(np.asarray(firsts, dtype=np.int64) - cs[starts],
+                            counts)
     tf = decode_varints(b"".join(tfs_list)) + 1
-    return docids, tf, seg
+    return docids, tf

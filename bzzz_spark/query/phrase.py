@@ -64,11 +64,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bzzz_spark.build.codec import (
-    decode_blocks_batch,
-    decode_positions,
-    decode_varints,
-)
+from bzzz_spark.query.blocks import Blocks, decode, overlapping, tally
 from bzzz_spark.query.phrase_repeats import repeat_groups
 
 PHRASE_SCHEMA = "docid long, ptf double, dl long"
@@ -80,25 +76,6 @@ _EMPTY = pd.DataFrame(
         "dl": pd.Series(dtype="int64"),
     }
 )
-
-
-def _decode_blocks_pos(rows: pd.DataFrame):
-    """Blocks (sorted by first_docid) → (docids, tfs, dls, flat_positions).
-    docids ascending across the concatenation (blocks of one term in one
-    segment have disjoint increasing ranges).  Batched: one varint pass
-    per stream across all blocks (codec.decode_blocks_batch); the
-    positions stream concatenates safely because each posting's first
-    value is absolute, and block boundaries coincide with posting
-    boundaries."""
-    d, tf, _seg = decode_blocks_batch(
-        rows["first_docid"].to_numpy(),
-        rows["count"].to_numpy(),
-        rows["doc_gaps"].tolist(),
-        rows["tfs"].tolist(),
-    )
-    dl = decode_varints(b"".join(rows["dls"]))
-    pos = decode_positions(b"".join(rows["positions"]), tf)
-    return d, tf, dl, pos
 
 
 def _exact_freqs(legs, n_cand: int):
@@ -346,41 +323,49 @@ def phrase_segment_kernel(
     `error AND "stack trace"` hands the phrase only error's survivors).
     Every leg's blocks — including the rarest — are pruned against it,
     and the output docids are a subset of it."""
-    if restrict is not None and restrict.size == 0:
+    got = phrase_arrays(Blocks.from_frame(blocks), tid_order, slop, stats,
+                        restrict)
+    if got is None:
         return _EMPTY
+    d, ptf, dl = got
+    return pd.DataFrame({"docid": d, "ptf": ptf, "dl": dl})
+
+
+def phrase_arrays(
+    b: Blocks, tid_order: list[int], slop: int,
+    stats: dict | None = None, restrict: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
+    """phrase_segment_kernel on one segment's array block set: sorted
+    (docid, ptf, dl) arrays, or None when nothing matches.  The WAND
+    kernels call it directly."""
+    if restrict is not None and restrict.size == 0:
+        return None
     uniq = list(dict.fromkeys(int(t) for t in tid_order))
     per = {}
     for tid in uniq:
-        sub = blocks[blocks["term_id"] == tid]
-        if len(sub) == 0:
-            return _EMPTY  # a missing must-term: no phrase in this segment
-        per[tid] = sub.sort_values("first_docid")
-        if stats is not None:
-            tb = stats.setdefault("total_blocks", {})
-            tb[tid] = tb.get(tid, 0) + len(sub)
-    order = sorted(uniq, key=lambda t: int(per[t]["count"].sum()))
+        rows = b.rows(tid)
+        if rows.size == 0:
+            return None  # a missing must-term: no phrase in this segment
+        per[tid] = rows
+        tally(stats, "total_blocks", tid, rows.size)
+    order = sorted(uniq, key=lambda t: int(b.count[per[t]].sum()))
     decoded = {}
     cand = cand_dl = None
     for i, tid in enumerate(order):
-        sub = per[tid]
+        rows = per[tid]
         bound_to = cand if i > 0 else restrict
         if bound_to is not None:
             # block-range pruning: decode only blocks that can hold a
             # surviving candidate
-            lo = np.searchsorted(bound_to, sub["first_docid"].to_numpy(),
-                                 "left")
-            hi = np.searchsorted(bound_to, sub["last_docid"].to_numpy(),
-                                 "right")
-            sub = sub[hi > lo]
-            if len(sub) == 0:
-                return _EMPTY
-        if stats is not None:
-            db = stats.setdefault("decoded_blocks", {})
-            db[tid] = db.get(tid, 0) + len(sub)
-        d, tf, dl, flat_pos = _decode_blocks_pos(sub)
-        decoded[tid] = (d, tf, flat_pos)
+            rows = overlapping(b, rows, bound_to)
+            if rows.size == 0:
+                return None
+        tally(stats, "decoded_blocks", tid, rows.size)
+        dec = decode(b, rows, dl=i == 0, positions=True)
+        d, tf = dec.d, dec.tf
+        decoded[tid] = (d, tf, dec.pos)
         if i == 0:
-            cand, cand_dl = d, dl
+            cand, cand_dl = d, dec.dl
             if restrict is not None:
                 idx = np.clip(
                     np.searchsorted(restrict, cand), 0, restrict.size - 1
@@ -388,13 +373,13 @@ def phrase_segment_kernel(
                 hit = restrict[idx] == cand
                 cand, cand_dl = cand[hit], cand_dl[hit]
                 if cand.size == 0:
-                    return _EMPTY
+                    return None
         else:
             idx = np.clip(np.searchsorted(d, cand), 0, d.size - 1)
             hit = d[idx] == cand
             cand, cand_dl = cand[hit], cand_dl[hit]
             if cand.size == 0:
-                return _EMPTY
+                return None
     # one grouping rule for the engine: phrase_repeats.repeat_groups
     # (the oracle keeps its own deliberately-independent copy)
     rpt_groups = repeat_groups([int(t) for t in tid_order])
@@ -410,7 +395,7 @@ def phrase_segment_kernel(
             keep &= tf[idx] >= len(g)
         cand, cand_dl = cand[keep], cand_dl[keep]
         if cand.size == 0:
-            return _EMPTY
+            return None
     legs = []
     for off, tid in enumerate(int(t) for t in tid_order):
         d, tf, flat_pos = decoded[tid]
@@ -432,10 +417,8 @@ def phrase_segment_kernel(
     else:
         doc_rank, ptf = _sloppy_freqs_k(legs, slop, cand.size)
     if doc_rank.size == 0:
-        return _EMPTY
-    return pd.DataFrame(
-        {"docid": cand[doc_rank], "ptf": ptf, "dl": cand_dl[doc_rank]}
-    )
+        return None
+    return cand[doc_rank], ptf, cand_dl[doc_rank]
 
 
 def phrase_matches(index, tid_order: list[int], slop: int) -> DataFrame:

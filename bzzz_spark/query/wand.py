@@ -3,25 +3,35 @@
 The reference scores doc-at-a-time per segment leaf with a priority
 queue (Lucene; the leapfrog pattern is visible in
 reference src/java/bzzz/java/query/TermPayloadClojureScoreQuery.java:237-257).
-The Spark translation keeps the per-leaf structure: each docid-range
-*segment* is scored independently by a vectorized numpy kernel (one
-applyInPandas task per segment), emitting a per-segment top-k; Spark's
-TakeOrderedAndProject is the cross-segment PQ merge.  Document lengths
-come from the blocks' INLINE norms stream (dls), so the only shuffle
-in a query is the (tiny) query-term block set grouping by segment —
-no norms table is ever shipped (the earlier design cogrouped a
-(docid, dl) projection per touched segment; at 10^12 docs that is a
-terabyte-class shuffle per query).
-θ cannot be shared across segments (they run in parallel), so pruning
-is per-segment — still exact, just conservative, and embarrassingly
-parallel at 1000-executor scale.
+The translation keeps the per-leaf structure: each docid-range
+*segment* is scored independently, emitting a per-segment top-k; Spark's
+TakeOrderedAndProject (or the serving tier's final sort) is the
+cross-segment PQ merge.  Document lengths come from the blocks' INLINE
+norms stream (dls), so the only shuffle in a query is the (tiny)
+query-term block set grouping by segment — no norms table is ever
+shipped.  θ cannot be shared across segments (they run in parallel on
+Spark), so pruning is per-segment — still exact, just conservative.
+
+Kernel layout: a KernelPlan's kernel takes the query's block frame (one
+segment or many), converts it ONCE to a numpy block set
+(bzzz_spark.query.blocks: one array per column, rows sorted by
+(segment, term_id, first_docid), so every segment and every term in it
+is a contiguous slice), runs each segment's slice through one function
+per query shape (_any_topk, _term_topk, _and_topk, _mixed_and_topk,
+_maxscore_topk) and returns the per-segment top-k concatenated as one
+(docid, score) frame.  The shapes share one block decoder
+(blocks.decode), one "blocks overlapping the candidates" helper
+(blocks.overlapping, cached per term by _Lazy) and one stats recorder
+(blocks.tally); pandas appears only at entry and exit.  Every pruning
+bound is rounded up (_up), so no bound sits below a score it bounds.
 
 Pruning by query shape (all results EXACT — pruning never changes them;
 tests cross-check against the exhaustive executor and the oracle):
 
 - single term: a doc's whole score lives in one block, so blocks are
-  processed in descending block_max_score order and processing stops
-  once the kth-best score ≥ the next block's max (classic block-max
+  processed in descending block_max_score order (in chunks of 8
+  doubling to 256, the conjunction's rule) and processing stops once
+  the kth-best score exceeds the next block's max (classic block-max
   top-k).
 - conjunction (AND): block-granular leapfrog — the rarest term's blocks
   are decoded first; every other term's blocks are skipped entirely
@@ -30,8 +40,8 @@ tests cross-check against the exhaustive executor and the oracle):
   other terms' remaining max < the current kth best of full matches.
 - disjunction (OR/minimum-should-match): MaxScore (Turtle & Flood) at
   block granularity — terms processed in descending upper-bound order
-  (UB_t = boost · max block_max_score) into a dense per-segment
-  accumulator; once the unprocessed terms' combined UB falls below the
+  (UB_t = boost · max block_max_score) into per-candidate
+  accumulators; once the unprocessed terms' combined UB falls below the
   kth-best score among msm-qualifying candidates, no NEW doc can reach
   the top-k, so the remaining (lower-impact, usually head) terms stop
   admitting candidates and their blocks are decoded only where the
@@ -63,6 +73,7 @@ results, more I/O.
 
 from __future__ import annotations
 
+from dataclasses import dataclass, field as _dc_field
 from typing import Iterator
 
 import numpy as np
@@ -70,19 +81,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bzzz_spark import BM25_B, BM25_K1
-from bzzz_spark.build.codec import (
-    decode_block,
-    decode_blocks_batch,
-    decode_varints,
-    decode_zigzag,
-)
+from bzzz_spark import BM25_K1
 from bzzz_spark.build.indexer import BzzzIndex
 from bzzz_spark.query import ast
+from bzzz_spark.query.blocks import Blocks, decode, overlapping, tally
+from bzzz_spark.query.phrase import phrase_arrays
 from bzzz_spark.query.scoring import idf as idf_fn
-
-
-from dataclasses import dataclass, field as _dc_field
+from bzzz_spark.query.scoring import tf_component_np
 
 
 @dataclass
@@ -449,12 +454,623 @@ def classify(node: ast.Query) -> FlatShape | None:
     return None
 
 
-def _tfc(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
-    return (
-        tf
-        * (BM25_K1 + 1.0)
-        / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl))
-    )
+# Pruning bounds and the scores they bound group the same float
+# operations differently (boost * block_max_score against
+# (idf * boost) * tfc; a sum of per-term bounds against the kernel's own
+# sums), so either side can land a few ulps above the other.  Every
+# bound is rounded up by 2^-42 relative (about 1k ulps, far above the
+# rounding of any sum of a few hundred clauses) plus one ulp; a bound
+# then never sits below a score it bounds, and the strict `bound < θ`
+# skips stay exact.
+_SLACK = 1.0 + 2.0 ** -42
+
+
+def _up(x):
+    """A pruning bound rounded up (see _SLACK)."""
+    return np.nextafter(np.multiply(x, _SLACK), np.inf)
+
+
+@dataclass
+class _Spec:
+    """One planned query as the shape functions read it.
+
+    qmeta: term_id -> (weight = idf*boost, boost).  Document lengths
+    come from the blocks' inline dls stream (0 → avgdl, the
+    norms-disabled sentinel), so the kernel needs no side input.
+
+    neg_tids: must_not terms (Lucene ReqExclScorer): their blocks are
+    decoded ONLY where their [first_docid, last_docid] range intersects
+    a surviving candidate — "x AND NOT the" decodes just the blocks of
+    "the" overlapping x's candidates.
+
+    ranges (and-mode): (ast.Range, contrib) predicates over inlined
+    doc-value columns, evaluated on the first conjunct decode that
+    carries the dv streams; contrib is the score a match adds (the
+    Range's boost under Bool(must), 0.0 for a filter arm).
+
+    phrases: (leg_tids, slop, weight) pseudo-terms — and-mode
+    conjuncts restricted to the surviving candidates, or or/dismax
+    clauses bounded by weight*(k1+1) (a phrase block carries no
+    positional bound; loose but sound).  weight = Σ idf(leg) × boost
+    (Lucene PhraseWeight), 0.0 for filter arms.
+
+    termsets: (member_tids, contrib) constant-score sets — an expanded
+    Wildcard/Fuzzy: a doc matches when ANY member term holds it and
+    scores contrib (Lucene CONSTANT_SCORE_REWRITE).
+
+    opts / opt_phrases / opt_sets (and-mode): OPTIONAL should clauses
+    (Lucene ReqOptSumScorer) — tid -> (weight, boost) terms, phrases and
+    (member_tids, boost) sets.  They never admit candidates, decode only
+    where they overlap the conjunction's survivors, add their score
+    where they match, and opt_msm of them must match.  Their upper
+    bounds widen θ's pruning bound.
+
+    groups (and-mode): (entries, msm) REQUIRED disjunction groups
+    ("(a OR b) AND (c OR d)"): entries are (tid, weight) — duplicates
+    each score and count — and a doc must match >= msm of them."""
+
+    qmeta: dict
+    mode: str
+    msm: int
+    k: int
+    avgdl: float
+    neg_tids: list
+    ranges: list
+    stats: dict | None
+    phrases: list
+    termsets: list
+    opts: dict
+    opt_msm: int
+    tie: float
+    opt_phrases: list
+    opt_sets: list
+    groups: list
+
+    def __post_init__(self):
+        self.range_boost = float(sum(c for _r, c in self.ranges))
+        self.dv_want = tuple(
+            dict.fromkeys(r.field_name for r, _c in self.ranges)
+        )
+
+
+def _tfc(q: _Spec, tf: np.ndarray, dl: np.ndarray) -> np.ndarray:
+    """BM25 tf component of decoded streams (dl 0 scores as avgdl)."""
+    return tf_component_np(tf, np.where(dl == 0, q.avgdl, dl), q.avgdl)
+
+
+def _dv_mask(q: _Spec, dvv: dict) -> np.ndarray:
+    """Row mask of the range predicates over decoded dv streams (one
+    value per posting; a doc's value is the same in every term's
+    stream, so masking rows masks docs)."""
+    m = np.ones(next(iter(dvv.values())).size, dtype=bool)
+    for rg, _c in q.ranges:
+        v = dvv[rg.field_name]
+        if rg.min is not None:
+            m &= (v >= rg.min) if rg.min_inclusive else (v > rg.min)
+        if rg.max is not None:
+            m &= (v <= rg.max) if rg.max_inclusive else (v < rg.max)
+    return m
+
+
+def _topk(d: np.ndarray, s: np.ndarray, k: int) -> tuple:
+    """The k best by (score desc, docid asc)."""
+    if s.size > k:
+        # only scores >= the kth largest can place (ties at the cut kept)
+        m = s >= np.partition(s, s.size - k)[s.size - k]
+        d, s = d[m], s[m]
+    o = np.lexsort((d, -s))[:k]
+    return d[o], s[o]
+
+
+def _chunks(n: int, size: int = 8):
+    """Slices over n ordered blocks: start small so θ can stop after a
+    handful of high-bound blocks, then double toward 256 so a long
+    unpruned scan amortizes the per-chunk overhead.  θ only grows, so a
+    coarser later chunk never prunes less than its first block's bound
+    allows — exactness is unchanged."""
+    start = 0
+    while start < n:
+        yield slice(start, min(start + size, n))
+        start += size
+        size = min(256, size * 2)
+
+
+class _Theta:
+    """Running kth-best score of the docs emitted so far: the pruning
+    threshold, -inf until k docs are in."""
+
+    def __init__(self, k: int):
+        self.k = k
+        self.best = np.empty(0)
+        self.value = -np.inf
+
+    def push(self, s: np.ndarray) -> None:
+        best = np.concatenate((self.best, s))
+        if best.size > self.k:
+            best = np.partition(best, best.size - self.k)[best.size - self.k:]
+        self.best = best
+        if best.size >= self.k:
+            self.value = best.min()
+
+
+class _Lazy:
+    """Blocks (ascending first_docid) decoded only where they overlap a
+    candidate, each block once; what is decoded accumulates in one
+    docid-sorted store."""
+
+    def __init__(self, q: _Spec, b: Blocks, rows: np.ndarray, key):
+        self.q, self.b, self.rows, self.key = q, b, rows, key
+        self.done = np.zeros(b.term_id.size, dtype=bool)
+        self.d = np.empty(0, dtype=np.int64)
+        self.tf = self.dl = self.d
+        tally(q.stats, "total_blocks", key, rows.size)
+
+    def over(self, cand: np.ndarray):
+        """(docids, tf, dl) of every block decoded so far, docid-sorted —
+        a superset of the postings in the blocks overlapping the sorted
+        ``cand``, which this call decodes if not yet done — or None when
+        no block overlaps ``cand``.  Several terms' docids may repeat."""
+        need = overlapping(self.b, self.rows, cand)
+        if need.size == 0:
+            return None
+        miss = need[~self.done[need]]
+        if miss.size:
+            self.done[miss] = True
+            dec = decode(self.b, miss)
+            d = np.concatenate((self.d, dec.d))
+            o = np.argsort(d, kind="stable")  # merges sorted runs
+            self.d = d[o]
+            self.tf = np.concatenate((self.tf, dec.tf))[o]
+            self.dl = np.concatenate((self.dl, dec.dl))[o]
+            tally(self.q.stats, "decoded_blocks", self.key, miss.size)
+        return self.d, self.tf, self.dl
+
+
+class _Excluder:
+    """must_not terms (Lucene ReqExclScorer) over one segment."""
+
+    def __init__(self, q: _Spec, b: Blocks):
+        self.lazy = (_Lazy(q, b, b.rows_of(q.neg_tids), "neg")
+                     if q.neg_tids else None)
+
+    def keep(self, d: np.ndarray) -> np.ndarray:
+        """Mask over sorted docids: True where no must_not term matches."""
+        got = self.lazy.over(d) if self.lazy and d.size else None
+        if got is None:
+            return np.ones(d.size, dtype=bool)
+        nd = got[0]
+        return nd[np.clip(np.searchsorted(nd, d), 0, nd.size - 1)] != d
+
+
+class _Optionals:
+    """The optional should clauses of a conjunction over one segment:
+    what is present here, their summed upper bound and whether opt_msm
+    can still be met."""
+
+    def __init__(self, q: _Spec, b: Blocks):
+        self.q, self.b = q, b
+        self.sets, self.terms, self.phrases = [], [], []
+        self.ub = 0.0
+        for si, (mtids, boost) in enumerate(q.opt_sets):
+            rows = b.rows_of(mtids)
+            if rows.size:
+                self.sets.append((_Lazy(q, b, rows, f"optset:{si}"), boost))
+                self.ub += float(boost)
+        for tid, (w, boost) in q.opts.items():
+            rows = b.rows(tid)
+            if rows.size:
+                self.terms.append((_Lazy(q, b, rows, f"opt:{tid}"), w))
+                self.ub += boost * float(b.bms[rows].max())
+        if q.opt_phrases:
+            sizes = b.sizes()
+            for legs, slop, w_p in q.opt_phrases:
+                if all(int(t) in sizes for t in legs):
+                    self.phrases.append((legs, slop, w_p))
+                    self.ub += w_p * (BM25_K1 + 1.0)
+        self.feasible = q.opt_msm <= (
+            len(self.sets) + len(self.terms) + len(self.phrases)
+        )
+
+    def add(self, cand: np.ndarray, acc: np.ndarray) -> tuple:
+        """Add matching optional clauses' scores to the sorted surviving
+        candidates (``acc`` must be a fresh array: it is added to in
+        place), then apply the minimum-should-match cut."""
+        q = self.q
+        if cand.size == 0 or not (self.sets or self.terms or self.phrases):
+            return cand, acc
+        ocnt = np.zeros(cand.size, dtype=np.int32)
+        for lazy, boost in self.sets:
+            got = lazy.over(cand)
+            if got is not None:
+                u = got[0]
+                hit = u[np.clip(np.searchsorted(u, cand), 0, u.size - 1)] == cand
+                acc[hit] += boost
+                ocnt[hit] += 1
+        for lazy, w in self.terms:
+            got = lazy.over(cand)
+            if got is not None:
+                d, tf, dl = got
+                pos = np.clip(np.searchsorted(d, cand), 0, d.size - 1)
+                hit = d[pos] == cand
+                acc[hit] += w * _tfc(q, tf[pos[hit]], dl[pos[hit]])
+                ocnt[hit] += 1
+        for legs, slop, w_p in self.phrases:
+            got = phrase_arrays(self.b, list(legs), slop, q.stats, cand)
+            if got is not None:
+                d, ptf, pdl = got
+                idx = np.searchsorted(cand, d)  # d ⊆ cand, both ascending
+                acc[idx] += w_p * _tfc(q, ptf, pdl)
+                ocnt[idx] += 1
+        if q.opt_msm > 0:
+            m = ocnt >= q.opt_msm
+            return cand[m], acc[m]
+        return cand, acc
+
+
+def _any_topk(q: _Spec, b: Blocks):
+    """Constant-score match-any: the k smallest matching docids.  Blocks
+    ascend by first_docid; once the kth-smallest docid found so far
+    precedes the next block's range, no later block can contribute."""
+    rows = b.rows_of(q.qmeta)
+    if rows.size == 0:
+        return None
+    tally(q.stats, "total_blocks", None, rows.size)
+    got = np.empty(0, dtype=np.int64)
+    for sl in _chunks(rows.size, min(q.k, 8)):
+        if got.size >= q.k and got[q.k - 1] < b.first[rows[sl.start]]:
+            break
+        d = decode(b, rows[sl], dl=False).d
+        got = np.unique(np.concatenate((got, d)))[:q.k]
+        tally(q.stats, "decoded_blocks", None, sl.stop - sl.start)
+    boost = next(iter(q.qmeta.values()))[1]
+    return got, np.full(got.size, float(boost))
+
+
+def _term_topk(q: _Spec, b: Blocks):
+    """Single-term block-max top-k: blocks in descending max-score
+    order, stopping once the kth best so far beats the next block's
+    bound.  Exact: a doc's whole score lives in exactly one block.
+    Strictly below θ: a block whose bound EQUALS θ can still hold a
+    score-tied doc with a smaller docid (e.g. boost=0 makes every score
+    0), which wins the (score desc, docid asc) tie-break."""
+    tid, (w, boost) = next(iter(q.qmeta.items()))
+    rows = b.rows(tid)
+    if rows.size == 0:
+        return None
+    tally(q.stats, "total_blocks", tid, rows.size)
+    rows = rows[np.argsort(-b.bms[rows], kind="stable")]
+    bounds = _up(boost * b.bms[rows])
+    theta = _Theta(q.k)
+    out_d, out_s = [], []
+    for sl in _chunks(rows.size):
+        if bounds[sl.start] < theta.value:
+            break
+        dec = decode(b, rows[sl])
+        tally(q.stats, "decoded_blocks", tid, sl.stop - sl.start)
+        out_d.append(dec.d)
+        out_s.append(w * _tfc(q, dec.tf, dec.dl))
+        theta.push(out_s[-1])
+    return _topk(np.concatenate(out_d), np.concatenate(out_s), q.k)
+
+
+def _and_topk(q: _Spec, b: Blocks):
+    """Block-max conjunction (Lucene BlockMaxConjunctionScorer,
+    block-at-a-time).  The rarest term's blocks are processed in
+    descending block-max chunks; once θ exceeds a chunk's bound plus
+    the other terms' (and optional clauses') upper bounds, the remaining
+    rare blocks cannot host a top-k doc and are never decoded.  Within a
+    chunk the other terms decode only blocks overlapping the chunk's
+    surviving candidates, each block once.  Scores sum in qmeta order
+    whatever the per-segment term order, so equal docs tie exactly."""
+    trows = {tid: b.rows(tid) for tid in q.qmeta}
+    if any(r.size == 0 for r in trows.values()):
+        return None  # a must-term has no postings in this segment
+    opt = _Optionals(q, b)
+    if not opt.feasible:
+        return None
+    excl = _Excluder(q, b)
+    rare, *others = sorted(q.qmeta, key=lambda t: int(b.count[trows[t]].sum()))
+    lazy = {t: _Lazy(q, b, trows[t], t) for t in others}
+    ub_rest = sum(q.qmeta[t][1] * float(b.bms[trows[t]].max()) for t in others)
+    w_r, boost_r = q.qmeta[rare]
+    rrows = trows[rare][np.argsort(-b.bms[trows[rare]], kind="stable")]
+    tally(q.stats, "total_blocks", rare, rrows.size)
+    bounds = _up(boost_r * b.bms[rrows] + (ub_rest + q.range_boost + opt.ub))
+    theta = _Theta(q.k)
+    out_d, out_s = [], []
+    for sl in _chunks(rrows.size):
+        if bounds[sl.start] < theta.value:
+            break  # strictly below θ: a bound-tied doc could still win
+        dec = decode(b, rrows[sl], dv=q.dv_want)
+        tally(q.stats, "decoded_blocks", rare, sl.stop - sl.start)
+        o = np.argsort(dec.d, kind="stable")
+        if q.ranges:
+            o = o[_dv_mask(q, {c: v[o] for c, v in dec.dv.items()})]
+        d = dec.d[o]
+        parts = {rare: w_r * _tfc(q, dec.tf[o], dec.dl[o])}
+        for t in others:
+            got = lazy[t].over(d) if d.size else None
+            if got is None:
+                d = d[:0]
+                break
+            gd, gtf, gdl = got
+            pos = np.clip(np.searchsorted(gd, d), 0, gd.size - 1)
+            hit = gd[pos] == d
+            d, pos = d[hit], pos[hit]
+            parts = {u: v[hit] for u, v in parts.items()}
+            parts[t] = q.qmeta[t][0] * _tfc(q, gtf[pos], gdl[pos])
+        if d.size == 0:
+            continue
+        acc = sum(parts[t] for t in q.qmeta) + q.range_boost
+        km = excl.keep(d)
+        d, acc = opt.add(d[km], acc[km])
+        if d.size:
+            out_d.append(d)
+            out_s.append(acc)
+            theta.push(acc)
+    if not out_d:
+        return None
+    return _topk(np.concatenate(out_d), np.concatenate(out_s), q.k)
+
+
+def _conjunct(q: _Spec, b: Blocks, kind: str, key, cand,
+              dv_want: tuple):
+    """One term ("t"), set ("s") or group ("g") conjunct of a mixed
+    conjunction: its matching docs (sorted, unique) and their score,
+    decoding only blocks that overlap the sorted ``cand`` when given.
+    The dv range mask applies at this decode when ``dv_want`` is set —
+    a doc's dv value is the same in every member posting, so masking
+    rows before a union or the msm count removes exactly the
+    out-of-range docs."""
+    if kind == "t":
+        rows, skey = b.rows(key), key
+    elif kind == "s":
+        rows, skey = b.rows_of(q.termsets[key][0]), f"set:{key}"
+    else:
+        entries, gmsm = q.groups[key]
+        rows, skey = b.rows_of({t for t, _w in entries}), f"grp:{key}"
+    tally(q.stats, "total_blocks", skey, rows.size)
+    if cand is not None:
+        rows = overlapping(b, rows, cand)
+        if rows.size == 0:
+            return None
+    tally(q.stats, "decoded_blocks", skey, rows.size)
+    dec = decode(b, rows, dl=kind != "s", dv=dv_want)
+    keep = _dv_mask(q, dec.dv) if dv_want else slice(None)
+    d = dec.d[keep]
+    if kind == "t":
+        return d, q.qmeta[key][0] * _tfc(q, dec.tf[keep], dec.dl[keep])
+    u = np.unique(d)  # several terms: one row per docid
+    if kind == "s":
+        return u, np.full(u.size, float(q.termsets[key][1]))
+    # group: per-entry score and count (duplicate entries each count)
+    owner = np.repeat(b.term_id[rows], b.count[rows])[keep]
+    tf, dl = dec.tf[keep], dec.dl[keep]
+    gscore = np.zeros(u.size)
+    gcnt = np.zeros(u.size, dtype=np.int32)
+    for tid, w in entries:
+        m = owner == tid
+        idx = np.searchsorted(u, d[m])
+        gcnt[idx] += 1
+        if w != 0.0:
+            gscore[idx] += w * _tfc(q, tf[m], dl[m])
+    gm = gcnt >= gmsm
+    return u[gm], gscore[gm]
+
+
+def _mixed_and_topk(q: _Spec, b: Blocks):
+    """Conjunction with phrase, set or group conjuncts: conjuncts are
+    intersected in ascending estimated-size order (a phrase's estimate
+    is its rarest leg; a set's or group's the member sum).  No θ-pruning
+    here (a phrase block carries no positional bound), but every
+    conjunct after the first decodes only blocks overlapping the
+    surviving candidates — the leapfrog of ref
+    TermPayloadClojureScoreQuery.java:237-257, applied uniformly.  The
+    dv range mask rides the first term, set or group decode
+    (plan_candidates adds an unscored phrase-leg term when only phrases
+    conjoin)."""
+    sizes = b.sizes()
+    if not all(int(t) in sizes for t in q.qmeta) or not all(
+        int(t) in sizes for legs, _s, _w in q.phrases for t in legs
+    ):
+        return None  # a conjunct term has no postings here
+    if not all(any(int(t) in sizes for t in tids) for tids, _c in q.termsets):
+        return None  # a set conjunct with no member here
+    if any(sum(int(t) in sizes for t, _w in entries) < gmsm
+           for entries, gmsm in q.groups):
+        return None  # a group that cannot reach its msm here
+    opt = _Optionals(q, b)
+    if not opt.feasible:
+        return None
+    conj = ([("t", tid) for tid in q.qmeta]
+            + [("p", i) for i in range(len(q.phrases))]
+            + [("s", i) for i in range(len(q.termsets))]
+            + [("g", i) for i in range(len(q.groups))])
+
+    def estimate(c):
+        kind, key = c
+        if kind == "t":
+            return sizes[key]
+        if kind == "p":
+            return min(sizes[int(t)] for t in q.phrases[key][0])
+        tids = (q.termsets[key][0] if kind == "s"
+                else [t for t, _w in q.groups[key][0]])
+        return sum(sizes.get(int(t), 0) for t in tids)
+
+    cand, parts, dv_want = None, {}, q.dv_want
+    for c in sorted(conj, key=estimate):
+        if c[0] == "p":
+            legs, slop, w_p = q.phrases[c[1]]
+            got = phrase_arrays(b, list(legs), slop, q.stats, cand)
+            if got is None:
+                return None
+            d, ptf, pdl = got
+            if cand is not None:
+                idx = np.searchsorted(cand, d)  # d ⊆ cand, both ascending
+                parts = {u: v[idx] for u, v in parts.items()}
+            cand, parts[c] = d, w_p * _tfc(q, ptf, pdl)
+            continue
+        got = _conjunct(q, b, c[0], c[1], cand, dv_want)
+        dv_want = ()
+        if got is None or got[0].size == 0:
+            return None
+        d, s = got
+        if cand is not None:
+            pos = np.clip(np.searchsorted(d, cand), 0, d.size - 1)
+            hit = d[pos] == cand
+            if not hit.any():
+                return None
+            cand, s = cand[hit], s[pos[hit]]
+            parts = {u: v[hit] for u, v in parts.items()}
+        else:
+            cand = d
+        parts[c] = s
+    acc = sum(parts[c] for c in conj)
+    km = _Excluder(q, b).keep(cand)
+    d, acc = opt.add(cand[km], acc[km] + q.range_boost)
+    if d.size == 0:
+        return None
+    return _topk(d, acc, q.k)
+
+
+def _clause(q: _Spec, b: Blocks, kind: str, key, rows, cand):
+    """One MaxScore clause's matches (sorted docids) and contributions,
+    restricted to the sorted ``cand`` once admission has closed."""
+    if kind == "p":
+        legs, slop, w_p = key
+        got = phrase_arrays(b, list(legs), slop, q.stats, cand)
+        if got is None:
+            return None
+        return got[0], w_p * _tfc(q, got[1], got[2])
+    skey = key if kind == "t" else f"set:{key[0]}"
+    if cand is not None:
+        rows = overlapping(b, rows, cand)
+        if rows.size == 0:
+            return None
+    tally(q.stats, "decoded_blocks", skey, rows.size)
+    dec = decode(b, rows, dl=kind == "t")
+    d = dec.d if kind == "t" else np.unique(dec.d)
+    if cand is None:
+        keep = slice(None)
+    else:
+        keep = cand[np.clip(np.searchsorted(cand, d), 0, cand.size - 1)] == d
+    if kind == "t":
+        return d[keep], q.qmeta[key][0] * _tfc(q, dec.tf[keep], dec.dl[keep])
+    d = d[keep]
+    return d, np.full(d.size, float(key[1]))
+
+
+def _maxscore_topk(q: _Spec, b: Blocks):
+    """Disjunction / dis-max: MaxScore (Turtle & Flood) over dense
+    per-segment accumulators.  Clauses run in descending upper-bound
+    order; once the bound on a doc first seen at clause i falls below θ
+    (the kth best score among candidates already satisfying msm and the
+    exclusions), later clauses stop admitting NEW docs and decode only
+    blocks overlapping surviving candidates — "rare OR the" decodes just
+    the slice of "the" overlapping rare's candidates.  Candidates whose
+    score plus the remaining bounds cannot reach θ retire.  Exact: θ
+    only underestimates the final kth best (scores grow monotonically;
+    msm and exclusion are decided before a candidate counts toward θ).
+
+    dis-max (Lucene DisjunctionMaxQuery) scores (1-tie)*max + tie*sum
+    with a parallel max accumulator.  Monotone in both parts for tie in
+    [0, 1], so the bounds maximize them independently: a new doc at
+    clause i is bounded by (1-tie)*UB_i + tie*suffix_i, a candidate by
+    (1-tie)*max(mx, UB_next) + tie*(acc + suffix_next).  Phrase clauses
+    are bounded by w_p*(k1+1) and set clauses by their constant.  Final
+    scores are re-summed in clause order, so equal docs tie exactly
+    whatever each segment's bound order."""
+    dismax, tie = q.mode == "dismax", q.tie
+    sizes = b.sizes() if q.phrases else {}
+    clauses = []  # (kind, key, ub, rows)
+    for tid, (_w, boost) in q.qmeta.items():
+        rows = b.rows(tid)
+        if rows.size:
+            tally(q.stats, "total_blocks", tid, rows.size)
+            clauses.append(("t", tid, boost * float(b.bms[rows].max()), rows))
+    for legs, slop, w_p in q.phrases:
+        if all(int(t) in sizes for t in legs):  # else a leg cannot match
+            clauses.append(("p", (legs, slop, w_p), w_p * (BM25_K1 + 1.0),
+                            b.rows_of(legs)))
+    for si, (tids, contrib) in enumerate(q.termsets):
+        rows = b.rows_of(tids)
+        if rows.size:
+            tally(q.stats, "total_blocks", f"set:{si}", rows.size)
+            clauses.append(("s", (si, contrib), contrib, rows))
+    if not clauses:
+        return None
+    order = sorted(range(len(clauses)), key=lambda i: -clauses[i][2])
+    ubs = np.array([clauses[i][2] for i in order])
+    suffix = np.cumsum(ubs[::-1])[::-1]
+    admit = _up((1.0 - tie) * ubs + tie * suffix if dismax else suffix)
+    ub_next, suffix_next = np.append(ubs[1:], 0.0), np.append(suffix[1:], 0.0)
+    # per-candidate state, docid-sorted: score sum, max (dis-max),
+    # matched-clause count, excluded, retired
+    docs = np.empty(0, dtype=np.int64)
+    acc, mxa = np.empty(0), np.empty(0)
+    cnt = np.empty(0, dtype=np.int32)
+    excl, dead = np.empty(0, dtype=bool), np.empty(0, dtype=bool)
+    excluder = _Excluder(q, b)
+    msm = max(q.msm, 1)
+    theta = -np.inf
+    parts = {}  # clause index -> (docids, contributions)
+
+    def combined(s_acc, sel):
+        if dismax:
+            return (1.0 - tie) * mxa[sel] + tie * s_acc[sel]
+        return s_acc[sel]
+
+    closed = False
+    for i, ci in enumerate(order):
+        kind, key, _ub, rows = clauses[ci]
+        closed = closed or admit[i] < theta  # no NEW doc can reach top-k
+        cand = None
+        if closed:
+            cand = docs[~excl & ~dead]
+            if cand.size == 0:
+                break
+        got = _clause(q, b, kind, key, rows, cand)
+        if got is None:
+            continue
+        d, c = got
+        if not closed:
+            u = np.union1d(docs, d)
+            if u.size > docs.size:  # admit new docs
+                at = np.searchsorted(u, docs)
+                grown = []
+                for arr in (acc, mxa, cnt, excl, dead):
+                    g = np.zeros(u.size, dtype=arr.dtype)
+                    g[at] = arr
+                    grown.append(g)
+                acc, mxa, cnt, excl, dead = grown
+                docs = u
+        pos = np.searchsorted(docs, d)
+        if not closed and excluder.lazy is not None:
+            new = pos[cnt[pos] == 0]
+            excl[new[~excluder.keep(docs[new])]] = True
+        acc[pos] += c
+        if dismax:
+            mxa[pos] = np.maximum(mxa[pos], c)
+        cnt[pos] += 1
+        parts[ci] = (d, c)
+        qual = combined(acc, (cnt >= msm) & ~excl & ~dead)
+        if qual.size >= q.k:
+            theta = max(theta, np.partition(qual, qual.size - q.k)[qual.size - q.k])
+        if theta > -np.inf and i + 1 < len(order):
+            if dismax:
+                pot = ((1.0 - tie) * np.maximum(mxa, ub_next[i])
+                       + tie * (acc + suffix_next[i]))
+            else:
+                pot = acc + suffix_next[i]
+            dead |= _up(pot) < theta
+    ok = np.flatnonzero((cnt >= msm) & ~excl & ~dead)
+    if ok.size == 0:
+        return None
+    total = np.zeros(docs.size)
+    for ci in sorted(parts):
+        d, c = parts[ci]
+        total[np.searchsorted(docs, d)] += c
+    return _topk(docs[ok], combined(total, ok), q.k)
 
 
 def _make_kernel(qmeta: dict, mode: str, msm: int, k: int, avgdl: float,
@@ -467,1009 +1083,58 @@ def _make_kernel(qmeta: dict, mode: str, msm: int, k: int, avgdl: float,
                  opt_phrases: list | None = None,
                  opt_sets: list | None = None,
                  groups: list | None = None):
-    """qmeta: term_id -> (weight = idf*boost, boost).  Returns the
-    per-segment kernel blocks_pdf -> top-k pdf.  Document lengths are
-    decoded from the blocks' inline dls stream (0 → avgdl, the
-    norms-disabled sentinel) — the kernel needs no side input.
-
-    neg_tids: must_not terms (Lucene ReqExclScorer): their blocks ride
-    the same scan but are decoded ONLY where their [first_docid,
-    last_docid] range intersects a surviving candidate — an excluded
-    head term ("NOT the") decodes just the blocks overlapping the
-    positive candidates.
-
-    ranges (and-mode only): (ast.Range, contrib) predicates over
-    columns the index inlines as doc-values — evaluated against the
-    rarest term's decoded dv stream, so `term AND range` prunes
-    candidates at first decode and never touches the docs table
-    (Lucene NumericDocValues filter).  contrib is the score a match
-    adds (the Range's boost under Bool(must) sum semantics; 0.0 for a
-    Filtered filter arm, which intersects without scoring).
-
-    phrases (and-mode only): (tid_order, slop, weight) pseudo-term
-    conjuncts — each evaluated by phrase_segment_kernel restricted to
-    the surviving candidate set, so `error AND "stack trace"` decodes
-    the phrase legs' blocks only where error's candidates live (and
-    vice versa when the phrase anchors).  weight = Σ idf(leg) × boost
-    (Lucene PhraseWeight), 0.0 for filter arms.
-
-    opts (and-mode only): tid -> (weight, boost) OPTIONAL terms (Bool
-    with both must and should — Lucene ReqOptSumScorer): they never
-    admit candidates, so their blocks decode only where they overlap
-    the conjunction's survivors (the exclusion-term discipline, with
-    score added instead of removed); opt_msm of them must match for a
-    doc to qualify.  Their upper bounds widen θ's pruning bound — a
-    non-top-k conjunction doc could still reach the top-k via optional
-    contributions, so pruning accounts for them.
-
-    termsets (and-mode only): (member_tids, contrib) set conjuncts —
-    an expanded Wildcard/Fuzzy inside the conjunction: the doc must
-    appear in ANY member term's postings, scoring the constant
-    `contrib` (Lucene CONSTANT_SCORE_REWRITE; 0.0 for filter arms).
-    Member blocks decode only where they overlap surviving candidates
-    — `error AND status:5*` never decodes expansion blocks outside
-    error's candidate ranges.
-
-    groups (and-mode only): (entries, msm) REQUIRED disjunction groups
-    ("(a OR b) AND (c OR d)" — Lucene evaluates the inner BooleanQuery
-    as a required DisjunctionSumScorer clause): entries is a list of
-    (tid, weight) member entries (duplicates each score and count), a
-    doc must match >= msm of them, and matched entries add
-    weight × tf-component.  A group is a conjunct in the ascending
-    estimated-size intersection order — when another conjunct is
-    rarer, member blocks decode only where they overlap its surviving
-    candidates; when the group is smallest, its member union drives."""
-    neg_tids = list(neg_tids or [])
-    ranges = list(ranges or [])
-    phrases = list(phrases or [])
-    termsets = list(termsets or [])
-    opts = dict(opts or {})
-    opt_phrases = list(opt_phrases or [])  # (leg_tids, slop, weight)
-    # opt_sets: (member_tids, boost) OPTIONAL constant-score term sets
-    # (a Wildcard/Fuzzy should clause under ReqOptSumScorer): matching
-    # ANY member adds the boost and counts 1 toward opt_msm; member
-    # blocks decode only where they overlap the conjunction's survivors
-    opt_sets = list(opt_sets or [])
-    groups = list(groups or [])
-    range_boost = float(sum(c for _r, c in ranges))
-    dv_want = tuple(dict.fromkeys(r.field_name for r, _c in ranges))
+    """The block-max kernel of one planned query: blocks_pdf → one
+    (docid, score) frame holding each segment's top-k, concatenated.
+    The block frame becomes an array block set once (query.blocks);
+    each segment's slice then runs the function for the query's shape.
+    The arguments are documented on _Spec; ``stats`` accumulates
+    {"total_blocks": {key: n}, "decoded_blocks": {key: n}} (scalars
+    for mode "any") across segments."""
+    q = _Spec(qmeta, mode, msm, k, avgdl, list(neg_tids or []),
+              list(ranges or []), stats, list(phrases or []),
+              list(termsets or []), dict(opts or {}), opt_msm, tie,
+              list(opt_phrases or []), list(opt_sets or []),
+              list(groups or []))
+    if mode == "any":
+        shape = _any_topk
+    elif mode == "term":
+        shape = _term_topk
+    elif mode == "and":
+        mixed = q.phrases or q.termsets or q.groups
+        shape = _mixed_and_topk if mixed else _and_topk
+    else:
+        shape = _maxscore_topk
 
     def kernel(blocks: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")})
-        if len(blocks) == 0:
-            return empty
-
-        # incremental must_not (Lucene ReqExclScorer): exclusion blocks
-        # decode lazily, only when their docid range first overlaps a
-        # candidate batch; every decoded exclusion docid is remembered
-        # so later batches check the full decoded set without re-decode
-        if neg_tids:
-            neg_all = blocks[blocks["term_id"].isin(neg_tids)].reset_index(
-                drop=True
-            )
-            neg_done = np.zeros(len(neg_all), dtype=bool)
-            neg_first = neg_all["first_docid"].to_numpy()
-            neg_last = neg_all["last_docid"].to_numpy()
-        neg_docs = np.empty(0, dtype=np.int64)
-
-        def keep_sorted(d_sorted: np.ndarray) -> np.ndarray:
-            """bool mask over a SORTED docid batch: True where the doc
-            is NOT matched by any must_not term."""
-            nonlocal neg_docs
-            if not neg_tids or d_sorted.size == 0:
-                return np.ones(d_sorted.size, dtype=bool)
-            lo = np.searchsorted(d_sorted, neg_first, "left")
-            hi = np.searchsorted(d_sorted, neg_last, "right")
-            need = (hi > lo) & ~neg_done
-            if need.any():
-                rows = neg_all[need]
-                neg_done[need] = True
-                nd, _t, _s = decode_blocks_batch(
-                    rows["first_docid"].to_numpy(),
-                    rows["count"].to_numpy(),
-                    rows["doc_gaps"].tolist(),
-                    rows["tfs"].tolist(),
-                )
-                neg_docs = np.union1d(neg_docs, nd)
-            if neg_docs.size == 0:
-                return np.ones(d_sorted.size, dtype=bool)
-            idx = np.clip(np.searchsorted(neg_docs, d_sorted), 0,
-                          neg_docs.size - 1)
-            return neg_docs[idx] != d_sorted
-
-        def decode_one(r):
-            d, t = decode_block(r.first_docid, r.count, r.doc_gaps, r.tfs)
-            dl = decode_varints(r.dls, r.count).astype(np.float64)
-            if dl.size and dl.min() == 0:
-                dl = np.where(dl == 0, avgdl, dl)
-            return d, t.astype(np.float64), dl
-
-        def decode_many(rows: pd.DataFrame) -> list:
-            """Per-block (d, t, dl) tuples via ONE batched varint pass
-            (the per-block decode_one call overhead dominated wide
-            conjunctions' cache fills)."""
-            counts = rows["count"].to_numpy()
-            d, t, _seg = decode_blocks_batch(
-                rows["first_docid"].to_numpy(), counts,
-                rows["doc_gaps"].tolist(), rows["tfs"].tolist(),
-            )
-            dl = decode_varints(b"".join(rows["dls"])).astype(np.float64)
-            if dl.size and dl.min() == 0:
-                dl = np.where(dl == 0, avgdl, dl)
-            cuts = np.cumsum(counts)[:-1]
-            return list(zip(
-                np.split(d, cuts),
-                np.split(t.astype(np.float64), cuts),
-                np.split(dl, cuts),
-            ))
-
-        def decode(rows: pd.DataFrame, want_dv: tuple = ()):
-            # batched: ONE varint decode per stream across all blocks
-            # (per-block decode_block calls cost ~0.1 ms each of
-            # call overhead — thousands of blocks made that the hot
-            # spot for wide termset/disjunction queries)
-            d, t, _seg = decode_blocks_batch(
-                rows["first_docid"].to_numpy(),
-                rows["count"].to_numpy(),
-                rows["doc_gaps"].tolist(),
-                rows["tfs"].tolist(),
-            )
-            dl = decode_varints(b"".join(rows["dls"])).astype(np.float64)
-            if dl.size and dl.min() == 0:
-                dl = np.where(dl == 0, avgdl, dl)
-            o = np.argsort(d, kind="stable")
-            out_dv = {
-                c: decode_zigzag(b"".join(rows[f"dv_{c}"]))[o]
-                for c in want_dv
-            }
-            return d[o], t[o].astype(np.float64), dl[o], out_dv
-
-        def topk(docids: np.ndarray, scores: np.ndarray) -> pd.DataFrame:
-            o = np.lexsort((docids, -scores))[:k]  # (score desc, docid asc)
-            return pd.DataFrame({"docid": docids[o], "score": scores[o]})
-
-        def dv_mask(dvv: dict, n: int) -> np.ndarray:
-            """Row mask for the range predicates over decoded dv streams
-            (one value per posting row; a doc's value is identical in
-            every term's stream, so masking rows masks docs)."""
-            m = np.ones(n, dtype=bool)
-            for rg, _c in ranges:
-                v = dvv[rg.field_name]
-                if rg.min is not None:
-                    m &= ((v >= rg.min) if rg.min_inclusive
-                          else (v > rg.min))
-                if rg.max is not None:
-                    m &= ((v <= rg.max) if rg.max_inclusive
-                          else (v < rg.max))
-            return m
-
-        # optional terms (and-mode Lucene ReqOptSumScorer): per-term
-        # block metadata + cross-chunk decode cache, exactly the
-        # exclusion-term discipline but ADDING score on match
-        ub_opts = 0.0
-        opt_present: list = []
-        opt_all: dict = {}
-        opt_phr_present: list = []
-        opt_set_present: list = []
-        opt_set_all: dict = {}
-        if opts or opt_phrases or opt_sets:
-            for si, (mtids, sboost) in enumerate(opt_sets):
-                sub = blocks[blocks["term_id"].isin(list(mtids))
-                             ].sort_values("first_docid").reset_index(
-                    drop=True)
-                if len(sub) == 0:
-                    continue  # no member has postings in this segment
-                opt_set_present.append((si, float(sboost)))
-                opt_set_all[si] = (sub, sub["first_docid"].to_numpy(),
-                                   sub["last_docid"].to_numpy(), {})
-                ub_opts += float(sboost)
-                if stats is not None:
-                    tb = stats.setdefault("total_blocks", {})
-                    tb[f"optset:{si}"] = len(sub)
-            for tid in opts:
-                sub = blocks[blocks["term_id"] == tid].sort_values(
-                    "first_docid").reset_index(drop=True)
-                if len(sub) == 0:
-                    continue
-                opt_present.append(tid)
-                opt_all[tid] = (sub, sub["first_docid"].to_numpy(),
-                                sub["last_docid"].to_numpy(), {})
-                ub_opts += opts[tid][1] * float(sub["block_max_score"].max())
-                if stats is not None:
-                    tb = stats.setdefault("total_blocks", {})
-                    tb[f"opt:{tid}"] = len(sub)
-            if opt_phrases:
-                seg_tids = set(int(t) for t in blocks["term_id"].unique())
-                for spec in opt_phrases:
-                    legs, _slop, w_p = spec
-                    if all(int(t) in seg_tids for t in legs):
-                        opt_phr_present.append(spec)
-                        # a phrase block carries no positional upper
-                        # bound; tfc < k1+1 bounds its score (loose but
-                        # sound — pruning stays exact)
-                        ub_opts += w_p * (BM25_K1 + 1.0)
-            if opt_msm > (
-                len(opt_present) + len(opt_phr_present)
-                + len(opt_set_present)
-            ):
-                # fewer optional clauses can match here than msm
-                # requires: no doc in this segment can qualify
-                return empty
-
-        def add_opts(cand: np.ndarray, acc: np.ndarray):
-            """Score optional terms on the surviving candidates (acc is
-            a fresh fancy-indexed copy — in-place add is safe), then
-            apply the minimum-should-match cut.  Optional blocks decode
-            lazily, only where they overlap candidates, cached across
-            chunks; optional phrases run the positional kernel
-            restricted to the candidates."""
-            if cand.size == 0 or (
-                not opt_present and not opt_phr_present
-                and not opt_set_present
-            ):
-                return cand, acc
-            ocnt = np.zeros(cand.size, dtype=np.int32)
-            for si, sboost in opt_set_present:
-                sub, first_d, last_d, cache = opt_set_all[si]
-                lo = np.searchsorted(cand, first_d, "left")
-                hi = np.searchsorted(cand, last_d, "right")
-                need = np.flatnonzero(hi > lo)
-                if need.size == 0:
-                    continue
-                miss = [int(i) for i in need if int(i) not in cache]
-                if miss:
-                    for i, tpl in zip(miss, decode_many(sub.iloc[miss])):
-                        cache[i] = tpl
-                    if stats is not None:
-                        db = stats.setdefault("decoded_blocks", {})
-                        key = f"optset:{si}"
-                        db[key] = db.get(key, 0) + len(miss)
-                # member blocks span SEVERAL terms, so the concatenated
-                # docids are not globally sorted — unique() sorts and
-                # dedupes (match-ANY union semantics)
-                u = np.unique(
-                    np.concatenate([cache[int(i)][0] for i in need])
-                )
-                pos = np.clip(np.searchsorted(u, cand), 0, u.size - 1)
-                hit = u[pos] == cand
-                if hit.any():
-                    acc[hit] += sboost
-                    ocnt[hit] += 1
-            for tid in opt_present:
-                sub, first_d, last_d, cache = opt_all[tid]
-                lo = np.searchsorted(cand, first_d, "left")
-                hi = np.searchsorted(cand, last_d, "right")
-                need = np.flatnonzero(hi > lo)
-                if need.size == 0:
-                    continue
-                miss = [int(i) for i in need if int(i) not in cache]
-                if miss:
-                    for i, tpl in zip(miss, decode_many(sub.iloc[miss])):
-                        cache[i] = tpl
-                    if stats is not None:
-                        db = stats.setdefault("decoded_blocks", {})
-                        key = f"opt:{tid}"
-                        db[key] = db.get(key, 0) + len(miss)
-                d = np.concatenate([cache[int(i)][0] for i in need])
-                t = np.concatenate([cache[int(i)][1] for i in need])
-                dl = np.concatenate([cache[int(i)][2] for i in need])
-                pos = np.clip(np.searchsorted(d, cand), 0, d.size - 1)
-                hit = d[pos] == cand
-                if hit.any():
-                    w, _b = opts[tid]
-                    acc[hit] += w * _tfc(t[pos[hit]], dl[pos[hit]], avgdl)
-                    ocnt[hit] += 1
-            if opt_phr_present:
-                from bzzz_spark.query.phrase import phrase_segment_kernel
-
-                for legs, slop, w_p in opt_phr_present:
-                    res = phrase_segment_kernel(
-                        blocks, list(legs), slop, stats=stats, restrict=cand
-                    )
-                    d = res["docid"].to_numpy()
-                    if d.size == 0:
-                        continue
-                    ptf = res["ptf"].to_numpy()
-                    pdl = res["dl"].to_numpy().astype(np.float64)
-                    pdl = np.where(pdl == 0, avgdl, pdl)
-                    # restrict guarantees d ⊆ cand, both ascending
-                    idx = np.searchsorted(cand, d)
-                    acc[idx] += w_p * _tfc(ptf, pdl, avgdl)
-                    ocnt[idx] += 1
-            if opt_msm > 0:
-                m = ocnt >= opt_msm
-                return cand[m], acc[m]
-            return cand, acc
-
-        if mode == "any":
-            # constant-score match-any: k smallest matching docids.
-            # Blocks ascend by first_docid; once the kth-smallest docid
-            # found so far precedes every remaining block's range, no
-            # remaining block can contribute — stop decoding.
-            boost = next(iter(qmeta.values()))[1]
-            sub = blocks[blocks["term_id"].isin(list(qmeta))]
-            if len(sub) == 0:
-                return empty
-            sub = sub.sort_values("first_docid", kind="stable")
-            got = np.empty(0, dtype=np.int64)
-            for r in sub.itertuples(index=False):
-                if got.size >= k and got[k - 1] < r.first_docid:
-                    break
-                d, _t = decode_block(r.first_docid, r.count, r.doc_gaps,
-                                     r.tfs)
-                got = np.union1d(got, d)[:k]
-                if stats is not None:
-                    stats["decoded_blocks"] = (
-                        stats.get("decoded_blocks", 0) + 1
-                    )
-            if stats is not None:
-                stats["total_blocks"] = len(sub)
-            if got.size == 0:
-                return empty
-            return pd.DataFrame(
-                {"docid": got, "score": np.full(got.size, boost)}
-            )
-
-        if mode == "term":
-            (tid, (w, boost)) = next(iter(qmeta.items()))
-            sub = blocks[blocks["term_id"] == tid]
-            if len(sub) == 0:
-                return empty
-            # block-max top-k: process blocks in descending max-score
-            # order; stop when the kth best so far beats every remaining
-            # block's upper bound.  Exact: a doc's whole score for a
-            # single-term query lives in exactly one block.
-            sub = sub.sort_values("block_max_score", ascending=False)
-            theta = -np.inf
-            seen = 0
-            out_d: list[np.ndarray] = []
-            out_s: list[np.ndarray] = []
-            for r in sub.itertuples(index=False):
-                if seen >= k and boost * r.block_max_score < theta:
-                    # all remaining blocks are upper-bounded BELOW θ.
-                    # Strictly below: a block whose bound EQUALS θ can
-                    # still hold a score-tied doc with a smaller docid,
-                    # which wins the (score desc, docid asc) tie-break
-                    # (e.g. boost=0 makes every score 0)
-                    break
-                d, t, dl = decode_one(r)
-                s = w * _tfc(t, dl, avgdl)
-                out_d.append(d)
-                out_s.append(s)
-                seen += d.size
-                if seen >= k:
-                    flat = np.concatenate(out_s)
-                    theta = np.partition(flat, flat.size - k)[flat.size - k]
-            return topk(np.concatenate(out_d), np.concatenate(out_s))
-
-        if mode == "and" and (phrases or termsets or groups):
-            # Mixed conjunction (terms + phrase pseudo-terms): conjuncts
-            # are intersected in ascending estimated-size order — a
-            # phrase's candidates are a subset of its rarest leg, so its
-            # estimate is min(leg size).  No θ-pruning here (a phrase
-            # block carries no positional upper bound), but every
-            # non-anchor conjunct — term or phrase leg — decodes only
-            # blocks overlapping the surviving candidates, the same
-            # leapfrog discipline as the pure-term path (ref
-            # TermPayloadClojureScoreQuery.java:237-257, uniformly).
-            from bzzz_spark.query.phrase import phrase_segment_kernel
-
-            sizes = blocks.groupby("term_id")["count"].sum()
-            needed = set(qmeta) | {
-                int(t) for tids, _s, _w in phrases for t in tids
-            }
-            if not needed.issubset(set(sizes.index)):
-                return empty  # a conjunct term has no postings here
-            # a set conjunct needs at least ONE member with postings
-            # (absent members just shrink the union, they do not fail
-            # the conjunction)
-            present = set(sizes.index)
-            for tids, _c in termsets:
-                if not any(int(t) in present for t in tids):
-                    return empty
-            # a group needs >= msm member ENTRIES with postings here —
-            # fewer and no doc in this segment can satisfy it
-            for entries, gmsm in groups:
-                if sum(1 for t, _w in entries if int(t) in present) < gmsm:
-                    return empty
-            conj: list[tuple[int, str, object]] = []
-            for tid in qmeta:
-                conj.append((int(sizes[tid]), "t", tid))
-            for pi, (tids, _s, _w) in enumerate(phrases):
-                conj.append((int(min(sizes[int(t)] for t in tids)), "p", pi))
-            for si, (tids, _c) in enumerate(termsets):
-                # union size is upper-bounded by the member sum
-                est = int(sum(sizes[int(t)] for t in tids
-                              if int(t) in present))
-                conj.append((est, "s", si))
-            for gi, (entries, _m) in enumerate(groups):
-                est = int(sum(sizes[int(t)] for t, _w in entries
-                              if int(t) in present))
-                conj.append((est, "g", gi))
-            conj.sort(key=lambda x: x[0])
-            cand = acc = None
-            # doc-value range predicates ride the FIRST term, set or
-            # group conjunct's decode (wand_candidates synthesizes an
-            # unscored phrase-leg term when only phrases conjoin): its
-            # inline dv streams carry the values, and the mask prunes
-            # candidates right there.  Phrase conjuncts skip (the
-            # positional kernel returns no dv streams)
-            dv_pending = bool(ranges)
-            for _est, kind, key in conj:
-                if kind == "p":
-                    tids, slop, w_p = phrases[key]
-                    res = phrase_segment_kernel(
-                        blocks, list(tids), slop, stats=stats, restrict=cand
-                    )
-                    d = res["docid"].to_numpy()
-                    if d.size == 0:
-                        return empty
-                    ptf = res["ptf"].to_numpy()
-                    pdl = res["dl"].to_numpy().astype(np.float64)
-                    pdl = np.where(pdl == 0, avgdl, pdl)
-                    s = w_p * _tfc(ptf, pdl, avgdl)
-                    if cand is None:
-                        cand, acc = d, s
-                    else:
-                        # res docids ⊆ cand and both ascend — map back
-                        idx = np.searchsorted(cand, d)
-                        acc = acc[idx] + s
-                        cand = d
-                elif kind == "g":
-                    # required disjunction group: decode members per
-                    # tid (duplicate entries score and count per
-                    # OCCURRENCE), union the docids, gate on msm.
-                    # Blocks prune to candidate-overlapping ranges
-                    # exactly like set conjuncts — a group behind a
-                    # rarer conjunct never decodes its full postings.
-                    entries, gmsm = groups[key]
-                    ent = [(int(t), w) for t, w in entries
-                           if int(t) in present]
-                    utids = sorted({t for t, _w in ent})
-                    sub = blocks[blocks["term_id"].isin(utids)
-                                 ].sort_values("first_docid")
-                    gkey = f"grp:{key}"
-                    if stats is not None:
-                        tb = stats.setdefault("total_blocks", {})
-                        tb[gkey] = tb.get(gkey, 0) + len(sub)
-                    if cand is not None:
-                        lo = np.searchsorted(
-                            cand, sub["first_docid"].to_numpy(), "left"
-                        )
-                        hi = np.searchsorted(
-                            cand, sub["last_docid"].to_numpy(), "right"
-                        )
-                        sub = sub[hi > lo]
-                        if len(sub) == 0:
-                            return empty
-                    if stats is not None:
-                        db = stats.setdefault("decoded_blocks", {})
-                        db[gkey] = db.get(gkey, 0) + len(sub)
-                    per: dict[int, tuple] = {}
-                    for tid in utids:
-                        tsub = sub[sub["term_id"] == tid]
-                        if len(tsub) == 0:
-                            # every block pruned: no member doc can be
-                            # a survivor, so skipping is exact
-                            continue
-                        d, t, dl, dvv = decode(
-                            tsub, dv_want if dv_pending else ()
-                        )
-                        if dv_pending:
-                            # mask EVERY member's rows (a doc may enter
-                            # the union via any member); a doc's dv
-                            # value is identical in all member streams,
-                            # so the msm occurrence count is unchanged
-                            # for in-range docs
-                            m = dv_mask(dvv, d.size)
-                            d, t, dl = d[m], t[m], dl[m]
-                            if d.size == 0:
-                                continue
-                        per[tid] = (d, t, dl)
-                    if dv_pending:
-                        dv_pending = False
-                    if not per:
-                        return empty
-                    u = np.unique(
-                        np.concatenate([per[t][0] for t in per])
-                    )
-                    gscore = np.zeros(u.size)
-                    gcnt = np.zeros(u.size, dtype=np.int32)
-                    for tid, w in ent:
-                        if tid not in per:
-                            continue
-                        d, t, dl = per[tid]
-                        idx = np.searchsorted(u, d)
-                        gcnt[idx] += 1
-                        if w != 0.0:
-                            gscore[idx] += w * _tfc(t, dl, avgdl)
-                    gm = gcnt >= gmsm
-                    gd, gs = u[gm], gscore[gm]
-                    if gd.size == 0:
-                        return empty
-                    if cand is None:
-                        cand, acc = gd, gs
-                    else:
-                        pos = np.clip(np.searchsorted(gd, cand), 0,
-                                      gd.size - 1)
-                        hit = gd[pos] == cand
-                        if not hit.any():
-                            return empty
-                        cand = cand[hit]
-                        acc = acc[hit] + gs[pos[hit]]
-                elif kind == "s":
-                    tids, contrib = termsets[key]
-                    member = [int(t) for t in tids if int(t) in present]
-                    sub = blocks[blocks["term_id"].isin(member)].sort_values(
-                        "first_docid"
-                    )
-                    skey = f"set:{key}"
-                    if stats is not None:
-                        tb = stats.setdefault("total_blocks", {})
-                        tb[skey] = tb.get(skey, 0) + len(sub)
-                    if cand is not None:
-                        lo = np.searchsorted(
-                            cand, sub["first_docid"].to_numpy(), "left"
-                        )
-                        hi = np.searchsorted(
-                            cand, sub["last_docid"].to_numpy(), "right"
-                        )
-                        sub = sub[hi > lo]
-                        if len(sub) == 0:
-                            return empty
-                    if stats is not None:
-                        db = stats.setdefault("decoded_blocks", {})
-                        db[skey] = db.get(skey, 0) + len(sub)
-                    d, _t, _dl, dvv = decode(
-                        sub, dv_want if dv_pending else ()
-                    )
-                    if dv_pending:
-                        # every member posting of a doc inlines the same
-                        # dv value, so the row mask before the union
-                        # removes exactly the out-of-range docs
-                        d = d[dv_mask(dvv, d.size)]
-                        dv_pending = False
-                        if d.size == 0:
-                            return empty
-                    # union across member terms: one row per docid
-                    u = np.unique(d)
-                    if cand is None:
-                        cand = u
-                        acc = np.full(u.size, float(contrib))
-                    else:
-                        pos = np.clip(np.searchsorted(u, cand), 0,
-                                      u.size - 1)
-                        hit = u[pos] == cand
-                        if not hit.any():
-                            return empty
-                        cand = cand[hit]
-                        acc = acc[hit] + contrib
-                else:
-                    tid = key
-                    sub = blocks[blocks["term_id"] == tid].sort_values(
-                        "first_docid"
-                    )
-                    if stats is not None:
-                        tb = stats.setdefault("total_blocks", {})
-                        tb[tid] = tb.get(tid, 0) + len(sub)
-                    if cand is not None:
-                        lo = np.searchsorted(
-                            cand, sub["first_docid"].to_numpy(), "left"
-                        )
-                        hi = np.searchsorted(
-                            cand, sub["last_docid"].to_numpy(), "right"
-                        )
-                        sub = sub[hi > lo]
-                        if len(sub) == 0:
-                            return empty
-                    if stats is not None:
-                        db = stats.setdefault("decoded_blocks", {})
-                        db[tid] = db.get(tid, 0) + len(sub)
-                    d, t, dl, dvv = decode(
-                        sub, dv_want if dv_pending else ()
-                    )
-                    if dv_pending:
-                        m = dv_mask(dvv, d.size)
-                        d, t, dl = d[m], t[m], dl[m]
-                        dv_pending = False
-                        if d.size == 0:
-                            return empty
-                    w, _b = qmeta[tid]
-                    if cand is None:
-                        cand = d
-                        acc = w * _tfc(t, dl, avgdl)
-                    else:
-                        pos = np.clip(np.searchsorted(d, cand), 0,
-                                      max(d.size - 1, 0))
-                        hit = d[pos] == cand
-                        if not hit.any():
-                            return empty
-                        cand = cand[hit]
-                        acc = acc[hit] + w * _tfc(
-                            t[pos[hit]], dl[pos[hit]], avgdl
-                        )
-                if cand.size == 0:
-                    return empty
-            km = keep_sorted(cand)
-            if not km.any():
-                return empty
-            kd, ka = add_opts(cand[km], acc[km] + range_boost)
-            if kd.size == 0:
-                return empty
-            return topk(kd, ka)
-
-        if mode == "and":
-            # Block-max conjunction (Lucene BlockMaxConjunctionScorer,
-            # block-at-a-time): the rarest term's blocks are processed
-            # in DESCENDING block-max-score chunks; once θ (the kth
-            # best completed match) exceeds the next chunk's bound plus
-            # the other terms' global upper bounds, the remaining rare
-            # blocks cannot host a top-k doc and are never decoded.
-            # Within each chunk the original block-granular leapfrog
-            # applies: other terms decode only blocks overlapping the
-            # chunk's surviving candidates (cached across chunks, so
-            # nothing decodes twice).  Exclusion terms are not
-            # conjuncts — drop them from sizes.
-            sizes = blocks.groupby("term_id")["count"].sum()
-            sizes = sizes[sizes.index.isin(list(qmeta))]
-            if len(sizes) < len(qmeta):
-                return empty  # a must-term has no postings in this segment
-            t_order = list(sizes.sort_values().index)
-            rare_tid = t_order[0]
-            others = t_order[1:]
-            w_r, boost_r = qmeta[rare_tid]
-            ub_others = 0.0
-            osub: dict = {}
-            ocache: dict = {}
-            obounds: dict = {}
-            for tid in others:
-                sub = blocks[blocks["term_id"] == tid].sort_values(
-                    "first_docid").reset_index(drop=True)
-                osub[tid] = sub
-                ocache[tid] = {}
-                # block-range metadata is chunk-invariant — extract once
-                obounds[tid] = (sub["first_docid"].to_numpy(),
-                                sub["last_docid"].to_numpy())
-                ub_others += qmeta[tid][1] * float(
-                    sub["block_max_score"].max()
-                )
-                if stats is not None:
-                    stats.setdefault("total_blocks", {})[tid] = len(sub)
-            rsub = blocks[blocks["term_id"] == rare_tid].sort_values(
-                "block_max_score", ascending=False)
-            if stats is not None:
-                stats.setdefault("total_blocks", {})[rare_tid] = len(rsub)
-            theta = -np.inf
-            out_d: list[np.ndarray] = []
-            out_s: list[np.ndarray] = []
-            best = np.empty(0, dtype=np.float64)
-            seen = 0
-            # adaptive chunking: start small so θ-pruning can stop
-            # after a handful of high-bound blocks, then double toward
-            # 256 — when pruning is NOT winning (skewed head
-            # conjunctions whose rare term still has thousands of
-            # blocks), the per-iteration Python overhead amortizes
-            # instead of running len/8 small loops.  θ only ever
-            # grows, so a coarser later chunk never prunes less than
-            # its first block's bound allows — exactness is unchanged.
-            CHUNK = 8
-            start = 0
-            while start < len(rsub):
-                chunk = rsub.iloc[start:start + CHUNK]
-                start += CHUNK
-                CHUNK = min(256, CHUNK * 2)
-                bound = (boost_r * float(chunk["block_max_score"].iloc[0])
-                         + ub_others + range_boost + ub_opts)
-                if seen >= k and bound < theta:
-                    # strictly below θ: a bound-tied doc could still
-                    # win the docid tie-break, so ties keep decoding
-                    break
-                cand_d, cand_t, cand_dl, dvv = decode(chunk, dv_want)
-                if stats is not None:
-                    db = stats.setdefault("decoded_blocks", {})
-                    db[rare_tid] = db.get(rare_tid, 0) + len(chunk)
-                if ranges:
-                    # doc-value range predicates prune at FIRST decode —
-                    # every later term's block set shrinks accordingly
-                    m = dv_mask(dvv, cand_d.size)
-                    cand_d, cand_t, cand_dl = cand_d[m], cand_t[m], cand_dl[m]
-                if cand_d.size == 0:
-                    continue
-                acc = w_r * _tfc(cand_t, cand_dl, avgdl) + range_boost
-                for tid in others:
-                    sub = osub[tid]
-                    # block-granular leapfrog: skip blocks whose
-                    # [first_docid, last_docid] range holds no candidate
-                    first_d, last_d = obounds[tid]
-                    lo = np.searchsorted(cand_d, first_d, "left")
-                    hi = np.searchsorted(cand_d, last_d, "right")
-                    need = np.flatnonzero(hi > lo)
-                    if need.size == 0:
-                        cand_d = cand_d[:0]
-                        break
-                    cache = ocache[tid]
-                    miss = [int(i) for i in need if int(i) not in cache]
-                    if miss:
-                        for i, tpl in zip(miss, decode_many(sub.iloc[miss])):
-                            cache[i] = tpl
-                        if stats is not None:
-                            db = stats.setdefault("decoded_blocks", {})
-                            db[tid] = db.get(tid, 0) + len(miss)
-                    # `need` ascends and one term's blocks have disjoint
-                    # ascending docid ranges → the concatenation is sorted
-                    d = np.concatenate([cache[int(i)][0] for i in need])
-                    t = np.concatenate([cache[int(i)][1] for i in need])
-                    dl = np.concatenate([cache[int(i)][2] for i in need])
-                    pos = np.clip(np.searchsorted(d, cand_d), 0, d.size - 1)
-                    hit = d[pos] == cand_d
-                    if not hit.any():
-                        cand_d = cand_d[:0]
-                        break
-                    cand_d = cand_d[hit]
-                    w, _b = qmeta[tid]
-                    acc = acc[hit] + w * _tfc(t[pos[hit]], dl[pos[hit]], avgdl)
-                if cand_d.size == 0:
-                    continue
-                km = keep_sorted(cand_d)
-                if not km.any():
-                    continue
-                kept_d, kept = add_opts(cand_d[km], acc[km])
-                if kept_d.size == 0:
-                    continue
-                out_d.append(kept_d)
-                out_s.append(kept)
-                seen += kept.size
-                # θ via a bounded running top-k: O(chunk + k) per
-                # update instead of re-partitioning every accumulated
-                # score each chunk
-                best = (np.concatenate([best, kept])
-                        if best.size else kept)
-                if best.size > k:
-                    best = np.partition(best, best.size - k)[best.size - k:]
-                if seen >= k:
-                    theta = best.min()
-            if not out_d:
-                return empty
-            return topk(np.concatenate(out_d), np.concatenate(out_s))
-
-        # mode == "or" / "dismax": MaxScore (Turtle & Flood) over a
-        # dense accumulator.  A doc first seen at term i (descending-UB
-        # order) can score at most the remaining terms' combined bound;
-        # once that bound < θ (the kth best score among candidates
-        # already satisfying msm and exclusions), remaining terms stop
-        # admitting NEW docs and decode only blocks overlapping
-        # surviving candidates — "rare OR the" decodes just the slice
-        # of "the" overlapping rare's candidate docids.  Exact: θ only
-        # ever underestimates the final kth-best (scores grow
-        # monotonically; msm-qualification and exclusion are decided
-        # eagerly before a candidate can contribute to θ).
-        #
-        # dismax combiner (Lucene DisjunctionMaxQuery): score =
-        # (1-tie)*max + tie*sum, tracked with a parallel max
-        # accumulator.  Monotonic in both parts for tie in [0,1], so
-        # the same discipline holds with bounds that maximize the max-
-        # and sum-parts independently: a new doc at term i is bounded
-        # by (1-tie)*UB_i + tie*suffix_sum_i (UB_i is the largest
-        # remaining — descending order), and a candidate's potential is
-        # (1-tie)*max(mx, UB_next) + tie*(acc + suffix_sum_next).
-        # clauses are Terms AND/OR Phrase pseudo-terms: a phrase clause
-        # is bounded by w_p*(k1+1) (no positional upper bound exists in
-        # block metadata — loose but sound, so pruning stays exact);
-        # while admitting it evaluates phrase_segment_kernel over the
-        # whole segment (itself rarest-leg block-pruned), and once
-        # admission closes it evaluates restricted to the surviving
-        # candidates only.
-        is_dismax = mode == "dismax"
-        entries: list = []  # ("t", tid, ub, sub) | ("p", spec, ub, None)
-        involved: list = list(qmeta)
-        for tid in qmeta:
-            sub = blocks[blocks["term_id"] == tid]
-            if len(sub) == 0:
-                continue
-            ub = qmeta[tid][1] * float(sub["block_max_score"].max())
-            entries.append(("t", tid, ub, sub))
-            if stats is not None:
-                stats.setdefault("total_blocks", {})[tid] = len(sub)
-        if phrases or termsets:
-            seg_tids = set(int(t) for t in blocks["term_id"].unique())
-            for legs, slop_p, w_p in (phrases or []):
-                if not all(int(t) in seg_tids for t in legs):
-                    continue  # a leg has no postings here: cannot match
-                entries.append(
-                    ("p", (legs, slop_p, w_p), w_p * (BM25_K1 + 1.0), None)
-                )
-                involved.extend(int(t) for t in legs)
-            # constant-score term-set clauses (Wildcard/Fuzzy
-            # expansions): contribution = contrib if ANY member term
-            # matches, so the upper bound IS contrib
-            for si, (tids, contrib) in enumerate(termsets or []):
-                member = [int(t) for t in tids if int(t) in seg_tids]
-                if not member:
-                    continue  # no member has postings here
-                entries.append(("s", (si, member, contrib), contrib, None))
-                involved.extend(member)
-                if stats is not None:
-                    tb = stats.setdefault("total_blocks", {})
-                    tb[f"set:{si}"] = int(
-                        blocks["term_id"].isin(member).sum()
-                    )
-        if not entries:
-            return empty
-        entries.sort(key=lambda x: -x[2])
-        ubs = [ub for _kind, _key, ub, _sub in entries]
-        suffix_ub = np.cumsum(ubs[::-1])[::-1]
-        if is_dismax:
-            admit_bound = [(1.0 - tie) * ubs[i] + tie * suffix_ub[i]
-                           for i in range(len(ubs))]
-        else:
-            admit_bound = suffix_ub
-        pos_mask = blocks["term_id"].isin(involved)
-        base = int(blocks.loc[pos_mask, "first_docid"].min())
-        span = int(blocks.loc[pos_mask, "last_docid"].max()) - base + 1
-        acc = np.zeros(span, dtype=np.float64)
-        mxa = np.zeros(span, dtype=np.float64) if is_dismax else None
-        cnt = np.zeros(span, dtype=np.int32)
-        excl = np.zeros(span, dtype=bool)
-        dead = np.zeros(span, dtype=bool)
-        msm_eff = max(msm, 1)
-        theta = -np.inf
-
-        def combined(sel) -> np.ndarray:
-            if is_dismax:
-                return (1.0 - tie) * mxa[sel] + tie * acc[sel]
-            return acc[sel]
-
-        def exclude_new(new_d: np.ndarray) -> None:
-            """Mark admitted docids matched by any must_not term
-            (lazy block decode + caching via keep_sorted)."""
-            if not neg_tids or new_d.size == 0:
-                return
-            m = keep_sorted(new_d)
-            excl[new_d[~m] - base] = True
-
-        def update_theta() -> None:
-            nonlocal theta
-            qual = combined((cnt >= msm_eff) & ~excl & ~dead)
-            if qual.size >= k:
-                theta = max(
-                    theta, np.partition(qual, qual.size - k)[qual.size - k]
-                )
-
-        closed = False
-        for i, (kind, keyx, _ub, sub) in enumerate(entries):
-            if not closed and admit_bound[i] < theta:
-                closed = True  # no NEW doc can reach the top-k
-            cand_d = None
-            if closed:
-                cand_off = np.flatnonzero((cnt > 0) & ~excl & ~dead)
-                if cand_off.size == 0:
-                    break
-                cand_d = cand_off + base  # ascending — flatnonzero order
-            if kind == "p":
-                from bzzz_spark.query.phrase import phrase_segment_kernel
-
-                legs, slop_p, w_p = keyx
-                res = phrase_segment_kernel(
-                    blocks, list(legs), slop_p, stats=stats,
-                    restrict=cand_d,
-                )
-                d = res["docid"].to_numpy()
-                if d.size == 0:
-                    continue
-                ptf = res["ptf"].to_numpy()
-                pdl = res["dl"].to_numpy().astype(np.float64)
-                pdl = np.where(pdl == 0, avgdl, pdl)
-                c = w_p * _tfc(ptf, pdl, avgdl)
-                off = d - base
-                new_d = None if closed else d[cnt[off] == 0]
-            elif kind == "s":
-                si, member, contrib = keyx
-                sub = blocks[blocks["term_id"].isin(member)].sort_values(
-                    "first_docid"
-                )
-                if closed:
-                    lo = np.searchsorted(
-                        cand_d, sub["first_docid"].to_numpy(), "left"
-                    )
-                    hi = np.searchsorted(
-                        cand_d, sub["last_docid"].to_numpy(), "right"
-                    )
-                    sub = sub[hi > lo]
-                    if len(sub) == 0:
-                        continue
-                if stats is not None:
-                    db = stats.setdefault("decoded_blocks", {})
-                    skey = f"set:{si}"
-                    db[skey] = db.get(skey, 0) + len(sub)
-                d, _t, _dl, _ = decode(sub)
-                d = np.unique(d)  # one constant contribution per doc
-                if closed:
-                    idx = np.clip(np.searchsorted(d, cand_d), 0,
-                                  d.size - 1)
-                    hit = d[idx] == cand_d
-                    d = cand_d[hit]
-                    new_d = None
-                else:
-                    new_d = None  # set below from cnt
-                off = d - base
-                if not closed:
-                    new_d = d[cnt[off] == 0]
-                c = np.full(d.size, float(contrib))
-            else:
-                tid = keyx
-                w, _boost = qmeta[tid]
-                if closed:
-                    lo = np.searchsorted(
-                        cand_d, sub["first_docid"].to_numpy(), "left"
-                    )
-                    hi = np.searchsorted(
-                        cand_d, sub["last_docid"].to_numpy(), "right"
-                    )
-                    sub = sub[hi > lo]
-                    if len(sub) == 0:
-                        continue
-                    d, t, dl, _ = decode(sub)
-                    idx = np.clip(np.searchsorted(cand_d, d), 0,
-                                  cand_d.size - 1)
-                    hit = cand_d[idx] == d
-                    d, t, dl = d[hit], t[hit], dl[hit]
-                    new_d = None
-                else:
-                    d, t, dl, _ = decode(sub)
-                    new_d = None  # set below from cnt
-                off = d - base
-                if not closed:
-                    new_d = d[cnt[off] == 0]
-                c = w * _tfc(t, dl, avgdl)
-                if stats is not None:
-                    stats.setdefault("decoded_blocks", {})[tid] = (
-                        stats.get("decoded_blocks", {}).get(tid, 0)
-                        + len(sub)
-                    )
-            acc[off] += c
-            if is_dismax:
-                mxa[off] = np.maximum(mxa[off], c)
-            cnt[off] += 1
-            if new_d is not None:
-                exclude_new(new_d)
-            update_theta()
-            if theta > -np.inf and i + 1 < len(entries):
-                # retire candidates that cannot reach θ with the
-                # remaining terms' upper bounds — later terms' block
-                # sets shrink accordingly
-                seen_mask = cnt > 0
-                if is_dismax:
-                    pot_max = np.maximum(mxa, ubs[i + 1])
-                    pot = ((1.0 - tie) * pot_max
-                           + tie * (acc + suffix_ub[i + 1]))
-                else:
-                    pot = acc + suffix_ub[i + 1]
-                dead |= seen_mask & (pot < theta)
-        ok = np.flatnonzero((cnt >= msm_eff) & ~excl & ~dead)
-        if ok.size == 0:
-            return empty
-        return topk(ok + base, combined(ok))
+        got = []
+        if len(blocks):
+            got = [shape(q, seg) for seg in Blocks.from_frame(blocks).segments()]
+            got = [g for g in got if g is not None]
+        d = np.concatenate([g[0] for g in got] or [np.empty(0)])
+        s = np.concatenate([g[1] for g in got] or [np.empty(0)])
+        # fresh arrays: copy=False skips pandas' consolidation copy
+        return pd.DataFrame({"docid": d.astype(np.int64, copy=False),
+                             "score": s.astype(np.float64, copy=False)},
+                            copy=False)
 
     return kernel
 
 
 def _run_kernel(index: BzzzIndex, blocks: DataFrame, kernel) -> DataFrame:
-    """Execute a per-segment kernel over the query's block set."""
+    """Execute a kernel over the query's block set."""
     if getattr(index, "segment_aligned", False):
         # serving layout: postings are already hash-partitioned by
         # segment (BzzzIndex.persist(layout="segment")), so the kernel
         # runs as a NARROW mapInPandas — zero per-query shuffle, the
-        # single biggest chunk of Spark's fixed query latency
+        # single biggest chunk of Spark's fixed query latency.  The
+        # kernel splits the partition's blocks by segment itself.
         def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             parts = [p for p in it if len(p)]
             if not parts:
                 return
-            pdf = pd.concat(parts, ignore_index=True)
-            for _, g in pdf.groupby("segment", sort=False):
-                out = kernel(g)
-                if len(out):
-                    yield out
+            out = kernel(pd.concat(parts, ignore_index=True))
+            if len(out):
+                yield out
 
         return blocks.mapInPandas(run, "docid long, score double")
     # the ONLY shuffle: the query terms' (small) block set, grouped by

@@ -9,8 +9,8 @@ scheduling + Python-worker round-trip — so a latency-critical serving
 tier should not run queries AS Spark jobs at all.  This module is that
 tier: it opens the persisted index layout (build/checkpoint.py's
 docs/ dictionary/ stats/ postings/ parquet directories) with pyarrow
-and answers queries by running the SAME per-segment numpy kernels the
-Spark path uses (query/wand.py plan_candidates → KernelPlan), so the
+and answers queries by running the SAME block-max kernels the Spark
+path uses (query/wand.py plan_candidates → KernelPlan), so the
 two runtimes are rank- and score-identical by construction — one
 planner, one kernel, two block-fetch strategies.
 
@@ -67,7 +67,7 @@ class LocalIndex:
     wand_safe = True
 
     def __init__(self, out_dir: str, cache_blocks: bool = True,
-                 max_cached_terms: int = 100_000):
+                 max_cached_bytes: int = 256 << 20):
         import pyarrow.dataset as pads
         import pyarrow.parquet as pq
 
@@ -94,15 +94,16 @@ class LocalIndex:
         self._term_cache: dict = {}
         self._expansion_cache: dict = {}
         self._terms_arr = None  # lazy full term list (expansion only)
-        # hot-term block cache: term_id → its (encoded) block rows.
-        # The serving analog of a hot Lucene searcher's working set —
-        # repeat queries over a hot index never touch parquet again.
-        # Entries hold ENCODED blocks (varint bytes, ~3 B/posting), so
-        # the cap bounds memory at roughly the hot terms' index bytes;
-        # plain LRU via dict reinsertion order.
+        # hot-term block cache: term_id → (its block rows as one array
+        # per column, their bytes).  The serving analog of a hot Lucene
+        # searcher's working set — repeat queries over a hot index never
+        # touch parquet again.  Entries hold ENCODED blocks (varint
+        # bytes, ~3 B/posting); the budget bounds the encoded bytes plus
+        # the arrays' own nbytes.  Plain LRU via dict reinsertion order.
         self._cache_blocks = bool(cache_blocks)
-        self._max_cached_terms = int(max_cached_terms)
-        self._block_cache: dict[int, pd.DataFrame] = {}
+        self._max_cached_bytes = int(max_cached_bytes)
+        self._cached_bytes = 0
+        self._block_cache: dict[int, tuple[dict, int]] = {}
         # docid-indexed stored-column arrays for serving-side facets and
         # field sorts — the Lucene FieldCache/doc-values analog: one
         # column read per column ever, then every query indexes it by
@@ -128,7 +129,7 @@ class LocalIndex:
         if os.path.getmtime(p) == self._manifest_mtime:
             return False
         self.__init__(self.out_dir, self._cache_blocks,
-                      self._max_cached_terms)
+                      self._max_cached_bytes)
         return True
 
     # -- planner surface -------------------------------------------------
@@ -232,27 +233,42 @@ class LocalIndex:
             ).to_pandas()
         missing = [t for t in tids if t not in self._block_cache]
         if missing:
-            fresh = self._post_ds.to_table(
+            tbl = self._post_ds.to_table(
                 columns=self._block_cols,
                 filter=pc.field("term_id").isin(missing),
-            ).to_pandas()
-            groups = {t: g for t, g in fresh.groupby("term_id", sort=False)}
-            empty = fresh.iloc[0:0]
+            )
+            col = {c: tbl.column(c).to_numpy(zero_copy_only=False)
+                   for c in self._block_cols}
+            order = np.argsort(col["term_id"], kind="stable")
+            col = {c: v[order] for c, v in col.items()}
+            tid_col = col["term_id"]
             for t in missing:
-                self._block_cache[t] = groups.get(t, empty)
+                lo = np.searchsorted(tid_col, t, "left")
+                hi = np.searchsorted(tid_col, t, "right")
+                # copies, so the entry holds only this term's rows
+                cols = {c: v[lo:hi].copy() for c, v in col.items()}
+                size = sum(
+                    v.nbytes + (sum(map(len, v)) if v.dtype == object else 0)
+                    for v in cols.values()
+                )
+                self._block_cache[t] = (cols, size)
+                self._cached_bytes += size
         parts = []
         for t in tids:
-            g = self._block_cache.pop(t)  # reinsert = LRU touch
-            self._block_cache[t] = g
-            if len(g):
-                parts.append(g)
-        while len(self._block_cache) > self._max_cached_terms:
-            self._block_cache.pop(next(iter(self._block_cache)))
+            entry = self._block_cache.pop(t)  # reinsert = LRU touch
+            self._block_cache[t] = entry
+            parts.append(entry[0])
+        while self._cached_bytes > self._max_cached_bytes:
+            oldest = next(iter(self._block_cache))
+            self._cached_bytes -= self._block_cache.pop(oldest)[1]
         if not parts:
-            return self._block_cache[tids[0]].iloc[0:0] if tids else (
-                pd.DataFrame(columns=self._block_cols)
-            )
-        return pd.concat(parts, ignore_index=True)
+            return pd.DataFrame(columns=self._block_cols)
+        # copy=False: the concatenations are fresh arrays, and leaving
+        # them unconsolidated halves the frame's build and read-back
+        return pd.DataFrame({
+            c: np.concatenate([p[c] for p in parts])
+            for c in self._block_cols
+        }, copy=False)
 
     def doc_column(self, col: str) -> tuple:
         """The full stored column as (sorted docid array, value array)
@@ -350,18 +366,12 @@ def local_candidates(
     blocks = index.fetch_blocks(plan.tids)
     if not len(blocks):
         return _EMPTY.copy()
-    # per-segment kernels run SERIALLY in this process: measured on
-    # this box, a thread pool over segments is 2-7x SLOWER (the
-    # kernels interleave many small numpy calls, so threads convoy on
-    # the GIL).  Cross-segment/shard parallelism belongs to processes
-    # — one LocalIndex per shard, like one reference node per shard.
-    outs = [
-        plan.kernel(g) for _, g in blocks.groupby("segment", sort=False)
-    ]
-    outs = [o for o in outs if len(o)]
-    if not outs:
-        return _EMPTY.copy()
-    return pd.concat(outs, ignore_index=True)
+    # the kernel runs the segments SERIALLY in this process: a thread
+    # pool over segments measured 2-7x SLOWER (the kernels interleave
+    # many small numpy calls, so threads convoy on the GIL).
+    # Cross-segment/shard parallelism belongs to processes — one
+    # LocalIndex per shard, like one reference node per shard.
+    return plan.kernel(blocks)
 
 
 def local_search(
@@ -375,12 +385,7 @@ def local_search(
     index_search.clj:272-273,306).  Raises for shapes outside the
     kernel family — those are analytics queries that belong on the
     Spark runtime (executor.search)."""
-    from bzzz_spark.query.executor import validate_fields
-    from bzzz_spark.query.rewrite import normalize
-
-    node = query if isinstance(query, ast.Query) else ast.parse_query(query)
-    validate_fields(index, node)
-    node = normalize(node)
+    node = _normalized(index, query)
     cand = local_candidates(index, node, size * page + size)
     if cand is None:
         raise ValueError(
@@ -388,12 +393,9 @@ def local_search(
             "serving family (block-max kernel shapes); run it through "
             "bzzz_spark.query.executor.search on the Spark runtime"
         )
-    if not len(cand):
-        return _EMPTY.copy()
-    order = np.lexsort((cand["docid"].to_numpy(), -cand["score"].to_numpy()))
-    k = size * page + size
-    top = cand.iloc[order[:k]].iloc[page * size:].reset_index(drop=True)
-    return top
+    d, s = cand["docid"].to_numpy(), cand["score"].to_numpy()
+    top = np.lexsort((d, -s))[page * size: page * size + size]
+    return pd.DataFrame({"docid": d[top], "score": s[top]}, copy=False)
 
 
 def _normalized(index: LocalIndex, query) -> "ast.Query":

@@ -10,6 +10,7 @@ driver round-trip.  Spark builds the index; LocalIndex serves it."""
 
 import math
 
+import pandas as pd
 import pytest
 
 from bzzz_spark.query import ast
@@ -206,19 +207,26 @@ def test_write_index_serving_handoff(spark, small_transcripts,
 
 def test_block_cache_transparent(served, tmp_path_factory):
     """The hot-term LRU block cache changes block ORDER in the fetched
-    frame (per-tid concat vs parquet order) — results must not care."""
+    frame (per-tid concat vs parquet order) — results must not care,
+    nor must evictions under a tiny byte budget, which the cache must
+    keep to."""
     sidx, lix = served
     cold = LocalIndex(lix.out_dir, cache_blocks=False)
-    for node in SHAPES:
-        a = local_search(lix, node, size=10)
-        b = local_search(cold, node, size=10)
-        assert a["docid"].tolist() == b["docid"].tolist(), node
-        assert (a["score"] - b["score"]).abs().max() <= 1e-12 or len(a) == 0
-    # a second pass over the SAME shapes must serve from cache and agree
-    for node in SHAPES:
-        a = local_search(lix, node, size=10)
-        b = local_search(cold, node, size=10)
-        assert a["docid"].tolist() == b["docid"].tolist(), node
+    budget = 4096
+    tiny = LocalIndex(lix.out_dir, max_cached_bytes=budget)
+    for other in (cold, tiny):
+        for node in SHAPES:
+            a = local_search(lix, node, size=10)
+            b = local_search(other, node, size=10)
+            assert a["docid"].tolist() == b["docid"].tolist(), node
+            assert (a["score"] - b["score"]).abs().max() <= 1e-12 or len(a) == 0
+            held = sum(size for _cols, size in tiny._block_cache.values())
+            assert held == tiny._cached_bytes <= budget, node
+        # a second pass over the SAME shapes must serve from cache and agree
+        for node in SHAPES:
+            a = local_search(lix, node, size=10)
+            b = local_search(other, node, size=10)
+            assert a["docid"].tolist() == b["docid"].tolist(), node
 
 
 def test_refresh_picks_up_new_generation(spark, small_transcripts,
@@ -269,3 +277,52 @@ def test_local_matches_oracle_fuzz(served, small_oracle):
         assert [d for d, _ in got] == [d for d, _ in want], node
         for (_, g), (_, w) in zip(got, want):
             assert math.isclose(g, w, rel_tol=1e-6), node
+
+
+@pytest.fixture(scope="module")
+def thin_segments(small_transcripts, tmp_path_factory):
+    """The served fixture's config written with build-size segments
+    (64 docs), so every query's blocks span several segments."""
+    from bzzz_spark.build.checkpoint import write_index
+    from bzzz_spark.build.indexer import IndexConfig, build_index
+
+    idx = build_index(small_transcripts, IndexConfig(
+        block_size=16, segment_size=64, num_partitions=4,
+        store_positions=True,
+        extra_fields=(("role", "keyword"),),
+        docvalue_cols=("turn_idx",),
+    ))
+    out = str(tmp_path_factory.mktemp("thin_idx"))
+    write_index(idx, out, serving_segment_size=None)
+    return LocalIndex(out)
+
+
+@pytest.mark.parametrize("node", SHAPES, ids=lambda n: type(n).__name__)
+def test_kernel_splits_segments(thin_segments, small_oracle, node):
+    """One kernel call over a multi-segment block set returns exactly the
+    rows of one call per segment, concatenated in segment order."""
+    from bzzz_spark.query.rewrite import normalize
+    from bzzz_spark.query.wand import plan_candidates
+
+    lix = thin_segments
+    n = normalize(node)
+    if isinstance(n, ast.Phrase):
+        n = ast.Bool(must=[n])  # as local_candidates serves a bare phrase
+    plan = plan_candidates(lix, n, 10)
+    if not plan.empty:
+        blocks = lix.fetch_blocks(plan.tids)
+        assert blocks["segment"].nunique() > 1, node
+        whole = plan.kernel(blocks)
+        per = pd.concat(
+            [plan.kernel(g) for _, g in blocks.groupby("segment")],
+            ignore_index=True,
+        )
+        assert whole["docid"].tolist() == per["docid"].tolist(), node
+        assert whole["score"].tolist() == per["score"].tolist(), node
+    if isinstance(node, ast.Filtered):
+        return  # the oracle indexes no keyword field (role)
+    want = small_oracle.search(node, size=10)
+    got = _lhits(local_search(lix, node, size=10))
+    assert [d for d, _ in got] == [d for d, _ in want], node
+    for (_, g), (_, w) in zip(got, want):
+        assert math.isclose(g, w, rel_tol=1e-9), node
