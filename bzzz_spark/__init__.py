@@ -16,8 +16,6 @@ HTTP wrapper around Lucene 4.10) re-expressed on the Spark execution model:
   sorts, and highlighting (``bzzz_spark.query``).
 - In-process serving of the on-disk index, one shard or many
   (``bzzz_spark.serve``).
-- Training-data pipeline operators: C4/Gopher cleaning, PII masking,
-  sampling, sequence packing (``bzzz_spark.functions``).
 
 Everything is DataFrame/SQL-first; Python appears only in vectorized
 pandas/Arrow UDF kernels (posting codec, WAND scorer, tokenizer fallback).

@@ -1,44 +1,30 @@
-"""Batched multi-query execution: N queries, ONE Spark job.
+"""Batched multi-query execution: N queries, one DataFrame.
 
-The reference engine serves one query per HTTP request off an
-always-hot in-process Lucene searcher (src/bzzz/index_search.clj), so
-its per-query cost is microseconds of JVM work.  Spark's unit of cost
-is the *job* — driver planning, task scheduling, Arrow worker spin-up —
-a fixed ~1-2 s tax that dwarfs the actual scoring at test scale and is
-pure waste when a workload carries many queries (the normal shape for
-an analytics engine: evaluation sets, offline relevance sweeps, data
-labeling passes over a fixed corpus).
+Spark's unit of cost is the *job* — driver planning, task scheduling,
+Arrow worker spin-up — a fixed tax that dwarfs the scoring itself when
+a workload carries many queries (evaluation sets, offline relevance
+sweeps, labeling passes over a fixed corpus).  ``search_many`` answers
+a query set with the same planner and kernels as ``search`` and the
+in-process serving path:
 
-This module makes the query set *data*:
+  parse / validate / normalize   every query, as search() does
+  dictionary                     ONE lookup over every term and phrase
+                                 leg in the batch, ONE expansion job
+                                 over every Wildcard/Fuzzy pattern
+  plan                           wand.plan_candidates per query
+  kernels                        ONE postings read for every plan
+                                 (wand.run_plans): each segment task
+                                 runs each plan's block-max kernel on
+                                 the rows of that plan's own terms
+  fallback                       executor.execute for queries without a
+                                 plan, unioned into the same DataFrame
+  top-k                          row_number() over query_id
 
-  spec      (query_id, term, role, boost)        — broadcast
-  consts    (query_id, n_must, msm, boost)       — broadcast
-  postings  decode ONCE for the union of all queries' terms
-  score     one JVM column expression per (term, docid)
-  combine   groupBy (query_id, docid) — the ONLY data shuffle
-  top-k     row_number() over Window.partitionBy(query_id)
-
-so the whole batch costs one postings scan + one docs scan (only if
-some query carries a Range/MatchAll leaf) + one shuffle + one job,
-independent of how many queries share it.  Per-query semantics are
-rank-identical to executor._execute with scores equal within FP
-tolerance (the batched path sums score contributions in one groupBy
-while the executor sums must/should stages separately, so float
-addition order differs; parity-tested in tests/test_batch.py): Term / Range / MatchAll / Phrase
-leaves under Bool (must / should / must_not / minimum_should_match,
-per-leaf and per-query boosts, no-norm extra-field terms) and dis-max
-over terms (score = max + tie*(sum - max), executor parity) run on the
-shared-scan path — every distinct (terms, slop) phrase in the batch
-evaluates inside ONE shared positional mapInPandas, each rarest-leg
-block-pruned (_phrase_contribs); any other AST shape falls back to the
-per-query executor plan and is unioned into the same single action, so
-callers get one DataFrame either way.
-
-At 100 TB the shared scan is also the *correct* plan, not just the
-cheap one: the posting blocks for hot terms are read once per batch
-instead of once per query, and the one wide shuffle is keyed on
-(query_id, docid) — adding queries widens the key space, so skew goes
-DOWN as the batch grows.
+A kernel query's scores are therefore the kernel's own, bit for bit the
+scores ``local_search`` returns.  Plans are made only on an index whose
+block-max bounds are current (``index.wand_safe``): a live streaming
+index's bounds were written under older collection stats and could
+prune a real hit, so every query on it takes the exhaustive executor.
 """
 
 from __future__ import annotations
@@ -47,150 +33,30 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from bzzz_spark.build.indexer import BzzzIndex
-from bzzz_spark.query import ast
-from bzzz_spark.query.executor import (
-    _mt_key,
-    decode_postings,
-    extra_field_map,
-    term_key,
-    validate_fields,
-)
-from bzzz_spark.query.scoring import score_col
+from bzzz_spark.query import ast, wand
+from bzzz_spark.query.executor import execute, term_key, validate_fields
+from bzzz_spark.query.rewrite import normalize
 
 
-_LEAF = (ast.Term, ast.Range, ast.MatchAll, ast.Phrase, ast.Wildcard,
-         ast.Fuzzy)
-
-
-def _as_bool(node: ast.Query, text_aliases: set) -> ast.Bool | None:
-    """Normalize a batchable node to a Bool of Term/Range/MatchAll/
-    Phrase/Wildcard/Fuzzy leaves, else None.  Phrase leaves ride a
-    SHARED positional scan (one job for every phrase in the batch); in
-    must_not their match rows carry role 'n' and the n_cnt == 0 cut
-    excludes exactly the matching docs (an OOV-leg phrase emits nothing
-    and so excludes nothing — Lucene semantics either way).
-    Wildcard/Fuzzy leaves are constant-score term SETS (executor
-    semantics: contribution = boost if ANY dictionary expansion
-    matches): their expansions share the batch's one postings decode,
-    deduped per (pattern, doc) so multi-expansion matches count once.
-    Extra-field phrases score without norms in the executor — that
-    rarity falls back."""
-    if isinstance(node, _LEAF):
-        node = ast.Bool(must=[node])
-    if isinstance(node, ast.Bool):
-        kids = list(node.must) + list(node.should) + list(node.must_not)
-        if kids and all(isinstance(k, _LEAF) for k in kids):
-            if any(
-                isinstance(k, ast.Phrase) and k.field_name not in text_aliases
-                for k in kids
-            ):
-                return None
-            return node
-    return None
-
-
-def _range_cond(node: ast.Range):
-    c = F.col(node.field_name)
-    cond = F.lit(True)
-    if node.min is not None:
-        cond = cond & (c >= node.min if node.min_inclusive else c > node.min)
-    if node.max is not None:
-        cond = cond & (c <= node.max if node.max_inclusive else c < node.max)
-    return cond
-
-
-def _phrase_contribs(index, spark, phrase_defs, phrase_spec_rows,
-                     n_docs, avgdl):
-    """Per-(qid, docid, role) contributions for every phrase leaf in
-    the batch from ONE shared positional scan.
-
-    All distinct (terms, slop) phrases evaluate inside a single
-    mapInPandas over the union of their legs' posting blocks — each
-    segment task runs phrase_segment_kernel once per phrase (each
-    rarest-leg block-pruned), so N phrase queries cost one job and one
-    scan of the touched blocks, not N.  A phrase with an
-    out-of-vocabulary leg emits no rows: in must that doc-count cut
-    makes the query empty, in should it just never matches, in must_not
-    it excludes nothing — Lucene semantics in every role."""
-    import pandas as pd
-
-    from bzzz_spark.query.phrase import phrase_segment_kernel
-    from bzzz_spark.query.scoring import idf as idf_fn
-    from bzzz_spark.query.scoring import tfc_col
-
-    if "positions" not in index.postings.columns:
-        raise ValueError(
-            "this index stores no positions — build it with "
-            "IndexConfig(store_positions=True) to answer phrase queries"
-        )
-    legs_needed = sorted(
-        {t for terms, _s in phrase_defs.values() for t in terms}
-    )
-    meta = index.lookup_terms(legs_needed)
-    specs: list[tuple[str, list[int], int]] = []
-    wp_rows: list[tuple[str, float]] = []
-    for pkey, (terms, slop) in phrase_defs.items():
-        if any(t not in meta for t in terms):
-            continue  # OOV leg: matches nothing
-        specs.append((pkey, [int(meta[t][0]) for t in terms], slop))
-        wp_rows.append(
-            (pkey, sum(idf_fn(n_docs, meta[t][1]) for t in terms))
-        )
-    if not specs:
-        return None
-    all_leg_tids = sorted({t for _k, legs, _s in specs for t in legs})
-    blocks = index.postings.filter(F.col("term_id").isin(all_leg_tids))
-    schema = "pkey string, docid long, ptf double, dl long"
-
-    cols = ["pkey", "docid", "ptf", "dl"]
-
-    def eval_segment(g: pd.DataFrame) -> list[pd.DataFrame]:
-        outs = []
-        for pkey, legs, slop in specs:
-            res = phrase_segment_kernel(g, legs, slop)
-            if len(res):
-                outs.append(res.assign(pkey=pkey)[cols])
-        return outs
-
-    if getattr(index, "segment_aligned", False):
-        def run(it):
-            parts = [p for p in it if len(p)]
-            if not parts:
-                return
-            pdf = pd.concat(parts, ignore_index=True)
-            for _, g in pdf.groupby("segment", sort=False):
-                yield from eval_segment(g)
-
-        matches = blocks.mapInPandas(run, schema)
-    else:
-        empty = pd.DataFrame(
-            {"pkey": pd.Series(dtype="object"),
-             "docid": pd.Series(dtype="int64"),
-             "ptf": pd.Series(dtype="float64"),
-             "dl": pd.Series(dtype="int64")}
-        )
-
-        def seg_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            outs = eval_segment(pdf)
-            if not outs:
-                return empty
-            return pd.concat(outs, ignore_index=True)
-
-        matches = blocks.groupby("segment").applyInPandas(seg_fn, schema)
-    pspec_df = spark.createDataFrame(
-        phrase_spec_rows, "qid string, pkey string, role string, "
-                          "tboost double",
-    )
-    wp_df = spark.createDataFrame(wp_rows, "pkey string, wp double")
-    dl_eff = F.when(F.col("dl") == 0, F.lit(avgdl)).otherwise(F.col("dl"))
-    pscore = tfc_col(F.col("ptf"), dl_eff, avgdl) * F.col("wp") * F.col(
-        "tboost"
-    )
-    return (
-        matches.join(F.broadcast(wp_df), "pkey")
-        .join(F.broadcast(pspec_df), "pkey")
-        .select("qid", "docid", "role", pscore.alias("tscore"))
-    )
+def _warm_dictionary(index: BzzzIndex, nodes) -> None:
+    """Fill the index's lookup and expansion memos for the whole batch
+    in one dictionary read plus one expansion job, so planning and the
+    executor fallback look up nothing per query."""
+    keys: set[str] = set()
+    patterns = []
+    for node in nodes:
+        for n in ast.iter_nodes(node):
+            if isinstance(n, ast.Term):
+                keys.add(term_key(index, n.field_name, n.value))
+            elif isinstance(n, ast.Phrase):
+                keys.update(term_key(index, n.field_name, t) for t in n.terms)
+            elif isinstance(n, (ast.Wildcard, ast.Fuzzy)):
+                patterns.append(n)
+    if patterns:
+        keys.update(t for exp in wand._expand_scoped_many(index, patterns)
+                    for t in exp)
+    if keys:
+        index.lookup_terms(sorted(keys))
 
 
 def search_many(
@@ -199,306 +65,37 @@ def search_many(
     size: int = 10,
     page: int = 0,
 ) -> DataFrame:
-    """Top-k for every query in one DataFrame / one Spark job.
+    """Top-k for every query in one DataFrame.
 
     Returns (query_id, docid, score) in (query_id asc, score desc,
     docid asc) order — per query, exactly the rows ``search()`` returns
     with the same size/page.
     """
-    from bzzz_spark.query.rewrite import normalize
-
     nodes: dict[str, ast.Query] = {}
     for qid, q in queries.items():
         node = q if isinstance(q, ast.Query) else ast.parse_query(q)
         validate_fields(index, node)
-        # flattened trees ride the shared scan instead of the per-query
-        # exhaustive fallback (score-preserving, rewrite.py)
         nodes[qid] = normalize(node)
+    _warm_dictionary(index, nodes.values())
 
-    # dis-max rides the shared scan too: every member emits role "d"
-    # contributions and the combiner max + tie*(sum - max) runs in the
-    # one groupBy (executor parity).  Members may be Terms, text-field
-    # Phrases (shared positional scan) or Wildcard/Fuzzy patterns
-    # (constant-score term sets on the shared decode) — the same
-    # machinery the Bool roles use
-    text_aliases = {"text", index.config.text_col}
-    _DM_LEAF = (ast.Term, ast.Phrase, ast.Wildcard, ast.Fuzzy)
-    dismaxable = {
-        qid: n
-        for qid, n in nodes.items()
-        if isinstance(n, ast.DisMax)
-        and n.queries
-        and all(isinstance(q, _DM_LEAF) for q in n.queries)
-        and not any(
-            isinstance(q, ast.Phrase) and q.field_name not in text_aliases
-            for q in n.queries
-        )
-    }
-    batchable = {
-        qid: b
-        for qid, n in nodes.items()
-        if qid not in dismaxable and (b := _as_bool(n, text_aliases))
-    }
-    rest = {
-        qid: n
-        for qid, n in nodes.items()
-        if qid not in batchable and qid not in dismaxable
-    }
-
-    spark = index.docs.sparkSession
+    plans = {}
+    if index.wand_safe:
+        for qid, node in nodes.items():
+            plan = wand.plan_candidates(index, node, (page + 1) * size)
+            if plan is not None:
+                plans[qid] = plan
     parts: list[DataFrame] = []
-
-    if batchable or dismaxable:
-        n_docs, avgdl = index.scalar_stats()
-        efields = extra_field_map(index)
-
-        # one spec row per (query, term, role); duplicates kept so a
-        # doubled must-term needs the doc twice, matching the executor's
-        # tagged-union count semantics.  Range/MatchAll leaves become
-        # doc-level contributions: score := boost, evaluated in ONE
-        # shared docs scan for the whole batch.
-        spec_rows: list[tuple] = []
-        consts_rows: list[tuple] = []
-        doc_leaves: list[tuple] = []  # (qid, role, leaf node)
-        keys: set[str] = set()
-        # phrase leaves: pkey -> (terms, slop); every occurrence gets a
-        # spec row, all occurrences of one (terms, slop) share ONE
-        # evaluation in the shared positional scan
-        phrase_defs: dict[str, tuple] = {}
-        phrase_spec_rows: list[tuple] = []
-        # wildcard/fuzzy leaves: mkey -> AST node; their dictionary
-        # expansions ride the batch's shared postings decode as
-        # constant-score term sets (executor parity: boost per doc
-        # matching ANY expansion, deduped per pattern)
-        multi_defs: dict[str, ast.Query] = {}
-        multi_spec_rows: list[tuple] = []
-        for qid, node in batchable.items():
-            for role, kids in (
-                ("m", node.must), ("s", node.should), ("n", node.must_not)
-            ):
-                for t in kids:
-                    if isinstance(t, ast.Term):
-                        key = term_key(index, t.field_name, t.value)
-                        keys.add(key)
-                        spec_rows.append(
-                            (qid, key, role, float(t.boost),
-                             t.field_name in efields)
-                        )
-                    elif isinstance(t, ast.Phrase):
-                        pkey = f"ph:{' '.join(t.terms)}~{t.slop}"
-                        phrase_defs[pkey] = (tuple(t.terms), t.slop)
-                        phrase_spec_rows.append(
-                            (qid, pkey, role, float(t.boost))
-                        )
-                    elif isinstance(t, (ast.Wildcard, ast.Fuzzy)):
-                        mkey = str(_mt_key(t))
-                        multi_defs[mkey] = t
-                        multi_spec_rows.append(
-                            (qid, mkey, role, float(t.boost))
-                        )
-                    else:  # Range / MatchAll
-                        doc_leaves.append((qid, role, t))
-            consts_rows.append(
-                (qid, len(node.must), node.effective_msm(),
-                 len(node.must) + len(node.should), float(node.boost), None)
-            )
-        for qid, node in dismaxable.items():
-            for t in node.queries:
-                if isinstance(t, ast.Term):
-                    key = term_key(index, t.field_name, t.value)
-                    keys.add(key)
-                    spec_rows.append(
-                        (qid, key, "d", float(t.boost),
-                         t.field_name in efields)
-                    )
-                elif isinstance(t, ast.Phrase):
-                    pkey = f"ph:{' '.join(t.terms)}~{t.slop}"
-                    phrase_defs[pkey] = (tuple(t.terms), t.slop)
-                    phrase_spec_rows.append((qid, pkey, "d", float(t.boost)))
-                else:  # Wildcard / Fuzzy
-                    mkey = str(_mt_key(t))
-                    multi_defs[mkey] = t
-                    multi_spec_rows.append((qid, mkey, "d", float(t.boost)))
-            consts_rows.append(
-                (qid, 0, 0, len(node.queries), float(node.boost),
-                 float(node.tie_breaker))
-            )
-
-        meta = index.lookup_terms(keys) if keys else {}
-        # wildcard/fuzzy expansions: ONE dictionary job for every
-        # pattern in the batch (memoized on the index snapshot), the
-        # expansion term_ids folded into the same postings decode as
-        # the plain term leaves
-        mt_tids: dict[str, list[int]] = {}
-        if multi_defs:
-            from bzzz_spark.query.wand import _expand_scoped_many
-
-            mkeys = list(multi_defs)
-            exps = _expand_scoped_many(
-                index, [multi_defs[k] for k in mkeys]
-            )
-            exp_keys = sorted({t for e in exps for t in e})
-            exp_meta = index.lookup_terms(exp_keys) if exp_keys else {}
-            for mk, e in zip(mkeys, exps):
-                mt_tids[mk] = [
-                    int(exp_meta[t][0]) for t in e if t in exp_meta
-                ]
-        all_tids = sorted(
-            {int(tid) for tid, _df in meta.values()}
-            | {t for v in mt_tids.values() for t in v}
-        )
-        # per-(qid, docid, role) score contributions, from shared scans
-        contribs: list[DataFrame] = []
-        decoded = None
-        if all_tids:
-            decoded = decode_postings(index.postings, all_tids)
-            if "dl" not in decoded.columns:  # legacy layout: join norms
-                decoded = decoded.join(index.docs.select("docid", "dl"), "docid")
-        if meta:
-            meta_df = spark.createDataFrame(
-                [(t, tid, df) for t, (tid, df) in meta.items()],
-                "term string, term_id long, df long",
-            )
-            spec_df = spark.createDataFrame(
-                spec_rows, "qid string, term string, role string, "
-                           "tboost double, nonorm boolean",
-            )
-            dl_eff = F.when(F.col("dl") == 0, F.lit(avgdl)).otherwise(
-                F.col("dl")
-            )
-            # nonorm terms (extra fields, norms disabled at build) score
-            # with dl := avgdl, i.e. BM25 b = 0
-            dl_used = F.when(F.col("nonorm"), F.lit(avgdl)).otherwise(dl_eff)
-            tscore = (
-                score_col(F.col("tf"), dl_used, F.col("df"),
-                          float(n_docs), avgdl)
-                * F.col("tboost")
-            )
-            contribs.append(
-                decoded.join(F.broadcast(meta_df), "term_id")
-                .join(F.broadcast(spec_df), "term")
-                .select("qid", "docid", "role", tscore.alias("tscore"))
-            )
-        if any(mt_tids.values()):
-            # constant-score term sets: a doc matching ANY expansion of
-            # a pattern scores that leaf's boost ONCE, so matches dedupe
-            # per (pattern, doc) before the spec join (a pattern with no
-            # in-dictionary expansion emits nothing: its must leaves can
-            # never satisfy m_cnt, its must_not leaves exclude nothing —
-            # executor/Lucene semantics)
-            mt_map = spark.createDataFrame(
-                [(t, mk) for mk, tids in mt_tids.items() for t in tids],
-                "term_id long, mkey string",
-            )
-            mspec_df = spark.createDataFrame(
-                multi_spec_rows,
-                "qid string, mkey string, role string, tboost double",
-            )
-            contribs.append(
-                decoded.join(F.broadcast(mt_map), "term_id")
-                .select("mkey", "docid")
-                .distinct()
-                .join(F.broadcast(mspec_df), "mkey")
-                .select("qid", "docid", "role",
-                        F.col("tboost").alias("tscore"))
-            )
-        if doc_leaves:
-            # every Range/MatchAll leaf in the batch, one docs scan:
-            # each doc emits a struct per satisfied leaf
-            structs = [
-                F.when(
-                    _range_cond(leaf)
-                    if isinstance(leaf, ast.Range)
-                    else F.lit(True),
-                    F.struct(
-                        F.lit(qid).alias("qid"),
-                        F.lit(role).alias("role"),
-                        F.lit(float(leaf.boost)).alias("tscore"),
-                    ),
-                )
-                for qid, role, leaf in doc_leaves
-            ]
-            contribs.append(
-                index.docs.select(
-                    "docid",
-                    F.explode(
-                        F.filter(
-                            F.array(*structs), lambda x: x.isNotNull()
-                        )
-                    ).alias("c"),
-                ).select("c.qid", "docid", "c.role", "c.tscore")
-            )
-        if phrase_defs:
-            pc = _phrase_contribs(
-                index, spark, phrase_defs, phrase_spec_rows, n_docs, avgdl
-            )
-            if pc is not None:
-                contribs.append(pc)
-        if contribs:
-            allc = contribs[0]
-            for c in contribs[1:]:
-                allc = allc.unionByName(c)
-            consts_df = spark.createDataFrame(
-                consts_rows,
-                "qid string, n_must int, msm int, n_pos int, qboost double, "
-                "tie double",
-            )
-            role = F.col("role")
-            per_doc = (
-                allc.groupBy("qid", "docid")
-                .agg(
-                    F.sum(F.when(role != "n", F.col("tscore"))
-                          .otherwise(F.lit(0.0))).alias("pscore"),
-                    F.max(F.when(role == "d", F.col("tscore"))).alias("d_max"),
-                    F.sum(F.when(role == "m", 1).otherwise(0)).alias("m_cnt"),
-                    F.sum(F.when(role == "s", 1).otherwise(0)).alias("s_cnt"),
-                    F.sum(F.when(role == "n", 1).otherwise(0)).alias("n_cnt"),
-                )
-                .join(F.broadcast(consts_df), "qid")
-                .filter(
-                    (F.col("m_cnt") == F.col("n_must"))
-                    & (F.col("s_cnt") >= F.col("msm"))
-                    & (F.col("n_cnt") == 0)
-                    & (F.col("n_pos") > 0)
-                )
-                .select(
-                    F.col("qid").alias("query_id"),
-                    "docid",
-                    (
-                        F.when(
-                            F.col("tie").isNotNull(),
-                            # executor DisMax: max + tie*(sum - max)
-                            F.col("d_max")
-                            + F.col("tie") * (F.col("pscore") - F.col("d_max")),
-                        ).otherwise(F.col("pscore"))
-                        * F.col("qboost")
-                    ).alias("score"),
-                )
-            )
-            parts.append(per_doc)
-
-    # non-batchable shapes: the exhaustive per-query plan, unioned into
-    # the same action — one job either way, just without scan sharing
-    from bzzz_spark.query.executor import execute
-
-    for qid, node in rest.items():
-        # shapes the shared scan cannot host still ride the block-max
-        # kernels when classify() serves them (e.g. required
-        # disjunction groups, phrase conjunctions): per-segment top-k
-        # is a superset of the global top-k, so the final window cut
-        # below returns exactly search()'s rows — only unsupported
-        # shapes pay the exhaustive decode
-        from bzzz_spark.query.wand import wand_candidates
-
-        got = wand_candidates(index, node, (page + 1) * size)
-        parts.append(
-            (execute(index, node) if got is None else got).select(
+    runnable = {qid: p for qid, p in plans.items() if not p.empty}
+    if runnable:
+        parts.append(wand.run_plans(index, runnable))
+    for qid, node in nodes.items():
+        if qid not in plans:
+            parts.append(execute(index, node).select(
                 F.lit(qid).alias("query_id"), "docid", "score"
-            )
-        )
+            ))
 
     if not parts:
-        return spark.createDataFrame(
+        return index.docs.sparkSession.createDataFrame(
             [], "query_id string, docid long, score double"
         )
     out = parts[0]

@@ -9,16 +9,18 @@ k-way merge across shards.  The Spark translation:
     fuzzy expansion against the dictionary — Lucene's rewrite())
   → decode only those terms' posting blocks (Arrow kernel; parquet
     row-group min/max stats on term_id prune the scan)
-  → BM25 scoring as a JVM Column expression
+  → BM25 tf components in numpy at decode time (query.scoring, the
+    kernels' formula) times the driver-computed idf
   → AST combinators as joins / unions / groupBy over (docid, score)
   → TakeOrderedAndProject for the top-k priority-queue merge —
     exactly Lucene's PQ, distributed, with the deterministic
     (score desc, docid asc) tie-break the north rule requires.
 
-Everything except block decoding is JVM-side.  For flat term /
-conjunctive queries, :mod:`bzzz_spark.query.wand` provides the
-block-max pruned fast path; this module is the exhaustive engine every
-operator lowers to and the cross-check for WAND.
+Block decoding and phrase matching run in Python workers; the
+combinators run JVM-side.  For flat term / conjunctive queries,
+:mod:`bzzz_spark.query.wand` provides the block-max pruned fast path;
+this module is the exhaustive engine every operator lowers to and the
+cross-check for WAND.
 """
 
 from __future__ import annotations
@@ -26,15 +28,16 @@ from __future__ import annotations
 import re
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from bzzz_spark.build.codec import decode_block, decode_positions
 from bzzz_spark.build.indexer import BzzzIndex
 from bzzz_spark.query import ast
+from bzzz_spark.query.blocks import Blocks, decode
 from bzzz_spark.query.scoring import idf as idf_fn
-from bzzz_spark.query.scoring import score_col, tfc_col
+from bzzz_spark.query.scoring import tf_component_np
 
 
 def glob_to_regex(glob: str) -> str:
@@ -251,78 +254,99 @@ def expand_multiterm(
     return out
 
 
-def decode_postings(postings: DataFrame, term_ids: list[int]) -> DataFrame:
-    """Decode the blocks of the given terms → (term_id, docid, tf, dl).
+_BLOCK_COLS = ("term_id", "segment", "first_docid", "last_docid", "count",
+               "block_max_score", "doc_gaps", "tfs", "dls")
+
+
+def _tf_components(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> dict:
+    """BM25 tf components of postings: ``tfc`` with the doc's inline
+    norm (0 = norms disabled, scored as avgdl — the kernels' rule) and
+    ``tfc_nn`` without norms (dl := avgdl, i.e. BM25 b = 0)."""
+    return {"tfc": tf_component_np(tf, np.where(dl == 0, avgdl, dl), avgdl),
+            "tfc_nn": tf_component_np(tf, avgdl, avgdl)}
+
+
+def decode_postings(
+    postings: DataFrame, term_ids: list[int], avgdl: float
+) -> DataFrame:
+    """Decode the blocks of the given terms → (term_id, docid, tf, dl,
+    tfc, tfc_nn).
 
     The isin filter reaches the parquet scan (row-group pruning via
     min/max stats — postings are written sorted by term_id within
-    files).  Decoding loops over *blocks*, not postings: numpy does the
-    per-posting work.  dl comes from the inline norms stream (0 = norms
-    disabled), so scoring needs NO join against a docs/norms table —
-    the whole query reads only the pruned posting blocks.
+    files).  Each Arrow batch decodes through query.blocks, the
+    kernels' decoder (one vectorized pass per stream).  dl comes from
+    the inline norms stream, and tfc/tfc_nn are the BM25 tf components
+    with and without norms (_tf_components), so scoring needs NO join
+    against a docs/norms table — the whole query reads only the pruned
+    posting blocks.
     """
-    from bzzz_spark.build.codec import decode_varints
-
-    sub = postings.filter(F.col("term_id").isin([int(t) for t in term_ids]))
-    has_dls = "dls" in postings.columns  # legacy layouts lack the stream
+    sub = postings.filter(
+        F.col("term_id").isin([int(t) for t in term_ids])
+    ).select(*_BLOCK_COLS)
 
     def dec(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            pieces = []
-            for row in pdf.itertuples(index=False):
-                d, tf = decode_block(row.first_docid, row.count, row.doc_gaps, row.tfs)
-                cols = {"term_id": row.term_id, "docid": d, "tf": tf}
-                if has_dls:
-                    cols["dl"] = decode_varints(row.dls, row.count)
-                pieces.append(pd.DataFrame(cols))
-            if pieces:
-                yield pd.concat(pieces, ignore_index=True)
+            if not len(pdf):
+                continue
+            b = Blocks.from_frame(pdf)
+            got = decode(b, np.arange(len(pdf)))
+            yield pd.DataFrame({
+                "term_id": np.repeat(b.term_id, b.count),
+                "docid": got.d, "tf": got.tf, "dl": got.dl,
+                **_tf_components(got.tf, got.dl, avgdl),
+            })
 
-    schema = "term_id long, docid long, tf long" + (", dl long" if has_dls else "")
-    return sub.mapInPandas(dec, schema)
+    return sub.mapInPandas(
+        dec, "term_id long, docid long, tf long, dl long, tfc double, "
+             "tfc_nn double"
+    )
 
 
-def decode_postings_pos(postings: DataFrame, term_ids: list[int]) -> DataFrame:
-    """Decode blocks WITH positions → (term_id, docid, tf, positions).
+def _phrase_matches(
+    index: BzzzIndex, tid_order: list[int], slop: int, avgdl: float
+) -> DataFrame:
+    """Distributed phrase match → DataFrame(docid, tfc, tfc_nn), the
+    tf components of each matching doc's phrase frequency.
 
-    Positions are the phrase-query substrate; the index must have been
-    built with store_positions=True."""
-    if "positions" not in postings.columns:
+    One task per touched segment; within a task the kernel decodes
+    positions only for block ranges that can still hold a candidate.
+    On a segment-aligned serving index (BzzzIndex.persist(
+    layout="segment")) this runs as a NARROW mapInPandas — no shuffle;
+    otherwise the blocks are grouped by segment first (small shuffle:
+    only the phrase terms' blocks move)."""
+    from bzzz_spark.query.phrase import phrase_segment_kernel
+
+    if "positions" not in index.postings.columns:
         raise ValueError(
             "this index stores no positions — build it with "
             "IndexConfig(store_positions=True) to answer phrase queries"
         )
-    import numpy as np
+    uniq = sorted(set(int(t) for t in tid_order))
+    blocks = index.postings.filter(F.col("term_id").isin(uniq))
+    schema = "docid long, tfc double, tfc_nn double"
 
-    sub = postings.filter(F.col("term_id").isin([int(t) for t in term_ids]))
+    def match(seg: pd.DataFrame) -> pd.DataFrame:
+        m = phrase_segment_kernel(seg, tid_order, slop)
+        return pd.DataFrame({
+            "docid": m["docid"].to_numpy(),
+            **_tf_components(m["ptf"].to_numpy(), m["dl"].to_numpy(), avgdl),
+        })
 
-    from bzzz_spark.build.codec import decode_varints
+    if getattr(index, "segment_aligned", False):
 
-    def dec(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pieces = []
-            for row in pdf.itertuples(index=False):
-                d, tf = decode_block(row.first_docid, row.count, row.doc_gaps, row.tfs)
-                dl = decode_varints(row.dls, row.count)
-                flat = decode_positions(row.positions, tf)
-                splits = np.split(flat, np.cumsum(tf)[:-1])
-                pieces.append(
-                    pd.DataFrame(
-                        {
-                            "term_id": row.term_id,
-                            "docid": d,
-                            "tf": tf,
-                            "dl": dl,
-                            "positions": [p.astype(np.int32) for p in splits],
-                        }
-                    )
-                )
-            if pieces:
-                yield pd.concat(pieces, ignore_index=True)
+        def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            parts = [p for p in it if len(p)]
+            if not parts:
+                return
+            pdf = pd.concat(parts, ignore_index=True)
+            for _, g in pdf.groupby("segment", sort=False):
+                out = match(g)
+                if len(out):
+                    yield out
 
-    return sub.mapInPandas(
-        dec, "term_id long, docid long, tf long, dl long, positions array<int>"
-    )
+        return blocks.mapInPandas(run, schema)
+    return blocks.groupby("segment").applyInPandas(match, schema)
 
 
 class _Ctx:
@@ -344,12 +368,14 @@ class _Ctx:
         # wildcard/fuzzy expansion — Lucene's multi-term rewrite, pushed
         # into a dictionary filter (rlike / levenshtein Columns) with the
         # max_expansion TopTermsRewrite cut applied SQL-side; only the
-        # (capped) expansion set is collected, never the vocabulary
+        # (capped) expansion set is collected, never the vocabulary.
+        # Memoized per index, like the lookups below
+        from bzzz_spark.query.wand import _expand_scoped_many
+
         self.expansions: dict[tuple, list[str]] = {}
         patterns = _collect_multiterm(node)
         if patterns:
-            prefixes = [_pattern_prefix(index, p) for p in patterns]
-            exps = expand_multiterm(index.dictionary, patterns, prefixes)
+            exps = _expand_scoped_many(index, patterns)
             for p, exp in zip(patterns, exps):
                 self.expansions[_mt_key(p)] = exp
                 terms.update(exp)
@@ -358,39 +384,20 @@ class _Ctx:
         spark = index.docs.sparkSession
         if self.term_meta:
             meta_df = spark.createDataFrame(
-                [(t, tid, df) for t, (tid, df) in self.term_meta.items()],
-                "term string, term_id long, df long",
+                [(t, tid, idf_fn(self.n_docs, df))
+                 for t, (tid, df) in self.term_meta.items()],
+                "term string, term_id long, idf double",
             )
             decoded = decode_postings(
-                index.postings, [tid for tid, _ in self.term_meta.values()]
+                index.postings, [tid for tid, _ in self.term_meta.values()],
+                self.avgdl,
             )
-            if "dl" not in decoded.columns:
-                # legacy block layout without inline norms: join the
-                # docs projection (the old, shuffle-heavy path)
-                decoded = decoded.join(index.docs.select("docid", "dl"), "docid")
-            # dl == 0 is the norms-disabled sentinel (extra fields)
-            dl_eff = F.when(F.col("dl") == 0, F.lit(self.avgdl)).otherwise(
-                F.col("dl")
-            )
-            self.scored = (
-                decoded.join(F.broadcast(meta_df), "term_id")
-                .withColumn(
-                    "score",
-                    score_col(
-                        F.col("tf"), dl_eff, F.col("df"),
-                        float(self.n_docs), self.avgdl,
-                    ),
-                )
-                # no-norm variant (Q16): dl := avgdl makes the BM25
-                # length-norm factor 1, i.e. b = 0
-                .withColumn(
-                    "score_nn",
-                    score_col(
-                        F.col("tf"), F.lit(self.avgdl), F.col("df"),
-                        float(self.n_docs), self.avgdl,
-                    ),
-                )
-                .select("term", "docid", "score", "score_nn")
+            # score_nn: the no-norm variant (Q16) for extra fields and
+            # NoNorm subtrees
+            self.scored = decoded.join(F.broadcast(meta_df), "term_id").select(
+                "term", "docid",
+                (F.col("idf") * F.col("tfc")).alias("score"),
+                (F.col("idf") * F.col("tfc_nn")).alias("score_nn"),
             )
         else:
             self.scored = spark.createDataFrame(
@@ -474,8 +481,6 @@ def _execute(node: ast.Query, ctx: _Ctx) -> DataFrame:
             "docid", (F.col(sc) * node.boost).alias("score")
         )
     if isinstance(node, ast.Phrase):
-        from bzzz_spark.query.phrase import phrase_matches
-
         keys = [term_key(ctx.index, node.field_name, t) for t in node.terms]
         metas = [ctx.term_meta.get(k) for k in keys]
         if not metas or any(m is None for m in metas):
@@ -485,19 +490,14 @@ def _execute(node: ast.Query, ctx: _Ctx) -> DataFrame:
         # for blocks that can hold a candidate from the rarest term
         # (bzzz_spark.query.phrase — the leapfrog discipline of ref
         # TermPayloadClojureScoreQuery.java:237-257, block-granular)
-        pm = phrase_matches(ctx.index, tids, node.slop)
+        pm = _phrase_matches(ctx.index, tids, node.slop, ctx.avgdl)
         # Lucene PhraseWeight: (Σ idf per term) × tfc(phrase_freq, dl)
         sum_idf = sum(idf_fn(ctx.n_docs, m[1]) for m in metas)
         nonorm = ctx.use_nonorm or node.field_name in extra_field_map(ctx.index)
-        dl_col = (
-            F.lit(ctx.avgdl)
-            if nonorm
-            else F.when(F.col("dl") == 0, F.lit(ctx.avgdl)).otherwise(F.col("dl"))
-        )
         return pm.select(
             "docid",
             (F.lit(sum_idf * node.boost)
-             * tfc_col(F.col("ptf"), dl_col, ctx.avgdl)).alias("score"),
+             * F.col("tfc_nn" if nonorm else "tfc")).alias("score"),
         )
     if isinstance(node, ast.MatchAll):
         return docs.select("docid", F.lit(float(node.boost)).alias("score"))

@@ -17,10 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bzzz_spark import BM25_B, BM25_K1
 from bzzz_spark.build.indexer import BzzzIndex
 from bzzz_spark.query import ast
 from bzzz_spark.query.executor import decode_postings, search
+from bzzz_spark.query.scoring import idf as idf_fn
 
 
 def explain_search(
@@ -30,39 +30,21 @@ def explain_search(
     node = query if isinstance(query, ast.Query) else ast.parse_query(query)
     hits = search(index, node, size=size, page=page)
     n_docs, avgdl = index.scalar_stats()
-    terms = list(dict.fromkeys(ast.collect_terms(node)))
-    if not terms:
+    meta = index.lookup_terms(dict.fromkeys(ast.collect_terms(node)))
+    if not meta:
         return hits.withColumn("_explain", F.array())
     spark = index.docs.sparkSession
-    meta = index.dictionary.filter(F.col("term").isin(terms)).select(
-        "term", "term_id", "df"
+    meta_df = spark.createDataFrame(
+        [(t, tid, df, idf_fn(n_docs, df)) for t, (tid, df) in meta.items()],
+        "term string, term_id long, df long, idf double",
     )
-    rows = meta.collect()
-    if not rows:
-        return hits.withColumn("_explain", F.array())
-    decoded = decode_postings(index.postings, [r["term_id"] for r in rows])
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    # dl comes from the blocks' inline norms stream (0 = norms disabled
-    # → avgdl), so no docs join is needed
-    dl_eff = F.when(F.col("dl") == 0, F.lit(avgdl)).otherwise(
-        F.col("dl").cast("double")
-    )
-    tfc = (
-        F.col("tf").cast("double") * F.lit(BM25_K1 + 1.0)
-        / (
-            F.col("tf").cast("double")
-            + F.lit(BM25_K1)
-            * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * dl_eff / F.lit(avgdl))
-        )
+    decoded = decode_postings(
+        index.postings, [tid for tid, _df in meta.values()], avgdl
     )
     parts = (
-        decoded.join(F.broadcast(meta), "term_id")
+        decoded.join(F.broadcast(meta_df), "term_id")
         .join(hits.select("docid"), "docid", "left_semi")
-        .withColumn("idf", idf)
-        .withColumn("tf_component", tfc)
+        .withColumnRenamed("tfc", "tf_component")
         .withColumn("term_score", F.col("idf") * F.col("tf_component"))
     )
     expl = parts.groupBy("docid").agg(

@@ -57,17 +57,11 @@ cross-checked by randomized fuzz in tests/test_phrase.py.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from bzzz_spark.query.blocks import Blocks, decode, overlapping, tally
 from bzzz_spark.query.phrase_repeats import repeat_groups
-
-PHRASE_SCHEMA = "docid long, ptf double, dl long"
 
 _EMPTY = pd.DataFrame(
     {
@@ -419,37 +413,3 @@ def phrase_arrays(
     if doc_rank.size == 0:
         return None
     return cand[doc_rank], ptf, cand_dl[doc_rank]
-
-
-def phrase_matches(index, tid_order: list[int], slop: int) -> DataFrame:
-    """Distributed phrase match → DataFrame(docid, ptf, dl).
-
-    One task per touched segment; within a task the kernel decodes
-    positions only for block ranges that can still hold a candidate.
-    On a segment-aligned serving index (BzzzIndex.persist(
-    layout="segment")) this runs as a NARROW mapInPandas — no shuffle;
-    otherwise the blocks are grouped by segment first (small shuffle:
-    only the phrase terms' blocks move)."""
-    if "positions" not in index.postings.columns:
-        raise ValueError(
-            "this index stores no positions — build it with "
-            "IndexConfig(store_positions=True) to answer phrase queries"
-        )
-    uniq = sorted(set(int(t) for t in tid_order))
-    blocks = index.postings.filter(F.col("term_id").isin(uniq))
-    if getattr(index, "segment_aligned", False):
-
-        def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            parts = [p for p in it if len(p)]
-            if not parts:
-                return
-            pdf = pd.concat(parts, ignore_index=True)
-            for _, g in pdf.groupby("segment", sort=False):
-                out = phrase_segment_kernel(g, tid_order, slop)
-                if len(out):
-                    yield out
-
-        return blocks.mapInPandas(run, PHRASE_SCHEMA)
-    return blocks.groupby("segment").applyInPandas(
-        lambda pdf: phrase_segment_kernel(pdf, tid_order, slop), PHRASE_SCHEMA
-    )

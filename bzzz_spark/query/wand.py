@@ -174,10 +174,43 @@ def _run_plan(index: BzzzIndex, plan: KernelPlan) -> DataFrame:
     if plan.empty:
         spark = index.docs.sparkSession
         return spark.createDataFrame([], "docid long, score double")
-    blocks = index.postings.filter(
-        F.col("term_id").isin([int(t) for t in plan.tids])
-    )
-    return _run_kernel(index, blocks, plan.kernel)
+    return run_plans(index, {"": plan}).select("docid", "score")
+
+
+def run_plans(index: BzzzIndex, plans: dict) -> DataFrame:
+    """Run non-empty KernelPlans ({query_id: plan}) in ONE read of the
+    postings, filtered to the union of their term_ids → (query_id,
+    docid, score), each query's per-segment top-k.  Every plan's kernel
+    gets the rows of its own term_ids only."""
+    tids = sorted({int(t) for p in plans.values() for t in p.tids})
+    blocks = index.postings.filter(F.col("term_id").isin(tids))
+    specs = [(qid, np.asarray(p.tids, dtype=np.int64), p.kernel)
+             for qid, p in plans.items()]
+    schema = "query_id string, docid long, score double"
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        tid = pdf["term_id"].to_numpy()
+        return pd.concat(
+            [kernel(pdf[np.isin(tid, mine)]).assign(query_id=qid)
+             for qid, mine, kernel in specs],
+            ignore_index=True,
+        )
+
+    if getattr(index, "segment_aligned", False):
+        # serving layout: postings are already hash-partitioned by
+        # segment (BzzzIndex.persist(layout="segment")), so the kernels
+        # run as a NARROW mapInPandas — zero per-query shuffle, the
+        # single biggest chunk of Spark's fixed query latency.  Each
+        # kernel splits the partition's blocks by segment itself.
+        def run_part(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            parts = [p for p in it if len(p)]
+            if parts:
+                yield run(pd.concat(parts, ignore_index=True))
+
+        return blocks.mapInPandas(run_part, schema)
+    # the ONLY shuffle: the queries' (small) block set, grouped by
+    # segment
+    return blocks.groupby("segment").applyInPandas(run, schema)
 
 
 def _flat_conjuncts(nodes, scored: bool):
@@ -1120,30 +1153,6 @@ def _make_kernel(qmeta: dict, mode: str, msm: int, k: int, avgdl: float,
     return kernel
 
 
-def _run_kernel(index: BzzzIndex, blocks: DataFrame, kernel) -> DataFrame:
-    """Execute a kernel over the query's block set."""
-    if getattr(index, "segment_aligned", False):
-        # serving layout: postings are already hash-partitioned by
-        # segment (BzzzIndex.persist(layout="segment")), so the kernel
-        # runs as a NARROW mapInPandas — zero per-query shuffle, the
-        # single biggest chunk of Spark's fixed query latency.  The
-        # kernel splits the partition's blocks by segment itself.
-        def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            parts = [p for p in it if len(p)]
-            if not parts:
-                return
-            out = kernel(pd.concat(parts, ignore_index=True))
-            if len(out):
-                yield out
-
-        return blocks.mapInPandas(run, "docid long, score double")
-    # the ONLY shuffle: the query terms' (small) block set, grouped by
-    # segment
-    return blocks.groupby("segment").applyInPandas(
-        lambda pdf: kernel(pdf), schema="docid long, score double"
-    )
-
-
 def _expand_scoped_many(index: BzzzIndex, nodes: list) -> list[list[str]]:
     """Wildcard/Fuzzy patterns → their exact dictionary expansions in
     ONE dictionary job (executor.expand_multiterm owns the semantics:
@@ -1255,8 +1264,9 @@ def plan_candidates(
     shapes the kernels can't serve (→ exhaustive executor), an
     empty-marked plan for provably-empty queries, else the kernel and
     the term_ids whose blocks it needs.  Shared by both runtimes:
-    wand_candidates fetches the blocks as a term_id-pruned DataFrame
-    filter and runs the kernel as narrow tasks; the in-process serving
+    the Spark one (wand_candidates, batch.search_many) runs plans
+    through run_plans, one term_id-pruned postings read as narrow
+    tasks; the in-process serving
     path (bzzz_spark.serve.local) fetches the same blocks via pyarrow
     parquet reads and calls the kernel directly — zero Spark jobs, the
     deployment shape of the reference's long-lived in-process Lucene
@@ -1268,6 +1278,11 @@ def plan_candidates(
     from bzzz_spark.query.executor import validate_fields
 
     validate_fields(index, node)
+    if isinstance(node, ast.Phrase) and node.boost >= 0:
+        # a bare phrase is the one kernel-family shape classify() only
+        # accepts inside a conjunction; Bool(must=[phrase]) is
+        # score-identical (the must-sum of one clause)
+        node = ast.Bool(must=[node])
     if isinstance(node, (ast.Wildcard, ast.Fuzzy)):
         return _multiterm_plan(index, node, k)
     if isinstance(node, ast.ConstantScore):

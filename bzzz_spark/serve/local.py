@@ -353,11 +353,6 @@ def local_candidates(
     for shapes the kernels can't serve."""
     from bzzz_spark.query.wand import plan_candidates
 
-    if isinstance(node, ast.Phrase) and node.boost >= 0:
-        # a bare phrase is the one kernel-family shape classify() only
-        # accepts inside a conjunction; Bool(must=[phrase]) is
-        # score-identical (the must-sum of one clause)
-        node = ast.Bool(must=[node])
     plan = plan_candidates(index, node, k)
     if plan is None:
         return None

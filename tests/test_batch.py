@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 from bzzz_spark.query import ast
 from bzzz_spark.query.batch import search_many
 from bzzz_spark.query.executor import search
+from bzzz_spark.query.rewrite import normalize
+from bzzz_spark.query.wand import plan_candidates
 
 
 BATCH = {
@@ -56,9 +58,8 @@ FALLBACK = {
     "range": ast.Bool(
         must=[ast.Term("error"), ast.Range("turn_idx", min=1, max=5)]
     ),
-    # required disjunction groups: no shared-scan host, but the rest
-    # loop routes them through the block-max kernels (wand_candidates)
-    # before any exhaustive fallback — parity must hold either way
+    # required disjunction groups: planned like every other kernel
+    # shape — parity must hold either way
     "groups2": ast.Bool(must=[
         ast.Bool(should=[ast.Term("error"), ast.Term("query")]),
         ast.Bool(should=[ast.Term("the"), ast.Term("data")]),
@@ -145,11 +146,20 @@ def test_batch_job_count_is_constant(small_index):
         return len(tracker.getJobIdsForGroup(group))
 
     small = {k: BATCH[k] for k in ["term_head", "and2", "must_not"]}
+    # Range/MatchAll without doc-values take the per-query executor on
+    # this index (no docvalue_cols); so does only_must_not, which
+    # matches nothing.  Every other query has a kernel plan
+    wide = {k: v for k, v in BATCH.items() if k not in
+            ("term_range", "range_only", "match_all", "range_not")}
+    for qid, node in wide.items():
+        if qid != "only_must_not":
+            assert plan_candidates(small_index, normalize(node), 10) \
+                is not None, qid
     n_small = jobs_for(small, "batch-probe-small")
-    n_full = jobs_for(BATCH, "batch-probe-full")
+    n_full = jobs_for(wide, "batch-probe-full")
     assert n_full <= n_small + 2, (
         f"job count grew with batch width: {n_small} jobs for "
-        f"{len(small)} queries but {n_full} for {len(BATCH)}"
+        f"{len(small)} queries but {n_full} for {len(wide)}"
     )
 
 
@@ -220,7 +230,6 @@ def test_batch_phrases_share_one_positional_scan(spark, small_transcripts):
     positional mapInPandas job, with per-query parity vs search() in
     every role (must / should / must_not, boosts, slop, OOV legs)."""
     from bzzz_spark.build.indexer import IndexConfig, build_index
-    from bzzz_spark.query.batch import _as_bool
 
     idx = build_index(
         small_transcripts,
@@ -254,16 +263,12 @@ def test_batch_phrases_share_one_positional_scan(spark, small_transcripts):
         ),
         "plain": ast.Term("error"),
     }
-    # all these shapes are on the shared scan, not the fallback union
-    aliases = {"text", idx.config.text_col}
+    # all these shapes have a kernel plan, except a phrase under
+    # must_not, which takes the executor
     for qid, node in queries.items():
-        assert _as_bool(node, aliases) is not None, qid
+        if qid not in ("ph_not", "ph_oov_not"):
+            assert plan_candidates(idx, normalize(node), 10) is not None, qid
     _assert_batch_matches(idx, queries)
-    # an extra-field phrase falls back (no-norm scoring)
-    assert _as_bool(
-        ast.Bool(must=[ast.Phrase(["a", "b"], field_name="role")]),
-        aliases,
-    ) is None
     idx.postings.unpersist()
 
 
@@ -273,7 +278,6 @@ def test_batch_multiterm_shared_scan_parity(small_index):
     in every role (must / should / must_not), with boosts, duplicates,
     fuzzy edit distance, and OOV patterns (which must match nothing in
     must and exclude nothing in must_not)."""
-    from bzzz_spark.query.batch import _as_bool
 
     queries = {
         "w_only": ast.Wildcard("err*"),
@@ -303,10 +307,9 @@ def test_batch_multiterm_shared_scan_parity(small_index):
         ),
         "plain": ast.Term("error"),
     }
-    # all these shapes are on the shared scan, not the fallback union
-    aliases = {"text", small_index.config.text_col}
+    # all these shapes have a kernel plan, not the executor fallback
     for qid, node in queries.items():
-        assert _as_bool(node, aliases) is not None, qid
+        assert plan_candidates(small_index, normalize(node), 10) is not None, qid
     _assert_batch_matches(small_index, queries)
 
 
@@ -349,3 +352,48 @@ def test_batch_dismax_mixed_members(spark, small_transcripts):
     }
     _assert_batch_matches(idx, queries)
     idx.postings.unpersist()
+
+
+def test_batch_honors_wand_safe(spark, tmp_path, small_pdf, monkeypatch):
+    """A live streaming index (wand_safe=False) carries block-max bounds
+    baked under older collection stats, so search_many must plan no
+    kernel on it — every query takes the exhaustive executor, as
+    search() does — and still answer exactly like search()."""
+    from bzzz_spark.build.indexer import IndexConfig
+    from bzzz_spark.fixtures import to_spark
+    from bzzz_spark.query import wand
+    from bzzz_spark.streaming.ingest import StreamingIndexer
+
+    ing = StreamingIndexer(
+        spark, str(tmp_path / "live"),
+        IndexConfig(block_size=16, segment_size=64, num_partitions=2),
+    )
+    pdf = small_pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    half = len(pdf) // 2
+    for i, chunk in enumerate((pdf.iloc[:half], pdf.iloc[half:])):
+        ing.process_batch(to_spark(spark, chunk), epoch_id=i)
+    live = ing.live_index()
+    assert not live.wand_safe
+
+    calls = []
+
+    def spy(name):
+        real = getattr(wand, name)
+
+        def wrapped(*a, **kw):
+            calls.append(name)
+            return real(*a, **kw)
+        return wrapped
+
+    monkeypatch.setattr(wand, "plan_candidates", spy("plan_candidates"))
+    monkeypatch.setattr(wand, "_make_kernel", spy("_make_kernel"))
+    queries = {
+        "groups2": FALLBACK["groups2"],
+        "or_in_and": FALLBACK["or_in_and"],
+        "and2": BATCH["and2"],
+        "term_head": BATCH["term_head"],
+    }
+    search_many(live, queries, size=10).collect()
+    assert calls == []
+    monkeypatch.undo()
+    _assert_batch_matches(live, queries)

@@ -1,10 +1,11 @@
 """Randomized query parity fuzz: hypothesis-generated ASTs run through
 the BATCHED engine path (search_many — one Spark action per example
 batch) and compared rank- and score-exactly against the pure-Python
-oracle.  Covers the batch fast path (flat Term/Range/MatchAll bools),
-its executor fallback (nested bools, dis-max, phrases), and the
-combinators' interaction with boosts and minimum_should_match — the
-shapes a hand-written test matrix under-samples.
+oracle.  Covers the batch's block-max kernel plans (terms, flat bools,
+required disjunction groups, dis-max), its executor fallback (ranges
+and match-all without doc-values, nested bools), and the combinators'
+interaction with boosts and minimum_should_match — the shapes a
+hand-written test matrix under-samples.
 
 Reference semantics being fuzzed: bool combination queries/bool.clj:4-17,
 paging/tie-break index_search.clj:272,306."""
@@ -46,15 +47,16 @@ _flat_bool = st.builds(
     st.integers(0, 2),
     st.sampled_from([1.0, 3.0]),
 )
-# nested shapes exercise the batch module's executor fallback
+# nested shapes the rewrite cannot flatten exercise the executor
+# fallback
 _nested = st.builds(
     lambda inner, extra: ast.Bool(must=[inner] + extra),
     _flat_bool, st.lists(_term, min_size=1, max_size=2),
 )
 # required disjunction groups (r4, late): "(a OR b) AND (c OR d)" —
 # the rewrite hoists the first group into msm-gated optionals, later
-# groups ride the mixed kernel's 'g' conjuncts; inside the batch these
-# take the per-query kernel path of the rest loop.  Duplicate members
+# groups ride the mixed kernel's 'g' conjuncts, in the batch's shared
+# kernel pass like every other planned query.  Duplicate members
 # are deliberately possible (the vocab is small): each occurrence must
 # score and count toward the group's msm separately
 _group = st.builds(

@@ -93,6 +93,24 @@ def test_local_matches_spark(served, node):
     _assert_same(got, want, node)
 
 
+def test_batch_matches_local_exactly(served):
+    """search_many on the Spark reader and local_search on the
+    in-process reader of one on-disk index run the same plans on the
+    same blocks: docids and scores are equal, not merely close."""
+    from bzzz_spark.query.batch import search_many
+
+    sidx, lix = served
+    rows = search_many(
+        sidx, {str(i): n for i, n in enumerate(SHAPES)}, size=10
+    ).collect()
+    got = {}
+    for r in rows:
+        got.setdefault(r["query_id"], []).append((r["docid"], r["score"]))
+    for i, node in enumerate(SHAPES):
+        want = _lhits(local_search(lix, node, size=10))
+        assert got.get(str(i), []) == want, node
+
+
 def test_local_paging_matches_spark(served):
     sidx, lix = served
     node = ast.Term("the")

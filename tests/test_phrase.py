@@ -136,17 +136,20 @@ def test_phrase_without_positions_raises(small_index):
 def test_positions_content_matches_oracle(pos_index, small_oracle):
     """Decode EVERY posting's positions and compare with the oracle's
     token offsets — the codec+build roundtrip at full coverage."""
-    from bzzz_spark.query.executor import decode_postings_pos
+    from bzzz_spark.query.blocks import Blocks, decode
 
     tid_of = {
         r["term"]: r["term_id"] for r in pos_index.dictionary.collect()
     }
     terms = ["the", "data", "error"]
     tids = [tid_of[t] for t in terms if t in tid_of]
-    rows = decode_postings_pos(pos_index.postings, tids).collect()
+    pdf = pos_index.postings.filter(F_col("term_id").isin(tids)).toPandas()
+    b = Blocks.from_frame(pdf)
+    dec = decode(b, np.arange(len(pdf)), positions=True)
+    per_posting = np.split(dec.pos, np.cumsum(dec.tf)[:-1])
     got = {}
-    for r in rows:
-        got.setdefault(r["term_id"], {})[r["docid"]] = list(r["positions"])
+    for tid, d, pos in zip(np.repeat(b.term_id, b.count), dec.d, per_posting):
+        got.setdefault(int(tid), {})[int(d)] = pos.tolist()
     for t in terms:
         if t not in tid_of:
             continue
