@@ -267,7 +267,20 @@ def dedup_upserts(
 
 
 def build_docs(table: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """docs table: dense docid over key_cols, tokens, dl + all stored cols."""
+    """docs table: dense docid over key_cols, tokens, dl + all stored cols.
+    Every builder starts here, so this is where docvalue_cols must
+    prove integer-typed."""
+    dtypes = dict(table.dtypes)
+    bad = {
+        c: dtypes.get(c) for c in cfg.docvalue_cols
+        if dtypes.get(c) not in {"tinyint", "smallint", "int", "bigint"}
+    }
+    if bad:
+        raise ValueError(
+            f"docvalue_cols must be integer-typed doc columns; got {bad} "
+            "— floats would truncate in the zigzag-varint stream and "
+            "disagree with the executor's docs-table range semantics"
+        )
     deduped = (
         dedup_upserts(table, cfg.key_cols, cfg.ts_col) if cfg.ts_col else table
     )
@@ -624,20 +637,6 @@ def build_index(transcripts: DataFrame, cfg: IndexConfig | None = None) -> BzzzI
     """
     cfg = cfg or IndexConfig()
     docs = build_docs(transcripts, cfg)
-    if cfg.docvalue_cols:
-        dtypes = dict(docs.dtypes)
-        ok = {"tinyint", "smallint", "int", "bigint"}
-        bad = [
-            c for c in cfg.docvalue_cols
-            if dtypes.get(c) not in ok
-        ]
-        if bad:
-            raise ValueError(
-                f"docvalue_cols must be integer-typed doc columns; got "
-                f"{ {c: dtypes.get(c) for c in bad} } — floats would "
-                "truncate in the zigzag-varint stream and disagree with "
-                "the executor's docs-table range semantics"
-            )
     # no extra cache here: assign_sequential_ids already persisted the
     # arranged rows; docs (tokenize + dl) derives narrowly from that.
     # Re-running the tokenizer per consumer is cheaper than doubling the

@@ -142,19 +142,24 @@ def _exact_matches(p, prefix: str, cand: list[tuple]) -> list[tuple]:
     from bzzz_spark.oracle.pyoracle import fuzzy_distance_fn
 
     scoped = (
-        [(t, t[len(prefix):], d) for t, d in cand if t.startswith(prefix)]
+        ((t, t[len(prefix):], d) for t, d in cand if t.startswith(prefix))
         if prefix
-        else [(t, t, d) for t, d in cand if ":" not in t]
+        else ((t, t, d) for t, d in cand if ":" not in t)
     )
     if isinstance(p, ast.Wildcard):
         rx = re.compile(glob_to_regex(p.value))
         exp = [(t, d) for t, bare, d in scoped if rx.match(bare)]
     else:
         dist = fuzzy_distance_fn(getattr(p, "transpositions", False))
+        # length band first: every levenshtein/OSA edit changes the
+        # length by at most 1, and it keeps a full-vocabulary scan
+        # (LocalIndex.expand_candidates) from paying the distance per term
+        lo, hi = len(p.value) - p.max_edits, len(p.value) + p.max_edits
         exp = [
             (t, d)
             for t, bare, d in scoped
-            if bare.startswith(p.value[: p.prefix_len])
+            if lo <= len(bare) <= hi
+            and bare.startswith(p.value[: p.prefix_len])
             and dist(bare, p.value) <= p.max_edits
         ]
     return list(dict.fromkeys(exp))

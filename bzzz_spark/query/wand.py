@@ -1278,6 +1278,10 @@ def plan_candidates(
     from bzzz_spark.query.executor import validate_fields
 
     validate_fields(index, node)
+    if isinstance(node, ast.Bool) and not node.must and not node.should:
+        # only must_not clauses (or none) match nothing: Lucene's
+        # prohibited-only BooleanQuery, the executor's empty answer
+        return _EMPTY_PLAN
     if isinstance(node, ast.Phrase) and node.boost >= 0:
         # a bare phrase is the one kernel-family shape classify() only
         # accepts inside a conjunction; Bool(must=[phrase]) is

@@ -23,9 +23,10 @@ Division of labor at 100 TB:
     pruning on term_id (postings files are written term_id-sorted, so
     a query reads only its own terms' blocks — the same pruned-bytes
     property the Spark reader gets from the same layout).
-  * Scatter/gather across shards: serve.scatter.ShardedIndex — N
-    LocalIndex shards (built with GLOBAL stats) + exact k-way merge,
-    one LocalIndex = one shard, mirroring one reference node.
+  * Scatter/gather across shards: serve.scatter.ShardedIndex.  Each
+    serving operation below is written once, over a list of shards (a
+    LocalIndex is the one-shard list): parse, validate, normalize and
+    plan once, on shard 0; fetch + kernel per shard; one exact merge.
 
 Scope: the block-max kernel shapes (term / bool / phrase / dv-range /
 wildcard / fuzzy / constant-score / dis-max — everything
@@ -39,7 +40,7 @@ sorts) raise: they are analytics and belong on the Spark runtime.
 from __future__ import annotations
 
 import os
-import re
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -66,8 +67,7 @@ class LocalIndex:
 
     wand_safe = True
 
-    def __init__(self, out_dir: str, cache_blocks: bool = True,
-                 max_cached_bytes: int = 256 << 20):
+    def __init__(self, out_dir: str, max_cached_bytes: int = 256 << 20):
         import pyarrow.dataset as pads
         import pyarrow.parquet as pq
 
@@ -100,7 +100,6 @@ class LocalIndex:
         # touch parquet again.  Entries hold ENCODED blocks (varint
         # bytes, ~3 B/posting); the budget bounds the encoded bytes plus
         # the arrays' own nbytes.  Plain LRU via dict reinsertion order.
-        self._cache_blocks = bool(cache_blocks)
         self._max_cached_bytes = int(max_cached_bytes)
         self._cached_bytes = 0
         self._block_cache: dict[int, tuple[dict, int]] = {}
@@ -128,8 +127,7 @@ class LocalIndex:
         p = os.path.join(self.out_dir, "manifest.json")
         if os.path.getmtime(p) == self._manifest_mtime:
             return False
-        self.__init__(self.out_dir, self._cache_blocks,
-                      self._max_cached_bytes)
+        self.__init__(self.out_dir, self._max_cached_bytes)
         return True
 
     # -- planner surface -------------------------------------------------
@@ -166,53 +164,26 @@ class LocalIndex:
     def expand_candidates(self, patterns, prefixes) -> list[list[str]]:
         """Wildcard/Fuzzy pattern expansion against the memory-resident
         term dictionary — the LocalIndex analog of
-        executor.expand_multiterm, with identical semantics: anchored
-        glob regex; length-band + prefix_len + edit distance (plain
-        levenshtein, or OSA when transpositions=True) on the bare
-        token; max_expansion keeps the top-N by (df desc, term asc) —
-        the TopTermsRewrite cut.  One exact list per pattern.  The
-        (term, df) dictionary loads lazily on first pattern query and
-        stays resident (Lucene keeps its term dictionary FST
-        memory-resident the same way)."""
-        from bzzz_spark.oracle.pyoracle import fuzzy_distance_fn
-        from bzzz_spark.query.executor import _cap_by_df, glob_to_regex
+        executor.expand_multiterm, through the same exact matcher
+        (executor._exact_matches) and the same max_expansion cut
+        (_cap_by_df: top-N by (df desc, term asc), the TopTermsRewrite
+        cut).  One sorted list per pattern.  The (term, df) dictionary
+        loads lazily on first pattern query and stays resident (Lucene
+        keeps its term dictionary FST memory-resident the same way)."""
+        from bzzz_spark.query.executor import _cap_by_df, _exact_matches
 
         if self._terms_arr is None:
             tbl = self._dict_ds.to_table(columns=["term", "df"])
             self._terms_arr = list(
                 zip(tbl["term"].to_pylist(), tbl["df"].to_pylist())
             )
-        out: list[list[str]] = []
-        for p, pre in zip(patterns, prefixes):
-            exp: list[tuple] = []
-            if isinstance(p, ast.Wildcard):
-                rx = re.compile(glob_to_regex(pre + p.value))
-                exp = [
-                    (t, d) for t, d in self._terms_arr
-                    if rx.match(t) and (pre or ":" not in t)
-                ]
-            else:  # Fuzzy
-                dist = fuzzy_distance_fn(getattr(p, "transpositions", False))
-                lo = len(p.value) - p.max_edits
-                hi = len(p.value) + p.max_edits
-                lit = pre + p.value[: p.prefix_len]
-                for t, d in self._terms_arr:
-                    if pre:
-                        if not t.startswith(pre):
-                            continue
-                    elif ":" in t:
-                        continue
-                    bare = t[len(pre):]
-                    if not (lo <= len(bare) <= hi):
-                        continue
-                    if p.prefix_len > 0 and not t.startswith(lit):
-                        continue
-                    if dist(bare, p.value) <= p.max_edits:
-                        exp.append((t, d))
-            out.append(
-                sorted(_cap_by_df(exp, getattr(p, "max_expansion", None)))
-            )
-        return out
+        return [
+            sorted(_cap_by_df(
+                _exact_matches(p, pre, self._terms_arr),
+                getattr(p, "max_expansion", None),
+            ))
+            for p, pre in zip(patterns, prefixes)
+        ]
 
     # -- block + doc fetch -------------------------------------------------
 
@@ -226,11 +197,6 @@ class LocalIndex:
         import pyarrow.compute as pc
 
         tids = [int(t) for t in term_ids]
-        if not self._cache_blocks:
-            return self._post_ds.to_table(
-                columns=self._block_cols,
-                filter=pc.field("term_id").isin(tids),
-            ).to_pandas()
         missing = [t for t in tids if t not in self._block_cache]
         if missing:
             tbl = self._post_ds.to_table(
@@ -346,51 +312,37 @@ _EMPTY = pd.DataFrame(
 )
 
 
-def local_candidates(
-    index: LocalIndex, node: ast.Query, k: int
-) -> pd.DataFrame | None:
-    """Per-segment top-k (docid, score) via the shared KernelPlan; None
-    for shapes the kernels can't serve."""
+def _per_shard(
+    shards: list[LocalIndex], node: ast.Query, k: int
+) -> list[pd.DataFrame] | None:
+    """Every shard's per-segment top-k (docid, score) from ONE plan:
+    the query is planned (dictionary lookups, expansions, kernel
+    construction) on shards[0] alone — the shards of one build share
+    its dictionary and global stats, which ShardedIndex checks at open
+    — and each shard fetches its own blocks for the plan's kernel.
+    None for shapes the kernels can't serve."""
     from bzzz_spark.query.wand import plan_candidates
 
-    plan = plan_candidates(index, node, k)
+    plan = plan_candidates(shards[0], node, k)
     if plan is None:
         return None
     if plan.empty:
-        return _EMPTY.copy()
-    blocks = index.fetch_blocks(plan.tids)
-    if not len(blocks):
-        return _EMPTY.copy()
+        return [_EMPTY.copy() for _ in shards]
     # the kernel runs the segments SERIALLY in this process: a thread
     # pool over segments measured 2-7x SLOWER (the kernels interleave
     # many small numpy calls, so threads convoy on the GIL).
     # Cross-segment/shard parallelism belongs to processes — one
     # LocalIndex per shard, like one reference node per shard.
-    return plan.kernel(blocks)
+    return [plan.kernel(s.fetch_blocks(plan.tids)) for s in shards]
 
 
-def local_search(
-    index: LocalIndex, query: "ast.Query | dict | str", size: int = 20,
-    page: int = 0
-) -> pd.DataFrame:
-    """Top-k hits (docid, score), rank- and score-identical to the
-    Spark path's executor.search: same parse → validate → normalize
-    pipeline, same per-segment kernels, same (score desc, docid asc)
-    merge order and page slice (reference paging semantics,
-    index_search.clj:272-273,306).  Raises for shapes outside the
-    kernel family — those are analytics queries that belong on the
-    Spark runtime (executor.search)."""
-    node = _normalized(index, query)
-    cand = local_candidates(index, node, size * page + size)
-    if cand is None:
-        raise ValueError(
-            f"query shape {type(node).__name__} is outside the in-process "
-            "serving family (block-max kernel shapes); run it through "
-            "bzzz_spark.query.executor.search on the Spark runtime"
-        )
-    d, s = cand["docid"].to_numpy(), cand["score"].to_numpy()
-    top = np.lexsort((d, -s))[page * size: page * size + size]
-    return pd.DataFrame({"docid": d[top], "score": s[top]}, copy=False)
+def local_candidates(
+    index: LocalIndex, node: ast.Query, k: int
+) -> pd.DataFrame | None:
+    """Per-segment top-k (docid, score) via the shared KernelPlan; None
+    for shapes the kernels can't serve."""
+    got = _per_shard([index], node, k)
+    return None if got is None else got[0]
 
 
 def _normalized(index: LocalIndex, query) -> "ast.Query":
@@ -402,36 +354,82 @@ def _normalized(index: LocalIndex, query) -> "ast.Query":
     return normalize(node)
 
 
-def local_matched(index: LocalIndex, query) -> pd.DataFrame:
-    """The FULL matched set (docid, score) — the serving analog of
-    executor.execute: the same per-segment kernels run with k = n_docs,
-    so block-max pruning never cuts and every match surfaces.  This is
-    what facets, field sorts, and non-term totals consume (Lucene also
-    abandons early termination for those collectors)."""
-    node = _normalized(index, query)
-    n_docs, _ = index.scalar_stats()
-    cand = local_candidates(index, node, max(1, n_docs))
-    if cand is None:
+def _candidates(
+    shards: list[LocalIndex], node: ast.Query, k: int | None = None
+) -> list[pd.DataFrame]:
+    """_per_shard for the serving entry points, which raise on shapes
+    outside the kernel family.  k=None asks for every shard's FULL
+    matched set — the serving analog of executor.execute: the kernels
+    run with k = n_docs, so block-max pruning never cuts.  Facets,
+    field sorts and non-term totals consume that (Lucene also abandons
+    early termination for those collectors)."""
+    if k is None:
+        k = max(1, shards[0].scalar_stats()[0])
+    got = _per_shard(shards, node, k)
+    if got is None:
         raise ValueError(
             f"query shape {type(node).__name__} is outside the in-process "
-            "serving family; run it on the Spark runtime"
+            "serving family (block-max kernel shapes); run it through "
+            "bzzz_spark.query.executor on the Spark runtime"
         )
-    return cand
+    return got
+
+
+def _top(
+    shards: list[LocalIndex], query, size: int, page: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One page of the global top-k as (docid, score, shard position)
+    arrays: every shard's per-segment top-k (k = page·size + size — the
+    global top-k is a subset of their union), ONE (score desc, docid
+    asc) order and the page slice (reference paging semantics,
+    index_search.clj:272-273,306).  Docids are global, so this is the
+    single-index comparator verbatim, ties included."""
+    k = page * size + size
+    parts = _candidates(shards, _normalized(shards[0], query), k)
+    d = np.concatenate([p["docid"].to_numpy() for p in parts])
+    s = np.concatenate([p["score"].to_numpy() for p in parts])
+    at = np.repeat(np.arange(len(parts)), [len(p) for p in parts])
+    top = np.lexsort((d, -s))[page * size: k]
+    return d[top], s[top], at[top]
+
+
+def local_search(
+    index: LocalIndex, query: "ast.Query | dict | str", size: int = 20,
+    page: int = 0
+) -> pd.DataFrame:
+    """Top-k hits (docid, score), rank- and score-identical to the
+    Spark path's executor.search: same parse → validate → normalize
+    pipeline, same per-segment kernels, same (score desc, docid asc)
+    order and page slice.  Raises for shapes outside the kernel family
+    — those are analytics queries that belong on the Spark runtime
+    (executor.search)."""
+    d, s, _ = _top([index], query, size, page)
+    return pd.DataFrame({"docid": d, "score": s}, copy=False)
+
+
+def local_matched(index: LocalIndex, query) -> pd.DataFrame:
+    """The full matched set (docid, score) of one index."""
+    return _candidates([index], _normalized(index, query))[0]
+
+
+def _total_hits(shards: list[LocalIndex], query) -> int:
+    """Reference totalHits (index_search.clj:287-288; summed across
+    shards, index_search.clj:121): a bare term answers straight from
+    the GLOBAL dictionary df — zero I/O beyond the memoized lookup —
+    everything else counts its matched sets."""
+    node = _normalized(shards[0], query)
+    if isinstance(node, ast.Term):
+        from bzzz_spark.query.executor import term_key
+
+        key = term_key(shards[0], node.field_name, node.value)
+        meta = shards[0].lookup_terms([key])
+        return int(meta[key][1]) if key in meta else 0
+    return sum(len(m) for m in _candidates(shards, node))
 
 
 def local_total_hits(index: LocalIndex, query) -> int:
-    """Reference totalHits (index_search.clj:287-288): a bare term
-    answers straight from the dictionary df — zero I/O beyond the
-    memoized lookup — everything else counts its matched set."""
-    node = query if isinstance(query, ast.Query) else ast.parse_query(query)
-    if isinstance(node, ast.Term):
-        from bzzz_spark.query.executor import term_key, validate_fields
-
-        validate_fields(index, node)
-        key = term_key(index, node.field_name, node.value)
-        meta = index.lookup_terms([key])
-        return int(meta[key][1]) if key in meta else 0
-    return int(len(local_matched(index, query)))
+    """Total matches of one index (reference totalHits)."""
+    return _total_hits([index], query)
 
 
 def _label_counts(
@@ -447,28 +445,35 @@ def _label_counts(
     group); array columns count per ELEMENT with null rows skipped —
     facet_counts_multi's explode semantics, the reference's
     multi-valued facets."""
-    counts: dict = {}
     if use_analyzer:
-        for doc_toks in index.doc_tokens(facet_field, docids):
-            for t in doc_toks:
-                counts[t] = counts.get(t, 0) + 1
-        return counts
+        toks = index.doc_tokens(facet_field, docids)
+        return Counter(t for doc_toks in toks for t in doc_toks)
     sel = index.doc_values(facet_field, docids)
     if index.column_is_array(facet_field):
-        for arr in sel:
-            if arr is None or (isinstance(arr, float) and pd.isna(arr)):
-                continue  # explode drops null arrays on the Spark path
-            for v in arr:
-                counts[v] = counts.get(v, 0) + 1
-        return counts
-    for v, c in pd.Series(sel).value_counts(dropna=False).items():
-        counts[None if pd.isna(v) else v] = int(c)
-    return counts
+        # explode drops null arrays on the Spark path
+        return Counter(
+            v for arr in sel
+            if not (arr is None or (isinstance(arr, float) and pd.isna(arr)))
+            for v in arr
+        )
+    counts = pd.Series(sel).value_counts(dropna=False)
+    return {None if pd.isna(v) else v: int(c) for v, c in counts.items()}
 
 
-def _facet_cut(counts: dict, size: int) -> pd.DataFrame:
-    """(count desc, label asc) cut — the executor.facet_counts order
-    (nulls first on the ascending label, Spark's asc default)."""
+def _facet_counts(
+    shards: list[LocalIndex], query, facet_field: str, size: int,
+    use_analyzer: bool,
+) -> pd.DataFrame:
+    """EXACT facet counts: each shard's label counts over its full
+    matched set, summed UNCUT, then one (count desc, label asc) cut —
+    the executor.facet_counts order (nulls first on the ascending
+    label, Spark's asc default).  The reference documents its post-cut
+    shard merge as approximate (index_search.clj:186-204)."""
+    counts: Counter = Counter()
+    node = _normalized(shards[0], query)
+    for s, m in zip(shards, _candidates(shards, node)):
+        docids = m["docid"].to_numpy().astype(np.int64)
+        counts.update(_label_counts(s, docids, facet_field, use_analyzer))
     rows = sorted(
         counts.items(),
         key=lambda kv: (-kv[1], kv[0] is not None, kv[0]),
@@ -487,11 +492,7 @@ def local_facet_counts(
     match executor.facet_counts (null group kept); array columns and
     use_analyzer match facet_counts_multi's per-element / analyzed-
     token semantics — pinned in tests."""
-    matched = local_matched(index, query)
-    docids = matched["docid"].to_numpy().astype(np.int64)
-    return _facet_cut(
-        _label_counts(index, docids, facet_field, use_analyzer), size
-    )
+    return _facet_counts([index], query, facet_field, size, use_analyzer)
 
 
 def _sort_plan(sort: list) -> list[tuple[str, str]]:
@@ -512,40 +513,34 @@ def _sort_plan(sort: list) -> list[tuple[str, str]]:
     return out
 
 
-def _sorted_candidates(
-    index: LocalIndex, query, sort: list
+def _sorted_search(
+    shards: list[LocalIndex], query, sort: list, size: int, page: int,
 ) -> tuple[pd.DataFrame, list[tuple[str, str]]]:
-    """Matched set + one column per sort key (reference T3/T4 field
-    sorts, index_search.clj:96-103,209-244): _score is the BM25 match
-    score, _doc the docid, field keys come from the cached doc-values
-    arrays.  Shared by the one-shard sort and the scatter/gather merge
-    (the merge re-sorts on exactly these columns)."""
+    """One page by field sort keys (reference T3/T4,
+    index_search.clj:96-103,209-244): the matched sets with one column
+    per sort key (_score is the BM25 match score, _doc the docid, field
+    keys come from each shard's cached doc-values arrays) and the
+    shard position (__shard), ordered by the executor's comparator —
+    per key asc/desc with NULLS LAST, then docid ascending."""
     specs = _sort_plan(sort)
-    matched = local_matched(index, query).rename(columns={"score": "_score"})
-    docids = matched["docid"].to_numpy().astype(np.int64)
-    for name, _ in specs:
-        if name == "_score":
-            continue
-        if name == "_doc":
-            matched["_doc"] = matched["docid"]
-            continue
-        matched[name] = index.doc_values(name, docids)
-    return matched, specs
-
-
-def _apply_sort(
-    pdf: pd.DataFrame, specs: list[tuple[str, str]],
-    tiebreak: list[str],
-) -> pd.DataFrame:
-    """The executor's comparator: per key asc/desc with NULLS LAST
-    (asc_nulls_last/desc_nulls_last), then an ascending tiebreak —
-    stable mergesort so concatenated shard frames merge
-    deterministically."""
-    by = [n for n, _ in specs] + tiebreak
-    asc = [o == "asc" for _, o in specs] + [True] * len(tiebreak)
-    return pdf.sort_values(
-        by=by, ascending=asc, na_position="last", kind="mergesort"
-    )
+    parts = []
+    node = _normalized(shards[0], query)
+    for si, (s, m) in enumerate(zip(shards, _candidates(shards, node))):
+        m = m.rename(columns={"score": "_score"})
+        docids = m["docid"].to_numpy().astype(np.int64)
+        for name, _ in specs:
+            if name == "_doc":
+                m["_doc"] = m["docid"]
+            elif name != "_score":
+                m[name] = s.doc_values(name, docids)
+        m["__shard"] = si
+        parts.append(m)
+    top = pd.concat(parts, ignore_index=True).sort_values(
+        by=[n for n, _ in specs] + ["docid"],
+        ascending=[o == "asc" for _, o in specs] + [True],
+        na_position="last", kind="mergesort",
+    ).iloc[page * size: page * size + size]
+    return top.reset_index(drop=True), specs
 
 
 def local_sorted_search(
@@ -556,15 +551,8 @@ def local_sorted_search(
     executor.sorted_search for field/_score/_doc sorts (reference T3/T4
     + T6 `_sort` values, index_search.clj:209-250).  Expression sorts
     raise → Spark runtime."""
-    pdf, specs = _sorted_candidates(index, query, sort)
-    top = (
-        _apply_sort(pdf, specs, ["docid"])
-        .iloc[page * size: page * size + size]
-        .reset_index(drop=True)
-    )
-    out = pd.DataFrame(
-        {"docid": top["docid"], "score": top["_score"]}
-    )
+    top, specs = _sorted_search([index], query, sort, size, page)
+    out = pd.DataFrame({"docid": top["docid"], "score": top["_score"]})
     if with_sort_values:
         out["_sort"] = [
             [

@@ -1,4 +1,4 @@
-"""Multi-shard serving: scatter/gather + exact k-way merge.
+"""Multi-shard serving: one plan, per-shard fetch + kernel, one merge.
 
 The reference's deployment story is N shards, each a node-local Lucene
 searcher, with the coordinator merging per-shard results
@@ -23,11 +23,13 @@ fat index would, docids are GLOBAL (assigned before routing), and the
 gather's (score desc, docid asc) merge reproduces the single-index
 result bit-for-bit, ties included.
 
-Scale shape: the build is the standard distributed build plus a
-per-shard write of its slice of the encoded blocks.  In this process
-the scatter loop is serial per shard (kernels convoy on the GIL under
-threads — measured in serve.local); in deployment each shard is its
-own process/host, so query wall-clock is max(shard) + merge, not sum.
+Serving: the shards share one dictionary and one set of stats, so
+ShardedIndex parses, validates, normalizes and plans each query ONCE,
+on shard 0, then every shard fetches its own blocks and runs the one
+plan's kernel; the merges (top-k, facet sums, sort comparator) are the
+single index's own code in serve.local, run over N shards instead of
+one.  In this process the per-shard fetch + kernel loop is serial
+(kernels convoy on the GIL under threads — measured in serve.local).
 """
 
 from __future__ import annotations
@@ -40,16 +42,12 @@ from dataclasses import replace
 import numpy as np
 import pandas as pd
 
-from bzzz_spark.query import ast
 from bzzz_spark.serve.local import (
     LocalIndex,
-    _apply_sort,
-    _facet_cut,
-    _label_counts,
-    _sorted_candidates,
-    local_matched,
-    local_search,
-    local_total_hits,
+    _facet_counts,
+    _sorted_search,
+    _top,
+    _total_hits,
 )
 
 SHARD_MANIFEST = "sharded.json"
@@ -166,7 +164,9 @@ def build_sharded(
 class ShardedIndex:
     """Coordinator over N LocalIndex shards — the serving analog of the
     reference's `search-many` fan-out + `reduce-collection` merge
-    (index_search.clj:115-155,256-276)."""
+    (index_search.clj:115-155,256-276).  Each query method runs the
+    one-shard-or-N pipeline of serve.local over `shards`: one parse and
+    plan, a fetch + kernel call per shard, one merge."""
 
     def __init__(self, out_dir: str, **local_kwargs):
         with open(os.path.join(out_dir, SHARD_MANIFEST)) as f:
@@ -178,40 +178,49 @@ class ShardedIndex:
             LocalIndex(os.path.join(out_dir, f"shard={i}"), **local_kwargs)
             for i in range(self.n_shards)
         ]
+        self._check_shards()
+
+    def _check_shards(self) -> None:
+        """One plan serves every shard only if all come from ONE build:
+        the n_docs sharded.json records, and shard=0's stats, config,
+        dictionary size and block columns.  A shard copied from another
+        build, or a root caught mid-rebuild, raises here instead of
+        answering through foreign term ids."""
+        with open(os.path.join(self.out_dir, SHARD_MANIFEST)) as f:
+            n_docs = int(json.load(f)["n_docs"])
+        ident = [
+            (s.scalar_stats(), s.config, s._dict_ds.count_rows(),
+             s._block_cols)
+            for s in self.shards
+        ]
+        for i, got in enumerate(ident):
+            if got != ident[0] or got[0][0] != n_docs:
+                raise ValueError(
+                    f"shard={i} of {self.out_dir} is not from the build "
+                    f"{SHARD_MANIFEST} records: its n_docs, stats, config, "
+                    "dictionary or block columns differ"
+                )
 
     def refresh(self) -> bool:
         """Reopen every shard whose on-disk generation changed."""
-        return any([s.refresh() for s in self.shards])
+        if not any([s.refresh() for s in self.shards]):
+            return False
+        self._check_shards()
+        return True
 
     def total_hits(self, query) -> int:
-        """Sum of per-shard totals (index_search.clj:121) — except a
-        bare term, whose GLOBAL df sits in the shared dictionary every
-        shard carries: one zero-I/O lookup instead of N counts."""
-        node = query if isinstance(query, ast.Query) else ast.parse_query(query)
-        if isinstance(node, ast.Term):
-            return local_total_hits(self.shards[0], node)
-        return sum(local_total_hits(s, node) for s in self.shards)
+        """Total matches over all shards (serve.local._total_hits)."""
+        return _total_hits(self.shards, query)
 
     def search(
         self, query, size: int = 20, page: int = 0,
         fields: list[str] | None = None,
     ) -> pd.DataFrame:
-        """Global top-k: per-shard kernel top-k (k = page·size + size —
-        the global top-k is a subset of the union of per-shard top-k),
-        concat, ONE stable re-sort on (score desc, docid asc), page
-        slice.  Docids are global, so this is the single-index
-        comparator verbatim — hit-for-hit parity, ties included."""
-        k = page * size + size
-        parts = []
-        for si, s in enumerate(self.shards):
-            pdf = local_search(s, query, size=k, page=0).copy()
-            pdf["__shard"] = si  # internal: a stored column may be 'shard'
-            parts.append(pdf)
-        allh = pd.concat(parts, ignore_index=True)
-        order = np.lexsort(
-            (allh["docid"].to_numpy(), -allh["score"].to_numpy())
-        )
-        top = allh.iloc[order[:k]].iloc[page * size:].reset_index(drop=True)
+        """Global top-k page (serve.local._top), hit-for-hit the single
+        index's, with each hit's shard and optional stored fields."""
+        d, s, at = _top(self.shards, query, size, page)
+        # internal name: a stored column may be called 'shard'
+        top = pd.DataFrame({"docid": d, "score": s, "__shard": at})
         if fields:
             top = self._attach_fields(top, fields)
         return self._expose_shard(top)
@@ -220,47 +229,22 @@ class ShardedIndex:
         self, query, sort: list, size: int = 20, page: int = 0,
     ) -> pd.DataFrame:
         """Field-sorted top-k across shards with the full comparator
-        (asc/desc per key, nulls last, docid tiebreak) applied at the
-        merge — reference index_search.clj:209-244.  Expression sorts
-        raise in _sorted_candidates → Spark runtime."""
-        k = page * size + size
-        parts, specs = [], None
-        for si, s in enumerate(self.shards):
-            pdf, specs = _sorted_candidates(s, query, sort)
-            pdf = _apply_sort(pdf, specs, ["docid"]).iloc[:k].copy()
-            pdf["__shard"] = si
-            parts.append(pdf)
-        allh = pd.concat(parts, ignore_index=True)
-        top = (
-            _apply_sort(allh, specs, ["docid"])
-            .iloc[page * size: k]
-            .reset_index(drop=True)
-        )
+        (serve.local._sorted_search); expression sorts raise → Spark
+        runtime."""
+        top, specs = _sorted_search(self.shards, query, sort, size, page)
         out = top.rename(columns={"_score": "score"})
         keep = ["__shard", "docid", "score"]
         keep += [n for n, _ in specs if n not in keep and n != "_score"]
-        return self._expose_shard(out[[c for c in keep if c in out.columns]])
+        return self._expose_shard(out[keep])
 
     def facet_counts(
         self, query, facet_field: str, size: int = 20,
         use_analyzer: bool = False,
     ) -> pd.DataFrame:
-        """EXACT cross-shard facet merge: per-shard label counts over
-        the full matched set, summed UNCUT, then one (count desc,
-        label asc) cut — the correctness the reference documents as
-        unreachable for its post-cut merge (index_search.clj:186-204
-        'broken by design'); parity with the Spark path's global
-        groupBy is pinned in tests."""
-        totals: dict = {}
-        for s in self.shards:
-            docids = (
-                local_matched(s, query)["docid"].to_numpy().astype(np.int64)
-            )
-            for lbl, c in _label_counts(
-                s, docids, facet_field, use_analyzer
-            ).items():
-                totals[lbl] = totals.get(lbl, 0) + c
-        return _facet_cut(totals, size)
+        """Exact facet counts, summed over shards before one cut."""
+        return _facet_counts(
+            self.shards, query, facet_field, size, use_analyzer
+        )
 
     def _attach_fields(
         self, pdf: pd.DataFrame, fields: list[str]

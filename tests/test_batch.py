@@ -147,14 +147,12 @@ def test_batch_job_count_is_constant(small_index):
 
     small = {k: BATCH[k] for k in ["term_head", "and2", "must_not"]}
     # Range/MatchAll without doc-values take the per-query executor on
-    # this index (no docvalue_cols); so does only_must_not, which
-    # matches nothing.  Every other query has a kernel plan
+    # this index (no docvalue_cols).  Every other query has a kernel plan
     wide = {k: v for k, v in BATCH.items() if k not in
             ("term_range", "range_only", "match_all", "range_not")}
     for qid, node in wide.items():
-        if qid != "only_must_not":
-            assert plan_candidates(small_index, normalize(node), 10) \
-                is not None, qid
+        assert plan_candidates(small_index, normalize(node), 10) \
+            is not None, qid
     n_small = jobs_for(small, "batch-probe-small")
     n_full = jobs_for(wide, "batch-probe-full")
     assert n_full <= n_small + 2, (

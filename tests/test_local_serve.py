@@ -229,7 +229,7 @@ def test_block_cache_transparent(served, tmp_path_factory):
     nor must evictions under a tiny byte budget, which the cache must
     keep to."""
     sidx, lix = served
-    cold = LocalIndex(lix.out_dir, cache_blocks=False)
+    cold = LocalIndex(lix.out_dir, max_cached_bytes=0)
     budget = 4096
     tiny = LocalIndex(lix.out_dir, max_cached_bytes=budget)
     for other in (cold, tiny):

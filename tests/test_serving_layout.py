@@ -132,3 +132,92 @@ def test_sharded_shard_column_collision(spark, tmp_path):
     assert set(got["shard"]) == {"s0", "s1"}
     assert "__shard" in got.columns
     assert set(got["__shard"]) <= {0, 1}
+
+
+@pytest.fixture(scope="module")
+def three_shards(spark, small_transcripts, tmp_path_factory):
+    from bzzz_spark.build.indexer import IndexConfig
+    from bzzz_spark.serve.scatter import ShardedIndex, build_sharded
+
+    out = str(tmp_path_factory.mktemp("three_shards"))
+    build_sharded(
+        small_transcripts, out, 3,
+        IndexConfig(block_size=16, segment_size=64, num_partitions=4),
+    )
+    return ShardedIndex(out)
+
+
+def test_sharded_plans_each_query_once(three_shards, monkeypatch):
+    """The shards of one build share its dictionary and stats, so a
+    query is planned once, on shard 0, whatever the shard count: no
+    other shard is asked for a dictionary lookup or an expansion."""
+    from bzzz_spark.query import wand
+
+    si = three_shards
+    planned = []
+    real_plan = wand.plan_candidates
+
+    def plan_spy(index, node, k):
+        planned.append(index)
+        return real_plan(index, node, k)
+
+    monkeypatch.setattr(wand, "plan_candidates", plan_spy)
+    asked = [0] * len(si.shards)
+    for i, s in enumerate(si.shards):
+        for name in ("lookup_terms", "expand_candidates"):
+            def spy(*a, _i=i, _real=getattr(s, name)):
+                asked[_i] += 1
+                return _real(*a)
+
+            monkeypatch.setattr(s, name, spy)
+    q = ast.Bool(must=[ast.Term("the"), ast.Term("error")])
+    calls = {
+        "search": lambda: si.search(q, size=5),
+        "search_wildcard": lambda: si.search(
+            ast.Bool(must=[ast.Term("the"), ast.Wildcard("err*")]), size=5
+        ),
+        "total_hits": lambda: si.total_hits(q),
+        "facet_counts": lambda: si.facet_counts(q, "role", size=5),
+        "sorted_search": lambda: si.sorted_search(q, ["ts"], size=5),
+    }
+    for name, call in calls.items():
+        planned.clear()
+        call()
+        assert planned == [si.shards[0]], name
+    assert asked[0] > 0
+    assert asked[1:] == [0] * (len(si.shards) - 1)
+
+
+def test_must_not_only_bool_is_empty(tmp_path, shuffle_index, three_shards):
+    """A Bool of must_not clauses alone matches nothing (the executor's
+    answer): the serving tier returns an empty page, not an error."""
+    out = str(tmp_path / "single")
+    write_index(shuffle_index, out)
+    node = ast.Bool(must_not=[ast.Term("the")])
+    assert len(local_search(LocalIndex(out), node, size=10)) == 0
+    assert len(three_shards.search(node, size=10)) == 0
+    assert search(shuffle_index, node, size=10).count() == 0
+
+
+def test_mixed_build_root_raises(spark, tmp_path, three_shards):
+    """A shard copied in from another build cannot share shard 0's
+    plan: opening the root names it instead of serving through foreign
+    term ids."""
+    import shutil
+
+    from bzzz_spark.build.indexer import IndexConfig
+    from bzzz_spark.serve.scatter import ShardedIndex, build_sharded
+
+    rows = [(i, f"tok{i % 3} common") for i in range(12)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = str(tmp_path / "mixed")
+    build_sharded(
+        df, out, 2,
+        IndexConfig(key_cols=("doc_id",), text_col="text", ts_col=None,
+                    block_size=8, segment_size=16),
+    )
+    ShardedIndex(out)  # one build: opens
+    shutil.rmtree(f"{out}/shard=1")
+    shutil.copytree(three_shards.shards[1].out_dir, f"{out}/shard=1")
+    with pytest.raises(ValueError, match="shard=1"):
+        ShardedIndex(out)

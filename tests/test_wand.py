@@ -269,16 +269,29 @@ def small_index_noop(spark, small_transcripts):
     )
 
 
-def test_docvalue_rejects_non_integer_columns(spark, small_transcripts):
-    import pytest as _pytest
-
+@pytest.mark.parametrize(
+    "builder", ["build_index", "build_and_write", "build_sharded"]
+)
+def test_docvalue_rejects_non_integer_columns(
+    spark, small_transcripts, tmp_path, builder
+):
+    from bzzz_spark.build.checkpoint import build_and_write
     from bzzz_spark.build.indexer import IndexConfig, build_index
+    from bzzz_spark.serve.scatter import build_sharded
 
-    with _pytest.raises(ValueError, match="integer-typed"):
-        build_index(
-            small_transcripts,
-            IndexConfig(num_partitions=2, docvalue_cols=("role",)),
-        )
+    cfg = IndexConfig(num_partitions=2, docvalue_cols=("role",))
+    out = str(tmp_path / builder)
+    build = {
+        "build_index": lambda: build_index(small_transcripts, cfg),
+        "build_and_write": lambda: build_and_write(
+            small_transcripts, out, cfg
+        ),
+        "build_sharded": lambda: build_sharded(
+            small_transcripts, out, 2, cfg
+        ),
+    }[builder]
+    with pytest.raises(ValueError, match="integer-typed"):
+        build()
 
 
 def test_or_kernel_maxscore_prunes_head_blocks(spark):
