@@ -1,18 +1,26 @@
-"""Checkpointed, resumable on-disk index build.
+"""Checkpointed, resumable on-disk index build, and the one writer of
+the index directory layout.
 
 The reference wraps every store in a 2-phase prepareCommit/commit with
 rollback (reference: src/bzzz/index_directory.clj:210-240).  The Spark
 rebuild gets atomicity from materialized stage outputs plus a manifest
-that is only advanced after a stage/chunk lands:
+that is only advanced after a stage/chunk lands, and from one commit
+step that writes the manifest last:
 
-  out_dir/
-    manifest.json        config, lineage, stage + chunk checkpoints
-    docs/                parquet, docid-sorted (min/max pruning on docid)
-    dictionary/          parquet
+  out_dir/               one index directory (N = 1 shard)
+    manifest.json        config (with the segment_size the postings
+                         carry), build id, stage + chunk checkpoints;
+                         `complete` only after the commit
+    docs/                parquet, docid range-partitioned and sorted
+    dictionary/          parquet, term-sorted, 512 KiB row groups
     stats/               parquet (n_docs, avgdl)
-    postings/chunk=i/    parquet per chunk (a contiguous segment range)
-    metrics/chunk=i/     per-segment build metrics (n_blocks, n_postings,
-                         bytes) — the per-partition lineage/metrics log
+    postings/chunk=i/    parquet per chunk (a contiguous docid range)
+    _build/              scratch until the commit deletes it: docs with
+                         their tokens and shard tag, the dictionary
+
+  With N > 1 shards, out_dir/manifest.json holds the build's
+  checkpoints, each out_dir/shard=i/ is an index directory as above
+  and the commit writes out_dir/sharded.json last.
 
 Resume: a crashed/killed build re-runs `build_and_write` with the same
 args; completed stages and chunks are skipped (their manifest entries
@@ -22,8 +30,8 @@ build is bit-identical to an uninterrupted one — asserted in
 tests/test_checkpoint.py.
 
 Per-chunk cost is proportional to chunk size: a chunk is a contiguous
-docid range, so the tokenize+tf recompute for it reads only that slice
-of docs/ (parquet min/max pruning on the docid sort order).  The
+docid range, so the tf recompute for it reads only that slice of the
+scratch docs (parquet min/max pruning on the docid order).  The
 dictionary (global df) is computed once in its own stage.
 """
 
@@ -32,7 +40,10 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 import time
+import uuid
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,8 +70,8 @@ def _load_manifest(out_dir: str) -> dict:
     return {"stages": {}, "chunks": {}, "complete": False}
 
 
-def _save_manifest(out_dir: str, m: dict) -> None:
-    p = os.path.join(out_dir, MANIFEST)
+def _save_manifest(out_dir: str, m: dict, name: str = MANIFEST) -> None:
+    p = os.path.join(out_dir, name)
     tmp = p + ".tmp"
     with open(tmp, "w") as f:
         json.dump(m, f, indent=2, sort_keys=True)
@@ -85,12 +96,34 @@ def _manifest_config(m: dict) -> dict:
     return cfg_d
 
 
+SERVING_SEGMENT_SIZE = 1 << 19  # 524 288 docs — measured sweet spot
+
+
+def _serving_config(
+    cfg: IndexConfig, serving_segment_size: int | None
+) -> IndexConfig:
+    """The one segment policy of a written index: FAT serving segments.
+    The Spark build wants many small segments (one narrow task each),
+    but the in-process serving loop pays a fixed numpy-kernel cost per
+    segment — 512k-doc segments measured half the hot p50 of the 32k
+    build default (0.206 → 0.097 s at 10× base).  The relabel is pure
+    metadata (segment := docid // new_size groups whole build segments;
+    blocks never span segments), so it applies only to a multiple of
+    the build size.  None keeps the build segmentation."""
+    size = serving_segment_size
+    if size and size > cfg.segment_size and size % cfg.segment_size == 0:
+        return replace(cfg, segment_size=int(size))
+    return cfg
+
+
 def _write_postings(
     postings: DataFrame, path: str, n_docs: int, avgdl: float,
-    cfg: IndexConfig,
-) -> None:
+    cfg: IndexConfig, serving_segment_size: int | None = SERVING_SEGMENT_SIZE,
+) -> IndexConfig:
     """Write encoded blocks in the serving-oriented file layout,
-    measured on cold reads:
+    measured on cold reads, relabeled to serving segments
+    (_serving_config).  Returns the config whose segment_size the
+    written blocks carry.
 
     - range-partition by term_id so each FILE holds a contiguous term
       slice — a term query's isin filter then skips whole files via
@@ -111,16 +144,54 @@ def _write_postings(
     The file count assumes ~3 B per token occurrence (doc_gaps + tfs +
     dls varints) over ``n_docs`` docs; positions add one varint per
     occurrence, roughly doubling encoded bytes."""
+    served = _serving_config(cfg, serving_segment_size)
+    factor = served.segment_size // cfg.segment_size
     per_tok = 6 if cfg.store_positions else 3
     bytes_est = n_docs * max(avgdl, 1.0) * per_tok
     n_files = max(1, min(1024, math.ceil(bytes_est / (32 << 20))))
     (
         postings.repartitionByRange(n_files, "term_id")
         .sortWithinPartitions("term_id", "segment", "block_id")
+        .withColumn("segment", F.expr(f"segment div {factor}").cast("int"))
         .write.mode("overwrite")
         .option("parquet.block.size", 128 * 1024)
         .parquet(path)
     )
+    return served
+
+
+def _write_index_dir(
+    out_dir: str, docs: DataFrame, dictionary: DataFrame, n_docs: int,
+    avgdl: float, cfg: IndexConfig, manifest: dict,
+) -> dict:
+    """The one writer of an index directory's docs/, dictionary/,
+    stats/ and manifest, for every builder (the driver's commit and
+    write_index); the postings have already landed through
+    _write_postings, and ``cfg`` carries their segment_size.  docs/ is
+    docid range-partitioned and sorted (an isin fetch prunes row
+    groups), the dictionary term-sorted with small row groups (a term
+    lookup reads one group).  The manifest goes last: until it says
+    complete, the directory does not open."""
+    spark = docs.sparkSession
+    (
+        docs.repartitionByRange(max(1, math.ceil(n_docs / 2_000_000)), "docid")
+        .sortWithinPartitions("docid")
+        .write.mode("overwrite")
+        .parquet(os.path.join(out_dir, "docs"))
+    )
+    (
+        dictionary.repartitionByRange(1, "term")
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .option("parquet.block.size", 512 * 1024)
+        .parquet(os.path.join(out_dir, "dictionary"))
+    )
+    spark.createDataFrame(
+        [(n_docs, avgdl)], "n_docs long, avgdl double"
+    ).write.mode("overwrite").parquet(os.path.join(out_dir, "stats"))
+    m = {**manifest, "config": cfg.to_dict(), "complete": True}
+    _save_manifest(out_dir, m)
+    return m
 
 
 def build_and_write(
@@ -129,48 +200,77 @@ def build_and_write(
     cfg: IndexConfig | None = None,
     n_chunks: int = 4,
     max_chunks: int | None = None,
+    n_shards: int = 1,
+    route_col: str | None = None,
 ) -> dict:
-    """Run (or resume) the checkpointed build.  Returns the manifest.
+    """Run (or resume) the checkpointed build of one index directory,
+    or of N shards that together answer EXACTLY like one index.
+    Returns the manifest.
+
+    Every N runs the same stages.  docs: GLOBAL docids (dense over
+    key_cols), tokens, and each doc's shard — hash(route_col) mod N,
+    default the first key column, the reference's doc-id routing — into
+    the scratch dir.  dictionary: global df, once over all docs.  Each
+    docid-range chunk: tf → posting rows → ONE encode_postings grouped
+    by segment * N + shard (the identity at N = 1), so no block spans
+    two shards and every block is scored against the global stats →
+    each shard's slice through _write_postings.  The commit writes each
+    shard's docs, dictionary, stats and manifest (with the build id),
+    then sharded.json when N > 1, and deletes the scratch dir.
 
     ``max_chunks`` limits how many NEW posting chunks this invocation
-    writes (test hook for simulating interruption).
+    writes (test hook for simulating interruption).  A resume must pass
+    the original cfg, n_chunks, n_shards and route_col.
     """
+    from bzzz_spark.serve.scatter import SHARD_MANIFEST, shard_id
+
     cfg = cfg or IndexConfig()
+    n = int(n_shards)
+    if n <= 0:
+        raise ValueError(f"n_shards must be positive, got {n_shards}")
+    plan = {"n_chunks": n_chunks, "n_shards": n,
+            "route_col": route_col or cfg.key_cols[0]}
     spark = table.sparkSession
     os.makedirs(out_dir, exist_ok=True)
+    scratch = os.path.join(out_dir, "_build")
     m = _load_manifest(out_dir)
     if m.get("complete"):
+        shutil.rmtree(scratch, ignore_errors=True)
         return m
-    cfg_d = cfg.to_dict()
-    if "config" in m and _manifest_config(m) != cfg_d:
+    if "config" in m and _manifest_config(m) != cfg.to_dict():
         raise ValueError(
             "resume config mismatch: manifest has a different IndexConfig — "
             "delete the output dir or pass the original config"
         )
-    m["config"] = cfg_d
+    if m.setdefault("plan", plan) != plan:
+        raise ValueError(
+            f"resume chunk plan mismatch: manifest has {m['plan']}, got "
+            f"{plan} — delete the output dir or pass the original plan"
+        )
+    m["config"] = cfg.to_dict()
+    m.setdefault("build_id", uuid.uuid4().hex)
+    dirs = [out_dir] if n == 1 else [
+        os.path.join(out_dir, f"shard={i}") for i in range(n)
+    ]
+    docs_path = os.path.join(scratch, "docs")
+    dict_path = os.path.join(scratch, "dictionary")
 
-    docs_path = os.path.join(out_dir, "docs")
-    dict_path = os.path.join(out_dir, "dictionary")
-    stats_path = os.path.join(out_dir, "stats")
-
-    # ---- stage: docs (docid assignment + tokenize + dl) ----
+    # ---- stage: docs (docid assignment + tokenize + dl + shard) ----
     if "docs" not in m["stages"]:
         t0 = time.perf_counter()
-        docs = build_docs(table, cfg)
-        docs.write.mode("overwrite").parquet(docs_path)
+        for d in dirs:  # postings of an earlier build in this directory
+            shutil.rmtree(os.path.join(d, "postings"), ignore_errors=True)
+        build_docs(table, cfg).withColumn(
+            "__shard", shard_id(plan["route_col"], n).cast("int")
+        ).write.mode("overwrite").parquet(docs_path)
         row = (
             spark.read.parquet(docs_path)
             .agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
             .collect()[0]
         )
-        n_docs = int(row["n"])
-        avgdl = float(row["avgdl"]) if row["avgdl"] is not None else 0.0
-        spark.createDataFrame(
-            [(n_docs, avgdl)], "n_docs long, avgdl double"
-        ).write.mode("overwrite").parquet(stats_path)
         m["stages"]["docs"] = {
-            "n_docs": n_docs,
-            "avgdl": avgdl,
+            "n_docs": int(row["n"]),
+            "avgdl": float(row["avgdl"]) if row["avgdl"] is not None else 0.0,
             "took_sec": round(time.perf_counter() - t0, 3),
             "input_rows": table.count(),
         }
@@ -195,6 +295,8 @@ def build_and_write(
     n_segments = max(1, math.ceil(n_docs / cfg.segment_size))
     n_chunks = min(n_chunks, n_segments)
     per_chunk = math.ceil(n_segments / n_chunks)
+    # the shard tag rides through tf like a doc value
+    tagged = replace(cfg, docvalue_cols=(*cfg.docvalue_cols, "__shard"))
     written = 0
     for ci in range(n_chunks):
         key = str(ci)
@@ -210,30 +312,27 @@ def build_and_write(
             (F.col("docid") >= doc_lo) & (F.col("docid") < doc_hi)
         )
         rows = build_posting_rows(
-            _full_tf(docs, cfg), spark.read.parquet(dict_path), cfg
+            _full_tf(docs, tagged), spark.read.parquet(dict_path), cfg
         )
-        postings = encode_postings(rows, n_docs, avgdl, cfg)
-        chunk_path = os.path.join(out_dir, "postings", f"chunk={ci}")
-        _write_postings(postings, chunk_path, doc_hi - doc_lo, avgdl, cfg)
-        metrics = (
-            spark.read.parquet(chunk_path)
-            .groupBy("segment")
-            .agg(
-                F.count(F.lit(1)).alias("n_blocks"),
-                F.sum("count").alias("n_postings"),
-                F.sum(
-                    F.octet_length("doc_gaps") + F.octet_length("tfs")
-                    + F.octet_length("dls")
-                ).alias("payload_bytes"),
-                F.countDistinct("term_id").alias("n_terms"),
-            )
-            .withColumn("chunk", F.lit(ci))
+        folded = rows.withColumn(
+            "segment", (F.col("segment") * n + F.col("__shard")).cast("int")
+        ).drop("__shard")
+        blocks = (
+            encode_postings(folded, n_docs, avgdl, cfg)
+            .withColumn("__shard", F.pmod("segment", F.lit(n)))
+            .withColumn("segment", F.expr(f"segment div {n}").cast("int"))
+            .persist()
         )
-        metrics_path = os.path.join(out_dir, "metrics", f"chunk={ci}")
-        metrics.write.mode("overwrite").parquet(metrics_path)
-        agg = metrics.agg(
-            F.sum("n_blocks").alias("b"), F.sum("n_postings").alias("p")
+        agg = blocks.agg(
+            F.count(F.lit(1)).alias("b"), F.sum("count").alias("p")
         ).collect()[0]
+        for i, d in enumerate(dirs):
+            _write_postings(
+                blocks.filter(F.col("__shard") == i).drop("__shard"),
+                os.path.join(d, "postings", f"chunk={ci}"),
+                math.ceil((doc_hi - doc_lo) / n), avgdl, cfg,
+            )
+        blocks.unpersist()
         m["chunks"][key] = {
             "segments": [seg_lo, seg_hi],
             "docids": [doc_lo, doc_hi],
@@ -243,15 +342,28 @@ def build_and_write(
         }
         _save_manifest(out_dir, m)
         written += 1
+    if len(m["chunks"]) < n_chunks:
+        return m
 
-    if len(m["chunks"]) == n_chunks:
-        m["complete"] = True
-        m["n_segments"] = n_segments
+    # ---- commit: every shard's directory, sharded.json last ----
+    served = _serving_config(cfg, SERVING_SEGMENT_SIZE)
+    docs = spark.read.parquet(docs_path).drop("tokens")
+    dictionary = spark.read.parquet(dict_path)
+    for i, d in enumerate(dirs):
+        _write_index_dir(
+            d, docs.filter(F.col("__shard") == i).drop("__shard"),
+            dictionary, n_docs, avgdl, served,
+            m if n == 1 else {**m, "shard": i},
+        )
+    m.update(config=served.to_dict(), complete=True)
+    if n > 1:
+        _save_manifest(out_dir, {
+            "n_shards": n, "route_col": plan["route_col"], "n_docs": n_docs,
+            "build_id": m["build_id"],
+        }, SHARD_MANIFEST)
         _save_manifest(out_dir, m)
+    shutil.rmtree(scratch)
     return m
-
-
-SERVING_SEGMENT_SIZE = 1 << 19  # 524 288 docs — measured sweet spot
 
 
 def write_index(
@@ -259,76 +371,27 @@ def write_index(
     serving_segment_size: int | None = SERVING_SEGMENT_SIZE,
 ) -> dict:
     """Persist an in-memory-built BzzzIndex to the on-disk serving
-    layout (the same directory shape build_and_write produces, readable
-    by read_index and serve.local.LocalIndex).
+    layout — the same directory build_and_write's commit writes,
+    through the same writer (_write_postings, _write_index_dir),
+    readable by read_index and serve.local.LocalIndex.
 
     This is the fast-build → serve handoff: build_index is the quick
-    path (no checkpointing), and build_sharded calls this once per
-    shard.  It writes the frames with the serving-oriented file
-    discipline measured on cold reads — postings range-partitioned +
-    sorted by term_id with small row groups (tight min/max stats → a
-    term query reads only its own blocks' bytes), docs sorted by docid,
-    the dictionary sorted by term for pruned lookups.  The reference's
-    analog is Lucene's commit + forceMerge producing the segment files
-    its searchers then mmap (src/bzzz/index_store.clj).
-
-    Serving writes re-segment to FAT segments by default: the Spark
-    path wants many small segments (one narrow task each), but the
-    in-process serving loop pays a fixed numpy-kernel cost per segment
-    — 512k-doc segments measured half the hot p50 of the 32k build
-    default (0.206 → 0.097 s at 10× base).  The relabel is pure
-    metadata (segment := docid // new_size groups whole
-    old segments; blocks never span segments).  Pass
+    path (no checkpointing).  The reference's analog is Lucene's
+    commit + forceMerge producing the segment files its searchers then
+    mmap (src/bzzz/index_store.clj).  Postings are relabeled to
+    serving_segment_size segments (see _serving_config); pass
     serving_segment_size=None to keep the build segmentation.
     """
     os.makedirs(out_dir, exist_ok=True)
     n_docs, avgdl = index.scalar_stats()
-    cfg = index.config
-    postings, docs = index.postings, index.docs
-    if (
-        serving_segment_size
-        and serving_segment_size > cfg.segment_size
-        and serving_segment_size % cfg.segment_size == 0
-    ):
-        factor = serving_segment_size // cfg.segment_size
-        postings = postings.withColumn(
-            "segment", F.expr(f"segment div {int(factor)}").cast("int")
-        )
-        if "segment" in docs.columns:
-            docs = docs.withColumn(
-                "segment", F.expr(f"segment div {int(factor)}").cast("int")
-            )
-        from dataclasses import replace
-
-        cfg = replace(cfg, segment_size=int(serving_segment_size))
-    _write_postings(
-        postings, os.path.join(out_dir, "postings", "chunk=0"),
-        n_docs, avgdl, cfg,
+    served = _write_postings(
+        index.postings, os.path.join(out_dir, "postings", "chunk=0"),
+        n_docs, avgdl, index.config, serving_segment_size,
     )
-    (
-        docs.repartitionByRange(
-            max(1, math.ceil(n_docs / 2_000_000)), "docid"
-        )
-        .sortWithinPartitions("docid")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "docs"))
+    return _write_index_dir(
+        out_dir, index.docs, index.dictionary, n_docs, avgdl, served,
+        {"stages": {}, "chunks": {"0": {}}, "written_by": "write_index"},
     )
-    (
-        index.dictionary.repartitionByRange(1, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .option("parquet.block.size", 512 * 1024)
-        .parquet(os.path.join(out_dir, "dictionary"))
-    )
-    index.stats.write.mode("overwrite").parquet(
-        os.path.join(out_dir, "stats")
-    )
-    m = {
-        "stages": {}, "chunks": {"0": {}}, "complete": True,
-        "config": cfg.to_dict(), "written_by": "write_index",
-    }
-    _save_manifest(out_dir, m)
-    return m
 
 
 def load_config(out_dir: str) -> IndexConfig:

@@ -656,7 +656,7 @@ def build_index(transcripts: DataFrame, cfg: IndexConfig | None = None) -> BzzzI
         [(n_docs, avgdl)], "n_docs long, avgdl double"
     )
     return BzzzIndex(
-        docs=docs.withColumn("segment", _segment_col(cfg)).drop("tokens"),
+        docs=docs.drop("tokens"),
         dictionary=dictionary,
         postings=postings,
         stats=stats,

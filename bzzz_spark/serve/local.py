@@ -117,13 +117,13 @@ class LocalIndex:
         """Reopen when the on-disk index generation changed — the
         serving analog of the reference's 5 s SearcherManager refresh
         (index_directory.clj:129-132).  Returns True if a new
-        generation was opened (all caches drop).  The writers
-        (write_index / build_and_write) replace the manifest atomically
-        via os.replace, so its mtime marks the generation.  Unlike
-        Lucene's immutable segment files, an in-place overwrite deletes
-        the old parquet files — call refresh() before serving after a
-        rewrite; a stale handle errors loudly rather than serving a
-        torn snapshot."""
+        generation was opened (all caches drop).  The one index writer
+        (build/checkpoint.py, for build_and_write and write_index)
+        replaces the manifest last and atomically via os.replace, so
+        its mtime marks the generation.  Unlike Lucene's immutable
+        segment files, an in-place overwrite deletes the old parquet
+        files — call refresh() before serving after a rewrite; a stale
+        handle errors loudly rather than serving a torn snapshot."""
         p = os.path.join(self.out_dir, "manifest.json")
         if os.path.getmtime(p) == self._manifest_mtime:
             return False
@@ -290,8 +290,10 @@ class LocalIndex:
 
     def fetch_docs(self, docids, columns=None) -> pd.DataFrame:
         """Stored fields for the given docids (R1 field projection).
-        docs/ is written docid-sorted, so the isin filter prunes row
-        groups the same way the Spark reader's pushed filter does."""
+        Every writer writes docs/ docid-sorted, so the isin filter
+        prunes row groups the same way the Spark reader's pushed filter
+        does.  Indexes written before the one writer still store a
+        tokens column; it is dropped here."""
         import pyarrow.compute as pc
 
         cols = None

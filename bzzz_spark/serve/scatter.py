@@ -36,8 +36,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
-from dataclasses import replace
 
 import numpy as np
 import pandas as pd
@@ -66,99 +64,20 @@ def build_sharded(
     table, out_dir: str, n_shards: int, cfg=None, route_col: str | None = None
 ) -> dict:
     """Build N serving shards (out_dir/shard=i/, each a complete
-    LocalIndex directory) that together answer EXACTLY like one index.
+    LocalIndex directory) that together answer EXACTLY like one index:
+    the checkpointed, resumable build_and_write with n_shards = N (see
+    build/checkpoint.py).  Docids, the dictionary and the stats are
+    global, and every shard's blocks are encoded against them, so
+    per-posting scores and block-max bounds match the single-index
+    build exactly.  Each shard carries the full dictionary and global
+    stats; its docs/ and postings/ hold only its slice.  sharded.json,
+    written last, records the build id every shard's manifest carries.
+    Returns the build manifest (out_dir/manifest.json)."""
+    from bzzz_spark.build.checkpoint import build_and_write
 
-    The steps are the single build's, run once over the whole corpus:
-    docs with GLOBAL docids (dense over key_cols — the same order a
-    single build uses), tf, the dictionary (global df per term) and
-    corpus stats, posting rows and ONE encode_postings pass.  Each doc
-    is routed by hash(route_col) — default the first key column, the
-    reference's doc-id routing — and the encode groups by
-    segment * n_shards + shard, so no block spans two shards and every
-    block equals the one a per-shard encode with the GLOBAL stats would
-    write: per-posting scores and block-max bounds match the
-    single-index build exactly.  The encoded blocks are persisted, then
-    write_index writes each shard's slice.  Every shard carries the
-    full (shared) dictionary and global stats; its docs/postings hold
-    only its slice.  sharded.json records each stage's took_sec.
-    """
-    from pyspark.sql import functions as F
-
-    from bzzz_spark.build.checkpoint import write_index
-    from bzzz_spark.build.indexer import (
-        BzzzIndex,
-        IndexConfig,
-        _avgdl,
-        _full_tf,
-        _segment_col,
-        build_dictionary,
-        build_docs,
-        build_posting_rows,
-        encode_postings,
+    return build_and_write(
+        table, out_dir, cfg, n_shards=n_shards, route_col=route_col
     )
-
-    n = int(n_shards)
-    if n <= 0:
-        raise ValueError(f"n_shards must be positive, got {n_shards}")
-    cfg = cfg or IndexConfig()
-    route = route_col or cfg.key_cols[0]
-    os.makedirs(out_dir, exist_ok=True)
-    took = {}
-    t0 = time.perf_counter()
-
-    docs = build_docs(table, cfg).persist()  # GLOBAL docids, key order
-    n_docs = docs.count()
-    took["docs"] = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    # the shard tag rides through tf like a doc value
-    tagged = docs.withColumn("__shard", shard_id(route, n))
-    tf = _full_tf(
-        tagged, replace(cfg, docvalue_cols=(*cfg.docvalue_cols, "__shard"))
-    ).persist()
-    avgdl = _avgdl(tf, n_docs)
-    dictionary = build_dictionary(tf, cfg).persist()
-    dictionary.count()
-    took["dictionary"] = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    rows = build_posting_rows(tf, dictionary, cfg)
-    folded = rows.withColumn(
-        "segment", F.col("segment") * n + F.col("__shard")
-    ).drop("__shard")
-    blocks = (
-        encode_postings(folded, n_docs, avgdl, cfg)
-        .withColumn("shard", F.pmod("segment", F.lit(n)))
-        .withColumn("segment", F.expr(f"segment div {n}").cast("int"))
-        .persist()
-    )
-    blocks.count()
-    tf.unpersist()
-    took["encode"] = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    stats = docs.sparkSession.createDataFrame(
-        [(n_docs, avgdl)], "n_docs long, avgdl double"
-    )
-    for i in range(n):
-        idx = BzzzIndex(
-            docs=docs.filter(shard_id(route, n) == i)
-            .withColumn("segment", _segment_col(cfg))
-            .drop("tokens"),
-            dictionary=dictionary,
-            postings=blocks.filter(F.col("shard") == i).drop("shard"),
-            stats=stats,
-            config=cfg,
-        )
-        write_index(idx, os.path.join(out_dir, f"shard={i}"))
-    took["write"] = time.perf_counter() - t0
-    blocks.unpersist()
-    docs.unpersist()
-    dictionary.unpersist()
-    m = {"n_shards": n, "route_col": route, "n_docs": int(n_docs),
-         "stages": {k: {"took_sec": round(v, 3)} for k, v in took.items()}}
-    tmp = os.path.join(out_dir, SHARD_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(m, f)
-    os.replace(tmp, os.path.join(out_dir, SHARD_MANIFEST))
-    return m
 
 
 class ShardedIndex:
@@ -182,23 +101,27 @@ class ShardedIndex:
 
     def _check_shards(self) -> None:
         """One plan serves every shard only if all come from ONE build:
-        the n_docs sharded.json records, and shard=0's stats, config,
-        dictionary size and block columns.  A shard copied from another
-        build, or a root caught mid-rebuild, raises here instead of
-        answering through foreign term ids."""
+        the build id and n_docs sharded.json records, and shard=0's
+        stats, config, dictionary size and block columns.  A shard
+        copied from another build (even of the same corpus with another
+        shard count), or a root caught mid-rebuild, raises here instead
+        of answering through foreign term ids.  Roots written before
+        build ids carry none, and are checked on the rest."""
         with open(os.path.join(self.out_dir, SHARD_MANIFEST)) as f:
-            n_docs = int(json.load(f)["n_docs"])
-        ident = [
-            (s.scalar_stats(), s.config, s._dict_ds.count_rows(),
-             s._block_cols)
-            for s in self.shards
-        ]
+            root = json.load(f)
+        ident = []
+        for s in self.shards:
+            with open(os.path.join(s.out_dir, "manifest.json")) as f:
+                build_id = json.load(f).get("build_id")
+            ident.append((s.scalar_stats(), s.config,
+                          s._dict_ds.count_rows(), s._block_cols, build_id))
         for i, got in enumerate(ident):
-            if got != ident[0] or got[0][0] != n_docs:
+            if (got != ident[0] or got[0][0] != int(root["n_docs"])
+                    or got[-1] != root.get("build_id")):
                 raise ValueError(
                     f"shard={i} of {self.out_dir} is not from the build "
-                    f"{SHARD_MANIFEST} records: its n_docs, stats, config, "
-                    "dictionary or block columns differ"
+                    f"{SHARD_MANIFEST} records: its build id, n_docs, "
+                    "stats, config, dictionary or block columns differ"
                 )
 
     def refresh(self) -> bool:

@@ -199,25 +199,35 @@ def test_must_not_only_bool_is_empty(tmp_path, shuffle_index, three_shards):
     assert search(shuffle_index, node, size=10).count() == 0
 
 
-def test_mixed_build_root_raises(spark, tmp_path, three_shards):
+def test_mixed_build_root_raises(spark, small_transcripts, tmp_path,
+                                 three_shards):
     """A shard copied in from another build cannot share shard 0's
     plan: opening the root names it instead of serving through foreign
-    term ids."""
+    term ids.  Two donors: a build of another corpus, and a build of
+    the same corpus and config with another shard count (its
+    dictionary, stats and config are identical; only the build id
+    tells)."""
     import shutil
 
     from bzzz_spark.build.indexer import IndexConfig
     from bzzz_spark.serve.scatter import ShardedIndex, build_sharded
 
     rows = [(i, f"tok{i % 3} common") for i in range(12)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = str(tmp_path / "mixed")
-    build_sharded(
-        df, out, 2,
+    other_corpus = (
+        spark.createDataFrame(rows, "doc_id long, text string"),
         IndexConfig(key_cols=("doc_id",), text_col="text", ts_col=None,
                     block_size=8, segment_size=16),
     )
-    ShardedIndex(out)  # one build: opens
-    shutil.rmtree(f"{out}/shard=1")
-    shutil.copytree(three_shards.shards[1].out_dir, f"{out}/shard=1")
-    with pytest.raises(ValueError, match="shard=1"):
-        ShardedIndex(out)
+    same_corpus = (
+        small_transcripts,
+        IndexConfig(block_size=16, segment_size=64, num_partitions=4),
+    )
+    for name, (df, cfg) in {"other_corpus": other_corpus,
+                            "other_shard_count": same_corpus}.items():
+        out = str(tmp_path / name)
+        build_sharded(df, out, 2, cfg)
+        ShardedIndex(out)  # one build: opens
+        shutil.rmtree(f"{out}/shard=1")
+        shutil.copytree(three_shards.shards[1].out_dir, f"{out}/shard=1")
+        with pytest.raises(ValueError, match="shard=1"):
+            ShardedIndex(out)

@@ -2,9 +2,10 @@
 
 Runs the on-disk build (bzzz_spark.build.checkpoint.build_and_write)
 over a transcripts table — parquet path or catalog table name — and
-prints the manifest (per-chunk lineage + postings/doc-count metrics,
-the north-rule build log).  Re-running after an interruption resumes
-from the manifest: completed stages/chunks are skipped.
+prints the manifest: the build's lineage log, with stage times and each
+chunk's docid range and block/posting counts.  Re-running after an
+interruption resumes from the manifest: completed stages/chunks are
+skipped (pass the same --chunks; another chunk plan is refused).
 
   spark-submit --py-files dist/bzzz_spark.zip tools/submit_build.py \
       --input s3://bucket/transcripts/ --output s3://bucket/index_v1/ \
