@@ -13,7 +13,7 @@ step that writes the manifest last:
                          `complete` only after the commit
     docs/                parquet, docid range-partitioned and sorted
     dictionary/          parquet, term-sorted, 512 KiB row groups
-    stats/               parquet (n_docs, avgdl)
+    stats/               one parquet file (n_docs, avgdl)
     postings/chunk=i/    parquet per chunk (a contiguous docid range)
     _build/              scratch until the commit deletes it: docs with
                          their tokens and shard tag, the dictionary
@@ -140,6 +140,11 @@ def _write_postings(
       hold ~500 rows → a term reads a few hundred block rows regardless
       of corpus size.  (The 128 MB default collapses a small file into
       ONE row group, silently disabling stats pruning altogether.)
+      The 128 KiB row group is the unit of a cold read:
+      serve.local.LocalIndex maps each group's footer term_id range at
+      open and reads only the groups that cover a query's terms.
+      Halving it measured +5.2 % index bytes on the 5k-turn sharded
+      benchmark index, for a smaller over-read.
 
     The file count assumes ~3 B per token occurrence (doc_gaps + tfs +
     dls varints) over ``n_docs`` docs; positions add one varint per
@@ -186,8 +191,11 @@ def _write_index_dir(
         .option("parquet.block.size", 512 * 1024)
         .parquet(os.path.join(out_dir, "dictionary"))
     )
-    spark.createDataFrame(
-        [(n_docs, avgdl)], "n_docs long, avgdl double"
+    # one row from one partition: one file and no Python worker (a
+    # coalesced createDataFrame row measured 0.97 s a write, this 0.17 s)
+    spark.range(0, 1, 1, 1).select(
+        F.lit(int(n_docs)).cast("long").alias("n_docs"),
+        F.lit(float(avgdl)).cast("double").alias("avgdl"),
     ).write.mode("overwrite").parquet(os.path.join(out_dir, "stats"))
     m = {**manifest, "config": cfg.to_dict(), "complete": True}
     _save_manifest(out_dir, m)

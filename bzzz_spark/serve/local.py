@@ -18,11 +18,14 @@ Division of labor at 100 TB:
   * Spark builds (and incrementally rebuilds) the index — the scan,
     tokenize, shuffle, encode work that needs a cluster.
   * Each serving node opens its shard's directory with LocalIndex —
-    the dictionary is memory-resident (Lucene's FST analog), postings
-    stay on disk and are fetched per-query via parquet row-group
-    pruning on term_id (postings files are written term_id-sorted, so
-    a query reads only its own terms' blocks — the same pruned-bytes
-    property the Spark reader gets from the same layout).
+    the dictionary is memory-resident as one sorted term directory
+    (Lucene's terms-index analog, loaded on the first lookup), postings
+    stay on disk.  At open, LocalIndex reads every postings file's
+    footer once into a row-group map (file, row group, term_id min,
+    max); a cold fetch reads only the row groups whose range covers a
+    wanted term (postings files are written term_id-sorted in 128 KiB
+    row groups, so a query reads only its own terms' blocks — no
+    dataset scan per query).
   * Scatter/gather across shards: serve.scatter.ShardedIndex.  Each
     serving operation below is written once, over a list of shards (a
     LocalIndex is the one-shard list): parse, validate, normalize and
@@ -40,6 +43,7 @@ sorts) raise: they are analytics and belong on the Spark runtime.
 from __future__ import annotations
 
 import os
+from bisect import bisect_left
 from collections import Counter
 
 import numpy as np
@@ -55,19 +59,47 @@ class _ColumnsShim:
         self.columns = list(columns)
 
 
+def _row_group_map(paths: list[str]) -> tuple[list, tuple]:
+    """Each postings file's footer, read once: the (path, FileMetaData)
+    pairs and, per row group, the arrays (file index, row group, term_id
+    min, term_id max) from the footer statistics.  A row group whose
+    footer has no min/max gets the whole int64 range, so it is never
+    skipped.  Holding FileMetaData rather than open files costs the same
+    per read and no file descriptor, at up to 1,024 files per shard."""
+    import pyarrow.parquet as pq
+
+    footers, rows = [], []
+    full = (np.iinfo(np.int64).min, np.iinfo(np.int64).max)
+    for fi, path in enumerate(paths):
+        md = pq.read_metadata(path)
+        footers.append((path, md))
+        col = md.schema.names.index("term_id")
+        for g in range(md.num_row_groups):
+            st = md.row_group(g).column(col).statistics
+            rng = (st.min, st.max) if st is not None and st.has_min_max else full
+            rows.append((fi, g, *rng))
+    arr = np.array(rows, dtype=np.int64).reshape(-1, 4)
+    return footers, tuple(arr.T)
+
+
 class LocalIndex:
     """A read-only, in-process view of one persisted index directory.
 
     Duck-types the planner-facing surface of BzzzIndex (config,
     scalar_stats, lookup_terms, postings.columns, the expansion cache)
     so query/wand.py's plan_candidates serves both runtimes unchanged.
-    Snapshot-immutable: caches never go stale (a rebuilt index is a new
-    directory generation, reopened as a new LocalIndex — the serving
-    analog of the reference's 5 s searcher refresh)."""
+    Terms resolve through a sorted in-memory term directory, loaded on
+    the first lookup (in a ShardedIndex only shard 0 plans, so only
+    shard 0 loads it); blocks through the row-group map of the postings
+    footers, read at open.  Snapshot-immutable: caches never go stale
+    (a rebuilt index is a new directory generation, reopened as a new
+    LocalIndex — the serving analog of the reference's 5 s searcher
+    refresh)."""
 
     wand_safe = True
 
     def __init__(self, out_dir: str, max_cached_bytes: int = 256 << 20):
+        import pyarrow as pa
         import pyarrow.dataset as pads
         import pyarrow.parquet as pq
 
@@ -87,13 +119,15 @@ class LocalIndex:
         )
         st = pq.read_table(os.path.join(out_dir, "stats")).to_pylist()[0]
         self._stats = (int(st["n_docs"]), float(st["avgdl"]))
-        self._block_cols = [
-            n for n in self._post_ds.schema.names if n != "chunk"
-        ]
+        self._block_schema = pa.schema(
+            [f for f in self._post_ds.schema if f.name != "chunk"]
+        )
+        self._block_cols = self._block_schema.names
         self.postings = _ColumnsShim(self._block_cols)
-        self._term_cache: dict = {}
         self._expansion_cache: dict = {}
-        self._terms_arr = None  # lazy full term list (expansion only)
+        # (sorted terms, their term_ids, their dfs): loaded on first use
+        self._terms: tuple | None = None
+        self._footers, self._row_groups = _row_group_map(self._post_ds.files)
         # hot-term block cache: term_id → (its block rows as one array
         # per column, their bytes).  The serving analog of a hot Lucene
         # searcher's working set — repeat queries over a hot index never
@@ -135,51 +169,48 @@ class LocalIndex:
     def scalar_stats(self) -> tuple[int, float]:
         return self._stats
 
+    def _term_directory(self) -> tuple[list, np.ndarray, np.ndarray]:
+        """The whole dictionary as (terms in sorted order, their
+        term_ids, their dfs), read on first use and then resident — the
+        terms index Lucene keeps in memory.  Arrow sorts strings by
+        their UTF-8 bytes, which is Python's code-point order, so
+        bisect on the list finds any key."""
+        if self._terms is None:
+            tbl = self._dict_ds.to_table(
+                columns=["term", "term_id", "df"]
+            ).sort_by("term")
+            self._terms = (
+                tbl["term"].to_pylist(),
+                tbl["term_id"].to_numpy(),
+                tbl["df"].to_numpy(),
+            )
+        return self._terms
+
     def lookup_terms(self, keys) -> dict:
         """Same contract as BzzzIndex.lookup_terms: {key: (term_id, df)}
-        for the present subset, negative results cached, fetch cost only
-        for never-seen keys — a pyarrow predicate scan of the dictionary
-        instead of a Spark job."""
-        import pyarrow.compute as pc
-
-        keys = list(keys)
-        missing = [k for k in keys if k not in self._term_cache]
-        if missing:
-            tbl = self._dict_ds.to_table(
-                columns=["term", "term_id", "df"],
-                filter=pc.field("term").isin(missing),
-            )
-            found = {
-                t: (int(i), int(d))
-                for t, i, d in zip(
-                    tbl["term"].to_pylist(),
-                    tbl["term_id"].to_pylist(),
-                    tbl["df"].to_pylist(),
-                )
-            }
-            for k in missing:
-                self._term_cache[k] = found.get(k)
-        return {k: v for k in keys if (v := self._term_cache[k]) is not None}
+        for the present subset — a binary search per key in the
+        in-memory term directory instead of a Spark job."""
+        terms, tids, dfs = self._term_directory()
+        out = {}
+        for k in keys:
+            i = bisect_left(terms, k)
+            if i < len(terms) and terms[i] == k:
+                out[k] = (int(tids[i]), int(dfs[i]))
+        return out
 
     def expand_candidates(self, patterns, prefixes) -> list[list[str]]:
-        """Wildcard/Fuzzy pattern expansion against the memory-resident
-        term dictionary — the LocalIndex analog of
-        executor.expand_multiterm, through the same exact matcher
-        (executor._exact_matches) and the same max_expansion cut
-        (_cap_by_df: top-N by (df desc, term asc), the TopTermsRewrite
-        cut).  One sorted list per pattern.  The (term, df) dictionary
-        loads lazily on first pattern query and stays resident (Lucene
-        keeps its term dictionary FST memory-resident the same way)."""
+        """Wildcard/Fuzzy pattern expansion against the in-memory term
+        directory — the LocalIndex analog of executor.expand_multiterm,
+        through the same exact matcher (executor._exact_matches) over
+        every (term, df) of the directory and the same max_expansion
+        cut (_cap_by_df: top-N by (df desc, term asc), the
+        TopTermsRewrite cut).  One sorted list per pattern."""
         from bzzz_spark.query.executor import _cap_by_df, _exact_matches
 
-        if self._terms_arr is None:
-            tbl = self._dict_ds.to_table(columns=["term", "df"])
-            self._terms_arr = list(
-                zip(tbl["term"].to_pylist(), tbl["df"].to_pylist())
-            )
+        terms, _, dfs = self._term_directory()
         return [
             sorted(_cap_by_df(
-                _exact_matches(p, pre, self._terms_arr),
+                _exact_matches(p, pre, zip(terms, dfs.tolist())),
                 getattr(p, "max_expansion", None),
             ))
             for p, pre in zip(patterns, prefixes)
@@ -187,22 +218,48 @@ class LocalIndex:
 
     # -- block + doc fetch -------------------------------------------------
 
-    def fetch_blocks(self, term_ids) -> pd.DataFrame:
-        """Posting blocks for the given terms, as one pandas frame.
-        The term_id filter prunes parquet row groups via min/max stats
-        (blocks are written term_id-sorted within files), so a query
-        reads only its own terms' bytes — the on-disk analog of the
-        Spark path's pushed isin filter.  Cache hits skip parquet
-        entirely (see _block_cache)."""
+    def _read_blocks(self, tids: list[int]):
+        """The block rows of the given terms, read from the row groups
+        whose footer term_id range covers one of them (a row group
+        without min/max statistics covers every term) — one
+        read_row_group per group, through the footer kept at open, so
+        no footer is re-read and no file stays open.  Rows are filtered
+        by term_id in Arrow, before any conversion: converting a whole
+        row group's binary columns costs more than reading it."""
+        import pyarrow as pa
         import pyarrow.compute as pc
+        import pyarrow.parquet as pq
 
-        tids = [int(t) for t in term_ids]
+        want = np.sort(np.asarray(tids, dtype=np.int64))
+        file_of, group, lo, hi = self._row_groups
+        covers = (np.searchsorted(want, lo, "left")
+                  < np.searchsorted(want, hi, "right"))
+        tables = []
+        for f in np.unique(file_of[covers]):
+            path, md = self._footers[f]
+            with pq.ParquetFile(path, metadata=md) as pf:
+                tables += [
+                    pf.read_row_group(int(g), columns=self._block_cols)
+                    for g in group[covers & (file_of == f)]
+                ]
+        if not tables:
+            return self._block_schema.empty_table()
+        tbl = pa.concat_tables(tables)
+        return tbl.filter(pc.is_in(
+            tbl["term_id"],
+            value_set=pa.array(want, type=tbl.schema.field("term_id").type),
+        ))
+
+    def fetch_blocks(self, term_ids) -> pd.DataFrame:
+        """Posting blocks for the given terms (each once, however often
+        it is named), as one pandas frame.  A cold term is read from
+        only the row groups its footer range covers (_read_blocks), so
+        a query reads only its own terms' bytes.  Cache hits skip
+        parquet entirely (see _block_cache)."""
+        tids = list(dict.fromkeys(int(t) for t in term_ids))
         missing = [t for t in tids if t not in self._block_cache]
         if missing:
-            tbl = self._post_ds.to_table(
-                columns=self._block_cols,
-                filter=pc.field("term_id").isin(missing),
-            )
+            tbl = self._read_blocks(missing)
             col = {c: tbl.column(c).to_numpy(zero_copy_only=False)
                    for c in self._block_cols}
             order = np.argsort(col["term_id"], kind="stable")
