@@ -80,9 +80,9 @@ def _save_manifest(out_dir: str, m: dict, name: str = MANIFEST) -> None:
 
 def _manifest_config(m: dict) -> dict:
     """The manifest's IndexConfig dict.  Older manifests also record
-    k1/b; the block-max bounds on disk were scored with those, and the
-    kernels score with the BM25 constants, so any other value would make
-    pruning unsafe.  They may also name the posting-merge strategy they
+    k1/b; the kernels score with the BM25 constants alone, so an index
+    recorded with any other value would not answer as it was built to —
+    it is rejected.  They may also name the posting-merge strategy they
     were built with (popped below): the query side never reads segment
     numbering, so every such index opens."""
     cfg_d = dict(m["config"])
@@ -140,11 +140,13 @@ def _write_postings(
       hold ~500 rows → a term reads a few hundred block rows regardless
       of corpus size.  (The 128 MB default collapses a small file into
       ONE row group, silently disabling stats pruning altogether.)
-      The 128 KiB row group is the unit of a cold read:
+      The row group is the unit of a cold read:
       serve.local.LocalIndex maps each group's footer term_id range at
       open and reads only the groups that cover a query's terms.
-      Halving it measured +5.2 % index bytes on the 5k-turn sharded
-      benchmark index, for a smaller over-read.
+      Halving a 128 KiB group measured +5.2 % index bytes on the 5k-turn
+      sharded benchmark index, for a smaller over-read.  116 KiB keeps
+      that group's row count under the ~9 % smaller rare-term rows of
+      the impacts block format.
 
     The file count assumes ~3 B per token occurrence (doc_gaps + tfs +
     dls varints) over ``n_docs`` docs; positions add one varint per
@@ -159,7 +161,7 @@ def _write_postings(
         .sortWithinPartitions("term_id", "segment", "block_id")
         .withColumn("segment", F.expr(f"segment div {factor}").cast("int"))
         .write.mode("overwrite")
-        .option("parquet.block.size", 128 * 1024)
+        .option("parquet.block.size", 116 * 1024)
         .parquet(path)
     )
     return served
@@ -221,10 +223,10 @@ def build_and_write(
     the scratch dir.  dictionary: global df, once over all docs.  Each
     docid-range chunk: tf → posting rows → ONE encode_postings grouped
     by segment * N + shard (the identity at N = 1), so no block spans
-    two shards and every block is scored against the global stats →
-    each shard's slice through _write_postings.  The commit writes each
-    shard's docs, dictionary, stats and manifest (with the build id),
-    then sharded.json when N > 1, and deletes the scratch dir.
+    two shards → each shard's slice through _write_postings.  The
+    commit writes each shard's docs, dictionary, stats and manifest
+    (with the build id), then sharded.json when N > 1, and deletes the
+    scratch dir.
 
     ``max_chunks`` limits how many NEW posting chunks this invocation
     writes (test hook for simulating interruption).  A resume must pass
@@ -326,7 +328,7 @@ def build_and_write(
             "segment", (F.col("segment") * n + F.col("__shard")).cast("int")
         ).drop("__shard")
         blocks = (
-            encode_postings(folded, n_docs, avgdl, cfg)
+            encode_postings(folded, cfg)
             .withColumn("__shard", F.pmod("segment", F.lit(n)))
             .withColumn("segment", F.expr(f"segment div {n}").cast("int"))
             .persist()
@@ -405,11 +407,18 @@ def write_index(
 def load_config(out_dir: str) -> IndexConfig:
     """Reconstruct the IndexConfig a completed on-disk index was built
     with (shared by the Spark reader below and the in-process serving
-    reader, bzzz_spark.serve.local.LocalIndex)."""
+    reader, bzzz_spark.serve.local.LocalIndex).  Refuses postings of an
+    older block format (require_impacts)."""
+    import pyarrow.dataset as pads
+
     m = _load_manifest(out_dir)
     if not m.get("complete"):
         raise ValueError(f"index at {out_dir} is incomplete — resume the build")
     cfg_d = _manifest_config(m)
+    require_impacts(pads.dataset(
+        os.path.join(out_dir, "postings"), format="parquet",
+        partitioning="hive",
+    ).schema.names, out_dir)
     cfg_d["key_cols"] = tuple(cfg_d["key_cols"])
     cfg_d["extra_fields"] = tuple(
         tuple(x) for x in cfg_d.get("extra_fields", [])
@@ -418,10 +427,20 @@ def load_config(out_dir: str) -> IndexConfig:
     return IndexConfig(**cfg_d)
 
 
+def require_impacts(postings_columns, where: str) -> None:
+    """Raise unless the postings carry ``impacts``, which the kernels
+    bound blocks with."""
+    if "impacts" not in postings_columns:
+        raise ValueError(
+            f"index at {where} has postings without an impacts column, "
+            "an older block format — rebuild the index"
+        )
+
+
 def read_index(spark: SparkSession, out_dir: str) -> BzzzIndex:
     cfg = load_config(out_dir)
     return BzzzIndex(
-        docs=spark.read.parquet(os.path.join(out_dir, "docs")).drop("tokens"),
+        docs=spark.read.parquet(os.path.join(out_dir, "docs")),
         dictionary=spark.read.parquet(os.path.join(out_dir, "dictionary")),
         postings=spark.read.parquet(os.path.join(out_dir, "postings")).drop("chunk"),
         stats=spark.read.parquet(os.path.join(out_dir, "stats")),

@@ -11,7 +11,9 @@ increasing):
   doc_gaps    : binary — LEB128 varints of docid[i] - docid[i-1], i ≥ 1
                 (count-1 values; docid[0] == first_docid)
   tfs         : binary — LEB128 varints of tf[i] - 1 (count values; tf ≥ 1)
-  block_max_tf / block_max_score : per-block metadata for block-max WAND
+  impacts     : binary — LEB128 varint (tf - 1, dl) pairs, the block's
+                Pareto frontier of (tf, dl) (:func:`impact_frontier`) —
+                the block-max WAND metadata, free of collection stats
 
 Both encode and decode are O(bytes) with no per-value Python loop:
 encode scatters the 7-bit groups of all values in ≤10 vector passes;
@@ -124,6 +126,36 @@ def decode_positions(data: bytes, tfs: np.ndarray) -> np.ndarray:
     prefix = np.zeros(n, dtype=np.int64)
     prefix[starts[1:]] = c[starts[1:] - 1]
     return c - np.maximum.accumulate(prefix)
+
+
+def impact_frontier(
+    tf: np.ndarray, dl: np.ndarray, counts: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Each block's impacts (Lucene's competitive impacts): the Pareto
+    frontier of its postings' (tf, dl) pairs, those no other posting
+    beats with a tf as high and a dl as low.  BM25's tf component grows
+    with tf and falls with dl, so a frontier point scores the block's
+    best posting at any N, df and avgdl.  dl = 0, the norms-off
+    sentinel scored as avgdl, is a class of its own: its one point (the
+    largest tf) neither dominates nor is dominated by a dl > 0 point.
+
+    ``counts`` splits the postings into consecutive blocks.  Returns
+    (points per block, tf, dl): per block the dl > 0 points by
+    descending tf (so dl strictly decreases), then the dl = 0 point."""
+    tf = np.asarray(tf, dtype=np.int64)
+    dl = np.asarray(dl, dtype=np.int64)
+    counts = np.asarray(counts, dtype=np.int64)
+    # group 2b holds block b's dl > 0 postings, 2b + 1 its dl = 0 ones
+    grp = 2 * np.repeat(np.arange(counts.size), counts) + (dl == 0)
+    o = np.lexsort((dl, -tf, grp))
+    grp, tf, dl = grp[o], tf[o], dl[o]
+    # a point is on the frontier iff its dl is below that of every
+    # earlier (higher-tf) point of its group; shifting each group below
+    # all earlier ones restarts the running minimum per group
+    v = dl - grp * (int(dl.max(initial=0)) + 1)
+    keep = v < np.r_[np.iinfo(np.int64).max, np.minimum.accumulate(v)[:-1]]
+    return (np.bincount(grp[keep] // 2, minlength=counts.size),
+            tf[keep], dl[keep])
 
 
 def encode_block(docids: np.ndarray, tfs: np.ndarray) -> tuple[int, int, bytes, bytes]:

@@ -17,16 +17,17 @@ The Spark-first rebuild is a declarative pipeline:
   tf    (term, docid, dl, tf)           term-partitioned shuffle
     ▼
   dictionary (term, term_id, df, cf)    + stats (N, avgdl)
-    │  join df back (AQE skew-join splits the head-term side)
+    │  join term_id (AQE skew-join splits the head-term side)
     ▼
-  posting rows (term_id, segment, docid, tf, dl, df)
+  posting rows (term_id, segment, docid, tf, dl)
     │  segment = docid // segment_size — the skew salt: a head term's
     │  postings split across ALL segments, so no single task ever holds
     │  more than segment_size postings of one term.  Segments double as
     │  the query-time unit of parallelism (Lucene leaf ≙ segment).
     ▼
   postings blocks — delta-gap + varint, ≤ block_size postings/block,
-        per-block max_tf / max BM25 score (block-max WAND metadata)
+        per-block (tf, dl) impacts (block-max WAND metadata, scored into
+        bounds at query time)
 
 Every stage is a DataFrame op; Python appears only in the Arrow-batched
 block encoder (numpy codec, no per-row Python).
@@ -43,14 +44,17 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from bzzz_spark.analysis.tokenizer import standard_tokenize
-from bzzz_spark.build.codec import encode_varints, varint_lengths as _varint_lengths
+from bzzz_spark.build.codec import (
+    encode_varints,
+    impact_frontier,
+    varint_lengths as _varint_lengths,
+)
 from bzzz_spark.build.ids import assign_sequential_ids
-from bzzz_spark.query.scoring import score_np
 
 POSTINGS_SCHEMA = (
     "term_id long, segment int, block_id int, first_docid long, "
     "last_docid long, count int, doc_gaps binary, tfs binary, "
-    "dls binary, block_max_tf int, block_max_score double"
+    "dls binary, impacts binary"
 )
 
 
@@ -62,7 +66,9 @@ def postings_schema(store_positions: bool, docvalue_cols: tuple = ()) -> str:
     table, which at 10^12 docs would shuffle terabytes per query.
     (Lucene reads norms from a per-segment sidecar file — node-local;
     the Spark equivalent of "local" is "inside the block you already
-    decoded".)  With positions enabled each block carries a further
+    decoded".)  `impacts` is the block's (tf, dl) frontier
+    (codec.impact_frontier), which queries score into the block's
+    bound.  With positions enabled each block carries a further
     varint stream (per-posting within-doc position deltas — the
     PhraseQuery substrate, mirroring Lucene's .pos file).  Each
     docvalue col adds a further zigzag-varint stream (one value per
@@ -129,10 +135,6 @@ class BzzzIndex:
     postings: DataFrame
     stats: DataFrame  # single row: n_docs, avgdl
     config: IndexConfig = field(default_factory=IndexConfig)
-    # False for live (streaming-delta) indexes whose block-max metadata
-    # was written under older collection stats: stale bounds could prune
-    # unsafely, so search() routes them through the exhaustive path.
-    wand_safe: bool = True
     # memoized (n_docs, avgdl) — immutable for a snapshot index; streaming
     # deltas produce a NEW BzzzIndex, so the cache can never go stale.
     _stats: tuple | None = field(default=None, repr=False, compare=False,
@@ -368,8 +370,8 @@ def _full_tf(docs: DataFrame, cfg: IndexConfig) -> DataFrame:
     """Text tf plus one leg per extra field (term='<field>:<token>').
 
     A field leg's dl is the norms-disabled SENTINEL 0 (a real posting
-    always has dl ≥ 1): the encoder and the query-time scorer both
-    substitute avgdl, making the BM25 length factor exactly 1 —
+    always has dl ≥ 1): the query-time scorer, and so every block
+    bound, substitutes avgdl, making the BM25 length factor exactly 1 —
     Lucene's omit-norms."""
     tf = build_tf(docs, with_positions=cfg.store_positions,
                   dv_cols=cfg.docvalue_cols)
@@ -414,7 +416,7 @@ def build_dictionary(tf: DataFrame, cfg: IndexConfig) -> DataFrame:
     return assign_sequential_ids(agg, ["term"], "term_id", cfg.num_partitions)
 
 
-def _make_block_encoder(n_docs: int, avgdl: float, cfg: IndexConfig):
+def _make_block_encoder(cfg: IndexConfig):
     """Arrow-streaming block encoder.
 
     Input partitions are hash-partitioned by (term_id, segment) and
@@ -438,8 +440,7 @@ def _make_block_encoder(n_docs: int, avgdl: float, cfg: IndexConfig):
         s = pdf["segment"].to_numpy()
         d = pdf["docid"].to_numpy()
         tf = pdf["tf"].to_numpy().astype(np.int64)
-        dl = pdf["dl"].to_numpy()
-        dfreq = pdf["df"].to_numpy()
+        dl_int = pdf["dl"].to_numpy().astype(np.int64)
 
         grp_change = np.zeros(n, dtype=bool)
         grp_change[0] = True
@@ -453,15 +454,6 @@ def _make_block_encoder(n_docs: int, avgdl: float, cfg: IndexConfig):
         bstarts = np.flatnonzero(blk_start)
         bends = np.append(bstarts[1:], n)
         counts = bends - bstarts
-
-        # per-posting BM25 scores (exact dl; dl == 0 is the norms-
-        # disabled sentinel → length factor 1 via dl := avgdl), block
-        # maxima via reduceat
-        dl_int = dl.astype(np.int64)
-        dl_eff = np.where(dl_int == 0, avgdl, dl).astype(np.float64)
-        scores = score_np(tf, dl_eff, dfreq.astype(np.float64), n_docs, avgdl)
-        block_max_score = np.maximum.reduceat(scores, bstarts)
-        block_max_tf = np.maximum.reduceat(tf, bstarts)
 
         # gaps: within-block diffs (block-start rows store no gap)
         gaps_full = np.empty(n, dtype=np.int64)
@@ -485,10 +477,21 @@ def _make_block_encoder(n_docs: int, avgdl: float, cfg: IndexConfig):
         dl_lens = np.add.reduceat(_varint_lengths(dl_int), bstarts)
         dl_offs = np.concatenate(([0], np.cumsum(dl_lens)))
 
+        # impacts: each block's (tf, dl) frontier as (tf - 1, dl) varint
+        # pairs — every block has at least one point
+        n_imp, itf, idl = impact_frontier(tf, dl_int, counts)
+        pairs = np.empty(2 * itf.size, dtype=np.int64)
+        pairs[0::2], pairs[1::2] = itf - 1, idl
+        imp_buf = encode_varints(pairs)
+        imp_lens = np.add.reduceat(_varint_lengths(pairs),
+                                   2 * (np.cumsum(n_imp) - n_imp))
+        imp_offs = np.concatenate(([0], np.cumsum(imp_lens)))
+
         nb = bstarts.size
         gmv = memoryview(gap_buf)
         tmv = memoryview(tf_buf)
         dmv = memoryview(dl_buf)
+        imv = memoryview(imp_buf)
         out = {
             "term_id": t[bstarts],
             "segment": s[bstarts],
@@ -501,8 +504,9 @@ def _make_block_encoder(n_docs: int, avgdl: float, cfg: IndexConfig):
             ],
             "tfs": [bytes(tmv[tf_offs[i]:tf_offs[i + 1]]) for i in range(nb)],
             "dls": [bytes(dmv[dl_offs[i]:dl_offs[i + 1]]) for i in range(nb)],
-            "block_max_tf": block_max_tf.astype(np.int32),
-            "block_max_score": block_max_score,
+            "impacts": [
+                bytes(imv[imp_offs[i]:imp_offs[i + 1]]) for i in range(nb)
+            ],
         }
         if store_pos:
             # positions stream: delta-encoded with a reset (absolute
@@ -583,20 +587,18 @@ def _segment_col(cfg: IndexConfig):
 def build_posting_rows(
     tf: DataFrame, dictionary: DataFrame, cfg: IndexConfig
 ) -> DataFrame:
-    """(term_id, segment, docid, tf, dl, df, *rest) — segment is the
-    skew salt; rest is whatever else tf carries (positions, doc values),
-    in tf's column order."""
+    """(term_id, segment, docid, tf, dl, *rest) — segment is the skew
+    salt; rest is whatever else tf carries (positions, doc values), in
+    tf's column order.  ``dictionary`` maps term → term_id."""
     rest = [c for c in tf.columns if c not in ("term", "docid", "tf", "dl")]
     return (
-        tf.join(dictionary.select("term", "term_id", "df"), "term")
+        tf.join(dictionary.select("term", "term_id"), "term")
         .withColumn("segment", _segment_col(cfg))
-        .select("term_id", "segment", "docid", "tf", "dl", "df", *rest)
+        .select("term_id", "segment", "docid", "tf", "dl", *rest)
     )
 
 
-def encode_postings(
-    posting_rows: DataFrame, n_docs: int, avgdl: float, cfg: IndexConfig
-) -> DataFrame:
+def encode_postings(posting_rows: DataFrame, cfg: IndexConfig) -> DataFrame:
     """Term-partitioned shuffle merge: repartition the posting rows by
     (term_id, segment), sort by docid within each group and encode.
 
@@ -609,7 +611,7 @@ def encode_postings(
         n_part, "term_id", "segment"
     ).sortWithinPartitions("term_id", "segment", "docid")
     return arranged.mapInPandas(
-        _make_block_encoder(n_docs, avgdl, cfg),
+        _make_block_encoder(cfg),
         schema=postings_schema(cfg.store_positions, cfg.docvalue_cols),
     )
 
@@ -649,9 +651,7 @@ def build_index(transcripts: DataFrame, cfg: IndexConfig | None = None) -> BzzzI
     avgdl = _avgdl(tf, n_docs)
     dictionary = build_dictionary(tf, cfg)
     dictionary.cache()
-    postings = encode_postings(
-        build_posting_rows(tf, dictionary, cfg), n_docs, avgdl, cfg
-    )
+    postings = encode_postings(build_posting_rows(tf, dictionary, cfg), cfg)
     stats = docs.sparkSession.createDataFrame(
         [(n_docs, avgdl)], "n_docs long, avgdl double"
     )

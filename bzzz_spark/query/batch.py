@@ -21,10 +21,9 @@ in-process serving path:
   top-k                          row_number() over query_id
 
 A kernel query's scores are therefore the kernel's own, bit for bit the
-scores ``local_search`` returns.  Plans are made only on an index whose
-block-max bounds are current (``index.wand_safe``): a live streaming
-index's bounds were written under older collection stats and could
-prune a real hit, so every query on it takes the exhaustive executor.
+scores ``local_search`` returns.  Every index plans alike, a live
+streaming index included: the kernels derive block bounds from the
+stored impacts under the index's current statistics.
 """
 
 from __future__ import annotations
@@ -79,11 +78,10 @@ def search_many(
     _warm_dictionary(index, nodes.values())
 
     plans = {}
-    if index.wand_safe:
-        for qid, node in nodes.items():
-            plan = wand.plan_candidates(index, node, (page + 1) * size)
-            if plan is not None:
-                plans[qid] = plan
+    for qid, node in nodes.items():
+        plan = wand.plan_candidates(index, node, (page + 1) * size)
+        if plan is not None:
+            plans[qid] = plan
     parts: list[DataFrame] = []
     runnable = {qid: p for qid, p in plans.items() if not p.empty}
     if runnable:

@@ -6,6 +6,11 @@ pandas stays at the edges: a fetched or Spark-batch block frame becomes
 a :class:`Blocks` once, at kernel entry, and the kernels return plain
 arrays.  Rows are sorted by (segment, term_id, first_docid), so every
 segment, and every term within a segment, is one contiguous slice.
+
+A block stores no score: a term's bound on it is w · ``max_tfc``
+(:func:`impacts_max_tfc`), computed once per block source —
+serve.local.LocalIndex on a cold read, cached with the term's blocks,
+and the kernel entry (query.wand) per Spark batch.
 """
 
 from __future__ import annotations
@@ -21,14 +26,16 @@ from bzzz_spark.build.codec import (
     decode_varints,
     decode_zigzag,
 )
+from bzzz_spark.query.scoring import tf_component_np
 
 
 class Blocks:
     """Posting blocks, one array per column.  ``gaps``/``tfs``/``dls``/
     ``positions`` and the ``dv`` streams are object arrays of the encoded
-    bytes (``positions`` is None when the index stores none)."""
+    bytes (``positions`` is None when the index stores none, and
+    ``max_tfc`` when the frame carries no bounds)."""
 
-    __slots__ = ("term_id", "segment", "first", "last", "count", "bms",
+    __slots__ = ("term_id", "segment", "first", "last", "count", "max_tfc",
                  "gaps", "tfs", "dls", "positions", "dv")
 
     def __init__(self, col: dict, rows=slice(None)):
@@ -37,11 +44,11 @@ class Blocks:
         self.first = col["first_docid"][rows]
         self.last = col["last_docid"][rows]
         self.count = col["count"][rows]
-        self.bms = col["block_max_score"][rows]
         self.gaps = col["doc_gaps"][rows]
         self.tfs = col["tfs"][rows]
         self.dls = col["dls"][rows]
-        pos = col.get("positions")
+        mt, pos = col.get("max_tfc"), col.get("positions")
+        self.max_tfc = None if mt is None else mt[rows]
         self.positions = None if pos is None else pos[rows]
         self.dv = {c[3:]: v[rows] for c, v in col.items() if c.startswith("dv_")}
 
@@ -62,8 +69,10 @@ class Blocks:
     def _columns(self) -> dict:
         col = {"term_id": self.term_id, "segment": self.segment,
                "first_docid": self.first, "last_docid": self.last,
-               "count": self.count, "block_max_score": self.bms,
-               "doc_gaps": self.gaps, "tfs": self.tfs, "dls": self.dls}
+               "count": self.count, "doc_gaps": self.gaps, "tfs": self.tfs,
+               "dls": self.dls}
+        if self.max_tfc is not None:
+            col["max_tfc"] = self.max_tfc
         if self.positions is not None:
             col["positions"] = self.positions
         col.update({f"dv_{c}": v for c, v in self.dv.items()})
@@ -100,6 +109,23 @@ class Blocks:
         starts = np.flatnonzero(np.r_[True, np.diff(self.term_id) != 0])
         return dict(zip(self.term_id[starts].tolist(),
                         np.add.reduceat(self.count, starts).tolist()))
+
+
+def impacts_max_tfc(impacts, avgdl: float) -> np.ndarray:
+    """Per block, the largest tf component of its impacts at this
+    avgdl (varint (tf - 1, dl) pairs, build.codec.impact_frontier).
+    The frontier holds the block's best posting and tf_component_np is
+    the scores' own function, so w · max_tfc is the block's max score
+    bit for bit, for any term weight w ≥ 0."""
+    if len(impacts) == 0:
+        return np.empty(0)
+    buf = b"".join(impacts)
+    lens = np.fromiter(map(len, impacts), dtype=np.int64)
+    ends = (np.frombuffer(buf, dtype=np.uint8) < 0x80).astype(np.int64)
+    pairs = np.add.reduceat(ends, np.cumsum(lens) - lens) // 2
+    v = decode_varints(buf)
+    tfc = tf_component_np(v[0::2] + 1, v[1::2], avgdl)
+    return np.maximum.reduceat(tfc, np.cumsum(pairs) - pairs)
 
 
 class Decoded(NamedTuple):

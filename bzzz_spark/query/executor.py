@@ -260,14 +260,14 @@ def expand_multiterm(
 
 
 _BLOCK_COLS = ("term_id", "segment", "first_docid", "last_docid", "count",
-               "block_max_score", "doc_gaps", "tfs", "dls")
+               "doc_gaps", "tfs", "dls")
 
 
 def _tf_components(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> dict:
     """BM25 tf components of postings: ``tfc`` with the doc's inline
     norm (0 = norms disabled, scored as avgdl — the kernels' rule) and
     ``tfc_nn`` without norms (dl := avgdl, i.e. BM25 b = 0)."""
-    return {"tfc": tf_component_np(tf, np.where(dl == 0, avgdl, dl), avgdl),
+    return {"tfc": tf_component_np(tf, dl, avgdl),
             "tfc_nn": tf_component_np(tf, avgdl, avgdl)}
 
 
@@ -666,7 +666,7 @@ def search(
 
     node = normalize(node)
     top = None
-    if use_wand and index.wand_safe:
+    if use_wand:
         from bzzz_spark.query.wand import wand_search
 
         top = wand_search(index, node, size=size, page=page)

@@ -9,7 +9,9 @@ Our explanation is the BM25 component breakdown per matched query term:
 
 summing term_score over the array reproduces the hit's score for
 term/AND/OR queries (asserted in tests), which is exactly the
-check a Lucene Explanation supports.
+check a Lucene Explanation supports.  `term` is the dictionary key; an
+extra field's terms ('<field>:<token>') score without norms, as in the
+executor.
 """
 
 from __future__ import annotations
@@ -19,7 +21,12 @@ from pyspark.sql import functions as F
 
 from bzzz_spark.build.indexer import BzzzIndex
 from bzzz_spark.query import ast
-from bzzz_spark.query.executor import decode_postings, search
+from bzzz_spark.query.executor import (
+    decode_postings,
+    extra_field_map,
+    search,
+    term_key,
+)
 from bzzz_spark.query.scoring import idf as idf_fn
 
 
@@ -30,13 +37,20 @@ def explain_search(
     node = query if isinstance(query, ast.Query) else ast.parse_query(query)
     hits = search(index, node, size=size, page=page)
     n_docs, avgdl = index.scalar_stats()
-    meta = index.lookup_terms(dict.fromkeys(ast.collect_terms(node)))
+    extra = extra_field_map(index)
+    nonorm = {  # dictionary key -> scored without norms
+        term_key(index, n.field_name, v): n.field_name in extra
+        for n in ast.iter_nodes(node) if isinstance(n, (ast.Term, ast.Phrase))
+        for v in (n.terms if isinstance(n, ast.Phrase) else [n.value])
+    }
+    meta = index.lookup_terms(nonorm)
     if not meta:
         return hits.withColumn("_explain", F.array())
     spark = index.docs.sparkSession
     meta_df = spark.createDataFrame(
-        [(t, tid, df, idf_fn(n_docs, df)) for t, (tid, df) in meta.items()],
-        "term string, term_id long, df long, idf double",
+        [(t, tid, df, idf_fn(n_docs, df), nonorm[t])
+         for t, (tid, df) in meta.items()],
+        "term string, term_id long, df long, idf double, nonorm boolean",
     )
     decoded = decode_postings(
         index.postings, [tid for tid, _df in meta.values()], avgdl
@@ -44,7 +58,8 @@ def explain_search(
     parts = (
         decoded.join(F.broadcast(meta_df), "term_id")
         .join(hits.select("docid"), "docid", "left_semi")
-        .withColumnRenamed("tfc", "tf_component")
+        .withColumn("tf_component", F.when(F.col("nonorm"), F.col("tfc_nn"))
+                    .otherwise(F.col("tfc")))
         .withColumn("term_score", F.col("idf") * F.col("tf_component"))
     )
     expl = parts.groupBy("docid").agg(

@@ -4,11 +4,12 @@ The reference never configures a Similarity, so Lucene 4.10 scores with
 classic TF-IDF (reference: src/java/bzzz/java/query/ExpressionContext.java:263-270
 holds its only explicit scoring math).  Our build spec pins modern BM25
 (k1=1.2, b=0.75) instead; this module is the ONE place the formula
-lives, in numpy.  The build's block-max bounds, the block-max kernels,
-the exhaustive executor's decode (executor.decode_postings) and explain
-all compute it here; the pure-Python oracle (oracle.pyoracle) takes
-only idf from here and is otherwise an independent implementation of
-the same definition:
+lives, in numpy.  The block-max kernels' scores and their pruning
+bounds (query.blocks.impacts_max_tfc, over each block's stored (tf, dl)
+impacts), the exhaustive executor's decode (executor.decode_postings)
+and explain all compute it here; the pure-Python oracle
+(oracle.pyoracle) takes only idf from here and is otherwise an
+independent implementation of the same definition:
 
     idf(N, df)        = ln(1 + (N - df + 0.5) / (df + 0.5))
     tfc(tf, dl, avgdl) = tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl))
@@ -35,22 +36,16 @@ def idf_np(N: float, df: np.ndarray) -> np.ndarray:
 
 
 def idf(N: float, df: float) -> float:
-    """idf_np of one df.  One computation on purpose: the build's
-    block_max_score bounds use idf_np, and math.log disagrees with
-    numpy's log by 1 ulp on ~30 % of df values, which put bounds below
-    the scores they bound."""
+    """idf_np of one df.  One computation on purpose: math.log
+    disagrees with numpy's log by 1 ulp on ~30 % of df values, so a
+    second idf would let two paths score one posting differently."""
     return float(idf_np(N, np.float64(df)))
 
 
 def tf_component_np(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
+    """tfc of postings; dl 0 — the norms-off sentinel of the blocks'
+    inline norms — scores as avgdl (length factor 1)."""
+    dl = np.where(dl == 0, avgdl, dl)
     return tf * (BM25_K1 + 1.0) / (
         tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)
-    )
-
-
-def score_np(
-    tf: np.ndarray, dl: np.ndarray, df: float, N: float, avgdl: float
-) -> np.ndarray:
-    return idf_np(N, np.asarray(df, dtype=np.float64)) * tf_component_np(
-        tf.astype(np.float64), dl.astype(np.float64), avgdl
     )

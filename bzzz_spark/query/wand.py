@@ -22,14 +22,19 @@ _maxscore_topk) and returns the per-segment top-k concatenated as one
 (docid, score) frame.  The shapes share one block decoder
 (blocks.decode), one "blocks overlapping the candidates" helper
 (blocks.overlapping, cached per term by _Lazy) and one stats recorder
-(blocks.tally); pandas appears only at entry and exit.  Every pruning
-bound is rounded up (_up), so no bound sits below a score it bounds.
+(blocks.tally); pandas appears only at entry and exit.  A term's bound
+on a block is its weight w = idf · boost times the block's max_tfc,
+derived at query time from the block's stored (tf, dl) impacts
+(blocks.impacts_max_tfc), so a live streaming index, whose N and avgdl
+move with every micro-batch, prunes as safely as a built one.  Every
+pruning bound is rounded up (_up), so no bound sits below a score it
+bounds.
 
 Pruning by query shape (all results EXACT — pruning never changes them;
 tests cross-check against the exhaustive executor and the oracle):
 
 - single term: a doc's whole score lives in one block, so blocks are
-  processed in descending block_max_score order (in chunks of 8
+  processed in descending bound order (in chunks of 8
   doubling to 256, the conjunction's rule) and processing stops once
   the kth-best score exceeds the next block's max (classic block-max
   top-k).
@@ -40,7 +45,7 @@ tests cross-check against the exhaustive executor and the oracle):
   other terms' remaining max < the current kth best of full matches.
 - disjunction (OR/minimum-should-match): MaxScore (Turtle & Flood) at
   block granularity — terms processed in descending upper-bound order
-  (UB_t = boost · max block_max_score) into per-candidate
+  (UB_t = w_t · max block max_tfc) into per-candidate
   accumulators; once the unprocessed terms' combined UB falls below the
   kth-best score among msm-qualifying candidates, no NEW doc can reach
   the top-k, so the remaining (lower-impact, usually head) terms stop
@@ -84,7 +89,13 @@ from pyspark.sql import functions as F
 from bzzz_spark import BM25_K1
 from bzzz_spark.build.indexer import BzzzIndex
 from bzzz_spark.query import ast
-from bzzz_spark.query.blocks import Blocks, decode, overlapping, tally
+from bzzz_spark.query.blocks import (
+    Blocks,
+    decode,
+    impacts_max_tfc,
+    overlapping,
+    tally,
+)
 from bzzz_spark.query.phrase import phrase_arrays
 from bzzz_spark.query.scoring import idf as idf_fn
 from bzzz_spark.query.scoring import tf_component_np
@@ -279,7 +290,7 @@ def classify(node: ast.Query) -> FlatShape | None:
     Exclusions ride the kernel: Lucene's ReqExclScorer is the same
     per-leaf advance-and-skip.
 
-    Negative boosts fall back: block_max_score bounds assume
+    Negative boosts fall back: w · max_tfc bounds assume
     non-negative term weights (for w < 0 the block 'max' is a LOWER
     bound and θ-pruning would drop true top-k docs); Lucene itself
     rejects boost < 0 since 7.0 — the exhaustive plan serves them.
@@ -487,14 +498,13 @@ def classify(node: ast.Query) -> FlatShape | None:
     return None
 
 
-# Pruning bounds and the scores they bound group the same float
-# operations differently (boost * block_max_score against
-# (idf * boost) * tfc; a sum of per-term bounds against the kernel's own
-# sums), so either side can land a few ulps above the other.  Every
-# bound is rounded up by 2^-42 relative (about 1k ulps, far above the
-# rounding of any sum of a few hundred clauses) plus one ulp; a bound
-# then never sits below a score it bounds, and the strict `bound < θ`
-# skips stay exact.
+# A term's bound on one block, w * max_tfc, is the block's max score bit
+# for bit, but sums of per-term bounds group their float operations
+# differently from the kernel's own sums, so either side can land a few
+# ulps above the other.  Every bound is rounded up by 2^-42 relative
+# (about 1k ulps, far above the rounding of any sum of a few hundred
+# clauses) plus one ulp; a bound then never sits below a score it
+# bounds, and the strict `bound < θ` skips stay exact.
 _SLACK = 1.0 + 2.0 ** -42
 
 
@@ -509,7 +519,8 @@ class _Spec:
 
     qmeta: term_id -> (weight = idf*boost, boost).  Document lengths
     come from the blocks' inline dls stream (0 → avgdl, the
-    norms-disabled sentinel), so the kernel needs no side input.
+    norms-disabled sentinel) and a term's block bound is weight ×
+    max_tfc at ``avgdl``, so the kernel needs no side input.
 
     neg_tids: must_not terms (Lucene ReqExclScorer): their blocks are
     decoded ONLY where their [first_docid, last_docid] range intersects
@@ -568,7 +579,7 @@ class _Spec:
 
 def _tfc(q: _Spec, tf: np.ndarray, dl: np.ndarray) -> np.ndarray:
     """BM25 tf component of decoded streams (dl 0 scores as avgdl)."""
-    return tf_component_np(tf, np.where(dl == 0, q.avgdl, dl), q.avgdl)
+    return tf_component_np(tf, dl, q.avgdl)
 
 
 def _dv_mask(q: _Spec, dvv: dict) -> np.ndarray:
@@ -689,11 +700,11 @@ class _Optionals:
             if rows.size:
                 self.sets.append((_Lazy(q, b, rows, f"optset:{si}"), boost))
                 self.ub += float(boost)
-        for tid, (w, boost) in q.opts.items():
+        for tid, (w, _boost) in q.opts.items():
             rows = b.rows(tid)
             if rows.size:
                 self.terms.append((_Lazy(q, b, rows, f"opt:{tid}"), w))
-                self.ub += boost * float(b.bms[rows].max())
+                self.ub += w * float(b.max_tfc[rows].max())
         if q.opt_phrases:
             sizes = b.sizes()
             for legs, slop, w_p in q.opt_phrases:
@@ -766,13 +777,13 @@ def _term_topk(q: _Spec, b: Blocks):
     Strictly below θ: a block whose bound EQUALS θ can still hold a
     score-tied doc with a smaller docid (e.g. boost=0 makes every score
     0), which wins the (score desc, docid asc) tie-break."""
-    tid, (w, boost) = next(iter(q.qmeta.items()))
+    tid, (w, _boost) = next(iter(q.qmeta.items()))
     rows = b.rows(tid)
     if rows.size == 0:
         return None
     tally(q.stats, "total_blocks", tid, rows.size)
-    rows = rows[np.argsort(-b.bms[rows], kind="stable")]
-    bounds = _up(boost * b.bms[rows])
+    rows = rows[np.argsort(-b.max_tfc[rows], kind="stable")]
+    bounds = _up(w * b.max_tfc[rows])
     theta = _Theta(q.k)
     out_d, out_s = [], []
     for sl in _chunks(rows.size):
@@ -804,11 +815,12 @@ def _and_topk(q: _Spec, b: Blocks):
     excl = _Excluder(q, b)
     rare, *others = sorted(q.qmeta, key=lambda t: int(b.count[trows[t]].sum()))
     lazy = {t: _Lazy(q, b, trows[t], t) for t in others}
-    ub_rest = sum(q.qmeta[t][1] * float(b.bms[trows[t]].max()) for t in others)
-    w_r, boost_r = q.qmeta[rare]
-    rrows = trows[rare][np.argsort(-b.bms[trows[rare]], kind="stable")]
+    ub_rest = sum(q.qmeta[t][0] * float(b.max_tfc[trows[t]].max())
+                  for t in others)
+    w_r = q.qmeta[rare][0]
+    rrows = trows[rare][np.argsort(-b.max_tfc[trows[rare]], kind="stable")]
     tally(q.stats, "total_blocks", rare, rrows.size)
-    bounds = _up(boost_r * b.bms[rrows] + (ub_rest + q.range_boost + opt.ub))
+    bounds = _up(w_r * b.max_tfc[rrows] + (ub_rest + q.range_boost + opt.ub))
     theta = _Theta(q.k)
     out_d, out_s = [], []
     for sl in _chunks(rrows.size):
@@ -1016,11 +1028,11 @@ def _maxscore_topk(q: _Spec, b: Blocks):
     dismax, tie = q.mode == "dismax", q.tie
     sizes = b.sizes() if q.phrases else {}
     clauses = []  # (kind, key, ub, rows)
-    for tid, (_w, boost) in q.qmeta.items():
+    for tid, (w, _boost) in q.qmeta.items():
         rows = b.rows(tid)
         if rows.size:
             tally(q.stats, "total_blocks", tid, rows.size)
-            clauses.append(("t", tid, boost * float(b.bms[rows].max()), rows))
+            clauses.append(("t", tid, w * float(b.max_tfc[rows].max()), rows))
     for legs, slop, w_p in q.phrases:
         if all(int(t) in sizes for t in legs):  # else a leg cannot match
             clauses.append(("p", (legs, slop, w_p), w_p * (BM25_K1 + 1.0),
@@ -1141,6 +1153,9 @@ def _make_kernel(qmeta: dict, mode: str, msm: int, k: int, avgdl: float,
     def kernel(blocks: pd.DataFrame) -> pd.DataFrame:
         got = []
         if len(blocks):
+            if "max_tfc" not in blocks.columns:  # a Spark batch
+                blocks = blocks.assign(max_tfc=impacts_max_tfc(
+                    blocks["impacts"].to_numpy(), avgdl))
             got = [shape(q, seg) for seg in Blocks.from_frame(blocks).segments()]
             got = [g for g in got if g is not None]
         d = np.concatenate([g[0] for g in got] or [np.empty(0)])
@@ -1338,13 +1353,6 @@ def plan_candidates(
         "positions" not in index.postings.columns
     ):
         # the executor path raises the loud store_positions error
-        return None
-    if "dls" not in index.postings.columns:
-        # pre-inline-norms index layout: no dl stream in the blocks —
-        # fall back to the exhaustive executor (which would need the
-        # legacy docs join this engine no longer carries on the fast
-        # path).  Checked BEFORE any dictionary/expansion job so the
-        # fallback costs zero Spark work.
         return None
     from bzzz_spark.query.executor import term_key
 

@@ -23,7 +23,7 @@ Division of labor at 100 TB:
     stay on disk.  At open, LocalIndex reads every postings file's
     footer once into a row-group map (file, row group, term_id min,
     max); a cold fetch reads only the row groups whose range covers a
-    wanted term (postings files are written term_id-sorted in 128 KiB
+    wanted term (postings files are written term_id-sorted in 116 KiB
     row groups, so a query reads only its own terms' blocks — no
     dataset scan per query).
   * Scatter/gather across shards: serve.scatter.ShardedIndex.  Each
@@ -96,8 +96,6 @@ class LocalIndex:
     LocalIndex — the serving analog of the reference's 5 s searcher
     refresh)."""
 
-    wand_safe = True
-
     def __init__(self, out_dir: str, max_cached_bytes: int = 256 << 20):
         import pyarrow as pa
         import pyarrow.dataset as pads
@@ -123,13 +121,14 @@ class LocalIndex:
             [f for f in self._post_ds.schema if f.name != "chunk"]
         )
         self._block_cols = self._block_schema.names
+        self._frame_cols = [*self._block_cols, "max_tfc"]
         self.postings = _ColumnsShim(self._block_cols)
         self._expansion_cache: dict = {}
         # (sorted terms, their term_ids, their dfs): loaded on first use
         self._terms: tuple | None = None
         self._footers, self._row_groups = _row_group_map(self._post_ds.files)
         # hot-term block cache: term_id → (its block rows as one array
-        # per column, their bytes).  The serving analog of a hot Lucene
+        # per frame column, their bytes).  The serving analog of a hot Lucene
         # searcher's working set — repeat queries over a hot index never
         # touch parquet again.  Entries hold ENCODED blocks (varint
         # bytes, ~3 B/posting); the budget bounds the encoded bytes plus
@@ -252,16 +251,20 @@ class LocalIndex:
 
     def fetch_blocks(self, term_ids) -> pd.DataFrame:
         """Posting blocks for the given terms (each once, however often
-        it is named), as one pandas frame.  A cold term is read from
-        only the row groups its footer range covers (_read_blocks), so
-        a query reads only its own terms' bytes.  Cache hits skip
-        parquet entirely (see _block_cache)."""
+        it is named), as one pandas frame: the on-disk columns plus
+        ``max_tfc`` (query.blocks.impacts_max_tfc).  A cold term is read
+        from only the row groups its footer range covers (_read_blocks),
+        so a query reads only its own terms' bytes.  Cache hits skip
+        parquet and the impacts decode entirely (see _block_cache)."""
+        from bzzz_spark.query.blocks import impacts_max_tfc
+
         tids = list(dict.fromkeys(int(t) for t in term_ids))
         missing = [t for t in tids if t not in self._block_cache]
         if missing:
             tbl = self._read_blocks(missing)
             col = {c: tbl.column(c).to_numpy(zero_copy_only=False)
                    for c in self._block_cols}
+            col["max_tfc"] = impacts_max_tfc(col["impacts"], self._stats[1])
             order = np.argsort(col["term_id"], kind="stable")
             col = {c: v[order] for c, v in col.items()}
             tid_col = col["term_id"]
@@ -285,12 +288,12 @@ class LocalIndex:
             oldest = next(iter(self._block_cache))
             self._cached_bytes -= self._block_cache.pop(oldest)[1]
         if not parts:
-            return pd.DataFrame(columns=self._block_cols)
+            return pd.DataFrame(columns=self._frame_cols)
         # copy=False: the concatenations are fresh arrays, and leaving
         # them unconsolidated halves the frame's build and read-back
         return pd.DataFrame({
             c: np.concatenate([p[c] for p in parts])
-            for c in self._block_cols
+            for c in self._frame_cols
         }, copy=False)
 
     def doc_column(self, col: str) -> tuple:
@@ -349,21 +352,14 @@ class LocalIndex:
         """Stored fields for the given docids (R1 field projection).
         Every writer writes docs/ docid-sorted, so the isin filter
         prunes row groups the same way the Spark reader's pushed filter
-        does.  Indexes written before the one writer still store a
-        tokens column; it is dropped here."""
+        does."""
         import pyarrow.compute as pc
 
-        cols = None
-        if columns is not None:
-            cols = list(dict.fromkeys(columns))
-        tbl = self._docs_ds.to_table(
+        cols = None if columns is None else list(dict.fromkeys(columns))
+        return self._docs_ds.to_table(
             columns=cols,
             filter=pc.field("docid").isin([int(d) for d in docids]),
-        )
-        pdf = tbl.to_pandas()
-        if "tokens" in pdf.columns and (columns is None):
-            pdf = pdf.drop(columns=["tokens"])
-        return pdf
+        ).to_pandas()
 
 
 _EMPTY = pd.DataFrame(

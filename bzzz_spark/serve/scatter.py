@@ -15,13 +15,13 @@ reference's merged ranking drifts from a single index's.  We fix that
 the way distributed Lucene deployments do (Elasticsearch's
 dfs_query_then_fetch, made static): `build_sharded` runs ONE global
 build — docids, dictionary (global df), stats (global n_docs, avgdl)
-and a single posting encode whose groups never cross a shard — so
-every shard's postings are encoded AGAINST THOSE GLOBAL STATS.
-Every shard therefore scores — and block-max-prunes, the baked
-block_max_score bounds being globally correct — exactly as the single
-fat index would, docids are GLOBAL (assigned before routing), and the
-gather's (score desc, docid asc) merge reproduces the single-index
-result bit-for-bit, ties included.
+and a single posting encode whose groups never cross a shard — and
+every shard stores those GLOBAL stats.  Every shard therefore scores —
+and block-max-prunes, its bounds derived from its blocks' (tf, dl)
+impacts under the same global stats — exactly as the single fat index
+would, docids are GLOBAL (assigned before routing), and the gather's
+(score desc, docid asc) merge reproduces the single-index result
+bit-for-bit, ties included.
 
 Serving: the shards share one dictionary and one set of stats, so
 ShardedIndex parses, validates, normalizes and plans each query ONCE,
@@ -67,7 +67,7 @@ def build_sharded(
     LocalIndex directory) that together answer EXACTLY like one index:
     the checkpointed, resumable build_and_write with n_shards = N (see
     build/checkpoint.py).  Docids, the dictionary and the stats are
-    global, and every shard's blocks are encoded against them, so
+    global, and every shard scores and bounds its blocks with them, so
     per-posting scores and block-max bounds match the single-index
     build exactly.  Each shard carries the full dictionary and global
     stats; its docs/ and postings/ hold only its slice.  sharded.json,

@@ -21,14 +21,14 @@ Consistency design:
   monotonically across batches — batch-local dictionaries would collide;
 - delta postings use the SAME block codec/segment layout, so query
   kernels work unchanged;
-- block-max metadata in deltas is computed under the stats current at
-  append time.  Exact BM25 is recomputed from tf+dl at query time, so
-  ranking is exact either way, but stale bounds are not guaranteed
-  safe for pruning once N grows — live indexes therefore carry
-  wand_safe=False and search() uses the exhaustive path until
-  compaction;
+- a delta block stores its (tf, dl) impacts, not a score: queries
+  derive every bound under the live index's current N, df and avgdl,
+  so a live index is planned and pruned like a built one, and a
+  micro-batch encodes from its own rows alone — O(batch), with no
+  collection statistic computed at append time;
 - compaction = checkpointed full rebuild (Lucene forceMerge analog,
-  reference index_directory.clj:226-227), after which WAND is safe.
+  reference index_directory.clj:226-227): one fat segment layout
+  instead of one set of blocks per micro-batch.
 
 `foreachBatch` gives exactly-once appends locally; on a real deployment
 the sinks are Iceberg tables with snapshot-atomic commits.
@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bzzz_spark.analysis.tokenizer import standard_tokenize
+from bzzz_spark.build.checkpoint import require_impacts
 from bzzz_spark.build.ids import assign_sequential_ids
 from bzzz_spark.build.indexer import (
     BzzzIndex,
@@ -62,9 +63,8 @@ class StreamingIndexer:
         self.out = out_dir
         self.cfg = cfg or IndexConfig()
         if self.cfg.docvalue_cols:
-            # live deltas route through the exhaustive executor anyway
-            # (wand_safe=False), where ranges read the docs table — the
-            # inline doc-value stream would be dead weight per delta
+            # process_batch encodes the text terms alone, with no inline
+            # doc-value streams, so no delta could serve a dv range
             raise ValueError(
                 "docvalue_cols are not supported on the streaming ingest "
                 "path; build the serving index with them instead"
@@ -125,19 +125,8 @@ class StreamingIndexer:
             new_map.write.mode("append").parquet(self._p("termmap"))
 
         termmap = self.spark.read.parquet(self._p("termmap"))
-        all_docs = self.spark.read.parquet(self._p("docs"))
-        stats = all_docs.agg(
-            F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
-        ).collect()[0]
-        # batch-local df in block metadata: bounds are advisory on the
-        # live path (wand_safe=False), exact scoring happens query-time
-        batch_df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        posting_rows = build_posting_rows(
-            tf, termmap.join(batch_df, "term"), self.cfg
-        )
-        delta = encode_postings(
-            posting_rows, int(stats["n"]), float(stats["avgdl"] or 0.0), self.cfg
-        )
+        delta = encode_postings(build_posting_rows(tf, termmap, self.cfg),
+                                self.cfg)
         delta.write.mode("append").parquet(self._p("postings_delta"))
         docs.unpersist()
 
@@ -156,10 +145,12 @@ class StreamingIndexer:
 
         Dictionary df/cf are recomputed EXACTLY from the ingested docs
         (so BM25 is exact); term_ids come from the persistent map (so
-        they agree with the delta postings).  wand_safe=False — see
-        module docstring.
+        they agree with the delta postings).  Queries plan block-max
+        kernels on it as on any index — see module docstring.
         """
         spark = self.spark
+        postings = spark.read.parquet(self._p("postings_delta"))
+        require_impacts(postings.columns, self.out)
         docs = spark.read.parquet(self._p("docs"))
         termmap = spark.read.parquet(self._p("termmap"))
         tf = build_tf(docs)
@@ -178,16 +169,15 @@ class StreamingIndexer:
         return BzzzIndex(
             docs=docs.drop("tokens"),
             dictionary=dictionary,
-            postings=spark.read.parquet(self._p("postings_delta")),
+            postings=postings,
             stats=stats,
             config=self.cfg,
-            wand_safe=False,
         )
 
     def compact(self, index_dir: str) -> dict:
         """Delta merge = checkpointed full rebuild (forceMerge analog).
-        After this, read the compacted dir with checkpoint.read_index —
-        wand_safe again."""
+        After this, read the compacted dir with checkpoint.read_index
+        or serve it with serve.local.LocalIndex."""
         from bzzz_spark.build.checkpoint import build_and_write
 
         base = self.spark.read.parquet(self._p("docs")).drop(

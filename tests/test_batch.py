@@ -352,46 +352,56 @@ def test_batch_dismax_mixed_members(spark, small_transcripts):
     idx.postings.unpersist()
 
 
-def test_batch_honors_wand_safe(spark, tmp_path, small_pdf, monkeypatch):
-    """A live streaming index (wand_safe=False) carries block-max bounds
-    baked under older collection stats, so search_many must plan no
-    kernel on it — every query takes the exhaustive executor, as
-    search() does — and still answer exactly like search()."""
+def test_batch_plans_live_index(spark, tmp_path, small_pdf, monkeypatch):
+    """A live streaming index plans a kernel for every query, as a built
+    one does: its blocks store (tf, dl) impacts, and the kernels bound
+    them under the live statistics.  The second micro-batch's docs are
+    five times longer, so avgdl moves between the deltas; the answers
+    still equal search()'s and the oracle's."""
     from bzzz_spark.build.indexer import IndexConfig
     from bzzz_spark.fixtures import to_spark
+    from bzzz_spark.oracle.pyoracle import PyIndex
     from bzzz_spark.query import wand
     from bzzz_spark.streaming.ingest import StreamingIndexer
 
+    pdf = small_pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    half = len(pdf) // 2
+    pdf.loc[half:, "text"] = pdf.loc[half:, "text"].map(
+        lambda t: " ".join([t] * 5))
     ing = StreamingIndexer(
         spark, str(tmp_path / "live"),
         IndexConfig(block_size=16, segment_size=64, num_partitions=2),
     )
-    pdf = small_pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    half = len(pdf) // 2
     for i, chunk in enumerate((pdf.iloc[:half], pdf.iloc[half:])):
         ing.process_batch(to_spark(spark, chunk), epoch_id=i)
     live = ing.live_index()
-    assert not live.wand_safe
-
-    calls = []
-
-    def spy(name):
-        real = getattr(wand, name)
-
-        def wrapped(*a, **kw):
-            calls.append(name)
-            return real(*a, **kw)
-        return wrapped
-
-    monkeypatch.setattr(wand, "plan_candidates", spy("plan_candidates"))
-    monkeypatch.setattr(wand, "_make_kernel", spy("_make_kernel"))
     queries = {
-        "groups2": FALLBACK["groups2"],
-        "or_in_and": FALLBACK["or_in_and"],
-        "and2": BATCH["and2"],
         "term_head": BATCH["term_head"],
+        "term_boost": BATCH["term_boost"],
+        "and3": BATCH["and3"],
+        "must_not": BATCH["must_not"],
+        "should_msm2": BATCH["should_msm2"],
+        "must_plus_should": BATCH["must_plus_should"],
+        "dismax": FALLBACK["dismax"],
+        "groups2": FALLBACK["groups2"],
     }
-    search_many(live, queries, size=10).collect()
-    assert calls == []
-    monkeypatch.undo()
+    for qid, node in queries.items():
+        assert plan_candidates(live, normalize(node), 10) is not None, qid
     _assert_batch_matches(live, queries)
+    planned, run_plans = [], wand.run_plans
+
+    def spy(index, plans):
+        planned.extend(plans)
+        return run_plans(index, plans)
+
+    monkeypatch.setattr(wand, "run_plans", spy)
+    got = {}
+    for r in search_many(live, queries, size=10).collect():
+        got.setdefault(r["query_id"], []).append((r["docid"], r["score"]))
+    assert sorted(planned) == sorted(queries)  # every query ran a kernel
+    oracle = PyIndex(pdf.to_dict("records"))
+    for qid, node in queries.items():
+        want = oracle.search(node, size=10)
+        assert [d for d, _ in got[qid]] == [d for d, _ in want], qid
+        for (_, gs), (_, ws) in zip(got[qid], want):
+            assert math.isclose(gs, ws, rel_tol=1e-9), (qid, gs, ws)

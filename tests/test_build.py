@@ -6,10 +6,11 @@ knowable statistics (test/bzzz/core_test.clj:38-75), upsert semantics
 (test/bzzz/sharding_test.clj:27-51).
 """
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from bzzz_spark.build.codec import decode_block
+from bzzz_spark.build.codec import decode_block, decode_varints
 from bzzz_spark.build.indexer import IndexConfig, build_index
 from bzzz_spark.fixtures import EPOCH, synth_transcripts_pdf, to_spark
 from bzzz_spark.oracle.pyoracle import PyIndex
@@ -75,7 +76,11 @@ def test_block_invariants(small_index):
             row["first_docid"], row["count"], row["doc_gaps"], row["tfs"]
         )
         assert (d[1:] > d[:-1]).all() if len(d) > 1 else True
-        assert tf.max() == row["block_max_tf"]
+        # the impacts frontier leads with the block's max tf, and its dl
+        # strictly decreases
+        imp = decode_varints(row["impacts"]).reshape(-1, 2)
+        assert imp[0, 0] + 1 == tf.max()
+        assert (np.diff(imp[:, 1]) < 0).all()
         s = seg_span.setdefault(row["segment"], [int(d.min()), int(d.max())])
         s[0] = min(s[0], int(d.min()))
         s[1] = max(s[1], int(d.max()))

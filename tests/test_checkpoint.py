@@ -5,6 +5,7 @@ import json
 import math
 import os
 
+import numpy as np
 import pytest
 
 from bzzz_spark.build.checkpoint import (
@@ -279,6 +280,33 @@ def test_manifest_with_other_bm25_rejected(spark, small_pdf, tmp_path):
     write_manifest(complete=True)
     with pytest.raises(ValueError, match="k1=2.0"):
         load_config(out)
+
+
+def test_index_without_impacts_must_be_rebuilt(spark, small_pdf, tmp_path):
+    """Postings in the block format before impacts (a baked
+    block_max_score and block_max_tf per block) cannot be bounded by the
+    kernels: both readers refuse them and say to rebuild."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bzzz_spark.serve.local import LocalIndex
+
+    out = str(tmp_path / "idx")
+    build_and_write(to_spark(spark, small_pdf), out, IndexConfig(**CFG))
+    for path in glob.glob(os.path.join(out, "postings", "*", "*.parquet")):
+        t = pq.read_table(path)
+        t = t.drop_columns(["impacts"]).append_column(
+            "block_max_tf", pa.array(np.ones(t.num_rows, np.int32))
+        ).append_column(
+            "block_max_score", pa.array(np.ones(t.num_rows))
+        )
+        pq.write_table(t, path)
+    with pytest.raises(ValueError, match="rebuild"):
+        LocalIndex(out)
+    with pytest.raises(ValueError, match="rebuild"):
+        read_index(spark, out)
 
 
 def test_postings_scan_pushes_term_filter_to_parquet(spark, small_pdf, tmp_path):

@@ -62,3 +62,47 @@ def test_block_rejects_unsorted():
 
     with pytest.raises(ValueError):
         encode_block(np.array([5, 3]), np.array([1, 1]))
+
+
+@given(
+    st.lists(
+        st.lists(
+            st.tuples(st.integers(min_value=1, max_value=5000),
+                      st.integers(min_value=0, max_value=5000)),
+            min_size=1, max_size=40,
+        ),
+        min_size=1, max_size=5,
+    ),
+    st.integers(min_value=1, max_value=10**9),
+    st.floats(min_value=0.5, max_value=1e4),
+    st.data(),
+)
+@settings(max_examples=200, deadline=None)
+def test_impact_bound_is_the_block_max_score(terms, n_docs, avgdl, data):
+    """For any blocks (tf ≥ 1, dl ≥ 0 with 0 the norms-off sentinel)
+    and any collection stats (N, avgdl, df), the bound the kernels read
+    from the encoded impacts is the block's max score: no posting
+    scores above it, and one scores exactly it.  The blocks come from
+    the build's own encoder, 16 postings per block."""
+    import pandas as pd
+
+    from bzzz_spark.build.indexer import IndexConfig, _make_block_encoder
+    from bzzz_spark.query.blocks import impacts_max_tfc
+    from bzzz_spark.query.scoring import idf, tf_component_np
+
+    pdf = pd.DataFrame(
+        [(t, 0, d, tf, dl) for t, posts in enumerate(terms)
+         for d, (tf, dl) in enumerate(posts)],
+        columns=["term_id", "segment", "docid", "tf", "dl"],
+    )
+    enc = _make_block_encoder(IndexConfig(block_size=16))
+    blocks = pd.concat(list(enc(iter([pdf]))), ignore_index=True)
+    assert int(blocks["count"].sum()) == len(pdf)
+    for b in blocks.itertuples():
+        w = idf(n_docs, data.draw(st.integers(min_value=1, max_value=n_docs)))
+        _, tf = decode_block(b.first_docid, b.count, b.doc_gaps, b.tfs)
+        dl = decode_varints(b.dls, b.count)
+        scores = w * tf_component_np(tf, dl, avgdl)
+        bound = w * impacts_max_tfc(np.array([b.impacts], dtype=object),
+                                  avgdl)[0]
+        assert bound == scores.max()

@@ -173,3 +173,24 @@ def test_field_filter_arms_ride_kernel(field_index, field_oracle):
                             ast.Term("user", field_name="role")])
     assert wand_candidates(field_index, scored, 10) is None
     _parity(field_index, field_oracle, scored)
+
+
+def test_explain_sums_to_score_with_field_terms(field_index):
+    """explain_search keys extra-field terms '<field>:<token>' and gives
+    them the no-norms tf component, so every hit's components sum to
+    its score — for a bare field term and for a text AND field term."""
+    from bzzz_spark.query.explain import explain_search
+
+    for node, keys in (
+        (ast.Term("assistant", field_name="role"), {"role:assistant"}),
+        (ast.Bool(must=[ast.Term("error"),
+                        ast.Term("user", field_name="role")]),
+         {"error", "role:user"}),
+    ):
+        rows = explain_search(field_index, node, size=5).collect()
+        assert rows
+        for r in rows:
+            assert {e["term"] for e in r["_explain"]} == keys
+            total = sum(e["term_score"] for e in r["_explain"])
+            assert math.isclose(total, r["score"], rel_tol=1e-9), (
+                node, total, r["score"])

@@ -21,6 +21,7 @@ import pytest
 from bzzz_spark.build.checkpoint import build_and_write, read_index
 from bzzz_spark.build.indexer import IndexConfig
 from bzzz_spark.fixtures import synth_transcripts_spark
+from bzzz_spark.query.blocks import impacts_max_tfc
 from bzzz_spark.query import ast
 from bzzz_spark.serve.local import LocalIndex, local_search
 from bzzz_spark.serve.scatter import build_sharded
@@ -64,7 +65,10 @@ def _all_tids(index_dir: str) -> list[int]:
 
 
 def _assert_fetch_equals_scan(index_dir: str) -> None:
+    """Row for row the scan's on-disk columns, plus the cached bound
+    column: the bound helper applied to the scanned impacts."""
     li = LocalIndex(index_dir)
+    avgdl = li.scalar_stats()[1]
     tids = _all_tids(index_dir)
     assert tids
     # batches of several sizes; every batch is cold, then all are cached
@@ -73,7 +77,12 @@ def _assert_fetch_equals_scan(index_dir: str) -> None:
         while at < len(tids):
             batch = tids[at: at + size]
             got = li.fetch_blocks(batch)
-            pd.testing.assert_frame_equal(got, _scan(index_dir, batch))
+            want = _scan(index_dir, batch)
+            pd.testing.assert_frame_equal(got.drop(columns="max_tfc"), want)
+            np.testing.assert_array_equal(
+                got["max_tfc"].to_numpy(),
+                impacts_max_tfc(want["impacts"].to_numpy(), avgdl),
+            )
             at, size = at + size, size * 2 if size < 256 else 1
 
 
@@ -154,9 +163,12 @@ def test_duplicate_term_ids_fetch_and_cache_once(chunked):
 
 
 def _empty_dtypes(index_dir: str) -> pd.Series:
+    """A fetched frame's dtypes: the on-disk columns, then the bound
+    column."""
     ds = pads.dataset(os.path.join(index_dir, "postings"),
                       format="parquet", partitioning="hive")
-    schema = pa.schema([f for f in ds.schema if f.name != "chunk"])
+    schema = pa.schema([f for f in ds.schema if f.name != "chunk"]
+                       + [pa.field("max_tfc", pa.float64())])
     return schema.empty_table().to_pandas().dtypes
 
 
