@@ -268,10 +268,9 @@ def dedup_upserts(
     )
 
 
-def build_docs(table: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """docs table: dense docid over key_cols, tokens, dl + all stored cols.
-    Every builder starts here, so this is where docvalue_cols must
-    prove integer-typed."""
+def check_docvalue_cols(table: DataFrame, cfg: IndexConfig) -> None:
+    """Every index build's input check: docvalue_cols must be
+    integer-typed columns of ``table``."""
     dtypes = dict(table.dtypes)
     bad = {
         c: dtypes.get(c) for c in cfg.docvalue_cols
@@ -281,8 +280,13 @@ def build_docs(table: DataFrame, cfg: IndexConfig) -> DataFrame:
         raise ValueError(
             f"docvalue_cols must be integer-typed doc columns; got {bad} "
             "— floats would truncate in the zigzag-varint stream and "
-            "disagree with the executor's docs-table range semantics"
+            "disagree with the docs-table range semantics"
         )
+
+
+def build_docs(table: DataFrame, cfg: IndexConfig) -> DataFrame:
+    """docs table: dense docid over key_cols, tokens, dl + all stored cols."""
+    check_docvalue_cols(table, cfg)
     deduped = (
         dedup_upserts(table, cfg.key_cols, cfg.ts_col) if cfg.ts_col else table
     )

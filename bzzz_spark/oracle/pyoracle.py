@@ -1,7 +1,7 @@
 """Pure-Python reference engine — the rank oracle.
 
 ≤200 LoC, zero Spark: tokenize → in-memory postings → BM25 → top-k.
-Interprets the same AST as the Spark executor; pytest asserts the two
+Interprets the same AST as the engine's plans; pytest asserts the two
 produce rank-identical docids and scores (SURVEY.md §5 "adopted for our
 engine": exact-value assertions in the reference's test style, e.g.
 test/bzzz/core_test.clj:578-599 asserts exact float scores).
@@ -274,12 +274,15 @@ class PyIndex:
             return terms
         return sorted(terms, key=lambda t: (-len(self.postings[t]), t))[:cap]
 
-    def _bm25(self, term: str) -> dict[int, float]:
+    def _bm25(self, term: str, nonorm: bool = False) -> dict[int, float]:
         plist = self.postings.get(term, {})
         if not plist:
             return {}
-        # extra-field terms score without norms: dl := avgdl
-        nonorm = ":" in term and term.split(":", 1)[0] in self.extra_fields
+        # extra-field terms, and every term below NoNorm, score without
+        # norms: dl := avgdl
+        nonorm = nonorm or (
+            ":" in term and term.split(":", 1)[0] in self.extra_fields
+        )
         w = idf(self.n_docs, len(plist))
         out = {}
         for docid, tf in plist.items():
@@ -290,16 +293,22 @@ class PyIndex:
             )
         return out
 
-    def execute(self, node: ast.Query, custom_fns: dict | None = None) -> dict[int, float]:
-        """AST → {docid: score}."""
-        ex = lambda n: self.execute(n, custom_fns)  # noqa: E731
+    def execute(
+        self, node: ast.Query, custom_fns: dict | None = None,
+        nonorm: bool = False,
+    ) -> dict[int, float]:
+        """AST → {docid: score}.  ``nonorm``: below a NoNorm node, terms
+        and phrases score with dl := avgdl (BM25 b = 0)."""
+        ex = lambda n: self.execute(n, custom_fns, nonorm)  # noqa: E731
         if isinstance(node, ast.Term):
             key = (
                 f"{node.field_name}:{str(node.value).lower()}"
                 if node.field_name in self.extra_fields
                 else node.value
             )
-            return {d: s * node.boost for d, s in self._bm25(key).items()}
+            return {
+                d: s * node.boost for d, s in self._bm25(key, nonorm).items()
+            }
         if isinstance(node, ast.Phrase):
             # Lucene PhraseWeight: (Σ idf(term_i)) × tfc(phrase_freq, dl).
             # slop == 0: ExactPhraseScorer (start-position count);
@@ -338,7 +347,7 @@ class PyIndex:
                         slop,
                     )
                 if ptf:
-                    dl = self.docs[docid]["dl"]
+                    dl = self.avgdl if nonorm else self.docs[docid]["dl"]
                     out[docid] = (
                         w
                         * (ptf * (BM25_K1 + 1.0)
@@ -430,6 +439,8 @@ class PyIndex:
             return {d: node.boost for d in docs}
         if isinstance(node, ast.NoZeroScore):
             return {d: s for d, s in ex(node.query).items() if s != 0.0}
+        if isinstance(node, ast.NoNorm):
+            return self.execute(node.query, custom_fns, nonorm=True)
         if isinstance(node, ast.RandomScore):
             return {
                 d: node.base + ast.rand_score(d, node.seed) for d in ex(node.query)

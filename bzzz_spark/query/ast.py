@@ -4,10 +4,10 @@ The reference dispatches a JSON query map to per-operator parsers
 (reference: src/bzzz/query.clj:31-48): a bare string becomes a
 query-parser query, a map with several top-level keys becomes an
 implicit AND.  We reproduce the DSL as plain dataclasses; the AST is
-the engine's IR — interpreted by the Spark executor
-(:mod:`bzzz_spark.query.executor`) and by the pure-Python rank oracle
-(:mod:`bzzz_spark.oracle.pyoracle`), which is how rank-parity is
-verified.
+the engine's IR — planned for both runtimes by
+:mod:`bzzz_spark.query.evaluate` and interpreted by the pure-Python
+rank oracle (:mod:`bzzz_spark.oracle.pyoracle`), which is how
+rank-parity is verified.
 
 Pinned scoring semantics (deviations noted in each class):
 
@@ -208,7 +208,8 @@ def _parse_max_expansion(body: dict) -> int | None:
 
 def rand_score(docid: int, seed: int) -> float:
     """Portable deterministic per-doc random in [0,1) — md5-based so the
-    Spark executor, the Python oracle, and DuckDB SQL all agree."""
+    evaluator (query.evaluate), the Python oracle, and DuckDB SQL all
+    agree."""
     h = hashlib.md5(f"{seed}:{docid}".encode()).hexdigest()[:8]
     return int(h, 16) / float(1 << 32)
 

@@ -53,18 +53,19 @@ class Blocks:
         self.dv = {c[3:]: v[rows] for c, v in col.items() if c.startswith("dv_")}
 
     @classmethod
-    def from_frame(cls, pdf: pd.DataFrame) -> "Blocks":
+    def from_frame(cls, pdf: pd.DataFrame, segments: bool = True) -> "Blocks":
         """The one pandas → arrays conversion, sorted by (segment,
-        term_id, first_docid)."""
+        term_id, first_docid) — or with ``segments=False`` by (term_id,
+        first_docid), one segment spanning the whole set, as the
+        exhaustive evaluator (query.evaluate) reads it."""
         # pandas' own read-only column accessor: the public items() boxes
         # every column of a fresh frame in a Series first, ~0.2 ms per
         # 12-column frame — more than a small kernel's whole run
         col = {c: np.asarray(pdf._get_column_array(i))
                for i, c in enumerate(pdf.columns)}
-        order = np.lexsort(
-            (col["first_docid"], col["term_id"], col["segment"])
-        )
-        return cls(col, order)
+        keys = (col["first_docid"], col["term_id"])
+        return cls(col, np.lexsort(keys + (col["segment"],) if segments
+                                   else keys))
 
     def _columns(self) -> dict:
         col = {"term_id": self.term_id, "segment": self.segment,

@@ -1,43 +1,39 @@
-"""Spark query executor: AST → DataFrame plan → top-k.
+"""Spark query runtime: AST → one plan → top-k, facets, sorts.
 
 The reference's query lifecycle (SURVEY.md §3.1) is: parse JSON → Lucene
 Query tree → per-segment doc-at-a-time scoring into a priority queue →
 k-way merge across shards.  The Spark translation:
 
-  parse JSON → AST (bzzz_spark.query.ast)
+  parse JSON → AST (bzzz_spark.query.ast), validated and normalized
   → driver-side dictionary lookup of the query's terms (+ wildcard /
-    fuzzy expansion against the dictionary — Lucene's rewrite())
-  → decode only those terms' posting blocks (Arrow kernel; parquet
-    row-group min/max stats on term_id prune the scan)
-  → BM25 tf components in numpy at decode time (query.scoring, the
-    kernels' formula) times the driver-computed idf
-  → AST combinators as joins / unions / groupBy over (docid, score)
+    fuzzy expansion against the dictionary — Lucene's rewrite(),
+    expand_multiterm below)
+  → ONE plan (query.evaluate.plan): the block-max kernel of a flat
+    shape (query.wand), else the exhaustive numpy evaluator of any
+    tree (query.evaluate) — the same plans the in-process tier runs
+  → wand.run_plans: one term_id-pruned postings read, each segment's
+    blocks (and, for match-all / ranges / custom scores, its docs)
+    through the plan's kernel → per-segment top-k
   → TakeOrderedAndProject for the top-k priority-queue merge —
     exactly Lucene's PQ, distributed, with the deterministic
     (score desc, docid asc) tie-break the north rule requires.
 
-Block decoding and phrase matching run in Python workers; the
-combinators run JVM-side.  For flat term / conjunctive queries,
-:mod:`bzzz_spark.query.wand` provides the block-max pruned fast path;
-this module is the exhaustive engine every operator lowers to and the
-cross-check for WAND.
+Only CustomScore needs Catalyst: its expression is evaluated here
+(plan_docs) and reaches the plan as a docs column.  Facets and sorts
+join the plan's matched set (execute) with the docs table.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from bzzz_spark.build.indexer import BzzzIndex
 from bzzz_spark.query import ast
-from bzzz_spark.query.blocks import Blocks, decode
-from bzzz_spark.query.scoring import idf as idf_fn
-from bzzz_spark.query.scoring import tf_component_np
+from bzzz_spark.query.evaluate import plan, plan_exhaustive
+from bzzz_spark.query.wand import _run_plan, top_page
 
 
 def glob_to_regex(glob: str) -> str:
@@ -259,163 +255,6 @@ def expand_multiterm(
     return out
 
 
-_BLOCK_COLS = ("term_id", "segment", "first_docid", "last_docid", "count",
-               "doc_gaps", "tfs", "dls")
-
-
-def _tf_components(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> dict:
-    """BM25 tf components of postings: ``tfc`` with the doc's inline
-    norm (0 = norms disabled, scored as avgdl — the kernels' rule) and
-    ``tfc_nn`` without norms (dl := avgdl, i.e. BM25 b = 0)."""
-    return {"tfc": tf_component_np(tf, dl, avgdl),
-            "tfc_nn": tf_component_np(tf, avgdl, avgdl)}
-
-
-def decode_postings(
-    postings: DataFrame, term_ids: list[int], avgdl: float
-) -> DataFrame:
-    """Decode the blocks of the given terms → (term_id, docid, tf, dl,
-    tfc, tfc_nn).
-
-    The isin filter reaches the parquet scan (row-group pruning via
-    min/max stats — postings are written sorted by term_id within
-    files).  Each Arrow batch decodes through query.blocks, the
-    kernels' decoder (one vectorized pass per stream).  dl comes from
-    the inline norms stream, and tfc/tfc_nn are the BM25 tf components
-    with and without norms (_tf_components), so scoring needs NO join
-    against a docs/norms table — the whole query reads only the pruned
-    posting blocks.
-    """
-    sub = postings.filter(
-        F.col("term_id").isin([int(t) for t in term_ids])
-    ).select(*_BLOCK_COLS)
-
-    def dec(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not len(pdf):
-                continue
-            b = Blocks.from_frame(pdf)
-            got = decode(b, np.arange(len(pdf)))
-            yield pd.DataFrame({
-                "term_id": np.repeat(b.term_id, b.count),
-                "docid": got.d, "tf": got.tf, "dl": got.dl,
-                **_tf_components(got.tf, got.dl, avgdl),
-            })
-
-    return sub.mapInPandas(
-        dec, "term_id long, docid long, tf long, dl long, tfc double, "
-             "tfc_nn double"
-    )
-
-
-def _phrase_matches(
-    index: BzzzIndex, tid_order: list[int], slop: int, avgdl: float
-) -> DataFrame:
-    """Distributed phrase match → DataFrame(docid, tfc, tfc_nn), the
-    tf components of each matching doc's phrase frequency.
-
-    One task per touched segment; within a task the kernel decodes
-    positions only for block ranges that can still hold a candidate.
-    On a segment-aligned serving index (BzzzIndex.persist(
-    layout="segment")) this runs as a NARROW mapInPandas — no shuffle;
-    otherwise the blocks are grouped by segment first (small shuffle:
-    only the phrase terms' blocks move)."""
-    from bzzz_spark.query.phrase import phrase_segment_kernel
-
-    if "positions" not in index.postings.columns:
-        raise ValueError(
-            "this index stores no positions — build it with "
-            "IndexConfig(store_positions=True) to answer phrase queries"
-        )
-    uniq = sorted(set(int(t) for t in tid_order))
-    blocks = index.postings.filter(F.col("term_id").isin(uniq))
-    schema = "docid long, tfc double, tfc_nn double"
-
-    def match(seg: pd.DataFrame) -> pd.DataFrame:
-        m = phrase_segment_kernel(seg, tid_order, slop)
-        return pd.DataFrame({
-            "docid": m["docid"].to_numpy(),
-            **_tf_components(m["ptf"].to_numpy(), m["dl"].to_numpy(), avgdl),
-        })
-
-    if getattr(index, "segment_aligned", False):
-
-        def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            parts = [p for p in it if len(p)]
-            if not parts:
-                return
-            pdf = pd.concat(parts, ignore_index=True)
-            for _, g in pdf.groupby("segment", sort=False):
-                out = match(g)
-                if len(out):
-                    yield out
-
-        return blocks.mapInPandas(run, schema)
-    return blocks.groupby("segment").applyInPandas(match, schema)
-
-
-class _Ctx:
-    """Per-search state: dictionary lookups, expansions, one shared decode."""
-
-    def __init__(self, index: BzzzIndex, node: ast.Query):
-        self.index = index
-        validate_fields(index, node)
-        self.n_docs, self.avgdl = index.scalar_stats()
-
-        # dictionary keys to prefetch: bare tokens for the default text
-        # field, '<field>:<token>' for extra-field terms
-        terms: set[str] = set()
-        for n in ast.iter_nodes(node):
-            if isinstance(n, ast.Term):
-                terms.add(term_key(index, n.field_name, n.value))
-            elif isinstance(n, ast.Phrase):
-                terms.update(term_key(index, n.field_name, t) for t in n.terms)
-        # wildcard/fuzzy expansion — Lucene's multi-term rewrite, pushed
-        # into a dictionary filter (rlike / levenshtein Columns) with the
-        # max_expansion TopTermsRewrite cut applied SQL-side; only the
-        # (capped) expansion set is collected, never the vocabulary.
-        # Memoized per index, like the lookups below
-        from bzzz_spark.query.wand import _expand_scoped_many
-
-        self.expansions: dict[tuple, list[str]] = {}
-        patterns = _collect_multiterm(node)
-        if patterns:
-            exps = _expand_scoped_many(index, patterns)
-            for p, exp in zip(patterns, exps):
-                self.expansions[_mt_key(p)] = exp
-                terms.update(exp)
-
-        self.term_meta = index.lookup_terms(terms) if terms else {}
-        spark = index.docs.sparkSession
-        if self.term_meta:
-            meta_df = spark.createDataFrame(
-                [(t, tid, idf_fn(self.n_docs, df))
-                 for t, (tid, df) in self.term_meta.items()],
-                "term string, term_id long, idf double",
-            )
-            decoded = decode_postings(
-                index.postings, [tid for tid, _ in self.term_meta.values()],
-                self.avgdl,
-            )
-            # score_nn: the no-norm variant (Q16) for extra fields and
-            # NoNorm subtrees
-            self.scored = decoded.join(F.broadcast(meta_df), "term_id").select(
-                "term", "docid",
-                (F.col("idf") * F.col("tfc")).alias("score"),
-                (F.col("idf") * F.col("tfc_nn")).alias("score_nn"),
-            )
-        else:
-            self.scored = spark.createDataFrame(
-                [], "term string, docid long, score double, score_nn double"
-            )
-        self.use_nonorm = False
-
-    def empty(self) -> DataFrame:
-        return self.index.docs.sparkSession.createDataFrame(
-            [], "docid long, score double"
-        )
-
-
 def indexed_fields(index: BzzzIndex) -> set[str]:
     """Field names the index can answer term-ish queries on: the AST's
     default field alias "text", the configured text column, and any
@@ -447,197 +286,35 @@ def validate_fields(index: BzzzIndex, node: ast.Query) -> None:
         )
 
 
-def _mt_key(p) -> tuple:
-    if isinstance(p, ast.Wildcard):
-        return ("w", p.field_name, p.value, p.max_expansion)
-    return (
-        "f", p.field_name, p.value, p.max_edits, p.prefix_len,
-        p.max_expansion, p.transpositions,
-    )
-
-
-def _collect_multiterm(node: ast.Query) -> list:
-    return [
-        n for n in ast.iter_nodes(node) if isinstance(n, (ast.Wildcard, ast.Fuzzy))
-    ]
-
-
-def _tagged_union(dfs: list[DataFrame]) -> DataFrame:
-    parts = [d.withColumn("tag", F.lit(i)) for i, d in enumerate(dfs)]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _execute(node: ast.Query, ctx: _Ctx) -> DataFrame:
-    """AST node → DataFrame(docid, score). Each node's output has unique
-    docids, which the Bool/DisMax count-based combinators rely on."""
-    docs = ctx.index.docs
-    if isinstance(node, ast.Term):
-        key = term_key(ctx.index, node.field_name, node.value)
-        if key not in ctx.term_meta:
-            return ctx.empty()
-        # extra-field terms are indexed with norms disabled (dl:=avgdl
-        # at build) — score them with the no-norm variant
-        nonorm = ctx.use_nonorm or node.field_name in extra_field_map(ctx.index)
-        sc = "score_nn" if nonorm else "score"
-        return ctx.scored.filter(F.col("term") == key).select(
-            "docid", (F.col(sc) * node.boost).alias("score")
-        )
-    if isinstance(node, ast.Phrase):
-        keys = [term_key(ctx.index, node.field_name, t) for t in node.terms]
-        metas = [ctx.term_meta.get(k) for k in keys]
-        if not metas or any(m is None for m in metas):
-            return ctx.empty()  # a missing term → phrase cannot occur
-        tids = [m[0] for m in metas]
-        # block-pruned per-segment kernel: positions are decoded only
-        # for blocks that can hold a candidate from the rarest term
-        # (bzzz_spark.query.phrase — the leapfrog discipline of ref
-        # TermPayloadClojureScoreQuery.java:237-257, block-granular)
-        pm = _phrase_matches(ctx.index, tids, node.slop, ctx.avgdl)
-        # Lucene PhraseWeight: (Σ idf per term) × tfc(phrase_freq, dl)
-        sum_idf = sum(idf_fn(ctx.n_docs, m[1]) for m in metas)
-        nonorm = ctx.use_nonorm or node.field_name in extra_field_map(ctx.index)
-        return pm.select(
-            "docid",
-            (F.lit(sum_idf * node.boost)
-             * F.col("tfc_nn" if nonorm else "tfc")).alias("score"),
-        )
-    if isinstance(node, ast.MatchAll):
-        return docs.select("docid", F.lit(float(node.boost)).alias("score"))
-    if isinstance(node, ast.Range):
-        c = F.col(node.field_name)
-        cond = F.lit(True)
-        if node.min is not None:
-            cond = cond & (c >= node.min if node.min_inclusive else c > node.min)
-        if node.max is not None:
-            cond = cond & (c <= node.max if node.max_inclusive else c < node.max)
-        return docs.filter(cond).select(
-            "docid", F.lit(float(node.boost)).alias("score")
-        )
-    if isinstance(node, ast.Bool):
-        musts = [_execute(q, ctx) for q in node.must]
-        shoulds = [_execute(q, ctx) for q in node.should]
-        msm = node.effective_msm()
-        if musts:
-            # conjunction via union + groupBy-having (one shuffle), not
-            # n-way join chains: count(*) == n works because each child
-            # emits unique docids
-            base = (
-                _tagged_union(musts)
-                .groupBy("docid")
-                .agg(F.sum("score").alias("m_score"), F.count(F.lit(1)).alias("m_cnt"))
-                .filter(F.col("m_cnt") == len(musts))
-                .select("docid", "m_score")
-            )
-            if shoulds:
-                sh = (
-                    _tagged_union(shoulds)
-                    .groupBy("docid")
-                    .agg(F.sum("score").alias("s_score"),
-                         F.count(F.lit(1)).alias("s_cnt"))
-                )
-                base = (
-                    base.join(sh, "docid", "left")
-                    .filter(F.coalesce(F.col("s_cnt"), F.lit(0)) >= msm)
-                    .select(
-                        "docid",
-                        (F.col("m_score") + F.coalesce(F.col("s_score"), F.lit(0.0))
-                         ).alias("m_score"),
-                    )
-                )
-            out = base.select(
-                "docid", (F.col("m_score") * node.boost).alias("score")
-            )
-        elif shoulds:
-            out = (
-                _tagged_union(shoulds)
-                .groupBy("docid")
-                .agg(F.sum("score").alias("s_score"), F.count(F.lit(1)).alias("s_cnt"))
-                .filter(F.col("s_cnt") >= max(msm, 1))
-                .select("docid", (F.col("s_score") * node.boost).alias("score"))
-            )
-        else:
-            # only must_not (or empty) matches nothing — Lucene semantics
-            return ctx.empty()
-        if node.must_not:
-            nots = [_execute(q, ctx).select("docid") for q in node.must_not]
-            excl = nots[0]
-            for nt in nots[1:]:
-                excl = excl.unionByName(nt)
-            out = out.join(excl.distinct(), "docid", "left_anti")
-        return out
-    if isinstance(node, ast.Filtered):
-        q = _execute(node.query, ctx)
-        f = _execute(node.filter, ctx).select("docid")
-        return q.join(f, "docid", "left_semi").select(
-            "docid", (F.col("score") * node.boost).alias("score")
-        )
-    if isinstance(node, ast.ConstantScore):
-        return _execute(node.query, ctx).select(
-            "docid", F.lit(float(node.boost)).alias("score")
-        )
-    if isinstance(node, ast.DisMax):
-        subs = [_execute(q, ctx) for q in node.queries]
-        if not subs:
-            return ctx.empty()
-        return (
-            _tagged_union(subs)
-            .groupBy("docid")
-            .agg(F.max("score").alias("mx"), F.sum("score").alias("sm"))
-            .select(
-                "docid",
-                ((F.col("mx") + node.tie_breaker * (F.col("sm") - F.col("mx")))
-                 * node.boost).alias("score"),
-            )
-        )
-    if isinstance(node, (ast.Wildcard, ast.Fuzzy)):
-        exp = ctx.expansions.get(_mt_key(node), [])
-        if not exp:
-            return ctx.empty()
-        return (
-            ctx.scored.filter(F.col("term").isin(exp))
-            .select("docid")
-            .distinct()
-            .select("docid", F.lit(float(node.boost)).alias("score"))
-        )
-    if isinstance(node, ast.NoZeroScore):
-        return _execute(node.query, ctx).filter(F.col("score") != 0.0)
-    if isinstance(node, ast.NoNorm):
-        prev = ctx.use_nonorm
-        ctx.use_nonorm = True
-        try:
-            return _execute(node.query, ctx)
-        finally:
-            ctx.use_nonorm = prev
-    if isinstance(node, ast.RandomScore):
-        sub = _execute(node.query, ctx)
-        # portable md5-based rand — identical in the Python oracle and in
-        # DuckDB SQL (reference is non-reproducible by design:
-        # src/bzzz/queries/random_score.clj:15-22; we pin a seed)
-        r = F.conv(
-            F.substring(
-                F.md5(F.format_string(f"{node.seed}:%d", F.col("docid"))), 1, 8
-            ),
-            16, 10,
-        ).cast("double") / float(1 << 32)
-        return sub.select("docid", (F.lit(node.base) + r).alias("score"))
-    if isinstance(node, ast.CustomScore):
-        sub = _execute(node.query, ctx)
-        joined = sub.withColumnRenamed("score", "_score").join(docs, "docid")
-        expr_val = F.expr(node.expression)
-        new_score = (
-            expr_val if node.replace else F.col("_score") * expr_val
-        ) * node.boost
-        return joined.select("docid", new_score.alias("score"))
-    raise ValueError(f"cannot execute {type(node).__name__}")
-
-
 def execute(index: BzzzIndex, query: ast.Query | dict | str) -> DataFrame:
-    """Full matched set with scores (no top-k cut)."""
+    """Full matched set (docid, score), no top-k cut: the query's
+    exhaustive plan (query.evaluate), run by wand.run_plans."""
     node = query if isinstance(query, ast.Query) else ast.parse_query(query)
-    return _execute(node, _Ctx(index, node))
+    validate_fields(index, node)
+    return _run_plan(index, plan_exhaustive(index, node, None))
+
+
+def plan_docs(index: BzzzIndex, plans) -> DataFrame:
+    """The docs frame the plans' kernels read (KernelPlan.doc_cols):
+    docid, the stored columns named, and per CustomScore its score and
+    a hit flag (null: not matched) — the inner query's matched set
+    through execute, joined to the docs, and the expression evaluated
+    by Spark SQL over the matched docs' columns and ``_score``."""
+    custom = {c: n for p in plans for c, n in p.custom}
+    docs = index.docs
+    for col, node in custom.items():
+        hit = F.col(f"{col}_hit")
+        expr = F.expr(node.expression)
+        score = (expr if node.replace else F.col("_score") * expr) * node.boost
+        docs = docs.join(
+            execute(index, node.query).select(
+                "docid", F.col("score").alias("_score"),
+                F.lit(1).alias(f"{col}_hit")),
+            "docid", "left",
+        ).withColumn(col, F.when(hit.isNotNull(), score.cast("double"))
+                     ).drop("_score")
+    cols = [c for p in plans for c in p.doc_cols]
+    return docs.select(*dict.fromkeys(["docid", *cols]))
 
 
 def search(
@@ -654,9 +331,10 @@ def search(
     src/bzzz/const.clj:8).  Returns (docid, score [, fields...]) in
     (score desc, docid asc) order.
 
-    Flat term/AND/OR shapes take the block-max pruned per-segment path
-    (bzzz_spark.query.wand) by default; everything else lowers to the
-    exhaustive DataFrame plan.  Both paths produce identical results
+    Flat term/AND/OR shapes take the block-max pruned per-segment
+    kernels (bzzz_spark.query.wand) by default; every other shape, and
+    every shape with use_wand=False, the exhaustive plan
+    (bzzz_spark.query.evaluate).  Both produce the same results
     (cross-checked in tests/test_wand.py)."""
     node = query if isinstance(query, ast.Query) else ast.parse_query(query)
     validate_fields(index, node)
@@ -665,22 +343,9 @@ def search(
     from bzzz_spark.query.rewrite import normalize
 
     node = normalize(node)
-    top = None
-    if use_wand:
-        from bzzz_spark.query.wand import wand_search
-
-        top = wand_search(index, node, size=size, page=page)
-    if top is None:
-        matched = execute(index, node)
-        k = page * size + size
-        top = matched.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
-        if page > 0:
-            w = Window.orderBy(F.col("score").desc(), F.col("docid").asc())
-            top = (
-                top.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") > page * size)
-                .drop("__rn")
-            )
+    k = page * size + size
+    p = plan(index, node, k) if use_wand else plan_exhaustive(index, node, k)
+    top = top_page(_run_plan(index, p), size, page)
     if fields:
         top = top.join(index.docs.select("docid", *fields), "docid", "left").orderBy(
             F.col("score").desc(), F.col("docid").asc()

@@ -10,24 +10,51 @@ Our explanation is the BM25 component breakdown per matched query term:
 summing term_score over the array reproduces the hit's score for
 term/AND/OR queries (asserted in tests), which is exactly the
 check a Lucene Explanation supports.  `term` is the dictionary key; an
-extra field's terms ('<field>:<token>') score without norms, as in the
-executor.
+extra field's terms ('<field>:<token>') score without norms, as in
+every query plan.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bzzz_spark.build.indexer import BzzzIndex
 from bzzz_spark.query import ast
-from bzzz_spark.query.executor import (
-    decode_postings,
-    extra_field_map,
-    search,
-    term_key,
-)
+from bzzz_spark.query.blocks import Blocks, decode
+from bzzz_spark.query.executor import search, term_key
 from bzzz_spark.query.scoring import idf as idf_fn
+from bzzz_spark.query.scoring import tf_component_np
+
+
+def _decoded(postings: DataFrame, term_ids: list[int], avgdl: float):
+    """The given terms' postings → (term_id, docid, tf, tf_component),
+    decoded by the kernels' decoder (query.blocks) from the blocks
+    alone: dl is the inline norm, 0 for an extra field's norms-off
+    postings, which the tf component scores as avgdl."""
+    sub = postings.filter(
+        F.col("term_id").isin([int(t) for t in term_ids])
+    ).select("term_id", "segment", "first_docid", "last_docid", "count",
+             "doc_gaps", "tfs", "dls")
+
+    def dec(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            if not len(pdf):
+                continue
+            b = Blocks.from_frame(pdf)
+            got = decode(b, np.arange(len(pdf)))
+            yield pd.DataFrame({
+                "term_id": np.repeat(b.term_id, b.count), "docid": got.d,
+                "tf": got.tf,
+                "tf_component": tf_component_np(got.tf, got.dl, avgdl),
+            })
+
+    return sub.mapInPandas(
+        dec, "term_id long, docid long, tf long, tf_component double")
 
 
 def explain_search(
@@ -37,29 +64,22 @@ def explain_search(
     node = query if isinstance(query, ast.Query) else ast.parse_query(query)
     hits = search(index, node, size=size, page=page)
     n_docs, avgdl = index.scalar_stats()
-    extra = extra_field_map(index)
-    nonorm = {  # dictionary key -> scored without norms
-        term_key(index, n.field_name, v): n.field_name in extra
+    meta = index.lookup_terms({
+        term_key(index, n.field_name, v)
         for n in ast.iter_nodes(node) if isinstance(n, (ast.Term, ast.Phrase))
         for v in (n.terms if isinstance(n, ast.Phrase) else [n.value])
-    }
-    meta = index.lookup_terms(nonorm)
+    })
     if not meta:
         return hits.withColumn("_explain", F.array())
     spark = index.docs.sparkSession
     meta_df = spark.createDataFrame(
-        [(t, tid, df, idf_fn(n_docs, df), nonorm[t])
-         for t, (tid, df) in meta.items()],
-        "term string, term_id long, df long, idf double, nonorm boolean",
-    )
-    decoded = decode_postings(
-        index.postings, [tid for tid, _df in meta.values()], avgdl
+        [(t, tid, df, idf_fn(n_docs, df)) for t, (tid, df) in meta.items()],
+        "term string, term_id long, df long, idf double",
     )
     parts = (
-        decoded.join(F.broadcast(meta_df), "term_id")
+        _decoded(index.postings, [tid for tid, _df in meta.values()], avgdl)
+        .join(F.broadcast(meta_df), "term_id")
         .join(hits.select("docid"), "docid", "left_semi")
-        .withColumn("tf_component", F.when(F.col("nonorm"), F.col("tfc_nn"))
-                    .otherwise(F.col("tfc")))
         .withColumn("term_score", F.col("idf") * F.col("tf_component"))
     )
     expl = parts.groupBy("docid").agg(

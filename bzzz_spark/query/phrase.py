@@ -58,19 +58,9 @@ cross-checked by randomized fuzz in tests/test_phrase.py.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from bzzz_spark.query.blocks import Blocks, decode, overlapping, tally
 from bzzz_spark.query.phrase_repeats import repeat_groups
-
-_EMPTY = pd.DataFrame(
-    {
-        "docid": pd.Series(dtype="int64"),
-        "ptf": pd.Series(dtype="float64"),
-        "dl": pd.Series(dtype="int64"),
-    }
-)
-
 
 def _exact_freqs(legs, n_cand: int):
     """legs: [(doc_rank, adjusted_pos)] per phrase offset, each sorted by
@@ -301,11 +291,13 @@ def _sloppy_freqs_k(legs, slop: int, n_cand: int):
     return np.flatnonzero(got), freq[got]
 
 
-def phrase_segment_kernel(
-    blocks: pd.DataFrame, tid_order: list[int], slop: int,
+def phrase_arrays(
+    b: Blocks, tid_order: list[int], slop: int,
     stats: dict | None = None, restrict: np.ndarray | None = None,
-) -> pd.DataFrame:
-    """One segment's phrase evaluation → (docid, ptf, dl).
+) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
+    """One segment's phrase evaluation (or a whole block set ordered by
+    term_id, as query.evaluate passes it): sorted (docid, ptf, dl)
+    arrays, or None when nothing matches.
 
     ``stats`` (tests/plan audits) accumulates
     {"total_blocks": {tid: n}, "decoded_blocks": {tid: n}} — the pruning
@@ -317,21 +309,6 @@ def phrase_segment_kernel(
     `error AND "stack trace"` hands the phrase only error's survivors).
     Every leg's blocks — including the rarest — are pruned against it,
     and the output docids are a subset of it."""
-    got = phrase_arrays(Blocks.from_frame(blocks), tid_order, slop, stats,
-                        restrict)
-    if got is None:
-        return _EMPTY
-    d, ptf, dl = got
-    return pd.DataFrame({"docid": d, "ptf": ptf, "dl": dl})
-
-
-def phrase_arrays(
-    b: Blocks, tid_order: list[int], slop: int,
-    stats: dict | None = None, restrict: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
-    """phrase_segment_kernel on one segment's array block set: sorted
-    (docid, ptf, dl) arrays, or None when nothing matches.  The WAND
-    kernels call it directly."""
     if restrict is not None and restrict.size == 0:
         return None
     uniq = list(dict.fromkeys(int(t) for t in tid_order))

@@ -9,10 +9,10 @@ semantics are flat: ``Bool(must=[Bool(must=[a, b]), c])`` scores and
 matches exactly like ``Bool(must=[a, b, c])``.  The block-max kernels
 (:mod:`bzzz_spark.query.wand`) serve flat shapes only, so without
 normalization a syntactically-nested-but-semantically-flat query pays
-the exhaustive executor's full posting decode.  ``normalize`` folds
+the exhaustive plan's full posting decode.  ``normalize`` folds
 those trees bottom-up; every rule below is score-preserving under the
 engine's pinned Bool semantics (score = Σ must + Σ matched should,
-msm over should count, boost multiplies the sum — executor.py and the
+msm over should count, boost multiplies the sum — evaluate.py and the
 pure-Python oracle agree), so the exhaustive plan, the kernel plan and
 the oracle all return identical rows for the original and the
 normalized tree.  Rules fire only when provably safe (inner boost 1.0,
@@ -92,7 +92,7 @@ def normalize(node: ast.Query) -> ast.Query:
                 and q.must
                 and not q.should
                 # msm > 0 with no should clauses is a semantic edge the
-                # executor ignores but the strict oracle treats as
+                # evaluator ignores but the strict oracle treats as
                 # unmatchable — leave such trees alone
                 and q.minimum_should_match == 0
             ):
@@ -130,7 +130,7 @@ def normalize(node: ast.Query) -> ast.Query:
         # exclusion list regardless of its boost (unlike the scoring
         # should-flatten above, which must require boost 1).  An inner
         # Bool that can match NOTHING — only must_not clauses, the
-        # Lucene all-prohibited-matches-no-docs rule the executor and
+        # Lucene all-prohibited-matches-no-docs rule the evaluator and
         # oracle share — excludes nothing and drops out.  Worklist
         # (not one-pass) so non-unit-boost disjunction members that
         # survived the scoring flatten still splice here: keeps
@@ -169,7 +169,7 @@ def normalize(node: ast.Query) -> ast.Query:
         # score).  This puts the most common hybrid user shape on the
         # ReqOptSum block-max kernel (the conjunction drives candidates,
         # group members score as optionals gated by opt_msm) instead of
-        # the exhaustive decode-everything executor.  Only the FIRST
+        # the exhaustive decode-everything plan.  Only the FIRST
         # such group hoists — two groups' msm constraints cannot share
         # one should list (">=1 of {a,b} AND >=1 of {c,d}" is not
         # ">=2 of {a,b,c,d}") — and the rewrite fires at most once per
@@ -263,7 +263,7 @@ def normalize(node: ast.Query) -> ast.Query:
                 isinstance(q, ast.Bool)
                 and q.boost == 1.0
                 and (q.must or q.should)
-                # msm > 0 with no should clauses is the executor/oracle
+                # msm > 0 with no should clauses is the evaluator/oracle
                 # edge normalize stays away from (see the Bool rules)
                 and not (q.minimum_should_match > 0 and not q.should)
             ):

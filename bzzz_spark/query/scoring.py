@@ -6,8 +6,8 @@ holds its only explicit scoring math).  Our build spec pins modern BM25
 (k1=1.2, b=0.75) instead; this module is the ONE place the formula
 lives, in numpy.  The block-max kernels' scores and their pruning
 bounds (query.blocks.impacts_max_tfc, over each block's stored (tf, dl)
-impacts), the exhaustive executor's decode (executor.decode_postings)
-and explain all compute it here; the pure-Python oracle
+impacts), the exhaustive evaluator (query.evaluate) and explain all
+compute it here; the pure-Python oracle
 (oracle.pyoracle) takes only idf from here and is otherwise an
 independent implementation of the same definition:
 

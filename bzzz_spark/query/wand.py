@@ -31,7 +31,7 @@ pruning bound is rounded up (_up), so no bound sits below a score it
 bounds.
 
 Pruning by query shape (all results EXACT — pruning never changes them;
-tests cross-check against the exhaustive executor and the oracle):
+tests cross-check against the exhaustive plan and the oracle):
 
 - single term: a doc's whole score lives in one block, so blocks are
   processed in descending bound order (in chunks of 8
@@ -71,9 +71,10 @@ tests cross-check against the exhaustive executor and the oracle):
   terms decodes a handful of leading blocks per segment instead of the
   full posting lists.
 
-Anything deeper (nesting, filters, boosts per clause) falls back to
-the exhaustive DataFrame executor in bzzz_spark.query.executor — same
-results, more I/O.
+Every other shape (nesting, negative boosts, match-all, ranges without
+doc-values, no-norm, random and custom scores) gets the exhaustive plan
+of bzzz_spark.query.evaluate, a KernelPlan too: both runtimes run it as
+they run these kernels, with no pruning.
 """
 
 from __future__ import annotations
@@ -114,7 +115,7 @@ class FlatShape:
     phrases: (term_values, slop, boost, scored) — phrase pseudo-terms:
              and-mode conjuncts, or or/dismax-mode clauses (MaxScore
              with the loose-but-sound w_p*(k1+1) upper bound), all
-             served by phrase_segment_kernel.
+             served by phrase.phrase_arrays.
     ranges:  (Range, contrib) — contrib is the score the predicate adds
              per match (node.boost for Bool must-ranges, 0.0 for
              Filtered filter-ranges).
@@ -129,14 +130,14 @@ class FlatShape:
              opt_msm of them must match for a doc to qualify
              (minimum_should_match over the should clauses).
     opt_phrases: (term_values, slop, boost) — OPTIONAL phrases in the
-             same should list, evaluated by phrase_segment_kernel
+             same should list, evaluated by phrase.phrase_arrays
              restricted to the conjunction's survivors.
     groups:  (members, msm, scored) — REQUIRED disjunction groups in
              the must list ("(a OR b) AND (c OR d)" — the synonym-
              expansion shape): members is the inner Bool's should list
              as (value, field, boost) Term entries (duplicates kept:
              each entry scores and counts toward msm separately, the
-             executor's semantics), msm its effective minimum-should-
+             evaluator's semantics), msm its effective minimum-should-
              match, scored False for filter arms.  A doc must match
              >= msm entries of EVERY group; matched entries add their
              BM25 score.  Note the rewrite pass hoists the FIRST such
@@ -170,11 +171,16 @@ class KernelPlan:
     in-process serving path (bzzz_spark.serve.local) feeds it pyarrow
     parquet reads of the same blocks.  empty=True marks queries proven
     empty at plan time (out-of-vocabulary must-terms, unsatisfiable
-    minimum_should_match, zero-doc index)."""
+    minimum_should_match, zero-doc index).  The kernel is called as
+    kernel(blocks, docs): docs holds docid and the doc_cols (None when
+    there are none; kernel plans name none), which for the (column,
+    CustomScore) pairs of custom only Spark computes (executor.plan_docs)."""
 
     kernel: object | None
     tids: tuple = ()
     empty: bool = False
+    doc_cols: tuple = ()
+    custom: tuple = ()
 
 
 _EMPTY_PLAN = KernelPlan(None, (), empty=True)
@@ -182,31 +188,39 @@ _EMPTY_PLAN = KernelPlan(None, (), empty=True)
 
 def _run_plan(index: BzzzIndex, plan: KernelPlan) -> DataFrame:
     """Materialize a KernelPlan on the Spark runtime."""
-    if plan.empty:
-        spark = index.docs.sparkSession
-        return spark.createDataFrame([], "docid long, score double")
-    return run_plans(index, {"": plan}).select("docid", "score")
+    plans = {} if plan.empty else {"": plan}
+    return run_plans(index, plans).select("docid", "score")
 
 
 def run_plans(index: BzzzIndex, plans: dict) -> DataFrame:
     """Run non-empty KernelPlans ({query_id: plan}) in ONE read of the
     postings, filtered to the union of their term_ids → (query_id,
     docid, score), each query's per-segment top-k.  Every plan's kernel
-    gets the rows of its own term_ids only."""
+    gets the rows of its own term_ids only, and when a plan names doc
+    columns every kernel gets its segment's docs too: the postings are
+    cogrouped with the docs on segment = docid // segment_size."""
     tids = sorted({int(t) for p in plans.values() for t in p.tids})
     blocks = index.postings.filter(F.col("term_id").isin(tids))
     specs = [(qid, np.asarray(p.tids, dtype=np.int64), p.kernel)
              for qid, p in plans.items()]
     schema = "query_id string, docid long, score double"
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(pdf: pd.DataFrame, docs: pd.DataFrame | None) -> pd.DataFrame:
         tid = pdf["term_id"].to_numpy()
         return pd.concat(
-            [kernel(pdf[np.isin(tid, mine)]).assign(query_id=qid)
+            [kernel(pdf[np.isin(tid, mine)], docs).assign(query_id=qid)
              for qid, mine, kernel in specs],
             ignore_index=True,
         )
 
+    if any(p.doc_cols for p in plans.values()):
+        from bzzz_spark.build.indexer import _segment_col
+        from bzzz_spark.query.executor import plan_docs
+
+        docs = plan_docs(index, plans.values()).withColumn(
+            "__segment", _segment_col(index.config))
+        return blocks.groupby("segment").cogroup(
+            docs.groupby("__segment")).applyInPandas(run, schema)
     if getattr(index, "segment_aligned", False):
         # serving layout: postings are already hash-partitioned by
         # segment (BzzzIndex.persist(layout="segment")), so the kernels
@@ -216,12 +230,13 @@ def run_plans(index: BzzzIndex, plans: dict) -> DataFrame:
         def run_part(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             parts = [p for p in it if len(p)]
             if parts:
-                yield run(pd.concat(parts, ignore_index=True))
+                yield run(pd.concat(parts, ignore_index=True), None)
 
         return blocks.mapInPandas(run_part, schema)
     # the ONLY shuffle: the queries' (small) block set, grouped by
     # segment
-    return blocks.groupby("segment").applyInPandas(run, schema)
+    return blocks.groupby("segment").applyInPandas(
+        lambda pdf: run(pdf, None), schema)
 
 
 def _flat_conjuncts(nodes, scored: bool):
@@ -238,7 +253,7 @@ def _flat_conjuncts(nodes, scored: bool):
     A should-only Bool of Terms is a REQUIRED disjunction group
     ("(a OR b) AND (c OR d)"): members are kept as an entry LIST so
     duplicate members each score and count toward the group's msm, the
-    executor's semantics.  Groups whose msm cannot be satisfied, and
+    evaluator's semantics.  Groups whose msm cannot be satisfied, and
     any other inner shape, fall back."""
     terms, phrases, ranges, multis, groups = [], [], [], [], []
     for q in nodes:
@@ -281,8 +296,8 @@ def _flat_conjuncts(nodes, scored: bool):
 
 
 def classify(node: ast.Query) -> FlatShape | None:
-    """FlatShape for kernel-servable shapes, else None (executor
-    fallback).  Servable: Term; Bool over Terms/Ranges/Phrases in must
+    """FlatShape for kernel-servable shapes, else None (the exhaustive
+    plan).  Servable: Term; Bool over Terms/Ranges/Phrases in must
     + Terms in must_not + Terms in should (no mixing must and should);
     Filtered whose query is a servable term/and shape and whose filter
     is a Term/Range/Phrase or a Bool(must/must_not) of those (filter
@@ -330,7 +345,7 @@ def classify(node: ast.Query) -> FlatShape | None:
             # must + should: Lucene ReqOptSumScorer — the conjunction
             # drives candidates, optional Terms/Phrases add score where
             # they match and opt_msm of them must match.  Duplicate
-            # should clauses fall back (the executor counts each
+            # should clauses fall back (the evaluator counts each
             # occurrence toward msm; a keyed kernel cannot)
             opts: list = []
             opt_phr: list = []
@@ -358,7 +373,7 @@ def classify(node: ast.Query) -> FlatShape | None:
                 if len({(t, s) for t, s, _b in opt_phr}) != len(opt_phr):
                     return None
                 if node.effective_msm() > n_should:
-                    return None  # unsatisfiable — executor returns empty
+                    return None  # unsatisfiable — the evaluator returns empty
             return FlatShape("and", terms, phrases, len(terms), neg,
                              ranges, multis, opts,
                              node.effective_msm()
@@ -376,7 +391,7 @@ def classify(node: ast.Query) -> FlatShape | None:
             # clauses as constant-score term SETS (Lucene
             # CONSTANT_SCORE_REWRITE: contribution = boost if ANY
             # expansion term matches, bounded by boost).  Duplicate
-            # term/phrase clauses fall back (the executor counts each
+            # term/phrase clauses fall back (the evaluator counts each
             # occurrence toward msm; multis are per-entry, so their
             # duplicates are naturally correct)
             sterms: list = []
@@ -582,12 +597,13 @@ def _tfc(q: _Spec, tf: np.ndarray, dl: np.ndarray) -> np.ndarray:
     return tf_component_np(tf, dl, q.avgdl)
 
 
-def _dv_mask(q: _Spec, dvv: dict) -> np.ndarray:
-    """Row mask of the range predicates over decoded dv streams (one
-    value per posting; a doc's value is the same in every term's
-    stream, so masking rows masks docs)."""
+def _dv_mask(ranges, dvv: dict) -> np.ndarray:
+    """Row mask of the (Range, contrib) predicates over their fields'
+    values: decoded dv streams (one value per posting; a doc's value is
+    the same in every term's stream, so masking rows masks docs), or
+    the exhaustive evaluator's docs columns (NaN, a NULL, never matches)."""
     m = np.ones(next(iter(dvv.values())).size, dtype=bool)
-    for rg, _c in q.ranges:
+    for rg, _c in ranges:
         v = dvv[rg.field_name]
         if rg.min is not None:
             m &= (v >= rg.min) if rg.min_inclusive else (v > rg.min)
@@ -830,7 +846,7 @@ def _and_topk(q: _Spec, b: Blocks):
         tally(q.stats, "decoded_blocks", rare, sl.stop - sl.start)
         o = np.argsort(dec.d, kind="stable")
         if q.ranges:
-            o = o[_dv_mask(q, {c: v[o] for c, v in dec.dv.items()})]
+            o = o[_dv_mask(q.ranges, {c: v[o] for c, v in dec.dv.items()})]
         d = dec.d[o]
         parts = {rare: w_r * _tfc(q, dec.tf[o], dec.dl[o])}
         for t in others:
@@ -881,7 +897,7 @@ def _conjunct(q: _Spec, b: Blocks, kind: str, key, cand,
             return None
     tally(q.stats, "decoded_blocks", skey, rows.size)
     dec = decode(b, rows, dl=kind != "s", dv=dv_want)
-    keep = _dv_mask(q, dec.dv) if dv_want else slice(None)
+    keep = _dv_mask(q.ranges, dec.dv) if dv_want else slice(None)
     d = dec.d[keep]
     if kind == "t":
         return d, q.qmeta[key][0] * _tfc(q, dec.tf[keep], dec.dl[keep])
@@ -1150,8 +1166,8 @@ def _make_kernel(qmeta: dict, mode: str, msm: int, k: int, avgdl: float,
     else:
         shape = _maxscore_topk
 
-    def kernel(blocks: pd.DataFrame) -> pd.DataFrame:
-        got = []
+    def kernel(blocks: pd.DataFrame, docs=None) -> pd.DataFrame:
+        got = []  # a kernel reads no docs (KernelPlan.doc_cols is empty)
         if len(blocks):
             if "max_tfc" not in blocks.columns:  # a Spark batch
                 blocks = blocks.assign(max_tfc=impacts_max_tfc(
@@ -1168,17 +1184,22 @@ def _make_kernel(qmeta: dict, mode: str, msm: int, k: int, avgdl: float,
     return kernel
 
 
+def _mt_key(p) -> tuple:
+    if isinstance(p, ast.Wildcard):
+        return ("w", p.field_name, p.value, p.max_expansion)
+    return (
+        "f", p.field_name, p.value, p.max_edits, p.prefix_len,
+        p.max_expansion, p.transpositions,
+    )
+
+
 def _expand_scoped_many(index: BzzzIndex, nodes: list) -> list[list[str]]:
     """Wildcard/Fuzzy patterns → their exact dictionary expansions in
     ONE dictionary job (executor.expand_multiterm owns the semantics:
     per-pattern exact match, max_expansion capped by (df desc, term
     asc), field-scoped key spaces), memoized per index on the pattern's
     full option key."""
-    from bzzz_spark.query.executor import (
-        _mt_key,
-        _pattern_prefix,
-        expand_multiterm,
-    )
+    from bzzz_spark.query.executor import _pattern_prefix, expand_multiterm
 
     cache = getattr(index, "_expansion_cache", None)
     if cache is None:
@@ -1196,11 +1217,6 @@ def _expand_scoped_many(index: BzzzIndex, nodes: list) -> list[list[str]]:
         for p, exp in zip(fresh, exps):
             cache[_mt_key(p)] = exp
     return [cache[_mt_key(p)] for p in nodes]
-
-
-def _expand_scoped(index: BzzzIndex, node) -> list[str]:
-    """One Wildcard/Fuzzy pattern → its exact dictionary expansion."""
-    return _expand_scoped_many(index, [node])[0]
 
 
 def _any_plan(
@@ -1226,7 +1242,8 @@ def _multiterm_plan(
 ) -> KernelPlan:
     """Top-level Wildcard/Fuzzy: Lucene CONSTANT_SCORE_REWRITE — the
     dictionary expansion feeds the constant-score 'any' kernel."""
-    return _any_plan(index, _expand_scoped(index, node), node.boost, k)
+    return _any_plan(index, _expand_scoped_many(index, [node])[0],
+                     node.boost, k)
 
 
 def _constant_plan(
@@ -1240,7 +1257,7 @@ def _constant_plan(
     filter-context head term ("give me ANY k docs containing X")
     decodes O(k) docids instead of the term's full postings.  Needs no
     norms (constant score), so any indexed field serves.  Other inner
-    shapes return None → exhaustive executor."""
+    shapes return None → the exhaustive plan."""
     inner = node.query
     if isinstance(inner, ast.Term):
         members = [(inner.value, inner.field_name)]
@@ -1276,7 +1293,7 @@ def plan_candidates(
 ) -> "KernelPlan | None":
     """Driver-side planning for the block-max kernel path: dictionary
     lookups + kernel construction, NO postings work.  Returns None for
-    shapes the kernels can't serve (→ exhaustive executor), an
+    shapes the kernels can't serve (→ the exhaustive plan), an
     empty-marked plan for provably-empty queries, else the kernel and
     the term_ids whose blocks it needs.  Shared by both runtimes:
     the Spark one (wand_candidates, batch.search_many) runs plans
@@ -1288,14 +1305,14 @@ def plan_candidates(
     searcher (src/bzzz/index_directory.clj:129-132)."""
     # direct callers (wand_search / wand_candidates without going
     # through executor.search) must hit the same unknown-field error as
-    # the executor path — otherwise a Wildcard on an unindexed field
+    # every other path — otherwise a Wildcard on an unindexed field
     # would silently answer from the default text field
     from bzzz_spark.query.executor import validate_fields
 
     validate_fields(index, node)
     if isinstance(node, ast.Bool) and not node.must and not node.should:
         # only must_not clauses (or none) match nothing: Lucene's
-        # prohibited-only BooleanQuery, the executor's empty answer
+        # prohibited-only BooleanQuery, the evaluator's empty answer
         return _EMPTY_PLAN
     if isinstance(node, ast.Phrase) and node.boost >= 0:
         # a bare phrase is the one kernel-family shape classify() only
@@ -1312,9 +1329,7 @@ def plan_candidates(
     if shape is None:
         return None
     # extra-field terms are keyed '<field>:<token>' in the dictionary
-    # and score without norms — route them through the exhaustive
-    # executor (which owns the key mapping) rather than mis-looking
-    # them up here by bare value
+    # and score without norms — the exhaustive plan scores them
     # SCORED terms and phrases must target the text field: the kernel
     # scores from the text index's norms stream.  UNSCORED membership
     # (filter arms, must_not, the filter side of Filtered) may target
@@ -1339,8 +1354,8 @@ def plan_candidates(
         return None
     if shape.ranges:
         # range predicates ride the kernel only when the index inlines
-        # the fields as doc-values; otherwise the executor's docs-table
-        # plan answers them
+        # the fields as doc-values; otherwise the exhaustive plan reads
+        # them from the docs
         dvc = set(getattr(index.config, "docvalue_cols", ()) or ())
         if not all(r.field_name in dvc for r, _c in shape.ranges):
             return None
@@ -1352,7 +1367,7 @@ def plan_candidates(
     if (shape.phrases or shape.opt_phrases) and (
         "positions" not in index.postings.columns
     ):
-        # the executor path raises the loud store_positions error
+        # the exhaustive plan raises the loud store_positions error
         return None
     from bzzz_spark.query.executor import term_key
 
@@ -1410,7 +1425,7 @@ def plan_candidates(
     if shape.multis or shape.neg_multis or shape.opt_multis:
         # ONE dictionary job for ALL patterns — conjunct sets, exclusion
         # sets, optional sets — and one lookup for all expansion terms
-        # (the executor's batching discipline)
+        # (expand_multiterm's batching discipline)
         pat_nodes = (
             [m for m, _s in shape.multis]
             + list(shape.neg_multis)
@@ -1539,10 +1554,14 @@ def wand_search(
     index: BzzzIndex, node: ast.Query, size: int = 20, page: int = 0
 ) -> DataFrame | None:
     """Top-k via the block-max path; None if the shape is unsupported."""
+    cand = wand_candidates(index, node, page * size + size)
+    return None if cand is None else top_page(cand, size, page)
+
+
+def top_page(cand: DataFrame, size: int, page: int) -> DataFrame:
+    """Rows [page*size, (page+1)*size) of the candidates in (score desc,
+    docid asc) order — the merge of the per-segment top-k."""
     k = page * size + size
-    cand = wand_candidates(index, node, k)
-    if cand is None:
-        return None
     top = cand.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
     if page > 0:
         from pyspark.sql import Window

@@ -9,10 +9,10 @@ scheduling + Python-worker round-trip — so a latency-critical serving
 tier should not run queries AS Spark jobs at all.  This module is that
 tier: it opens the persisted index layout (build/checkpoint.py's
 docs/ dictionary/ stats/ postings/ parquet directories) with pyarrow
-and answers queries by running the SAME block-max kernels the Spark
-path uses (query/wand.py plan_candidates → KernelPlan), so the
-two runtimes are rank- and score-identical by construction — one
-planner, one kernel, two block-fetch strategies.
+and answers queries by running the SAME plans the Spark path runs
+(query/evaluate.py plan → KernelPlan), so the two runtimes are rank-
+and score-identical by construction — one planner, one kernel per
+plan, two block-fetch strategies.
 
 Division of labor at 100 TB:
   * Spark builds (and incrementally rebuilds) the index — the scan,
@@ -31,13 +31,13 @@ Division of labor at 100 TB:
     LocalIndex is the one-shard list): parse, validate, normalize and
     plan once, on shard 0; fetch + kernel per shard; one exact merge.
 
-Scope: the block-max kernel shapes (term / bool / phrase / dv-range /
-wildcard / fuzzy / constant-score / dis-max — everything
-plan_candidates serves) for scoring, plus facets (local_facet_counts),
-field sorts (local_sorted_search) and totals (local_total_hits) over
-the exhaustive matched set.  Shapes only the exhaustive executor
-answers (spatial sorts, custom/expression scoring and expression
-sorts) raise: they are analytics and belong on the Spark runtime.
+Scope: every query shape, through the one planner of both runtimes
+(query/evaluate.py plan: a block-max kernel plan for flat shapes, the
+exhaustive evaluator's plan for the rest), plus facets
+(local_facet_counts), field sorts (local_sorted_search) and totals
+(local_total_hits) over the full matched set.  Custom/expression
+scoring and expression sorts raise: they evaluate Spark SQL
+expressions, so they belong on the Spark runtime.
 """
 
 from __future__ import annotations
@@ -306,7 +306,8 @@ class LocalIndex:
         the docs table."""
         if col not in self._col_cache:
             pdf = (
-                self._docs_ds.to_table(columns=["docid", col])
+                self._docs_ds.to_table(columns=list(dict.fromkeys(
+                    ["docid", col])))
                 .to_pandas()
                 .sort_values("docid")
             )
@@ -315,6 +316,14 @@ class LocalIndex:
                 pdf[col].to_numpy(),
             )
         return self._col_cache[col]
+
+    def doc_frame(self, cols) -> pd.DataFrame | None:
+        """docid and the given stored columns of every doc, from the
+        cached doc_column arrays: the docs an exhaustive plan's kernel
+        reads (KernelPlan.doc_cols), None when it names none."""
+        if cols:
+            return pd.DataFrame({"docid": self.doc_column(cols[0])[0],
+                                 **{c: self.doc_column(c)[1] for c in cols}})
 
     def column_is_array(self, col: str) -> bool:
         """Whether a stored column is array-typed (memoized from the
@@ -374,28 +383,30 @@ def _per_shard(
     the query is planned (dictionary lookups, expansions, kernel
     construction) on shards[0] alone — the shards of one build share
     its dictionary and global stats, which ShardedIndex checks at open
-    — and each shard fetches its own blocks for the plan's kernel.
-    None for shapes the kernels can't serve."""
-    from bzzz_spark.query.wand import plan_candidates
+    — and each shard fetches its own blocks (and the docs columns the
+    plan names) for the plan's kernel.  None for plans that need the
+    Spark runtime (a custom score)."""
+    from bzzz_spark.query.evaluate import plan
 
-    plan = plan_candidates(shards[0], node, k)
-    if plan is None:
+    p = plan(shards[0], node, k)
+    if p.custom:
         return None
-    if plan.empty:
+    if p.empty:
         return [_EMPTY.copy() for _ in shards]
     # the kernel runs the segments SERIALLY in this process: a thread
     # pool over segments measured 2-7x SLOWER (the kernels interleave
     # many small numpy calls, so threads convoy on the GIL).
     # Cross-segment/shard parallelism belongs to processes — one
     # LocalIndex per shard, like one reference node per shard.
-    return [plan.kernel(s.fetch_blocks(plan.tids)) for s in shards]
+    return [p.kernel(s.fetch_blocks(p.tids), s.doc_frame(p.doc_cols))
+            for s in shards]
 
 
 def local_candidates(
     index: LocalIndex, node: ast.Query, k: int
 ) -> pd.DataFrame | None:
-    """Per-segment top-k (docid, score) via the shared KernelPlan; None
-    for shapes the kernels can't serve."""
+    """Per-segment top-k (docid, score) via the shared plan; None for
+    shapes only the Spark runtime serves."""
     got = _per_shard([index], node, k)
     return None if got is None else got[0]
 
@@ -413,9 +424,9 @@ def _candidates(
     shards: list[LocalIndex], node: ast.Query, k: int | None = None
 ) -> list[pd.DataFrame]:
     """_per_shard for the serving entry points, which raise on shapes
-    outside the kernel family.  k=None asks for every shard's FULL
-    matched set — the serving analog of executor.execute: the kernels
-    run with k = n_docs, so block-max pruning never cuts.  Facets,
+    outside the in-process family.  k=None asks for every shard's FULL
+    matched set — the serving analog of executor.execute: the plan
+    runs with k = n_docs, so block-max pruning never cuts.  Facets,
     field sorts and non-term totals consume that (Lucene also abandons
     early termination for those collectors)."""
     if k is None:
@@ -424,8 +435,8 @@ def _candidates(
     if got is None:
         raise ValueError(
             f"query shape {type(node).__name__} is outside the in-process "
-            "serving family (block-max kernel shapes); run it through "
-            "bzzz_spark.query.executor on the Spark runtime"
+            "serving family (custom scores evaluate Spark SQL); run it "
+            "through bzzz_spark.query.executor on the Spark runtime"
         )
     return got
 
@@ -454,10 +465,9 @@ def local_search(
 ) -> pd.DataFrame:
     """Top-k hits (docid, score), rank- and score-identical to the
     Spark path's executor.search: same parse → validate → normalize
-    pipeline, same per-segment kernels, same (score desc, docid asc)
-    order and page slice.  Raises for shapes outside the kernel family
-    — those are analytics queries that belong on the Spark runtime
-    (executor.search)."""
+    pipeline, same plan, same (score desc, docid asc) order and page
+    slice.  Raises for custom scores — those evaluate Spark SQL and
+    belong on the Spark runtime (executor.search)."""
     d, s, _ = _top([index], query, size, page)
     return pd.DataFrame({"docid": d, "score": s}, copy=False)
 

@@ -129,8 +129,7 @@ class Catalog:
     def delete_matching(self, name: str, predicate) -> int:
         """DELETE WHERE predicate (column expression).  The reference's
         delete-from-query over a parsed query; here the predicate is a
-        Column (compose it from the query AST via executor.execute +
-        anti-join for search-predicate deletes)."""
+        Column (for a search-query delete, see delete_by_docids)."""
         current = self.read(name)
         # one scan for the deleted count (not count(current)-count(keep),
         # which costs two extra full scans), then the rewrite scan
@@ -140,8 +139,10 @@ class Catalog:
 
     def delete_by_docids(self, name: str, matched: DataFrame, key: str) -> int:
         """Delete rows whose `key` appears in `matched` — the
-        delete-from-QUERY path: run executor.execute(index, query) and
-        pass the matched docids."""
+        delete-from-QUERY path: executor.execute(index, query) is the
+        query's full matched set (docid, score), from the same plan a
+        search runs; join it with the index's docs for the `key`
+        column and pass it here."""
         current = self.read(name)
         ids = matched.select(key).distinct()
         n = current.join(ids, key, "left_semi").count()

@@ -19,8 +19,9 @@ Consistency design:
   streaming job resumes the dense sequences correctly;
 - term_ids come from a PERSISTENT term map (term → term_id) that grows
   monotonically across batches — batch-local dictionaries would collide;
-- delta postings use the SAME block codec/segment layout, so query
-  kernels work unchanged;
+- delta postings use the SAME tokenization (indexer._full_tf: extra
+  fields, positions and doc-values, as the config asks) and the SAME
+  block codec/segment layout, so every query plan works unchanged;
 - a delta block stores its (tf, dl) impacts, not a score: queries
   derive every bound under the live index's current N, df and avgdl,
   so a live index is planned and pruned like a built one, and a
@@ -37,6 +38,7 @@ the sinks are Iceberg tables with snapshot-atomic commits.
 from __future__ import annotations
 
 import os
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,8 +49,9 @@ from bzzz_spark.build.ids import assign_sequential_ids
 from bzzz_spark.build.indexer import (
     BzzzIndex,
     IndexConfig,
+    _full_tf,
     build_posting_rows,
-    build_tf,
+    check_docvalue_cols,
     encode_postings,
 )
 
@@ -62,13 +65,6 @@ class StreamingIndexer:
         self.spark = spark
         self.out = out_dir
         self.cfg = cfg or IndexConfig()
-        if self.cfg.docvalue_cols:
-            # process_batch encodes the text terms alone, with no inline
-            # doc-value streams, so no delta could serve a dv range
-            raise ValueError(
-                "docvalue_cols are not supported on the streaming ingest "
-                "path; build the serving index with them instead"
-            )
 
     def _p(self, name: str) -> str:
         return f"{self.out}/{name}"
@@ -95,6 +91,7 @@ class StreamingIndexer:
         serialized each micro-batch through one task."""
         if batch.rdd.isEmpty():
             return
+        check_docvalue_cols(batch, self.cfg)
         next_docid = self._next_id("docs", "docid")
         rows = assign_sequential_ids(
             batch, list(self.cfg.key_cols), "docid"
@@ -108,7 +105,9 @@ class StreamingIndexer:
             return
         docs.write.mode("append").parquet(self._p("docs"))
 
-        tf = build_tf(docs)
+        # the batch build's tokenization: text, extra fields, positions
+        # and doc-values, as the config asks
+        tf = _full_tf(docs, self.cfg)
         batch_terms = tf.select("term").distinct()
         if os.path.exists(self._p("termmap")):
             known = self.spark.read.parquet(self._p("termmap"))
@@ -153,7 +152,9 @@ class StreamingIndexer:
         require_impacts(postings.columns, self.out)
         docs = spark.read.parquet(self._p("docs"))
         termmap = spark.read.parquet(self._p("termmap"))
-        tf = build_tf(docs)
+        # df and cf need the terms alone, not positions or doc-values
+        tf = _full_tf(docs, replace(self.cfg, store_positions=False,
+                                    docvalue_cols=()))
         dictionary = (
             tf.groupBy("term")
             .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))

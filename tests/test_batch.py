@@ -1,14 +1,15 @@
 """search_many parity: the batched one-job executor must return, per
 query, exactly the rows search() returns (same docids, same scores,
-same order) for every query shape in the batch — shared-scan shapes
-and fallback shapes alike, mixed in one call."""
+same order) for every query shape in the batch — kernel plans and
+exhaustive plans alike, mixed in one call."""
 
 import math
 
 from pyspark.sql import functions as F
 
-from bzzz_spark.query import ast
+from bzzz_spark.query import ast, wand
 from bzzz_spark.query.batch import search_many
+from bzzz_spark.query.evaluate import plan
 from bzzz_spark.query.executor import search
 from bzzz_spark.query.rewrite import normalize
 from bzzz_spark.query.wand import plan_candidates
@@ -126,7 +127,7 @@ def test_batch_field_terms(spark, small_transcripts):
     idx.postings.unpersist()
 
 
-def test_batch_job_count_is_constant(small_index):
+def test_batch_job_count_is_constant(small_index, monkeypatch):
     """The defining property: Spark job count is a function of the PLAN
     SHAPE (AQE materializes each shuffle stage as a job), not of the
     number of queries — a 15-query batch must not run more jobs than a
@@ -146,15 +147,24 @@ def test_batch_job_count_is_constant(small_index):
         return len(tracker.getJobIdsForGroup(group))
 
     small = {k: BATCH[k] for k in ["term_head", "and2", "must_not"]}
-    # Range/MatchAll without doc-values take the per-query executor on
-    # this index (no docvalue_cols).  Every other query has a kernel plan
-    wide = {k: v for k, v in BATCH.items() if k not in
-            ("term_range", "range_only", "match_all", "range_not")}
-    for qid, node in wide.items():
-        assert plan_candidates(small_index, normalize(node), 10) \
-            is not None, qid
+    # every query plans through the one planner entry — a kernel plan,
+    # or the exhaustive plan for Range/MatchAll without doc-values on
+    # this index (no docvalue_cols) — and every plan that can match
+    # runs in the batch's one run_plans call
+    wide = BATCH
+    runs, run_plans = [], wand.run_plans
+
+    def spy(index, plans):
+        runs.append(set(plans))
+        return run_plans(index, plans)
+
+    monkeypatch.setattr(wand, "run_plans", spy)
     n_small = jobs_for(small, "batch-probe-small")
     n_full = jobs_for(wide, "batch-probe-full")
+    assert runs[-1] == {
+        qid for qid, node in wide.items()
+        if not plan(small_index, normalize(node), 10).empty
+    } == set(wide) - {"term_missing", "only_must_not", "missing_must"}
     assert n_full <= n_small + 2, (
         f"job count grew with batch width: {n_small} jobs for "
         f"{len(small)} queries but {n_full} for {len(wide)}"
@@ -262,7 +272,7 @@ def test_batch_phrases_share_one_positional_scan(spark, small_transcripts):
         "plain": ast.Term("error"),
     }
     # all these shapes have a kernel plan, except a phrase under
-    # must_not, which takes the executor
+    # must_not, which takes the exhaustive plan
     for qid, node in queries.items():
         if qid not in ("ph_not", "ph_oov_not"):
             assert plan_candidates(idx, normalize(node), 10) is not None, qid
@@ -305,7 +315,7 @@ def test_batch_multiterm_shared_scan_parity(small_index):
         ),
         "plain": ast.Term("error"),
     }
-    # all these shapes have a kernel plan, not the executor fallback
+    # all these shapes have a kernel plan, not the exhaustive one
     for qid, node in queries.items():
         assert plan_candidates(small_index, normalize(node), 10) is not None, qid
     _assert_batch_matches(small_index, queries)

@@ -131,6 +131,42 @@ def test_streaming_incremental_index(spark, tmp_path, small_pdf):
     assert got2 == want
 
 
+@pytest.mark.parametrize("opts, node", [
+    ({"extra_fields": (("role", "keyword"),)}, ast.Term("user", "role")),
+    ({"store_positions": True}, ast.Phrase(["the", "error"])),
+    ({"docvalue_cols": ("turn_idx",)},
+     ast.Bool(must=[ast.Term("the"), ast.Range("turn_idx", min=2, max=6)])),
+], ids=["extra_field", "positions", "docvalues"])
+def test_streaming_ingest_indexes_what_the_config_asks(spark, tmp_path,
+                                                       opts, node):
+    """A live index tokenizes each micro-batch as a batch build does:
+    extra-field terms, positions and inline doc-values are indexed, so
+    a field term, a phrase and a doc-value range conjunction answer
+    like the oracle (the range on a kernel plan)."""
+    from bzzz_spark.oracle.pyoracle import PyIndex
+    from bzzz_spark.query.rewrite import normalize
+    from bzzz_spark.query.wand import plan_candidates
+
+    pdf = synth_transcripts_pdf(n_conv=10, seed=42).sort_values(
+        ["conv_id", "turn_idx"]).reset_index(drop=True)
+    cfg = IndexConfig(block_size=16, segment_size=64, num_partitions=2,
+                      **opts)
+    ing = StreamingIndexer(spark, str(tmp_path / "live"), cfg)
+    half = len(pdf) // 2
+    for i, chunk in enumerate((pdf.iloc[:half], pdf.iloc[half:])):
+        ing.process_batch(to_spark(spark, chunk), epoch_id=i)
+    live = ing.live_index()
+    if cfg.docvalue_cols:
+        assert plan_candidates(live, normalize(node), 10) is not None
+    want = PyIndex(pdf.to_dict("records"),
+                   extra_fields=cfg.extra_fields).search(node, size=10)
+    got = [(r["docid"], r["score"])
+           for r in search(live, node, size=10).collect()]
+    assert want and [d for d, _ in got] == [d for d, _ in want]
+    for (_, g), (_, w) in zip(got, want):
+        assert g == pytest.approx(w, rel=1e-9)
+
+
 def test_kv_store_crud(spark, catalog):
     """S11 deterministic subset: named maps, get/put/delete semantics of
     the reference's /_kv MapDB files (kv.clj:25-51) minus closure eval."""

@@ -69,6 +69,49 @@ SHAPES = [
         ast.Term("the"),
     ]),
 ]
+# shapes without a block-max kernel: the exhaustive plan
+EXHAUSTIVE = {
+    "or_of_and": ast.Bool(should=[
+        ast.Term("error"), ast.Bool(must=[ast.Term("data"), ast.Term("the")]),
+    ]),
+    "and_not_and": ast.Bool(must=[ast.Term("error")], must_not=[
+        ast.Bool(must=[ast.Term("the"), ast.Term("data")]),
+    ]),
+    "and_not_phrase": ast.Bool(must=[ast.Term("the")],
+                               must_not=[ast.Phrase(["the", "error"])]),
+    "match_all": ast.MatchAll(boost=2.0),
+    "range": ast.Range("turn_idx", min=2, max=5),
+    "range_no_docvalues": ast.Range("dl", min=30),
+    "no_zero_score": ast.NoZeroScore(ast.Bool(should=[
+        ast.Term("error"), ast.Term("data", boost=0.0),
+    ])),
+    "no_norm": ast.NoNorm(ast.Bool(should=[
+        ast.Term("error"), ast.Phrase(["the", "error"]),
+    ])),
+    "random_score": ast.RandomScore(ast.Term("error"), base=1.0, seed=7),
+    "dismax_of_bool": ast.DisMax(queries=[
+        ast.Term("error"), ast.Bool(must=[ast.Term("the"), ast.Term("data")]),
+    ], tie_breaker=0.3),
+    "constant_score_of_and": ast.ConstantScore(
+        ast.Bool(must=[ast.Term("error"), ast.Term("the")]), boost=3.0),
+    "negative_boost": ast.Term("error", boost=-1.5),
+    "filtered_not_phrase": ast.Filtered(
+        query=ast.Term("error"), filter=ast.Bool(
+            must=[ast.Term("the")], must_not=[ast.Phrase(["the", "error"])],
+        )),
+    "field_term": ast.Term("assistant", "role"),
+}
+SHAPE_IDS = [type(n).__name__ for n in SHAPES] + list(EXHAUSTIVE)
+SHAPES += list(EXHAUSTIVE.values())
+
+
+@pytest.fixture(scope="module")
+def served_oracle(small_pdf):
+    """The oracle of the served index: its extra field included."""
+    from bzzz_spark.oracle.pyoracle import PyIndex
+
+    return PyIndex(small_pdf.to_dict("records"),
+                   extra_fields=(("role", "keyword"),))
 
 
 def _hits(df):
@@ -85,7 +128,7 @@ def _assert_same(got, want, node):
         assert math.isclose(g, w, rel_tol=1e-9), f"score: {node}"
 
 
-@pytest.mark.parametrize("node", SHAPES, ids=lambda n: type(n).__name__)
+@pytest.mark.parametrize("node", SHAPES, ids=SHAPE_IDS)
 def test_local_matches_spark(served, node):
     sidx, lix = served
     want = _hits(search(sidx, node, size=10))
@@ -96,19 +139,20 @@ def test_local_matches_spark(served, node):
 def test_batch_matches_local_exactly(served):
     """search_many on the Spark reader and local_search on the
     in-process reader of one on-disk index run the same plans on the
-    same blocks: docids and scores are equal, not merely close."""
+    same blocks (and docs): docids and scores are equal, not merely
+    close — for SHAPES and the batch tests' BATCH."""
     from bzzz_spark.query.batch import search_many
+    from tests.test_batch import BATCH
 
     sidx, lix = served
-    rows = search_many(
-        sidx, {str(i): n for i, n in enumerate(SHAPES)}, size=10
-    ).collect()
+    queries = {**{str(i): n for i, n in enumerate(SHAPES)}, **BATCH}
+    rows = search_many(sidx, queries, size=10).collect()
     got = {}
     for r in rows:
         got.setdefault(r["query_id"], []).append((r["docid"], r["score"]))
-    for i, node in enumerate(SHAPES):
+    for qid, node in queries.items():
         want = _lhits(local_search(lix, node, size=10))
-        assert got.get(str(i), []) == want, node
+        assert got.get(qid, []) == want, node
 
 
 def test_local_paging_matches_spark(served):
@@ -282,19 +326,15 @@ def test_refresh_picks_up_new_generation(spark, small_transcripts,
     assert len(again) == len(before)
 
 
-def test_local_matches_oracle_fuzz(served, small_oracle):
+def test_local_matches_oracle_fuzz(served, served_oracle):
     """Score parity against the THIRD engine (the pure-Python oracle)
     over a mixed battery — not just Spark-vs-local agreement."""
     for node in SHAPES:
-        if isinstance(node, (ast.Wildcard, ast.Fuzzy, ast.ConstantScore,
-                             ast.Filtered)):
-            continue  # oracle API coverage differs for these; the
-            # Spark-parity test above already pins them
-        want = small_oracle.search(node, size=10)
+        want = served_oracle.search(node, size=10)
         got = _lhits(local_search(served[1], node, size=10))
         assert [d for d, _ in got] == [d for d, _ in want], node
         for (_, g), (_, w) in zip(got, want):
-            assert math.isclose(g, w, rel_tol=1e-6), node
+            assert math.isclose(g, w, rel_tol=1e-9), node
 
 
 @pytest.fixture(scope="module")
@@ -315,31 +355,35 @@ def thin_segments(small_transcripts, tmp_path_factory):
     return LocalIndex(out)
 
 
-@pytest.mark.parametrize("node", SHAPES, ids=lambda n: type(n).__name__)
-def test_kernel_splits_segments(thin_segments, small_oracle, node):
-    """One kernel call over a multi-segment block set returns exactly the
-    rows of one call per segment, concatenated in segment order."""
+@pytest.mark.parametrize("node", SHAPES, ids=SHAPE_IDS)
+def test_kernel_splits_segments(thin_segments, served_oracle, node):
+    """One kernel call over a multi-segment block set (and docs) returns
+    exactly the rows of one call per segment, concatenated in segment
+    order."""
+    from bzzz_spark.query.evaluate import plan
     from bzzz_spark.query.rewrite import normalize
-    from bzzz_spark.query.wand import plan_candidates
 
     lix = thin_segments
-    n = normalize(node)
-    if isinstance(n, ast.Phrase):
-        n = ast.Bool(must=[n])  # as local_candidates serves a bare phrase
-    plan = plan_candidates(lix, n, 10)
-    if not plan.empty:
-        blocks = lix.fetch_blocks(plan.tids)
-        assert blocks["segment"].nunique() > 1, node
-        whole = plan.kernel(blocks)
+    p = plan(lix, normalize(node), 10)
+    if not p.empty:
+        blocks = lix.fetch_blocks(p.tids)
+        docs = lix.doc_frame(p.doc_cols)
+        seg = lix.config.segment_size
+        segs = set(blocks["segment"].tolist())
+        if docs is not None:
+            segs |= set((docs["docid"] // seg).tolist())
+        assert len(segs) > 1, node
+        whole = p.kernel(blocks, docs)
         per = pd.concat(
-            [plan.kernel(g) for _, g in blocks.groupby("segment")],
+            [p.kernel(blocks[blocks["segment"] == g],
+                      None if docs is None
+                      else docs[docs["docid"] // seg == g])
+             for g in sorted(segs)],
             ignore_index=True,
         )
         assert whole["docid"].tolist() == per["docid"].tolist(), node
         assert whole["score"].tolist() == per["score"].tolist(), node
-    if isinstance(node, ast.Filtered):
-        return  # the oracle indexes no keyword field (role)
-    want = small_oracle.search(node, size=10)
+    want = served_oracle.search(node, size=10)
     got = _lhits(local_search(lix, node, size=10))
     assert [d for d, _ in got] == [d for d, _ in want], node
     for (_, g), (_, w) in zip(got, want):

@@ -331,7 +331,8 @@ def test_phrase_kernel_prunes_head_term_blocks(spark):
     TermPayloadClojureScoreQuery.java:237-257 at block granularity."""
     import pandas as pd
     from bzzz_spark.fixtures import to_spark
-    from bzzz_spark.query.phrase import phrase_segment_kernel
+    from bzzz_spark.query.blocks import Blocks
+    from bzzz_spark.query.phrase import phrase_arrays
 
     # 200 docs all containing 'head'; 'rare head' occurs in exactly 2
     texts = []
@@ -361,8 +362,9 @@ def test_phrase_kernel_prunes_head_term_blocks(spark):
         F_col("term_id").isin([int(t) for t in tids])
     ).toPandas()
     stats: dict = {}
-    out = phrase_segment_kernel(blocks, tids, slop=0, stats=stats)
-    assert sorted(out["docid"].tolist()) == sorted(
+    docids, _ptf, _dl = phrase_arrays(Blocks.from_frame(blocks), tids,
+                                      slop=0, stats=stats)
+    assert sorted(docids.tolist()) == sorted(
         r["docid"] for r in search(
             idx, ast.Phrase(["rare", "head"]), size=100
         ).collect()

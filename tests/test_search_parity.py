@@ -163,16 +163,32 @@ def test_implicit_and_of_multikey_map(small_index, small_oracle):
 
 
 def test_custom_score(small_index, small_oracle):
-    node = ast.CustomScore(ast.Term("the"), expression="sqrt(dl)", replace=False)
-    got = [
-        (r["docid"], r["score"]) for r in search(small_index, node, size=10).collect()
-    ]
-    want = small_oracle.search(
-        node, size=10, custom_fns={"sqrt(dl)": lambda doc, s: math.sqrt(doc["dl"])}
-    )
-    assert [d for d, _ in got] == [d for d, _ in want]
-    for (_, gs), (_, ws) in zip(got, want):
-        assert math.isclose(gs, ws, rel_tol=1e-9)
+    custom = ast.CustomScore(ast.Term("the"), expression="sqrt(dl)",
+                             replace=False)
+    # at the root, and nested in a Bool: the subtree reaches the plan as
+    # a docs column
+    nested = ast.Bool(must=[ast.Term("error")],
+                      should=[custom, ast.Term("data")])
+    for node in (custom, nested):
+        got = [
+            (r["docid"], r["score"])
+            for r in search(small_index, node, size=10).collect()
+        ]
+        want = small_oracle.search(
+            node, size=10,
+            custom_fns={"sqrt(dl)": lambda doc, s: math.sqrt(doc["dl"])},
+        )
+        assert want and [d for d, _ in got] == [d for d, _ in want], node
+        for (_, gs), (_, ws) in zip(got, want):
+            assert math.isclose(gs, ws, rel_tol=1e-9)
+
+
+def test_q_no_norm(small_index, small_oracle):
+    """Below NoNorm, terms score with dl := avgdl (BM25 b = 0)."""
+    node = ast.NoNorm(ast.Bool(should=[ast.Term("error"), ast.Term("data")]))
+    _assert_parity(small_index, small_oracle, node)
+    normed = small_oracle.search(node.query, size=10)
+    assert small_oracle.search(node, size=10) != normed
 
 
 @pytest.mark.parametrize("n_part", [1, 3])

@@ -630,7 +630,7 @@ def test_phrase_in_bool_rides_kernel(spark, small_transcripts,
                                      small_oracle):
     """Bool(must=[Terms..., Phrase...]) rides the mixed conjunction
     kernel: the phrase is a pseudo-term whose candidate stream is
-    phrase_segment_kernel output — rank+score identical to the oracle
+    phrase.phrase_arrays output — rank+score identical to the oracle
     and the exhaustive executor, incl. sloppy phrases, must_not, and
     phrase-only conjunctions."""
     from bzzz_spark.query.wand import wand_candidates
