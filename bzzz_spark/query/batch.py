@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from bzzz_spark.build.indexer import BzzzIndex
 from bzzz_spark.query import ast, wand
-from bzzz_spark.query.evaluate import lookup, plan
+from bzzz_spark.query.evaluate import plan
 from bzzz_spark.query.executor import validate_fields
 from bzzz_spark.query.rewrite import normalize
 
@@ -55,7 +55,7 @@ def search_many(
         node = q if isinstance(q, ast.Query) else ast.parse_query(q)
         validate_fields(index, node)
         nodes[qid] = normalize(node)
-    lookup(index, nodes.values())  # fills the memos planning reads
+    wand.lookup(index, nodes.values())  # fills the memos planning reads
 
     plans = {qid: plan(index, node, (page + 1) * size)
              for qid, node in nodes.items()}

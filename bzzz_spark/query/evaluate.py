@@ -33,9 +33,10 @@ from bzzz_spark.query.wand import (
     _EMPTY_PLAN,
     KernelPlan,
     _dv_mask,
-    _expand_scoped_many,
+    _find,
     _mt_key,
     _topk,
+    lookup,
 )
 
 _NONE = (np.empty(0, dtype=np.int64), np.empty(0))
@@ -70,41 +71,12 @@ class _Input:
         return _NONE[0] if self.b is None else self.b.rows_of(tids)
 
 
-def _find(d: np.ndarray, x: np.ndarray) -> tuple:
-    """Positions of ``x`` in the sorted unique ``d``, and where they hit."""
-    pos = np.searchsorted(d, x)
-    if d.size == 0:
-        return pos, np.zeros(x.size, dtype=bool)
-    return pos, d[np.minimum(pos, d.size - 1)] == x
-
-
 def _union(parts: list) -> np.ndarray:
     return np.unique(np.concatenate([d for d, _s in parts] or [_NONE[0]]))
 
 
 def _const(d: np.ndarray, boost: float) -> tuple:
     return d, np.full(d.size, float(boost))
-
-
-def lookup(index, nodes) -> tuple[dict, dict]:
-    """Every term, phrase leg and Wildcard/Fuzzy pattern of the query
-    trees in one dictionary lookup and one expansion job (both memoized
-    per index): ({key: (term_id, df)} for the keys present, {pattern
-    key: its expansion})."""
-    from bzzz_spark.query.executor import term_key
-
-    keys, patterns = set(), []
-    for n in (n for node in nodes for n in ast.iter_nodes(node)):
-        if isinstance(n, ast.Term):
-            keys.add(term_key(index, n.field_name, n.value))
-        elif isinstance(n, ast.Phrase):
-            keys.update(term_key(index, n.field_name, t) for t in n.terms)
-        elif isinstance(n, (ast.Wildcard, ast.Fuzzy)):
-            patterns.append(n)
-    exps = _expand_scoped_many(index, patterns) if patterns else []
-    keys.update(t for e in exps for t in e)
-    meta = index.lookup_terms(sorted(keys)) if keys else {}
-    return meta, {_mt_key(p): e for p, e in zip(patterns, exps)}
 
 
 class _Compiler:

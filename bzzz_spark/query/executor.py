@@ -25,6 +25,7 @@ join the plan's matched set (execute) with the docs table.
 
 from __future__ import annotations
 
+import numbers
 import re
 
 from pyspark.sql import DataFrame, Window
@@ -265,11 +266,37 @@ def indexed_fields(index: BzzzIndex) -> set[str]:
     return out
 
 
+def _column_type(index: BzzzIndex, col: str) -> str | None:
+    """A docs column's type as a Range reads it: "number", "string",
+    another type's name, or None when the docs lack the column — from
+    the docs schema (a LocalIndex reads its parquet schema)."""
+    if hasattr(index, "column_type"):
+        return index.column_type(col)
+    from pyspark.sql.types import NumericType, StringType
+
+    fields = {f.name: f.dataType for f in index.docs.schema.fields}
+    if col not in fields:
+        return None
+    t = fields[col]
+    if isinstance(t, NumericType):
+        return "number"
+    return "string" if isinstance(t, StringType) else t.simpleString()
+
+
+def _bound_fits(kind: str, v) -> bool:
+    if kind == "number":
+        return isinstance(v, numbers.Real) and not isinstance(v, bool)
+    return kind == "string" and isinstance(v, str)
+
+
 def validate_fields(index: BzzzIndex, node: ast.Query) -> None:
     """Unknown field names must raise, not silently score against the
     default text index (the reference carries per-field indexes —
     src/bzzz/index_store.clj:36-49 — so `role:assistant` means the role
-    field; answering it from the text field would be a wrong answer)."""
+    field; answering it from the text field would be a wrong answer).
+    A Range must name a docs column, and its bounds must fit the
+    column's type: numbers for a numeric column, strings for a string
+    column; a column of any other type takes no bound."""
     known = indexed_fields(index)
     bad = sorted(
         {
@@ -284,6 +311,23 @@ def validate_fields(index: BzzzIndex, node: ast.Query) -> None:
             f"query references unindexed field(s) {bad}; "
             f"this index answers fields {sorted(known)}"
         )
+    for n in ast.iter_nodes(node):
+        if not isinstance(n, ast.Range):
+            continue
+        kind = _column_type(index, n.field_name)
+        if kind is None:
+            raise ValueError(
+                f"range on field {n.field_name!r}: the docs have no such "
+                "column"
+            )
+        for v in (n.min, n.max):
+            if v is not None and not _bound_fits(kind, v):
+                raise ValueError(
+                    f"range on field {n.field_name!r} of column type "
+                    f"{kind}: bound {v!r} does not fit (a number column "
+                    "takes int/float bounds, a string column str bounds, "
+                    "other columns none)"
+                )
 
 
 def execute(index: BzzzIndex, query: ast.Query | dict | str) -> DataFrame:

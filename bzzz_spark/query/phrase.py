@@ -59,7 +59,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from bzzz_spark.query.blocks import Blocks, decode, overlapping, tally
+from bzzz_spark.query.blocks import Blocks, Decoded, decode, overlapping, tally
 from bzzz_spark.query.phrase_repeats import repeat_groups
 
 def _exact_freqs(legs, n_cand: int):
@@ -291,9 +291,31 @@ def _sloppy_freqs_k(legs, slop: int, n_cand: int):
     return np.flatnonzero(got), freq[got]
 
 
+def _decode_legs(b: Blocks, rows: np.ndarray, dl: bool,
+                 cache: dict | None, stats: dict | None, tid: int) -> Decoded:
+    """decode(b, rows, positions=True), counted in ``stats``; with a
+    ``cache`` (row → its block's streams) each block decodes once."""
+    if cache is None:
+        tally(stats, "decoded_blocks", tid, rows.size)
+        return decode(b, rows, dl=dl, positions=True)
+    miss = np.array([r for r in rows.tolist() if r not in cache], np.int64)
+    tally(stats, "decoded_blocks", tid, miss.size)
+    if miss.size:
+        dec = decode(b, miss, positions=True)
+        ends = np.cumsum(b.count[miss])
+        at = np.concatenate(([0], np.cumsum(dec.tf)))  # positions offsets
+        for r, lo, hi in zip(miss.tolist(), ends - b.count[miss], ends):
+            cache[r] = (dec.d[lo:hi], dec.tf[lo:hi], dec.dl[lo:hi],
+                        dec.pos[at[lo]:at[hi]])
+    d, tf, dls, pos = (np.concatenate(x)
+                       for x in zip(*(cache[r] for r in rows.tolist())))
+    return Decoded(d, tf, dls, {}, pos)
+
+
 def phrase_arrays(
     b: Blocks, tid_order: list[int], slop: int,
     stats: dict | None = None, restrict: np.ndarray | None = None,
+    cache: dict | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
     """One segment's phrase evaluation (or a whole block set ordered by
     term_id, as query.evaluate passes it): sorted (docid, ptf, dl)
@@ -308,7 +330,9 @@ def phrase_arrays(
     from an enclosing conjunction (the WAND mixed-conjunction path —
     `error AND "stack trace"` hands the phrase only error's survivors).
     Every leg's blocks — including the rarest — are pruned against it,
-    and the output docids are a subset of it."""
+    and the output docids are a subset of it.  ``cache`` (a dict kept
+    per segment by a caller that matches it several times) decodes each
+    block once across calls."""
     if restrict is not None and restrict.size == 0:
         return None
     uniq = list(dict.fromkeys(int(t) for t in tid_order))
@@ -331,8 +355,7 @@ def phrase_arrays(
             rows = overlapping(b, rows, bound_to)
             if rows.size == 0:
                 return None
-        tally(stats, "decoded_blocks", tid, rows.size)
-        dec = decode(b, rows, dl=i == 0, positions=True)
+        dec = _decode_legs(b, rows, i == 0, cache, stats, tid)
         d, tf = dec.d, dec.tf
         decoded[tid] = (d, tf, dec.pos)
         if i == 0:

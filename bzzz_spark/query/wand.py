@@ -19,16 +19,23 @@ segment or many), converts it ONCE to a numpy block set
 is a contiguous slice), runs each segment's slice through one function
 per query shape (_any_topk, _term_topk, _and_topk, _mixed_and_topk,
 _maxscore_topk) and returns the per-segment top-k concatenated as one
-(docid, score) frame.  The shapes share one block decoder
-(blocks.decode), one "blocks overlapping the candidates" helper
-(blocks.overlapping, cached per term by _Lazy) and one stats recorder
-(blocks.tally); pandas appears only at entry and exit.  A term's bound
+(docid, score) frame.  The shapes take lists of clauses (_Clause: a
+term, a constant-score set, a required group or a phrase), each
+resolved from the query once per plan and combined without asking its
+kind, as Lucene's conjunction, ReqOptSum and WAND scorers combine child
+Scorers.  A clause owns its term ids, its weight, its stats key, its
+upper bound on a segment and its matcher (_Match): the docids and
+contributions of its matches among sorted candidates, decoding only
+the blocks that overlap them (blocks.overlapping), each block once per
+segment (phrase legs through phrase.phrase_arrays).  Every decode is
+counted by one stats recorder (blocks.tally); pandas appears only at
+entry and exit.  A term's bound
 on a block is its weight w = idf · boost times the block's max_tfc,
 derived at query time from the block's stored (tf, dl) impacts
 (blocks.impacts_max_tfc), so a live streaming index, whose N and avgdl
 move with every micro-batch, prunes as safely as a built one.  Every
 pruning bound is rounded up (_up), so no bound sits below a score it
-bounds.
+bounds (tests/test_clause_bounds.py checks every clause kind).
 
 Pruning by query shape (all results EXACT — pruning never changes them;
 tests cross-check against the exhaustive plan and the oracle):
@@ -80,6 +87,7 @@ they run these kernels, with no pruning.
 from __future__ import annotations
 
 from dataclasses import dataclass, field as _dc_field
+from dataclasses import replace as _dc_replace
 from typing import Iterator
 
 import numpy as np
@@ -168,10 +176,11 @@ class KernelPlan:
     the query (weights, bounds, exclusions, phrase specs) is already
     closed over inside `kernel`, so the plan is runtime-agnostic — the
     Spark path feeds it a term_id-pruned postings DataFrame, the
-    in-process serving path (bzzz_spark.serve.local) feeds it pyarrow
-    parquet reads of the same blocks.  empty=True marks queries proven
-    empty at plan time (out-of-vocabulary must-terms, unsatisfiable
-    minimum_should_match, zero-doc index).  The kernel is called as
+    in-process serving path (bzzz_spark.serve.local) the same blocks
+    from its footer-mapped parquet row groups (LocalIndex.fetch_blocks).
+    empty=True marks queries proven empty at plan time
+    (out-of-vocabulary must-terms, unsatisfiable minimum_should_match,
+    zero-doc index).  The kernel is called as
     kernel(blocks, docs): docs holds docid and the doc_cols (None when
     there are none; kernel plans name none), which for the (column,
     CustomScore) pairs of custom only Spark computes (executor.plan_docs)."""
@@ -248,7 +257,7 @@ def _flat_conjuncts(nodes, scored: bool):
     rewrite pass's Filtered → Bool(must=[q, f@boost=0]) lowering keeps
     field-scoped filter arms on the kernel (unscored membership needs
     no norms and may target any indexed field; a scored=True zero-boost
-    term would trip wand_candidates' text-field-only check).
+    term would trip plan_candidates' text-field-only check).
 
     A should-only Bool of Terms is a REQUIRED disjunction group
     ("(a OR b) AND (c OR d)"): members are kept as an entry LIST so
@@ -257,22 +266,16 @@ def _flat_conjuncts(nodes, scored: bool):
     any other inner shape, fall back."""
     terms, phrases, ranges, multis, groups = [], [], [], [], []
     for q in nodes:
+        if not getattr(q, "boost", -1.0) >= 0:
+            return None  # a negative boost, or a node without one
         s = scored and q.boost != 0.0
         if isinstance(q, ast.Term):
-            if q.boost < 0:
-                return None
             terms.append((q.value, q.field_name, q.boost, s))
         elif isinstance(q, ast.Range):
-            if q.boost < 0:
-                return None
             ranges.append((q, q.boost if s else 0.0))
         elif isinstance(q, ast.Phrase):
-            if q.boost < 0:
-                return None
             phrases.append((tuple(q.terms), q.slop, q.boost, s))
         elif isinstance(q, (ast.Wildcard, ast.Fuzzy)):
-            if q.boost < 0:
-                return None
             multis.append((q, s))
         elif (
             isinstance(q, ast.Bool)
@@ -295,6 +298,38 @@ def _flat_conjuncts(nodes, scored: bool):
     return terms, phrases, ranges, multis, groups
 
 
+def _shoulds(nodes, scale: float = 1.0):
+    """Should (or dis-max) clauses → (terms (value, field, boost),
+    phrases (term_values, slop, boost), Wildcard/Fuzzy nodes), each
+    boost times ``scale``, or None when a clause is out of kernel scope
+    (another kind, a negative boost) or a phrase repeats (the evaluator
+    counts each occurrence toward msm; the kernel cannot).  A pattern is
+    a constant-score term set (Lucene CONSTANT_SCORE_REWRITE): matching
+    ANY expansion adds its boost and counts 1 toward msm, so duplicates
+    are naturally correct.  A scaled pattern is a copy: never mutate the
+    caller's AST."""
+    terms, phrases, multis = [], [], []
+    for q in nodes:
+        if not getattr(q, "boost", -1.0) >= 0:
+            return None
+        b = q.boost if scale == 1.0 else q.boost * scale
+        if isinstance(q, ast.Term):
+            terms.append((q.value, q.field_name, b))
+        elif isinstance(q, ast.Phrase):
+            phrases.append((tuple(q.terms), q.slop, b))
+        elif isinstance(q, (ast.Wildcard, ast.Fuzzy)):
+            multis.append(q if scale == 1.0 else _dc_replace(q, boost=b))
+        else:
+            return None
+    if len({(t, s) for t, s, _b in phrases}) != len(phrases):
+        return None
+    return terms, phrases, multis
+
+
+def _unique_terms(terms) -> bool:
+    return len({(v, f) for v, f, *_ in terms}) == len(terms)
+
+
 def classify(node: ast.Query) -> FlatShape | None:
     """FlatShape for kernel-servable shapes, else None (the exhaustive
     plan).  Servable: Term; Bool over Terms/Ranges/Phrases in must
@@ -313,7 +348,7 @@ def classify(node: ast.Query) -> FlatShape | None:
     streams: a term conjunct, a set conjunct (every member posting of
     a doc inlines the same value, so the row mask before the union is
     exact), or a group conjunct (mask per member decode, before the
-    msm gate).  When the ONLY conjuncts are phrases, wand_candidates
+    msm gate).  When the ONLY conjuncts are phrases, plan_candidates
     synthesizes the rarest required phrase leg as an unscored term
     conjunct to carry the streams."""
     if isinstance(node, ast.Term):
@@ -326,7 +361,7 @@ def classify(node: ast.Query) -> FlatShape | None:
         # must_not arms never score, so any leaf whose MATCH SET the
         # kernel can resolve to a term-id union is servable: Terms and
         # Wildcard/Fuzzy patterns (exclusion = the expansion set — the
-        # neg_tids union IS Lucene's rewritten BooleanQuery exclusion)
+        # must_not set IS Lucene's rewritten BooleanQuery exclusion)
         neg, neg_multis = [], []
         for q in node.must_not:
             if isinstance(q, ast.Term) and q.boost >= 0:
@@ -343,80 +378,42 @@ def classify(node: ast.Query) -> FlatShape | None:
             if not (terms or phrases or multis or groups):
                 return None  # pure-range conjunction: docs-table plan
             # must + should: Lucene ReqOptSumScorer — the conjunction
-            # drives candidates, optional Terms/Phrases add score where
-            # they match and opt_msm of them must match.  Duplicate
-            # should clauses fall back (the evaluator counts each
-            # occurrence toward msm; a keyed kernel cannot)
-            opts: list = []
-            opt_phr: list = []
-            opt_mul: list = []
+            # drives candidates, optional clauses add score where they
+            # match and opt_msm of them must match.  Duplicate should
+            # terms fall back, like duplicate phrases
+            opts, opt_phr, opt_mul = [], [], []
             if node.should:
-                for q in node.should:
-                    if isinstance(q, ast.Term) and q.boost >= 0:
-                        opts.append((q.value, q.field_name, q.boost))
-                    elif isinstance(q, ast.Phrase) and q.boost >= 0:
-                        opt_phr.append((tuple(q.terms), q.slop, q.boost))
-                    elif isinstance(q, (ast.Wildcard, ast.Fuzzy)) and (
-                        q.boost >= 0
-                    ):
-                        # optional constant-score term set (Lucene
-                        # CONSTANT_SCORE_REWRITE): matching ANY
-                        # expansion adds the boost, counts 1 toward
-                        # msm.  Duplicates are per-entry, so they are
-                        # naturally correct (each adds separately)
-                        opt_mul.append((q, q.boost))
-                    else:
-                        return None
-                n_should = len(opts) + len(opt_phr) + len(opt_mul)
-                if len({(v, f) for v, f, _b in opts}) != len(opts):
+                got = _shoulds(node.should)
+                if got is None or not _unique_terms(got[0]):
                     return None
-                if len({(t, s) for t, s, _b in opt_phr}) != len(opt_phr):
-                    return None
-                if node.effective_msm() > n_should:
+                opts, opt_phr, opt_mul = got
+                if node.effective_msm() > len(node.should):
                     return None  # unsatisfiable — the evaluator returns empty
             return FlatShape("and", terms, phrases, len(terms), neg,
                              ranges, multis, opts,
-                             node.effective_msm()
-                             if (opts or opt_phr or opt_mul)
-                             else 0,
+                             node.effective_msm() if node.should else 0,
                              opt_phrases=opt_phr,
                              neg_multis=neg_multis,
-                             opt_multis=opt_mul,
+                             opt_multis=[(q, q.boost) for q in opt_mul],
                              groups=groups)
         if node.should and not node.must:
             # pure disjunction over Terms, Phrases and/or Wildcard/Fuzzy
             # clauses: MaxScore with phrases as pseudo-terms (bounded by
             # w_p*(k1+1) — a phrase block carries no positional upper
             # bound, so the bound is loose but sound) and multi-term
-            # clauses as constant-score term SETS (Lucene
-            # CONSTANT_SCORE_REWRITE: contribution = boost if ANY
-            # expansion term matches, bounded by boost).  Duplicate
-            # term/phrase clauses fall back (the evaluator counts each
-            # occurrence toward msm; multis are per-entry, so their
-            # duplicates are naturally correct)
-            sterms: list = []
-            sphr: list = []
-            smul: list = []
-            for q in node.should:
-                if isinstance(q, ast.Term) and q.boost >= 0:
-                    sterms.append((q.value, q.field_name, q.boost, True))
-                elif isinstance(q, ast.Phrase) and q.boost >= 0:
-                    sphr.append((tuple(q.terms), q.slop, q.boost, True))
-                elif isinstance(q, (ast.Wildcard, ast.Fuzzy)) and (
-                    q.boost >= 0
-                ):
-                    smul.append((q, True))
-                else:
-                    return None
-            if len({(t, s) for t, s, _b, _sc in sphr}) != len(sphr):
+            # clauses as constant-score term SETS bounded by their boost
+            got = _shoulds(node.should)
+            if got is None:
                 return None
+            sterms, sphr, smul = got
             return FlatShape(
-                "or", sterms, sphr, node.effective_msm(), neg, [],
-                multis=smul, neg_multis=neg_multis,
+                "or", [(*t, True) for t in sterms],
+                [(*p, True) for p in sphr], node.effective_msm(), neg, [],
+                multis=[(q, True) for q in smul], neg_multis=neg_multis,
             )
         return None
     if isinstance(node, ast.DisMax):
-        # dis-max over plain terms (Q11): score = max + tie*(sum - max)
+        # dis-max (Q11): score = max + tie*(sum - max)
         # = (1-tie)*max + tie*sum — the node boost folds into every
         # clause weight (the combiner is linear in a uniform scale).
         # The MaxScore discipline stays valid for tie in [0, 1]: both
@@ -427,41 +424,17 @@ def classify(node: ast.Query) -> FlatShape | None:
             return None
         if not (0.0 <= node.tie_breaker <= 1.0):
             return None
-        dterms: list = []
-        dphr: list = []
-        dmul: list = []
-        for q in node.queries:
-            if isinstance(q, ast.Term) and q.boost >= 0:
-                dterms.append(
-                    (q.value, q.field_name, q.boost * node.boost, True)
-                )
-            elif isinstance(q, ast.Phrase) and q.boost >= 0:
-                dphr.append(
-                    (tuple(q.terms), q.slop, q.boost * node.boost, True)
-                )
-            elif isinstance(q, (ast.Wildcard, ast.Fuzzy)) and q.boost >= 0:
-                # constant-score set clause; the node boost folds into
-                # the clause boost (the combiner is linear in a uniform
-                # scale), via a copy — never mutate the caller's AST
-                from dataclasses import replace as _dc_replace
-
-                dmul.append(
-                    (_dc_replace(q, boost=q.boost * node.boost), True)
-                )
-            else:
-                return None
-        vals = [(v, f) for v, f, _b, _s in dterms]
-        if len(set(vals)) != len(vals):
+        got = _shoulds(node.queries, node.boost)
+        if got is None or not _unique_terms(got[0]):
             return None
-        if len({(t, s) for t, s, _b, _sc in dphr}) != len(dphr):
-            return None
+        dterms, dphr, dmul = got
         return FlatShape(
             "dismax",
-            dterms,
-            dphr,
+            [(*t, True) for t in dterms],
+            [(*p, True) for p in dphr],
             msm=1,
             tie=float(node.tie_breaker),
-            multis=dmul,
+            multis=[(q, True) for q in dmul],
         )
     if isinstance(node, ast.Filtered) and node.boost == 1.0:
         # NOTE: the search()/batch() paths never reach this branch —
@@ -528,68 +501,269 @@ def _up(x):
     return np.nextafter(np.multiply(x, _SLACK), np.inf)
 
 
+def _find(d: np.ndarray, x: np.ndarray) -> tuple:
+    """Positions of ``x`` in the sorted ``d``, and where they hit."""
+    pos = np.searchsorted(d, x)
+    if d.size == 0:
+        return pos, np.zeros(x.size, dtype=bool)
+    return pos, d[np.minimum(pos, d.size - 1)] == x
+
+
+class _Clause:
+    """One clause of a planned query, of one of four kinds.  The shape
+    functions combine clauses without asking which kind each is, as
+    Lucene's conjunction, ReqOptSum and WAND scorers combine child
+    Scorers; the kind is read only here and in _make_kernel.
+
+    - "term": tids is (term_id,), w = idf · boost.
+    - "set": a constant-score term set — an expanded Wildcard/Fuzzy
+      (Lucene CONSTANT_SCORE_REWRITE), the members of a top-level
+      constant score, or a query's must_not terms.  A doc matches when
+      ANY member term holds it, and scores w.
+    - "group": a required disjunction ("(a OR b) AND (c OR d)").  tids
+      are its entries (duplicates each score and count) and w their
+      weights; a doc must match >= msm entries.
+    - "phrase": tids are the legs in order, w = Σ idf(leg) · boost
+      (Lucene PhraseWeight), matched by phrase.phrase_arrays.
+
+    A weight of 0 marks an unscored clause (a filter arm).  msm is the
+    number of its terms a segment must hold for the clause to match
+    there (1; a group's msm; all of a phrase's legs).  key names the
+    clause's blocks in the kernel stats (_make_kernel sets it)."""
+
+    __slots__ = ("kind", "tids", "ids", "w", "msm", "slop", "key")
+
+    def __init__(self, kind: str, tids, w, msm: int = 1, slop: int = 0):
+        self.kind, self.w, self.msm, self.slop = kind, w, msm, slop
+        self.tids = tuple(int(t) for t in tids)
+        self.ids = np.array(self.tids, dtype=np.int64)
+        self.key = None
+
+    @classmethod
+    def phrase(cls, legs, slop: int, w: float) -> "_Clause":
+        return cls("phrase", legs, w, msm=len(legs), slop=slop)
+
+    @classmethod
+    def group(cls, entries, msm: int) -> "_Clause":
+        return cls("group", [t for t, _w in entries],
+                   tuple(w for _t, w in entries), msm=msm)
+
+    @classmethod
+    def resolve(cls, kind: str, e, scored: bool, meta: dict, exps: dict,
+                key, n_docs: int) -> "_Clause | None":
+        """A FlatShape entry of this kind as a clause, or None when it
+        matches nothing in the vocabulary: an out-of-vocabulary term or
+        phrase leg, a pattern without expansions, a group with fewer
+        in-vocabulary entries than its msm.  ``meta`` maps dictionary
+        keys to (term_id, df), ``exps`` pattern keys to expansions, and
+        ``key(field, value)`` gives a term's dictionary key."""
+        if kind == "term":
+            got = meta.get(key(e[1], e[0]))
+            if got is None:
+                return None
+            return cls("term", got[:1],
+                       idf_fn(n_docs, got[1]) * e[2] if scored else 0.0)
+        if kind == "phrase":
+            # legs are text-field tokens: plan_candidates serves no other
+            legs = [meta.get(t) for t in e[0]]
+            if any(g is None for g in legs):
+                return None
+            w = sum(idf_fn(n_docs, g[1]) for g in legs) * e[2] if scored \
+                else 0.0
+            return cls.phrase([g[0] for g in legs], e[1], w)
+        if kind == "group":
+            members = [(meta.get(key(f, v)), b) for v, f, b in e[0]]
+            entries = [(g[0], idf_fn(n_docs, g[1]) * b if scored else 0.0)
+                       for g, b in members if g is not None]
+            return cls.group(entries, int(e[1])) \
+                if len(entries) >= e[1] else None
+        # a set: a pattern's expansion, or a constant score's Terms
+        node = e[0] if isinstance(e, tuple) else e
+        keys = (exps[_mt_key(node)]
+                if isinstance(node, (ast.Wildcard, ast.Fuzzy))
+                else [key(n.field_name, n.value) for n in ast.iter_nodes(node)
+                      if isinstance(n, ast.Term)])
+        tids = sorted({int(meta[t][0]) for t in keys if t in meta})
+        if not tids:
+            return None
+        return cls("set", tids, float(node.boost) if scored else 0.0)
+
+    def keyed(self, i: int, optional: bool) -> None:
+        """Set the stats key: the clause is the i-th of its kind among
+        the required (or the optional) clauses."""
+        self.key = {
+            "term": f"opt:{self.tids[0]}" if optional else self.tids[0],
+            "set": f"optset:{i}" if optional else f"set:{i}",
+            "group": f"grp:{i}",
+            "phrase": None,  # phrase_arrays counts per leg term
+        }[self.kind]
+
+    @property
+    def streams(self) -> bool:
+        """Whether its decode reads the blocks' dv streams (the
+        positional phrase kernel reads none)."""
+        return self.kind != "phrase"
+
+    def present(self, b: Blocks) -> bool:
+        """Whether segment b holds enough of its terms to match."""
+        lo = np.searchsorted(b.term_id, self.ids, "left")
+        hi = np.searchsorted(b.term_id, self.ids, "right")
+        return int(np.count_nonzero(hi > lo)) >= self.msm
+
+    def estimate(self, sizes: dict) -> int:
+        """Its posting count on a segment (b.sizes()), the intersection
+        order of a mixed conjunction: a phrase's rarest leg, else the
+        sum over its terms."""
+        if self.kind == "phrase":
+            return min(sizes[t] for t in self.tids)
+        return sum(sizes.get(t, 0) for t in self.tids)
+
+    def bound(self, b: Blocks) -> float:
+        """An upper bound on one doc's contribution on segment b, where
+        the clause is present (pruning adds _up): w · the block max_tfc
+        for a term and per entry of a group, the constant of a set, and
+        w · (k1 + 1) for a phrase, the supremum of the tf component (a
+        phrase block carries no positional bound: loose but sound)."""
+        if self.kind == "set":
+            return float(self.w)
+        if self.kind == "phrase":
+            return self.w * (BM25_K1 + 1.0)
+        ws = (self.w,) if self.kind == "term" else self.w
+        return sum(w * float(b.max_tfc[r].max())
+                   for t, w in zip(self.tids, ws) if (r := b.rows(t)).size)
+
+
+class _Match:
+    """A clause on one segment.  Its blocks (ascending first_docid) are
+    decoded only where they overlap the candidates of a match call, each
+    block once; what is decoded accumulates in one docid-sorted store (a
+    phrase's, per block, in phrase_arrays' cache).  Opening counts the
+    clause's blocks in the stats' total_blocks (a phrase's legs are
+    counted by phrase_arrays, per call)."""
+
+    def __init__(self, q: "_Spec", c: _Clause, b: Blocks):
+        self.q, self.c, self.b = q, c, b
+        if c.kind == "phrase":
+            self.cache: dict = {}  # row -> its decoded streams
+            return
+        self.rows = b.rows(c.tids[0]) if c.kind == "term" else b.rows_of(c.ids)
+        self.done = np.zeros(b.term_id.size, dtype=bool)
+        self.d = self.tf = self.dl = self.own = np.empty(0, dtype=np.int64)
+        tally(q.stats, "total_blocks", c.key, self.rows.size)
+
+    def match(self, cand: np.ndarray | None = None, dv: bool = False):
+        """(docids, contributions) of its matches among the sorted
+        ``cand`` (all of them when None), docids sorted and unique, or
+        None when no block here overlaps ``cand``.  With ``dv`` the
+        query's range predicates mask the rows this call decodes: a
+        doc's dv value is the same in every member posting, so masking
+        rows before a union or an msm count removes exactly the
+        out-of-range docs."""
+        q, c = self.q, self.c
+        if c.kind == "phrase":
+            got = phrase_arrays(self.b, list(c.tids), c.slop, q.stats, cand,
+                                self.cache)
+            return None if got is None else (
+                got[0], c.w * _tfc(q, got[1], got[2]))
+        need = self.rows if cand is None else overlapping(self.b, self.rows,
+                                                          cand)
+        if need.size == 0:
+            return None
+        miss = need[~self.done[need]]
+        if miss.size:
+            self._decode(miss, dv)
+        d = self.d
+        if c.kind == "term":
+            if cand is None:
+                return d, c.w * _tfc(q, self.tf, self.dl)
+            pos, hit = _find(d, cand)
+            pos = pos[hit]
+            return cand[hit], c.w * _tfc(q, self.tf[pos], self.dl[pos])
+        if c.kind == "set":
+            u = np.unique(d) if cand is None else cand[_find(d, cand)[1]]
+            return u, np.full(u.size, float(c.w))
+        tf, dl, own = self.tf, self.dl, self.own
+        if cand is not None:
+            keep = _find(cand, d)[1]
+            d, tf, dl, own = d[keep], tf[keep], dl[keep], own[keep]
+        u = np.unique(d)  # several terms: one row per docid
+        gscore = np.zeros(u.size)
+        gcnt = np.zeros(u.size, dtype=np.int32)
+        for tid, w in zip(c.tids, c.w):
+            m = own == tid
+            idx = np.searchsorted(u, d[m])
+            gcnt[idx] += 1
+            if w != 0.0:
+                gscore[idx] += w * _tfc(q, tf[m], dl[m])
+        gm = gcnt >= c.msm
+        return u[gm], gscore[gm]
+
+    def _decode(self, rows: np.ndarray, dv: bool) -> None:
+        q, b, kind = self.q, self.b, self.c.kind
+        self.done[rows] = True
+        tally(q.stats, "decoded_blocks", self.c.key, rows.size)
+        dec = decode(b, rows, dl=kind != "set", dv=q.dv_want if dv else ())
+        keep = _dv_mask(q.ranges, dec.dv) if dv else slice(None)
+        d, tf = dec.d[keep], dec.tf[keep]
+        dl = d if dec.dl is None else dec.dl[keep]
+        own = (np.repeat(b.term_id[rows], b.count[rows])[keep]
+               if kind == "group" else d)
+        if kind == "term" and self.d.size == 0:
+            # one term's blocks in row order hold ascending docids
+            self.d, self.tf, self.dl, self.own = d, tf, dl, own
+            return
+        d = np.concatenate((self.d, d))
+        o = np.argsort(d, kind="stable")  # merges sorted runs
+        self.d = d[o]
+        self.tf = np.concatenate((self.tf, tf))[o]
+        self.dl = np.concatenate((self.dl, dl))[o]
+        self.own = np.concatenate((self.own, own))[o]
+
+
 @dataclass
 class _Spec:
     """One planned query as the shape functions read it.
 
-    qmeta: term_id -> (weight = idf*boost, boost).  Document lengths
-    come from the blocks' inline dls stream (0 → avgdl, the
-    norms-disabled sentinel) and a term's block bound is weight ×
-    max_tfc at ``avgdl``, so the kernel needs no side input.
-
-    neg_tids: must_not terms (Lucene ReqExclScorer): their blocks are
-    decoded ONLY where their [first_docid, last_docid] range intersects
-    a surviving candidate — "x AND NOT the" decodes just the blocks of
-    "the" overlapping x's candidates.
+    req: the required clauses of a conjunction, or the clauses of a
+    disjunction, in the order the shape sums them (terms, phrases,
+    sets, groups).  opt (and-mode): the OPTIONAL should clauses (Lucene
+    ReqOptSumScorer), summed as sets, terms, phrases.  They never admit
+    candidates, decode only where they overlap the conjunction's
+    survivors, add their score where they match, and opt_msm of them
+    must match; their bounds widen θ's pruning bound.  neg: the must_not
+    terms as one set (Lucene ReqExclScorer), or None — decoded ONLY
+    where a block intersects a surviving candidate, so "x AND NOT the"
+    decodes just the blocks of "the" overlapping x's candidates.
 
     ranges (and-mode): (ast.Range, contrib) predicates over inlined
     doc-value columns, evaluated on the first conjunct decode that
     carries the dv streams; contrib is the score a match adds (the
     Range's boost under Bool(must), 0.0 for a filter arm).
 
-    phrases: (leg_tids, slop, weight) pseudo-terms — and-mode
-    conjuncts restricted to the surviving candidates, or or/dismax
-    clauses bounded by weight*(k1+1) (a phrase block carries no
-    positional bound; loose but sound).  weight = Σ idf(leg) × boost
-    (Lucene PhraseWeight), 0.0 for filter arms.
+    Document lengths come from the blocks' inline dls stream (0 →
+    avgdl, the norms-disabled sentinel) and a term's block bound is
+    w × max_tfc at ``avgdl``, so the kernel needs no side input.
+    qmeta: term_id -> (w, w) of the first clause, what the one-clause
+    shapes (_term_topk; _any_topk reads the set's constant) read."""
 
-    termsets: (member_tids, contrib) constant-score sets — an expanded
-    Wildcard/Fuzzy: a doc matches when ANY member term holds it and
-    scores contrib (Lucene CONSTANT_SCORE_REWRITE).
-
-    opts / opt_phrases / opt_sets (and-mode): OPTIONAL should clauses
-    (Lucene ReqOptSumScorer) — tid -> (weight, boost) terms, phrases and
-    (member_tids, boost) sets.  They never admit candidates, decode only
-    where they overlap the conjunction's survivors, add their score
-    where they match, and opt_msm of them must match.  Their upper
-    bounds widen θ's pruning bound.
-
-    groups (and-mode): (entries, msm) REQUIRED disjunction groups
-    ("(a OR b) AND (c OR d)"): entries are (tid, weight) — duplicates
-    each score and count — and a doc must match >= msm of them."""
-
-    qmeta: dict
     mode: str
     msm: int
     k: int
     avgdl: float
-    neg_tids: list
-    ranges: list
     stats: dict | None
-    phrases: list
-    termsets: list
-    opts: dict
-    opt_msm: int
+    ranges: list
     tie: float
-    opt_phrases: list
-    opt_sets: list
-    groups: list
+    opt_msm: int
+    req: list
+    opt: list
+    neg: _Clause | None
 
     def __post_init__(self):
         self.range_boost = float(sum(c for _r, c in self.ranges))
         self.dv_want = tuple(
             dict.fromkeys(r.field_name for r, _c in self.ranges)
         )
+        self.qmeta = {t: (c.w, c.w) for c in self.req[:1] for t in c.tids}
 
 
 def _tfc(q: _Spec, tf: np.ndarray, dl: np.ndarray) -> np.ndarray:
@@ -653,118 +827,55 @@ class _Theta:
             self.value = best.min()
 
 
-class _Lazy:
-    """Blocks (ascending first_docid) decoded only where they overlap a
-    candidate, each block once; what is decoded accumulates in one
-    docid-sorted store."""
-
-    def __init__(self, q: _Spec, b: Blocks, rows: np.ndarray, key):
-        self.q, self.b, self.rows, self.key = q, b, rows, key
-        self.done = np.zeros(b.term_id.size, dtype=bool)
-        self.d = np.empty(0, dtype=np.int64)
-        self.tf = self.dl = self.d
-        tally(q.stats, "total_blocks", key, rows.size)
-
-    def over(self, cand: np.ndarray):
-        """(docids, tf, dl) of every block decoded so far, docid-sorted —
-        a superset of the postings in the blocks overlapping the sorted
-        ``cand``, which this call decodes if not yet done — or None when
-        no block overlaps ``cand``.  Several terms' docids may repeat."""
-        need = overlapping(self.b, self.rows, cand)
-        if need.size == 0:
-            return None
-        miss = need[~self.done[need]]
-        if miss.size:
-            self.done[miss] = True
-            dec = decode(self.b, miss)
-            d = np.concatenate((self.d, dec.d))
-            o = np.argsort(d, kind="stable")  # merges sorted runs
-            self.d = d[o]
-            self.tf = np.concatenate((self.tf, dec.tf))[o]
-            self.dl = np.concatenate((self.dl, dec.dl))[o]
-            tally(self.q.stats, "decoded_blocks", self.key, miss.size)
-        return self.d, self.tf, self.dl
-
-
 class _Excluder:
     """must_not terms (Lucene ReqExclScorer) over one segment."""
 
     def __init__(self, q: _Spec, b: Blocks):
-        self.lazy = (_Lazy(q, b, b.rows_of(q.neg_tids), "neg")
-                     if q.neg_tids else None)
+        self.on = _Match(q, q.neg, b) if q.neg is not None else None
 
     def keep(self, d: np.ndarray) -> np.ndarray:
         """Mask over sorted docids: True where no must_not term matches."""
-        got = self.lazy.over(d) if self.lazy and d.size else None
-        if got is None:
-            return np.ones(d.size, dtype=bool)
-        nd = got[0]
-        return nd[np.clip(np.searchsorted(nd, d), 0, nd.size - 1)] != d
+        keep = np.ones(d.size, dtype=bool)
+        got = self.on.match(d) if self.on and d.size else None
+        if got is not None:
+            keep[np.searchsorted(d, got[0])] = False
+        return keep
 
 
 class _Optionals:
     """The optional should clauses of a conjunction over one segment:
-    what is present here, their summed upper bound and whether opt_msm
+    those present here, their summed upper bound and whether opt_msm
     can still be met."""
 
     def __init__(self, q: _Spec, b: Blocks):
-        self.q, self.b = q, b
-        self.sets, self.terms, self.phrases = [], [], []
-        self.ub = 0.0
-        for si, (mtids, boost) in enumerate(q.opt_sets):
-            rows = b.rows_of(mtids)
-            if rows.size:
-                self.sets.append((_Lazy(q, b, rows, f"optset:{si}"), boost))
-                self.ub += float(boost)
-        for tid, (w, _boost) in q.opts.items():
-            rows = b.rows(tid)
-            if rows.size:
-                self.terms.append((_Lazy(q, b, rows, f"opt:{tid}"), w))
-                self.ub += w * float(b.max_tfc[rows].max())
-        if q.opt_phrases:
-            sizes = b.sizes()
-            for legs, slop, w_p in q.opt_phrases:
-                if all(int(t) in sizes for t in legs):
-                    self.phrases.append((legs, slop, w_p))
-                    self.ub += w_p * (BM25_K1 + 1.0)
-        self.feasible = q.opt_msm <= (
-            len(self.sets) + len(self.terms) + len(self.phrases)
-        )
+        self.q = q
+        self.on = [_Match(q, c, b) for c in q.opt if c.present(b)]
+        self.ub = sum(m.c.bound(b) for m in self.on)
+        self.feasible = q.opt_msm <= len(self.on)
 
     def add(self, cand: np.ndarray, acc: np.ndarray) -> tuple:
         """Add matching optional clauses' scores to the sorted surviving
         candidates (``acc`` must be a fresh array: it is added to in
         place), then apply the minimum-should-match cut."""
-        q = self.q
-        if cand.size == 0 or not (self.sets or self.terms or self.phrases):
+        if cand.size == 0 or not self.on:
             return cand, acc
         ocnt = np.zeros(cand.size, dtype=np.int32)
-        for lazy, boost in self.sets:
-            got = lazy.over(cand)
+        for m in self.on:
+            got = m.match(cand)
             if got is not None:
-                u = got[0]
-                hit = u[np.clip(np.searchsorted(u, cand), 0, u.size - 1)] == cand
-                acc[hit] += boost
-                ocnt[hit] += 1
-        for lazy, w in self.terms:
-            got = lazy.over(cand)
-            if got is not None:
-                d, tf, dl = got
-                pos = np.clip(np.searchsorted(d, cand), 0, d.size - 1)
-                hit = d[pos] == cand
-                acc[hit] += w * _tfc(q, tf[pos[hit]], dl[pos[hit]])
-                ocnt[hit] += 1
-        for legs, slop, w_p in self.phrases:
-            got = phrase_arrays(self.b, list(legs), slop, q.stats, cand)
-            if got is not None:
-                d, ptf, pdl = got
-                idx = np.searchsorted(cand, d)  # d ⊆ cand, both ascending
-                acc[idx] += w_p * _tfc(q, ptf, pdl)
+                idx = np.searchsorted(cand, got[0])  # got[0] ⊆ cand
+                acc[idx] += got[1]
                 ocnt[idx] += 1
-        if q.opt_msm > 0:
-            m = ocnt >= q.opt_msm
+        if self.q.opt_msm > 0:
+            m = ocnt >= self.q.opt_msm
             return cand[m], acc[m]
         return cand, acc
+
+
+def _narrow(parts: dict, cand: np.ndarray, d: np.ndarray) -> dict:
+    """Per-clause scores of the sorted ``cand`` cut to its subset ``d``."""
+    idx = np.searchsorted(cand, d)
+    return {c: v[idx] for c, v in parts.items()}
 
 
 def _any_topk(q: _Spec, b: Blocks):
@@ -814,28 +925,25 @@ def _term_topk(q: _Spec, b: Blocks):
 
 
 def _and_topk(q: _Spec, b: Blocks):
-    """Block-max conjunction (Lucene BlockMaxConjunctionScorer,
+    """Block-max conjunction of terms (Lucene BlockMaxConjunctionScorer,
     block-at-a-time).  The rarest term's blocks are processed in
     descending block-max chunks; once θ exceeds a chunk's bound plus
     the other terms' (and optional clauses') upper bounds, the remaining
     rare blocks cannot host a top-k doc and are never decoded.  Within a
     chunk the other terms decode only blocks overlapping the chunk's
-    surviving candidates, each block once.  Scores sum in qmeta order
+    surviving candidates, each block once.  Scores sum in clause order
     whatever the per-segment term order, so equal docs tie exactly."""
-    trows = {tid: b.rows(tid) for tid in q.qmeta}
-    if any(r.size == 0 for r in trows.values()):
+    if not all(c.present(b) for c in q.req):
         return None  # a must-term has no postings in this segment
     opt = _Optionals(q, b)
     if not opt.feasible:
         return None
     excl = _Excluder(q, b)
-    rare, *others = sorted(q.qmeta, key=lambda t: int(b.count[trows[t]].sum()))
-    lazy = {t: _Lazy(q, b, trows[t], t) for t in others}
-    ub_rest = sum(q.qmeta[t][0] * float(b.max_tfc[trows[t]].max())
-                  for t in others)
-    w_r = q.qmeta[rare][0]
-    rrows = trows[rare][np.argsort(-b.max_tfc[trows[rare]], kind="stable")]
-    tally(q.stats, "total_blocks", rare, rrows.size)
+    terms = [_Match(q, c, b) for c in q.req]
+    rare, *others = sorted(terms, key=lambda m: int(b.count[m.rows].sum()))
+    ub_rest = sum(m.c.bound(b) for m in others)
+    w_r = rare.c.w
+    rrows = rare.rows[np.argsort(-b.max_tfc[rare.rows], kind="stable")]
     bounds = _up(w_r * b.max_tfc[rrows] + (ub_rest + q.range_boost + opt.ub))
     theta = _Theta(q.k)
     out_d, out_s = [], []
@@ -843,26 +951,22 @@ def _and_topk(q: _Spec, b: Blocks):
         if bounds[sl.start] < theta.value:
             break  # strictly below θ: a bound-tied doc could still win
         dec = decode(b, rrows[sl], dv=q.dv_want)
-        tally(q.stats, "decoded_blocks", rare, sl.stop - sl.start)
+        tally(q.stats, "decoded_blocks", rare.c.key, sl.stop - sl.start)
         o = np.argsort(dec.d, kind="stable")
         if q.ranges:
             o = o[_dv_mask(q.ranges, {c: v[o] for c, v in dec.dv.items()})]
         d = dec.d[o]
         parts = {rare: w_r * _tfc(q, dec.tf[o], dec.dl[o])}
-        for t in others:
-            got = lazy[t].over(d) if d.size else None
+        for m in others:
+            got = m.match(d) if d.size else None
             if got is None:
                 d = d[:0]
                 break
-            gd, gtf, gdl = got
-            pos = np.clip(np.searchsorted(gd, d), 0, gd.size - 1)
-            hit = gd[pos] == d
-            d, pos = d[hit], pos[hit]
-            parts = {u: v[hit] for u, v in parts.items()}
-            parts[t] = q.qmeta[t][0] * _tfc(q, gtf[pos], gdl[pos])
+            parts = _narrow(parts, d, got[0])
+            d, parts[m] = got
         if d.size == 0:
             continue
-        acc = sum(parts[t] for t in q.qmeta) + q.range_boost
+        acc = sum(parts[m] for m in terms) + q.range_boost
         km = excl.keep(d)
         d, acc = opt.add(d[km], acc[km])
         if d.size:
@@ -874,151 +978,37 @@ def _and_topk(q: _Spec, b: Blocks):
     return _topk(np.concatenate(out_d), np.concatenate(out_s), q.k)
 
 
-def _conjunct(q: _Spec, b: Blocks, kind: str, key, cand,
-              dv_want: tuple):
-    """One term ("t"), set ("s") or group ("g") conjunct of a mixed
-    conjunction: its matching docs (sorted, unique) and their score,
-    decoding only blocks that overlap the sorted ``cand`` when given.
-    The dv range mask applies at this decode when ``dv_want`` is set —
-    a doc's dv value is the same in every member posting, so masking
-    rows before a union or the msm count removes exactly the
-    out-of-range docs."""
-    if kind == "t":
-        rows, skey = b.rows(key), key
-    elif kind == "s":
-        rows, skey = b.rows_of(q.termsets[key][0]), f"set:{key}"
-    else:
-        entries, gmsm = q.groups[key]
-        rows, skey = b.rows_of({t for t, _w in entries}), f"grp:{key}"
-    tally(q.stats, "total_blocks", skey, rows.size)
-    if cand is not None:
-        rows = overlapping(b, rows, cand)
-        if rows.size == 0:
-            return None
-    tally(q.stats, "decoded_blocks", skey, rows.size)
-    dec = decode(b, rows, dl=kind != "s", dv=dv_want)
-    keep = _dv_mask(q.ranges, dec.dv) if dv_want else slice(None)
-    d = dec.d[keep]
-    if kind == "t":
-        return d, q.qmeta[key][0] * _tfc(q, dec.tf[keep], dec.dl[keep])
-    u = np.unique(d)  # several terms: one row per docid
-    if kind == "s":
-        return u, np.full(u.size, float(q.termsets[key][1]))
-    # group: per-entry score and count (duplicate entries each count)
-    owner = np.repeat(b.term_id[rows], b.count[rows])[keep]
-    tf, dl = dec.tf[keep], dec.dl[keep]
-    gscore = np.zeros(u.size)
-    gcnt = np.zeros(u.size, dtype=np.int32)
-    for tid, w in entries:
-        m = owner == tid
-        idx = np.searchsorted(u, d[m])
-        gcnt[idx] += 1
-        if w != 0.0:
-            gscore[idx] += w * _tfc(q, tf[m], dl[m])
-    gm = gcnt >= gmsm
-    return u[gm], gscore[gm]
-
-
 def _mixed_and_topk(q: _Spec, b: Blocks):
     """Conjunction with phrase, set or group conjuncts: conjuncts are
-    intersected in ascending estimated-size order (a phrase's estimate
-    is its rarest leg; a set's or group's the member sum).  No θ-pruning
-    here (a phrase block carries no positional bound), but every
-    conjunct after the first decodes only blocks overlapping the
+    intersected in ascending estimated-size order (_Clause.estimate).
+    No θ-pruning here (a phrase block carries no positional bound), but
+    every conjunct after the first decodes only blocks overlapping the
     surviving candidates — the leapfrog of ref
     TermPayloadClojureScoreQuery.java:237-257, applied uniformly.  The
-    dv range mask rides the first term, set or group decode
-    (plan_candidates adds an unscored phrase-leg term when only phrases
-    conjoin)."""
-    sizes = b.sizes()
-    if not all(int(t) in sizes for t in q.qmeta) or not all(
-        int(t) in sizes for legs, _s, _w in q.phrases for t in legs
-    ):
-        return None  # a conjunct term has no postings here
-    if not all(any(int(t) in sizes for t in tids) for tids, _c in q.termsets):
-        return None  # a set conjunct with no member here
-    if any(sum(int(t) in sizes for t, _w in entries) < gmsm
-           for entries, gmsm in q.groups):
-        return None  # a group that cannot reach its msm here
+    dv range mask rides the first conjunct whose decode carries the dv
+    streams (plan_candidates adds an unscored phrase-leg term when only
+    phrases conjoin)."""
+    if not all(c.present(b) for c in q.req):
+        return None  # a conjunct cannot match in this segment
     opt = _Optionals(q, b)
     if not opt.feasible:
         return None
-    conj = ([("t", tid) for tid in q.qmeta]
-            + [("p", i) for i in range(len(q.phrases))]
-            + [("s", i) for i in range(len(q.termsets))]
-            + [("g", i) for i in range(len(q.groups))])
-
-    def estimate(c):
-        kind, key = c
-        if kind == "t":
-            return sizes[key]
-        if kind == "p":
-            return min(sizes[int(t)] for t in q.phrases[key][0])
-        tids = (q.termsets[key][0] if kind == "s"
-                else [t for t, _w in q.groups[key][0]])
-        return sum(sizes.get(int(t), 0) for t in tids)
-
-    cand, parts, dv_want = None, {}, q.dv_want
-    for c in sorted(conj, key=estimate):
-        if c[0] == "p":
-            legs, slop, w_p = q.phrases[c[1]]
-            got = phrase_arrays(b, list(legs), slop, q.stats, cand)
-            if got is None:
-                return None
-            d, ptf, pdl = got
-            if cand is not None:
-                idx = np.searchsorted(cand, d)  # d ⊆ cand, both ascending
-                parts = {u: v[idx] for u, v in parts.items()}
-            cand, parts[c] = d, w_p * _tfc(q, ptf, pdl)
-            continue
-        got = _conjunct(q, b, c[0], c[1], cand, dv_want)
-        dv_want = ()
+    sizes = b.sizes()
+    cand, parts, dv = None, {}, bool(q.ranges)
+    for c in sorted(q.req, key=lambda c: c.estimate(sizes)):
+        got = _Match(q, c, b).match(cand, dv)
+        dv = dv and not c.streams
         if got is None or got[0].size == 0:
             return None
-        d, s = got
         if cand is not None:
-            pos = np.clip(np.searchsorted(d, cand), 0, d.size - 1)
-            hit = d[pos] == cand
-            if not hit.any():
-                return None
-            cand, s = cand[hit], s[pos[hit]]
-            parts = {u: v[hit] for u, v in parts.items()}
-        else:
-            cand = d
-        parts[c] = s
-    acc = sum(parts[c] for c in conj)
+            parts = _narrow(parts, cand, got[0])
+        cand, parts[c] = got
+    acc = sum(parts[c] for c in q.req)
     km = _Excluder(q, b).keep(cand)
     d, acc = opt.add(cand[km], acc[km] + q.range_boost)
     if d.size == 0:
         return None
     return _topk(d, acc, q.k)
-
-
-def _clause(q: _Spec, b: Blocks, kind: str, key, rows, cand):
-    """One MaxScore clause's matches (sorted docids) and contributions,
-    restricted to the sorted ``cand`` once admission has closed."""
-    if kind == "p":
-        legs, slop, w_p = key
-        got = phrase_arrays(b, list(legs), slop, q.stats, cand)
-        if got is None:
-            return None
-        return got[0], w_p * _tfc(q, got[1], got[2])
-    skey = key if kind == "t" else f"set:{key[0]}"
-    if cand is not None:
-        rows = overlapping(b, rows, cand)
-        if rows.size == 0:
-            return None
-    tally(q.stats, "decoded_blocks", skey, rows.size)
-    dec = decode(b, rows, dl=kind == "t")
-    d = dec.d if kind == "t" else np.unique(dec.d)
-    if cand is None:
-        keep = slice(None)
-    else:
-        keep = cand[np.clip(np.searchsorted(cand, d), 0, cand.size - 1)] == d
-    if kind == "t":
-        return d[keep], q.qmeta[key][0] * _tfc(q, dec.tf[keep], dec.dl[keep])
-    d = d[keep]
-    return d, np.full(d.size, float(key[1]))
 
 
 def _maxscore_topk(q: _Spec, b: Blocks):
@@ -1037,31 +1027,16 @@ def _maxscore_topk(q: _Spec, b: Blocks):
     with a parallel max accumulator.  Monotone in both parts for tie in
     [0, 1], so the bounds maximize them independently: a new doc at
     clause i is bounded by (1-tie)*UB_i + tie*suffix_i, a candidate by
-    (1-tie)*max(mx, UB_next) + tie*(acc + suffix_next).  Phrase clauses
-    are bounded by w_p*(k1+1) and set clauses by their constant.  Final
-    scores are re-summed in clause order, so equal docs tie exactly
-    whatever each segment's bound order."""
+    (1-tie)*max(mx, UB_next) + tie*(acc + suffix_next).  Final scores
+    are re-summed in clause order, so equal docs tie exactly whatever
+    each segment's bound order."""
     dismax, tie = q.mode == "dismax", q.tie
-    sizes = b.sizes() if q.phrases else {}
-    clauses = []  # (kind, key, ub, rows)
-    for tid, (w, _boost) in q.qmeta.items():
-        rows = b.rows(tid)
-        if rows.size:
-            tally(q.stats, "total_blocks", tid, rows.size)
-            clauses.append(("t", tid, w * float(b.max_tfc[rows].max()), rows))
-    for legs, slop, w_p in q.phrases:
-        if all(int(t) in sizes for t in legs):  # else a leg cannot match
-            clauses.append(("p", (legs, slop, w_p), w_p * (BM25_K1 + 1.0),
-                            b.rows_of(legs)))
-    for si, (tids, contrib) in enumerate(q.termsets):
-        rows = b.rows_of(tids)
-        if rows.size:
-            tally(q.stats, "total_blocks", f"set:{si}", rows.size)
-            clauses.append(("s", (si, contrib), contrib, rows))
+    clauses = [_Match(q, c, b) for c in q.req if c.present(b)]
     if not clauses:
         return None
-    order = sorted(range(len(clauses)), key=lambda i: -clauses[i][2])
-    ubs = np.array([clauses[i][2] for i in order])
+    ub = [m.c.bound(b) for m in clauses]
+    order = sorted(range(len(clauses)), key=lambda i: -ub[i])
+    ubs = np.array([ub[i] for i in order])
     suffix = np.cumsum(ubs[::-1])[::-1]
     admit = _up((1.0 - tie) * ubs + tie * suffix if dismax else suffix)
     ub_next, suffix_next = np.append(ubs[1:], 0.0), np.append(suffix[1:], 0.0)
@@ -1083,14 +1058,13 @@ def _maxscore_topk(q: _Spec, b: Blocks):
 
     closed = False
     for i, ci in enumerate(order):
-        kind, key, _ub, rows = clauses[ci]
         closed = closed or admit[i] < theta  # no NEW doc can reach top-k
         cand = None
         if closed:
             cand = docs[~excl & ~dead]
             if cand.size == 0:
                 break
-        got = _clause(q, b, kind, key, rows, cand)
+        got = clauses[ci].match(cand)
         if got is None:
             continue
         d, c = got
@@ -1106,7 +1080,7 @@ def _maxscore_topk(q: _Spec, b: Blocks):
                 acc, mxa, cnt, excl, dead = grown
                 docs = u
         pos = np.searchsorted(docs, d)
-        if not closed and excluder.lazy is not None:
+        if not closed and excluder.on is not None:
             new = pos[cnt[pos] == 0]
             excl[new[~excluder.keep(docs[new])]] = True
         acc[pos] += c
@@ -1143,25 +1117,51 @@ def _make_kernel(qmeta: dict, mode: str, msm: int, k: int, avgdl: float,
                  tie: float = 0.0,
                  opt_phrases: list | None = None,
                  opt_sets: list | None = None,
-                 groups: list | None = None):
+                 groups: list | None = None,
+                 req: list = (), opt: list = ()):
     """The block-max kernel of one planned query: blocks_pdf → one
     (docid, score) frame holding each segment's top-k, concatenated.
     The block frame becomes an array block set once (query.blocks);
     each segment's slice then runs the function for the query's shape.
-    The arguments are documented on _Spec; ``stats`` accumulates
-    {"total_blocks": {key: n}, "decoded_blocks": {key: n}} (scalars
-    for mode "any") across segments."""
-    q = _Spec(qmeta, mode, msm, k, avgdl, list(neg_tids or []),
-              list(ranges or []), stats, list(phrases or []),
-              list(termsets or []), dict(opts or {}), opt_msm, tie,
-              list(opt_phrases or []), list(opt_sets or []),
-              list(groups or []))
+
+    The clauses are built here, once per plan.  ``req`` and ``opt`` are
+    clauses plan_candidates resolved; direct callers may give them by
+    kind instead, in the planner's sum order: required terms ``qmeta``
+    (term_id -> (weight, boost); for mode "any", the set's members ->
+    (0, boost)), ``phrases`` (leg_tids, slop, weight), ``termsets``
+    (member_tids, contrib) and ``groups`` ((tid, weight) entries, msm),
+    then optional ``opt_sets``, ``opts`` and ``opt_phrases``.
+    ``neg_tids`` are the must_not terms.  The rest is documented on
+    _Spec; ``stats`` accumulates {"total_blocks": {key: n},
+    "decoded_blocks": {key: n}} (scalars for mode "any") across
+    segments, keyed by _Clause.key."""
+    if mode == "any" and qmeta:
+        head = [_Clause("set", qmeta, float(next(iter(qmeta.values()))[1]))]
+    else:
+        head = [_Clause("term", (t,), w) for t, (w, _b) in qmeta.items()]
+    req = (head
+           + [_Clause.phrase(*p) for p in phrases or ()]
+           + [_Clause("set", *s) for s in termsets or ()]
+           + [_Clause.group(*g) for g in groups or ()] + list(req))
+    opt = ([_Clause("set", *s) for s in opt_sets or ()]
+           + [_Clause("term", (t,), w) for t, (w, _b) in (opts or {}).items()]
+           + [_Clause.phrase(*p) for p in opt_phrases or ()] + list(opt))
+    for clauses, optional in ((req, False), (opt, True)):
+        seen: dict = {}
+        for c in clauses:
+            seen[c.kind] = seen.get(c.kind, -1) + 1
+            c.keyed(seen[c.kind], optional)
+    neg = _Clause("set", neg_tids, 0.0) if neg_tids else None
+    if neg is not None:
+        neg.key = "neg"
+    q = _Spec(mode, msm, k, avgdl, stats, list(ranges or []), tie, opt_msm,
+              req, opt, neg)
     if mode == "any":
         shape = _any_topk
     elif mode == "term":
         shape = _term_topk
     elif mode == "and":
-        mixed = q.phrases or q.termsets or q.groups
+        mixed = any(c.kind != "term" for c in req)
         shape = _mixed_and_topk if mixed else _and_topk
     else:
         shape = _maxscore_topk
@@ -1219,69 +1219,75 @@ def _expand_scoped_many(index: BzzzIndex, nodes: list) -> list[list[str]]:
     return [cache[_mt_key(p)] for p in nodes]
 
 
-def _any_plan(
-    index: BzzzIndex, keys: list[str], boost: float, k: int
-) -> KernelPlan:
-    """Constant-score 'any' kernel over explicit dictionary keys: every
-    matching doc scores `boost`, so per segment the top-k is the k
-    smallest matching docids and decoding stops once k docids precede
-    every remaining block's range.  Needs no norms (constant score)."""
-    if not keys:
-        return _EMPTY_PLAN
-    meta = index.lookup_terms(keys)
-    tids = sorted(int(tid) for tid, _df in meta.values())
-    if not tids:
-        return _EMPTY_PLAN
-    qmeta = {tid: (0.0, float(boost)) for tid in tids}
-    kernel = _make_kernel(qmeta, "any", 1, k, 1.0)
-    return KernelPlan(kernel, tuple(tids))
+def lookup(index, nodes) -> tuple[dict, dict]:
+    """Every term, phrase leg and Wildcard/Fuzzy pattern of the query
+    trees in one dictionary lookup and one expansion job (both memoized
+    per index): ({key: (term_id, df)} for the keys present, {pattern
+    key: its expansion})."""
+    from bzzz_spark.query.executor import term_key
+
+    keys, patterns = set(), []
+    for n in (n for node in nodes for n in ast.iter_nodes(node)):
+        if isinstance(n, ast.Term):
+            keys.add(term_key(index, n.field_name, n.value))
+        elif isinstance(n, ast.Phrase):
+            keys.update(term_key(index, n.field_name, t) for t in n.terms)
+        elif isinstance(n, (ast.Wildcard, ast.Fuzzy)):
+            patterns.append(n)
+    exps = _expand_scoped_many(index, patterns) if patterns else []
+    keys.update(t for e in exps for t in e)
+    meta = index.lookup_terms(sorted(keys)) if keys else {}
+    return meta, {_mt_key(p): e for p, e in zip(patterns, exps)}
 
 
-def _multiterm_plan(
-    index: BzzzIndex, node: ast.Query, k: int
-) -> KernelPlan:
-    """Top-level Wildcard/Fuzzy: Lucene CONSTANT_SCORE_REWRITE — the
-    dictionary expansion feeds the constant-score 'any' kernel."""
-    return _any_plan(index, _expand_scoped_many(index, [node])[0],
-                     node.boost, k)
-
-
-def _constant_plan(
-    index: BzzzIndex, node: "ast.ConstantScore", k: int
-) -> KernelPlan | None:
-    """Top-level ConstantScore over a Term or a should-only Bool of
-    Terms (effective msm <= 1): every match scores node.boost, so — as
-    with Lucene's CONSTANT_SCORE_REWRITE for multi-term queries — the
-    top-k is the k smallest matching docids and the 'any' kernel stops
-    decoding once k docids precede every remaining block.  A
-    filter-context head term ("give me ANY k docs containing X")
-    decodes O(k) docids instead of the term's full postings.  Needs no
-    norms (constant score), so any indexed field serves.  Other inner
-    shapes return None → the exhaustive plan."""
+def _constant_set(node: ast.Query) -> bool:
+    """Whether a top-level node is one constant-score term set: a
+    Wildcard/Fuzzy (Lucene CONSTANT_SCORE_REWRITE), or a ConstantScore
+    over a Term or a should-only Bool of Terms (effective msm <= 1).
+    Every match scores the node's boost, so the 'any' kernel's top-k is
+    the k smallest matching docids and it stops decoding once k docids
+    precede every remaining block: a filter-context head term ("give me
+    ANY k docs containing X") decodes O(k) docids instead of the term's
+    full postings.  Needs no norms, so any indexed field serves."""
+    if isinstance(node, (ast.Wildcard, ast.Fuzzy)):
+        return True
+    if not isinstance(node, ast.ConstantScore):
+        return False
     inner = node.query
-    if isinstance(inner, ast.Term):
-        members = [(inner.value, inner.field_name)]
-    elif (
+    return isinstance(inner, ast.Term) or (
         isinstance(inner, ast.Bool)
         and inner.should
         and not inner.must
         and not inner.must_not
         and inner.effective_msm() <= 1
         and all(isinstance(q, ast.Term) for q in inner.should)
-    ):
-        members = [(q.value, q.field_name) for q in inner.should]
-    else:
-        return None
-    from bzzz_spark.query.executor import term_key
+    )
 
-    keys = sorted({term_key(index, f, v) for v, f in members})
-    return _any_plan(index, keys, node.boost, k)
+
+# A FlatShape's entry lists as clauses: (field, clause kind, role).
+# Required and disjunctive clauses are listed as terms, phrases, sets,
+# groups and optional ones as sets, terms, phrases: the orders in which
+# the kernels sum them.  Role None is "req" in a conjunction and "or"
+# in a disjunction.
+_ENTRIES = (
+    ("terms", "term", None), ("phrases", "phrase", None),
+    ("multis", "set", None), ("groups", "group", "req"),
+    ("opt_multis", "set", "opt"), ("opts", "term", "opt"),
+    ("opt_phrases", "phrase", "opt"),
+    ("neg", "term", "neg"), ("neg_multis", "set", "neg"),
+)
 
 
 def wand_candidates(
     index: BzzzIndex, node: ast.Query, k: int
 ) -> DataFrame | None:
-    """Per-segment top-k (docid, score) for flat shapes, else None."""
+    """Per-segment top-k (docid, score) for flat shapes, else None.
+    The one entry that takes a raw AST, so it validates the fields: a
+    Wildcard on an unindexed field must raise here as on every other
+    path, not answer from the default text field."""
+    from bzzz_spark.query.executor import validate_fields
+
+    validate_fields(index, node)
     plan = plan_candidates(index, node, k)
     if plan is None:
         return None
@@ -1291,25 +1297,24 @@ def wand_candidates(
 def plan_candidates(
     index, node: ast.Query, k: int
 ) -> "KernelPlan | None":
-    """Driver-side planning for the block-max kernel path: dictionary
-    lookups + kernel construction, NO postings work.  Returns None for
-    shapes the kernels can't serve (→ the exhaustive plan), an
+    """Driver-side planning for the block-max kernel path: one
+    dictionary lookup + kernel construction, NO postings work.  Returns
+    None for shapes the kernels can't serve (→ the exhaustive plan), an
     empty-marked plan for provably-empty queries, else the kernel and
-    the term_ids whose blocks it needs.  Shared by both runtimes:
-    the Spark one (wand_candidates, batch.search_many) runs plans
-    through run_plans, one term_id-pruned postings read as narrow
-    tasks; the in-process serving
-    path (bzzz_spark.serve.local) fetches the same blocks via pyarrow
-    parquet reads and calls the kernel directly — zero Spark jobs, the
+    the term_ids whose blocks it needs.  ``node`` is validated by the
+    caller.  evaluate.plan, the planner of both runtimes, calls it: the
+    Spark one runs plans through run_plans, one term_id-pruned postings
+    read as narrow tasks; the in-process serving path
+    (bzzz_spark.serve.local) fetches the same blocks from its parquet
+    row groups and calls the kernel directly — zero Spark jobs, the
     deployment shape of the reference's long-lived in-process Lucene
-    searcher (src/bzzz/index_directory.clj:129-132)."""
-    # direct callers (wand_search / wand_candidates without going
-    # through executor.search) must hit the same unknown-field error as
-    # every other path — otherwise a Wildcard on an unindexed field
-    # would silently answer from the default text field
-    from bzzz_spark.query.executor import validate_fields
+    searcher (src/bzzz/index_directory.clj:129-132).
 
-    validate_fields(index, node)
+    Each FlatShape entry resolves into one _Clause (_Clause.resolve).
+    An entry that matches nothing in the vocabulary empties the plan
+    when it is required, and is dropped when it is optional,
+    disjunctive or an exclusion: it then matches nothing, and an
+    optional one stops counting toward minimum_should_match."""
     if isinstance(node, ast.Bool) and not node.must and not node.should:
         # only must_not clauses (or none) match nothing: Lucene's
         # prohibited-only BooleanQuery, the evaluator's empty answer
@@ -1319,17 +1324,20 @@ def plan_candidates(
         # accepts inside a conjunction; Bool(must=[phrase]) is
         # score-identical (the must-sum of one clause)
         node = ast.Bool(must=[node])
-    if isinstance(node, (ast.Wildcard, ast.Fuzzy)):
-        return _multiterm_plan(index, node, k)
-    if isinstance(node, ast.ConstantScore):
-        got = _constant_plan(index, node, k)
-        if got is not None:
-            return got
+    from bzzz_spark.query.executor import term_key
+
+    def key(f, v):
+        return term_key(index, f, v)
+
+    if _constant_set(node):
+        meta, exps = lookup(index, [node])
+        c = _Clause.resolve("set", (node, True), True, meta, exps, key, 0)
+        if c is None:
+            return _EMPTY_PLAN
+        return KernelPlan(_make_kernel({}, "any", 1, k, 1.0, req=[c]), c.tids)
     shape = classify(node)
     if shape is None:
         return None
-    # extra-field terms are keyed '<field>:<token>' in the dictionary
-    # and score without norms — the exhaustive plan scores them
     # SCORED terms and phrases must target the text field: the kernel
     # scores from the text index's norms stream.  UNSCORED membership
     # (filter arms, must_not, the filter side of Filtered) may target
@@ -1369,185 +1377,50 @@ def plan_candidates(
     ):
         # the exhaustive plan raises the loud store_positions error
         return None
-    from bzzz_spark.query.executor import term_key
-
-    vals = [term_key(index, f, v) for v, f, _b, _s in shape.terms]
+    vals = [key(f, v) for v, f, _b, _s in shape.terms]
     if len(set(vals)) != len(vals):
-        return None  # repeated terms would collapse in qmeta — fall back
-    neg_vals = [term_key(index, f, v) for v, f in shape.neg]
-    pvals = [t for tids, _s, _b, _sc in shape.phrases for t in tids]
-    okeys = [term_key(index, f, v) for v, f, _b in shape.opts]
-    gkeys = [
-        [term_key(index, f, v) for v, f, _b in members]
-        for members, _m, _gs in shape.groups
-    ]
-    ovals = okeys + [
-        t for tids, _s, _b in shape.opt_phrases for t in tids
-    ] + [k for keys in gkeys for k in keys]
+        return None  # repeated terms: the exhaustive plan
     n_docs, avgdl = index.scalar_stats()
     if n_docs == 0 or avgdl == 0:
         return _EMPTY_PLAN
-    meta = index.lookup_terms(vals + neg_vals + pvals + ovals)
-    if shape.mode == "and" and (
-        any(v not in meta for v in vals) or any(t not in meta for t in pvals)
-    ):
-        # a required conjunct term (or phrase leg) is out of vocabulary
-        return _EMPTY_PLAN
-    qmeta = {}
-    for (v, f, boost, scored), key in zip(shape.terms, vals):
-        if key in meta:
-            tid, df = meta[key]
-            # filter-arm conjuncts intersect but contribute no score
-            # (and no upper bound): weight and boost pinned to 0
-            if scored:
-                qmeta[tid] = (idf_fn(n_docs, df) * boost, boost)
-            else:
-                qmeta[tid] = (0.0, 0.0)
-    phrase_specs = []
-    for tids, slop, boost, scored in shape.phrases:
-        if shape.mode in ("or", "dismax") and any(
-            t not in meta for t in tids
-        ):
-            # an out-of-vocabulary leg in a disjunction clause: the
-            # phrase matches nothing — drop the clause (it still counts
-            # toward msm infeasibility below, like an OOV term)
-            continue
-        leg_tids = [int(meta[t][0]) for t in tids]
-        w_p = (
-            sum(idf_fn(n_docs, meta[t][1]) for t in tids) * boost
-            if scored
-            else 0.0
-        )
-        phrase_specs.append((leg_tids, slop, w_p))
-    termset_specs = []
-    neg_set_tids: set = set()
-    opt_set_specs = []
-    if shape.multis or shape.neg_multis or shape.opt_multis:
-        # ONE dictionary job for ALL patterns — conjunct sets, exclusion
-        # sets, optional sets — and one lookup for all expansion terms
-        # (expand_multiterm's batching discipline)
-        pat_nodes = (
-            [m for m, _s in shape.multis]
-            + list(shape.neg_multis)
-            + [m for m, _b in shape.opt_multis]
-        )
-        exps = _expand_scoped_many(index, pat_nodes)
-        mmeta = index.lookup_terms(
-            sorted({t for exp in exps for t in exp})
-        )
-        n_m = len(shape.multis)
-        n_n = len(shape.neg_multis)
-        for (mnode, scored), exp in zip(shape.multis, exps[:n_m]):
-            mtids = sorted(
-                int(mmeta[t][0]) for t in exp if t in mmeta
-            )
-            if not mtids:
-                if shape.mode in ("or", "dismax"):
-                    # a disjunction clause whose pattern matches NO
-                    # vocabulary term matches nothing — drop the clause
-                    continue
-                # a required (or filter) multi-term conjunct whose
-                # pattern matches NO vocabulary term: the conjunction
-                # matches nothing (Lucene: a must clause rewritten to
-                # the empty disjunction)
+    meta, exps = lookup(index, [node])
+    req, opt, neg = [], [], []
+    into = {"req": req, "or": req, "opt": opt, "neg": neg}
+    for name, kind, role in _ENTRIES:
+        role = role or ("req" if shape.mode in ("term", "and") else "or")
+        for e in getattr(shape, name):
+            scored = role == "opt" or (role != "neg" and bool(e[-1]))
+            c = _Clause.resolve(kind, e, scored, meta, exps, key, n_docs)
+            if c is not None:
+                into[role].append(c)
+            elif role == "req":
                 return _EMPTY_PLAN
-            termset_specs.append(
-                (tuple(mtids), float(mnode.boost) if scored else 0.0)
-            )
-        # exclusion patterns: the expansion's term ids simply join the
-        # neg_tids union (the kernel's ReqExclScorer discipline already
-        # IS a set union); a pattern with no vocabulary expansion
-        # excludes nothing
-        for exp in exps[n_m:n_m + n_n]:
-            neg_set_tids |= {int(mmeta[t][0]) for t in exp if t in mmeta}
-        # optional patterns (constant-score optional sets): one with no
-        # vocabulary expansion matches nothing — it just stops counting
-        # toward minimum_should_match, like an OOV optional term
-        for (_mnode, boost), exp in zip(shape.opt_multis, exps[n_m + n_n:]):
-            mtids = sorted(int(mmeta[t][0]) for t in exp if t in mmeta)
-            if mtids:
-                opt_set_specs.append((tuple(mtids), float(boost)))
-    # required disjunction groups: OOV member entries match nothing and
-    # drop; if fewer entries remain than the group's msm requires, the
-    # conjunction matches nothing (a must clause rewritten to an
-    # unsatisfiable disjunction)
-    group_specs = []
-    for (members, gmsm, gscored), keys in zip(shape.groups, gkeys):
-        entries = []
-        for (_v, _f, boost), key in zip(members, keys):
-            if key in meta:
-                tid, df = meta[key]
-                w = idf_fn(n_docs, df) * boost if gscored else 0.0
-                entries.append((int(tid), w))
-        if len(entries) < gmsm:
-            return _EMPTY_PLAN
-        group_specs.append((entries, int(gmsm)))
-    if (
-        not qmeta and not phrase_specs and not termset_specs
-        and not group_specs
-    ):
-        return _EMPTY_PLAN
-    # optional (should) terms/phrases: out-of-vocabulary ones match
-    # nothing — they just stop counting toward minimum_should_match.
-    # If fewer remain than msm requires, NO doc can qualify
-    opt_meta = {}
-    for (v, f, boost), key in zip(shape.opts, okeys):
-        if key in meta:
-            tid, df = meta[key]
-            opt_meta[int(tid)] = (idf_fn(n_docs, df) * boost, boost)
-    opt_phrase_specs = []
-    for tids, slop, boost in shape.opt_phrases:
-        if all(t in meta for t in tids):  # an OOV leg: matches nothing
-            opt_phrase_specs.append((
-                [int(meta[t][0]) for t in tids],
-                slop,
-                sum(idf_fn(n_docs, meta[t][1]) for t in tids) * boost,
-            ))
-    if shape.opt_msm > (
-        len(opt_meta) + len(opt_phrase_specs) + len(opt_set_specs)
-    ):
-        return _EMPTY_PLAN
-    # must_not terms absent from the dictionary exclude nothing; a term
-    # that is both required and excluded stays in BOTH sets (the kernel
-    # then scores and excludes it — "a AND NOT a" is naturally empty)
-    neg_tids = sorted(
-        {int(meta[v][0]) for v in set(neg_vals) if v in meta}
-        | neg_set_tids
-    )
-
-    if (
-        shape.mode == "and" and shape.ranges and not qmeta
-        and not termset_specs and not group_specs and phrase_specs
+    if not req or shape.opt_msm > len(opt):
+        return _EMPTY_PLAN  # nothing can match, or msm cannot be met
+    if shape.mode == "and" and shape.ranges and shape.phrases and not (
+        shape.terms or shape.multis or shape.groups
     ):
         # phrase-ONLY conjunction + dv range ("\"stack trace\" AND
         # ts>X"): the positional kernel returns no dv streams and no
         # other conjunct exists to carry them, but every match contains
         # ALL legs of every required phrase, so the rarest leg
         # intersects without changing the match set.  Synthesize it as
-        # UNSCORED membership (weight and boost 0 — adds no score,
-        # leaves pruning bounds intact): its decode carries the dv
-        # streams and the range mask prunes candidates there, before
-        # any positional work.  (Set/group conjuncts carry dv at their
-        # own decode — no carrier needed when one is present.)
-        carrier = min(set(pvals), key=lambda t: (meta[t][1], t))
-        qmeta[int(meta[carrier][0])] = (0.0, 0.0)
-    all_tids = (
-        {int(t) for t in qmeta}
-        | set(neg_tids)
-        | {t for legs, _s, _w in phrase_specs for t in legs}
-        | {int(t) for tids, _c in termset_specs for t in tids}
-        | set(opt_meta)
-        | {t for legs, _s, _w in opt_phrase_specs for t in legs}
-        | {int(t) for tids, _b in opt_set_specs for t in tids}
-        | {tid for entries, _m in group_specs for tid, _w in entries}
-    )
-    kernel = _make_kernel(qmeta, shape.mode, shape.msm, k, avgdl, neg_tids,
-                          shape.ranges, phrases=phrase_specs,
-                          termsets=termset_specs,
-                          opts=opt_meta, opt_msm=shape.opt_msm,
-                          tie=shape.tie, opt_phrases=opt_phrase_specs,
-                          opt_sets=opt_set_specs, groups=group_specs)
-    return KernelPlan(kernel, tuple(sorted(all_tids)))
+        # UNSCORED membership (weight 0 — adds no score, leaves pruning
+        # bounds intact): its decode carries the dv streams and the
+        # range mask prunes candidates there, before any positional
+        # work.  (Set/group conjuncts carry dv at their own decode.)
+        legs = {t for tids, *_ in shape.phrases for t in tids}
+        carrier = min(legs, key=lambda t: (meta[t][1], t))
+        req.insert(0, _Clause("term", (meta[carrier][0],), 0.0))
+    # must_not terms absent from the dictionary exclude nothing; a term
+    # that is both required and excluded stays in BOTH (the kernel then
+    # scores and excludes it — "a AND NOT a" is naturally empty)
+    neg_tids = sorted({t for c in neg for t in c.tids})
+    kernel = _make_kernel({}, shape.mode, shape.msm, k, avgdl, neg_tids,
+                          shape.ranges, opt_msm=shape.opt_msm,
+                          tie=shape.tie, req=req, opt=opt)
+    tids = {t for c in req + opt for t in c.tids} | set(neg_tids)
+    return KernelPlan(kernel, tuple(sorted(tids)))
 
 
 def wand_search(

@@ -87,7 +87,8 @@ class LocalIndex:
 
     Duck-types the planner-facing surface of BzzzIndex (config,
     scalar_stats, lookup_terms, postings.columns, the expansion cache)
-    so query/wand.py's plan_candidates serves both runtimes unchanged.
+    so query/evaluate.py's plan, the planner of both runtimes, serves
+    it unchanged.
     Terms resolve through a sorted in-memory term directory, loaded on
     the first lookup (in a ShardedIndex only shard 0 plans, so only
     shard 0 loads it); blocks through the row-group map of the postings
@@ -324,6 +325,22 @@ class LocalIndex:
         if cols:
             return pd.DataFrame({"docid": self.doc_column(cols[0])[0],
                                  **{c: self.doc_column(c)[1] for c in cols}})
+
+    def column_type(self, col: str) -> str | None:
+        """A stored column's type as a Range reads it: "number",
+        "string", another type's name, or None when the docs lack the
+        column (from the parquet schema, like column_is_array)."""
+        import pyarrow as pa
+
+        schema = self._docs_ds.schema
+        if schema.get_field_index(col) < 0:
+            return None
+        t = schema.field(col).type
+        if pa.types.is_integer(t) or pa.types.is_floating(t):
+            return "number"
+        if pa.types.is_string(t) or pa.types.is_large_string(t):
+            return "string"
+        return str(t)
 
     def column_is_array(self, col: str) -> bool:
         """Whether a stored column is array-typed (memoized from the

@@ -63,9 +63,25 @@ def test_unknown_field_raises(small_index):
             small_index,
             ast.Bool(must=[ast.Term("x"), ast.Wildcard("a*", field_name="nope")]),
         )
+    # the direct kernel entry validates too
+    from bzzz_spark.query.wand import wand_search
+
+    with pytest.raises(ValueError, match="unindexed field"):
+        wand_search(small_index, ast.Wildcard("a*", field_name="nope"))
+    # a Range names a docs column, with bounds of the column's type
+    for rng in (
+        ast.Range("nope", min=1),  # no such docs column
+        ast.Range("ts", min=0),  # a timestamp column takes no bound
+        ast.Range("role", min=3),  # a string column takes str bounds
+        ast.Range("turn_idx", max="3"),  # a numeric column numbers
+    ):
+        with pytest.raises(ValueError, match=f"range on field '{rng.field_name}'"):
+            search(small_index, ast.Bool(must=[ast.Term("the"), rng])).collect()
     # the default alias and the configured text column are both fine
     validate_fields(small_index, ast.Term("the"))
     validate_fields(small_index, ast.Term("the", field_name="text"))
+    validate_fields(small_index, ast.Range("turn_idx", min=1, max=2.5))
+    validate_fields(small_index, ast.Range("role", min="a"))
 
 
 def test_term_lookup_memoized(spark, small_transcripts):

@@ -193,6 +193,10 @@ def test_local_unknown_field_raises(served):
     _sidx, lix = served
     with pytest.raises(ValueError, match="unindexed field"):
         local_search(lix, ast.Term("x", "no_such_field"))
+    for rng in (ast.Range("no_such_field", min=1), ast.Range("ts", min=0),
+                ast.Range("role", min=3), ast.Range("turn_idx", max="3")):
+        with pytest.raises(ValueError, match=f"range on field '{rng.field_name}'"):
+            local_search(lix, rng)
 
 
 def test_local_unsupported_shape_raises(served):

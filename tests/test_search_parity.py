@@ -189,6 +189,9 @@ def test_q_no_norm(small_index, small_oracle):
     _assert_parity(small_index, small_oracle, node)
     normed = small_oracle.search(node.query, size=10)
     assert small_oracle.search(node, size=10) != normed
+    # nested under a must clause: classify has no boost to read
+    _assert_parity(small_index, small_oracle, ast.Bool(
+        must=[ast.Term("the"), ast.NoNorm(ast.Term("error"))]))
 
 
 @pytest.mark.parametrize("n_part", [1, 3])
