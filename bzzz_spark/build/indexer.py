@@ -151,13 +151,13 @@ class BzzzIndex:
     # BzzzIndex, so a repeated pattern costs zero dictionary jobs.
     _expansion_cache: dict = field(default_factory=dict, repr=False,
                                    compare=False, init=False)
-    # serving layout: True after persist(layout="segment") repartitions
-    # the postings by segment — query kernels then run as NARROW
-    # mapInPandas tasks (zero per-query shuffle; see query/wand.py).
+    # serving layout: True after persist() repartitions the postings by
+    # segment — query kernels then run as NARROW mapInPandas tasks (zero
+    # per-query shuffle; see query/wand.py).
     segment_aligned: bool = field(default=False, repr=False, compare=False,
                                   init=False)
     # the pre-alignment postings frame (kept so unpersist() can release
-    # BOTH cached copies after a persist(layout="segment"))
+    # BOTH cached copies after a persist())
     _build_postings: DataFrame | None = field(default=None, repr=False,
                                               compare=False, init=False)
 
@@ -192,7 +192,6 @@ class BzzzIndex:
     def persist(
         self,
         level: str = "MEMORY_AND_DISK",
-        layout: str | None = "segment",
         partitions: int | None = None,
     ) -> "BzzzIndex":
         """Pin the index frames in executor memory for serving.
@@ -205,14 +204,13 @@ class BzzzIndex:
         MEMORY_AND_DISK spills partitions that don't fit.  Lazy — the
         first query materializes each frame.
 
-        layout="segment" (default) pays ONE repartition-by-segment
-        shuffle at pin time so that every later query runs its scoring
-        kernels as narrow mapInPandas tasks over co-located segments —
-        the per-query groupBy(segment) exchange disappears, which is
-        most of Spark's fixed per-query latency floor.  This is the
-        cluster analog of the reference holding each Lucene shard's
-        segments node-local under a long-lived searcher.  layout=None
-        keeps the build partitioning (cheaper pin, per-query shuffle).
+        It pays ONE repartition-by-segment shuffle at pin time (once
+        per index) so that every later query runs its scoring kernels as
+        narrow mapInPandas tasks over co-located segments — the
+        per-query groupBy(segment) exchange disappears, which is most of
+        Spark's fixed per-query latency floor.  This is the cluster
+        analog of the reference holding each Lucene shard's segments
+        node-local under a long-lived searcher.
 
         ``partitions`` sizes the serving layout.  A query's kernel work
         is bounded by its own terms' blocks, so serving wants FEW large
@@ -227,7 +225,7 @@ class BzzzIndex:
         inMemoryColumnarStorage.batchSize)."""
         from pyspark import StorageLevel
 
-        if layout == "segment" and not self.segment_aligned:
+        if not self.segment_aligned:
             spark = self.postings.sparkSession
             if partitions is None:
                 n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))

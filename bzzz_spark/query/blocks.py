@@ -102,15 +102,6 @@ class Blocks:
         r = np.flatnonzero(np.isin(self.term_id, np.fromiter(tids, np.int64)))
         return r[np.argsort(self.first[r], kind="stable")]
 
-    def sizes(self) -> dict:
-        """term_id → posting count, for the terms with blocks here (one
-        segment)."""
-        if self.term_id.size == 0:
-            return {}
-        starts = np.flatnonzero(np.r_[True, np.diff(self.term_id) != 0])
-        return dict(zip(self.term_id[starts].tolist(),
-                        np.add.reduceat(self.count, starts).tolist()))
-
 
 def impacts_max_tfc(impacts, avgdl: float) -> np.ndarray:
     """Per block, the largest tf component of its impacts at this

@@ -35,17 +35,9 @@ tests/test_phrase.py asserts this with the kernel's stats output.
 The matching kernels are numpy-vectorized across documents:
 - exact: a (doc, start_position) group-count — a start matches iff all
   k legs contain it, so the composite key appears exactly k times;
-- sloppy k == 2: a vectorized "crossing walk" over the two merged
-  adjusted-position lists.  Derivation: Lucene's PQ walk records one
-  match per role swap, pairing each crossing point y with the opposite
-  list's largest value x <= y (matchLength = y - x); crossing points
-  are y0 = max of the two heads, then alternately the opposite list's
-  smallest value > y.  Each iteration advances ALL documents one
-  crossing (global searchsorted), so the Python-loop count is the max
-  crossings per doc (~2*min(tf)+1), not the doc count.
-- sloppy k >= 3: batched greedy walk (every active doc advances one
-  PhrasePositions per numpy step) — candidates at this point are docs
-  containing ALL phrase terms;
+- sloppy with k >= 2 distinct terms: batched greedy walk (every
+  active doc advances one PhrasePositions per numpy step) — candidates
+  at this point are docs containing ALL phrase terms;
 - sloppy with REPEATED terms ("a b a"): Lucene's repeating-terms
   machinery (collision groups; see bzzz_spark.query.phrase_repeats),
   per candidate doc after a tf >= multiplicity prefilter.
@@ -83,60 +75,6 @@ def _exact_freqs(legs, n_cand: int):
         return np.empty(0, dtype=np.int64), np.empty(0)
     ur, cnt = np.unique(match // shift, return_counts=True)
     return ur, cnt.astype(np.float64)
-
-
-def _sloppy_freqs_2(leg_a, leg_b, slop: int, n_cand: int):
-    """Vectorized Lucene sloppy freq for 2 distinct terms — the crossing
-    walk (see module docstring).  Every candidate doc has occurrences in
-    both legs (guaranteed by the docid intersection)."""
-    da, pa = leg_a
-    db, pb = leg_b
-    off = 4  # adjusted positions are >= -(k-1) = -1; keep keys positive
-    hi = 1
-    if pa.size:
-        hi = max(hi, int(pa.max()))
-    if pb.size:
-        hi = max(hi, int(pb.max()))
-    m = hi + off + 2
-    ga = da.astype(np.int64) * m + pa + off
-    gb = db.astype(np.int64) * m + pb + off
-    docs = np.arange(n_cand, dtype=np.int64)
-    a_hi = np.searchsorted(ga, (docs + 1) * m, "left")
-    b_hi = np.searchsorted(gb, (docs + 1) * m, "left")
-    a_lo = np.searchsorted(ga, docs * m, "left")
-    b_lo = np.searchsorted(gb, docs * m, "left")
-    ha, hb = ga[a_lo], gb[b_lo]
-    # y = larger head; on ties the lower phrase offset (leg a) advances
-    # first (Lucene PQ tie-break), so y stays with leg b
-    side_a = ha > hb
-    y = np.maximum(ha, hb)
-    freq = np.zeros(n_cand)
-    active = np.ones(n_cand, dtype=bool)
-    while active.any():
-        idx = np.flatnonzero(active)
-        yi = y[idx]
-        sa = side_a[idx]
-        ib = np.searchsorted(gb, yi, "right") - 1  # largest b <= y
-        ia = np.searchsorted(ga, yi, "right") - 1  # largest a <= y
-        x = np.where(sa, gb[np.clip(ib, 0, gb.size - 1)],
-                     ga[np.clip(ia, 0, ga.size - 1)])
-        ml = yi - x
-        ok = ml <= slop
-        np.add.at(freq, idx[ok], 1.0 / (1.0 + ml[ok]))
-        # next crossing: opposite list's smallest value > y (same doc)
-        nxt = np.where(sa, ib + 1, ia + 1)
-        lim = np.where(sa, b_hi[idx], a_hi[idx])
-        has = nxt < lim
-        nv = np.where(
-            sa, gb[np.clip(nxt, 0, gb.size - 1)],
-            ga[np.clip(nxt, 0, ga.size - 1)],
-        )
-        active[idx[~has]] = False
-        goes = idx[has]
-        y[goes] = nv[has]
-        side_a[goes] = ~sa[has]  # the crossing value is from the opposite list
-    got = freq > 0
-    return np.flatnonzero(got), freq[got]
 
 
 def _sloppy_freq_one(lists: list[np.ndarray], slop: int) -> float:
@@ -216,12 +154,11 @@ def _sloppy_freqs_repeats(legs, groups, slop: int, n_cand: int):
 
 
 def _sloppy_freqs_k(legs, slop: int, n_cand: int):
-    """Batched greedy walk for k >= 3 distinct terms — the same Lucene
+    """Batched greedy walk for k >= 2 distinct terms — the same Lucene
     SloppyPhraseScorer.phraseFreq state machine as _sloppy_freq_one, but
     every ACTIVE candidate doc advances one PhrasePositions per numpy
     step, so the Python-loop count is the MAX total occurrence count in
-    any single doc, not the doc count (the k=2 crossing walk's
-    discipline, generalized).  legs are flat (doc_rank, adj) arrays
+    any single doc, not the doc count.  legs are flat (doc_rank, adj) arrays
     sorted by (doc_rank, adj); per-doc slices via searchsorted.
 
     Cross-checked against _sloppy_freq_one and the oracle's independent
@@ -327,12 +264,14 @@ def phrase_arrays(
     term anchors the phrase.
 
     ``restrict`` (sorted docid array): pre-established candidate set
-    from an enclosing conjunction (the WAND mixed-conjunction path —
+    from an enclosing query (the WAND conjunction —
     `error AND "stack trace"` hands the phrase only error's survivors).
     Every leg's blocks — including the rarest — are pruned against it,
     and the output docids are a subset of it.  ``cache`` (a dict kept
     per segment by a caller that matches it several times) decodes each
-    block once across calls."""
+    block once across calls; such a caller counts the legs'
+    total_blocks itself, once (wand._Match), so only decodes count
+    here."""
     if restrict is not None and restrict.size == 0:
         return None
     uniq = list(dict.fromkeys(int(t) for t in tid_order))
@@ -342,7 +281,8 @@ def phrase_arrays(
         if rows.size == 0:
             return None  # a missing must-term: no phrase in this segment
         per[tid] = rows
-        tally(stats, "total_blocks", tid, rows.size)
+        if cache is None:  # a caller keeping a cache counts its legs once
+            tally(stats, "total_blocks", tid, rows.size)
     order = sorted(uniq, key=lambda t: int(b.count[per[t]].sum()))
     decoded = {}
     cand = cand_dl = None
@@ -406,8 +346,6 @@ def phrase_arrays(
     elif rpt_groups:
         doc_rank, ptf = _sloppy_freqs_repeats(legs, rpt_groups, slop,
                                               cand.size)
-    elif len(tid_order) == 2:
-        doc_rank, ptf = _sloppy_freqs_2(legs[0], legs[1], slop, cand.size)
     else:
         doc_rank, ptf = _sloppy_freqs_k(legs, slop, cand.size)
     if doc_rank.size == 0:

@@ -185,7 +185,7 @@ def normalize(node: ast.Query) -> ast.Query:
                         # range-only must list, which cannot drive the
                         # ReqOptSum kernel (no postings stream).  Kept
                         # required, the group's member union drives the
-                        # mixed conjunction kernel and its decode
+                        # conjunction kernel and its decode
                         # carries the doc-value streams for the range
                         # mask — still exactly equivalent, and on a
                         # kernel instead of the exhaustive plan.

@@ -17,7 +17,7 @@ segment or many), converts it ONCE to a numpy block set
 (bzzz_spark.query.blocks: one array per column, rows sorted by
 (segment, term_id, first_docid), so every segment and every term in it
 is a contiguous slice), runs each segment's slice through one function
-per query shape (_any_topk, _term_topk, _and_topk, _mixed_and_topk,
+per query shape (_SHAPES: _any_topk, _term_topk, _and_topk,
 _maxscore_topk) and returns the per-segment top-k concatenated as one
 (docid, score) frame.  The shapes take lists of clauses (_Clause: a
 term, a constant-score set, a required group or a phrase), each
@@ -29,27 +29,28 @@ contributions of its matches among sorted candidates, decoding only
 the blocks that overlap them (blocks.overlapping), each block once per
 segment (phrase legs through phrase.phrase_arrays).  Every decode is
 counted by one stats recorder (blocks.tally); pandas appears only at
-entry and exit.  A term's bound
-on a block is its weight w = idf · boost times the block's max_tfc,
-derived at query time from the block's stored (tf, dl) impacts
-(blocks.impacts_max_tfc), so a live streaming index, whose N and avgdl
-move with every micro-batch, prunes as safely as a built one.  Every
+entry and exit.  A term's bound on a block is its weight w = idf ·
+boost times the block's max_tfc, derived at query time from the
+block's stored (tf, dl) impacts (blocks.impacts_max_tfc), so a live
+streaming index, whose N and avgdl move with every micro-batch, prunes
+as safely as a built one.  Every
 pruning bound is rounded up (_up), so no bound sits below a score it
 bounds (tests/test_clause_bounds.py checks every clause kind).
 
 Pruning by query shape (all results EXACT — pruning never changes them;
 tests cross-check against the exhaustive plan and the oracle):
 
-- single term: a doc's whole score lives in one block, so blocks are
-  processed in descending bound order (in chunks of 8
-  doubling to 256, the conjunction's rule) and processing stops once
-  the kth-best score exceeds the next block's max (classic block-max
-  top-k).
-- conjunction (AND): block-granular leapfrog — the rarest term's blocks
-  are decoded first; every other term's blocks are skipped entirely
-  unless their [first_docid, last_docid] range intersects a candidate,
-  plus a block-max bound: a block is skipped when its max score + the
-  other terms' remaining max < the current kth best of full matches.
+- single term: a doc's whole score lives in one block, so blocks run
+  in descending bound order (_by_bound, as a conjunction's term lead)
+  and stop once the kth-best score exceeds the next block's max.
+- conjunction (AND) of clauses of any kind: block-granular leapfrog —
+  the clause with the fewest postings in the segment leads; every other
+  clause's blocks are skipped entirely unless their [first_docid,
+  last_docid] range intersects a candidate.  A term lead prunes with
+  a block-max bound: its blocks run in descending bound order, and
+  the rest are skipped once their max score + the other clauses'
+  bounds < the current kth best of full matches.  A set, group or
+  phrase lead matches whole.
 - disjunction (OR/minimum-should-match): MaxScore (Turtle & Flood) at
   block granularity — terms processed in descending upper-bound order
   (UB_t = w_t · max block max_tfc) into per-candidate
@@ -78,8 +79,10 @@ tests cross-check against the exhaustive plan and the oracle):
   terms decodes a handful of leading blocks per segment instead of the
   full posting lists.
 
-Every other shape (nesting, negative boosts, match-all, ranges without
-doc-values, no-norm, random and custom scores) gets the exhaustive plan
+A Filtered is served as its rewrite.normalize lowering, Bool(must=[q,
+f@boost=0]): the filter arm is an unscored conjunct.  Every other shape
+(nesting, negative boosts, match-all, ranges without doc-values,
+no-norm, random and custom scores) gets the exhaustive plan
 of bzzz_spark.query.evaluate, a KernelPlan too: both runtimes run it as
 they run these kernels, with no pruning.
 """
@@ -106,6 +109,7 @@ from bzzz_spark.query.blocks import (
     tally,
 )
 from bzzz_spark.query.phrase import phrase_arrays
+from bzzz_spark.query.rewrite import normalize
 from bzzz_spark.query.scoring import idf as idf_fn
 from bzzz_spark.query.scoring import tf_component_np
 
@@ -115,18 +119,19 @@ class FlatShape:
     """A query shape the block-max kernels can serve directly.
 
     terms:   (value, field, boost, scored) — scored=False for
-             filter-arm conjuncts (Filtered semantics: intersect,
+             filter-arm conjuncts (a boost-0 conjunct, as
+             rewrite.normalize lowers a Filtered's filter: intersect,
              contribute 0).  Scored terms must target the text field
              (kernel scoring uses the text index's norms); UNSCORED
              membership (filter arms, must_not) may target any indexed
              field via its '<field>:<token>' dictionary key.
-    phrases: (term_values, slop, boost, scored) — phrase pseudo-terms:
-             and-mode conjuncts, or or/dismax-mode clauses (MaxScore
-             with the loose-but-sound w_p*(k1+1) upper bound), all
-             served by phrase.phrase_arrays.
+    phrases: (term_values, slop, boost, scored) — phrase clauses:
+             and-mode conjuncts, or or/dismax-mode clauses, bounded by
+             the loose-but-sound w_p*(k1+1) and matched by
+             phrase.phrase_arrays.
     ranges:  (Range, contrib) — contrib is the score the predicate adds
              per match (node.boost for Bool must-ranges, 0.0 for
-             Filtered filter-ranges).
+             boost-0 filter ranges).
     multis:  (Wildcard|Fuzzy node, scored) — and-mode set conjuncts:
              the doc must contain ANY expansion term; contributes the
              node's constant boost (Lucene CONSTANT_SCORE_REWRITE for
@@ -232,7 +237,7 @@ def run_plans(index: BzzzIndex, plans: dict) -> DataFrame:
             docs.groupby("__segment")).applyInPandas(run, schema)
     if getattr(index, "segment_aligned", False):
         # serving layout: postings are already hash-partitioned by
-        # segment (BzzzIndex.persist(layout="segment")), so the kernels
+        # segment (BzzzIndex.persist()), so the kernels
         # run as a NARROW mapInPandas — zero per-query shuffle, the
         # single biggest chunk of Spark's fixed query latency.  Each
         # kernel splits the partition's blocks by segment itself.
@@ -332,13 +337,15 @@ def _unique_terms(terms) -> bool:
 
 def classify(node: ast.Query) -> FlatShape | None:
     """FlatShape for kernel-servable shapes, else None (the exhaustive
-    plan).  Servable: Term; Bool over Terms/Ranges/Phrases in must
-    + Terms in must_not + Terms in should (no mixing must and should);
-    Filtered whose query is a servable term/and shape and whose filter
-    is a Term/Range/Phrase or a Bool(must/must_not) of those (filter
-    conjuncts intersect without scoring — Lucene FilteredQuery).
-    Exclusions ride the kernel: Lucene's ReqExclScorer is the same
-    per-leaf advance-and-skip.
+    plan).  Servable: Term; a Bool whose must holds Terms, Ranges,
+    Phrases, Wildcard/Fuzzy sets and Term groups, whose should holds
+    Terms, Phrases and sets, and whose must_not holds Terms and sets;
+    DisMax over should-like clauses; a Filtered as its
+    rewrite.normalize lowering Bool(must=[q, f@boost=0]), the one
+    Filtered lowering of the engine (boost-0 conjuncts intersect
+    without scoring — Lucene's FILTER clause), or None when normalize
+    keeps the Filtered.  Exclusions ride the kernel: Lucene's
+    ReqExclScorer is the same per-leaf advance-and-skip.
 
     Negative boosts fall back: w · max_tfc bounds assume
     non-negative term weights (for w < 0 the block 'max' is a LOWER
@@ -436,53 +443,9 @@ def classify(node: ast.Query) -> FlatShape | None:
             tie=float(node.tie_breaker),
             multis=[(q, True) for q in dmul],
         )
-    if isinstance(node, ast.Filtered) and node.boost == 1.0:
-        # NOTE: the search()/batch() paths never reach this branch —
-        # rewrite.normalize() lowers every Filtered this branch accepts
-        # to Bool(must=[q, f@boost=0]) first, and the Bool branch
-        # classifies boost-0 conjuncts as unscored membership (the same
-        # scored=False treatment applied here).  Kept for DIRECT
-        # wand_search/wand_candidates callers, who get raw ASTs.
-        base = classify(node.query)
-        if base is None or base.mode in ("or", "dismax"):
-            return None
-        f = node.filter
-        if isinstance(f, ast.Bool) and f.boost == 1.0 and not f.should:
-            if not f.must:
-                # a Bool with only must_not matches NOTHING (Lucene
-                # semantics) — lowering it to a bare exclusion would
-                # instead match everything-but; fall back
-                return None
-            if not all(isinstance(q, ast.Term) for q in f.must_not):
-                return None
-            fparts = _flat_conjuncts(f.must, scored=False)
-            fneg = [(q.value, q.field_name) for q in f.must_not]
-        elif isinstance(f, (ast.Term, ast.Range, ast.Phrase,
-                            ast.Wildcard, ast.Fuzzy)):
-            fparts = _flat_conjuncts([f], scored=False)
-            fneg = []
-        else:
-            return None
-        if fparts is None:
-            return None
-        fterms, fphrases, franges, fmultis, fgroups = fparts
-        terms = base.terms + fterms
-        phrases = base.phrases + fphrases
-        ranges = base.ranges + franges
-        multis = base.multis + fmultis
-        groups = base.groups + fgroups
-        if not (terms or phrases or multis or groups):
-            return None
-        return FlatShape(
-            "and", terms, phrases,
-            sum(1 for _, _, _, s in terms if s),
-            base.neg + fneg, ranges, multis,
-            base.opts, base.opt_msm,
-            opt_phrases=base.opt_phrases,
-            neg_multis=base.neg_multis,
-            opt_multis=base.opt_multis,
-            groups=groups,
-        )
+    if isinstance(node, ast.Filtered):
+        low = normalize(node)  # the one Filtered lowering
+        return None if isinstance(low, ast.Filtered) else classify(low)
     return None
 
 
@@ -513,7 +476,7 @@ class _Clause:
     """One clause of a planned query, of one of four kinds.  The shape
     functions combine clauses without asking which kind each is, as
     Lucene's conjunction, ReqOptSum and WAND scorers combine child
-    Scorers; the kind is read only here and in _make_kernel.
+    Scorers; the kind is read only here, in _Match and in _make_kernel.
 
     - "term": tids is (term_id,), w = idf · boost.
     - "set": a constant-score term set — an expanded Wildcard/Fuzzy
@@ -610,14 +573,6 @@ class _Clause:
         hi = np.searchsorted(b.term_id, self.ids, "right")
         return int(np.count_nonzero(hi > lo)) >= self.msm
 
-    def estimate(self, sizes: dict) -> int:
-        """Its posting count on a segment (b.sizes()), the intersection
-        order of a mixed conjunction: a phrase's rarest leg, else the
-        sum over its terms."""
-        if self.kind == "phrase":
-            return min(sizes[t] for t in self.tids)
-        return sum(sizes.get(t, 0) for t in self.tids)
-
     def bound(self, b: Blocks) -> float:
         """An upper bound on one doc's contribution on segment b, where
         the clause is present (pruning adds _up): w · the block max_tfc
@@ -638,18 +593,49 @@ class _Match:
     decoded only where they overlap the candidates of a match call, each
     block once; what is decoded accumulates in one docid-sorted store (a
     phrase's, per block, in phrase_arrays' cache).  Opening counts the
-    clause's blocks in the stats' total_blocks (a phrase's legs are
-    counted by phrase_arrays, per call)."""
+    clause's blocks in the stats' total_blocks (a phrase's per leg
+    term, as phrase_arrays counts their decodes)."""
 
     def __init__(self, q: "_Spec", c: _Clause, b: Blocks):
         self.q, self.c, self.b = q, c, b
         if c.kind == "phrase":
             self.cache: dict = {}  # row -> its decoded streams
+            self.legs = {t: b.rows(t) for t in c.tids}
+            for t, rows in self.legs.items():
+                tally(q.stats, "total_blocks", t, rows.size)
             return
         self.rows = b.rows(c.tids[0]) if c.kind == "term" else b.rows_of(c.ids)
         self.done = np.zeros(b.term_id.size, dtype=bool)
         self.d = self.tf = self.dl = self.own = np.empty(0, dtype=np.int64)
         tally(q.stats, "total_blocks", c.key, self.rows.size)
+
+    def size(self) -> int:
+        """Its posting count here, the order in which a conjunction
+        meets its clauses: a phrase's rarest leg, else the sum over its
+        blocks."""
+        if self.c.kind == "phrase":
+            return min(int(self.b.count[r].sum()) for r in self.legs.values())
+        return int(self.b.count[self.rows].sum())
+
+    def lead(self, theta: "_Theta", rest: float, dv: bool):
+        """Its matches as a conjunction's lead: docid-sorted chunks of
+        (docids, contributions).  A term's blocks come by descending
+        bound w · max_tfc + ``rest`` (rest bounds the other clauses)
+        until θ passes it (_by_bound); any other kind is one chunk, its
+        whole match.  With ``dv`` the range predicates mask its decode."""
+        q, c, b = self.q, self.c, self.b
+        if c.kind != "term":
+            got = self.match(None, dv)
+            if got is not None:
+                yield got
+            return
+        for rows in _by_bound(b, self.rows, c.w, rest, theta):
+            dec = decode(b, rows, dv=q.dv_want if dv else ())
+            tally(q.stats, "decoded_blocks", c.key, rows.size)
+            o = np.argsort(dec.d, kind="stable")  # blocks in bound order
+            if dv:
+                o = o[_dv_mask(q.ranges, {f: v[o] for f, v in dec.dv.items()})]
+            yield dec.d[o], c.w * _tfc(q, dec.tf[o], dec.dl[o])
 
     def match(self, cand: np.ndarray | None = None, dv: bool = False):
         """(docids, contributions) of its matches among the sorted
@@ -726,7 +712,8 @@ class _Spec:
 
     req: the required clauses of a conjunction, or the clauses of a
     disjunction, in the order the shape sums them (terms, phrases,
-    sets, groups).  opt (and-mode): the OPTIONAL should clauses (Lucene
+    sets, groups); modes "term" and "any" read one clause, req[0] (a
+    term; a set).  opt (and-mode): the OPTIONAL should clauses (Lucene
     ReqOptSumScorer), summed as sets, terms, phrases.  They never admit
     candidates, decode only where they overlap the conjunction's
     survivors, add their score where they match, and opt_msm of them
@@ -742,9 +729,7 @@ class _Spec:
 
     Document lengths come from the blocks' inline dls stream (0 →
     avgdl, the norms-disabled sentinel) and a term's block bound is
-    w × max_tfc at ``avgdl``, so the kernel needs no side input.
-    qmeta: term_id -> (w, w) of the first clause, what the one-clause
-    shapes (_term_topk; _any_topk reads the set's constant) read."""
+    w × max_tfc at ``avgdl``, so the kernel needs no side input."""
 
     mode: str
     msm: int
@@ -763,7 +748,6 @@ class _Spec:
         self.dv_want = tuple(
             dict.fromkeys(r.field_name for r, _c in self.ranges)
         )
-        self.qmeta = {t: (c.w, c.w) for c in self.req[:1] for t in c.tids}
 
 
 def _tfc(q: _Spec, tf: np.ndarray, dl: np.ndarray) -> np.ndarray:
@@ -878,11 +862,27 @@ def _narrow(parts: dict, cand: np.ndarray, d: np.ndarray) -> dict:
     return {c: v[idx] for c, v in parts.items()}
 
 
+def _by_bound(b: Blocks, rows: np.ndarray, w: float, rest: float,
+              theta: _Theta) -> Iterator[np.ndarray]:
+    """One term's block rows by descending bound w · max_tfc + ``rest``,
+    in _chunks, up to the first chunk bound strictly below θ (pushed by
+    the caller): a block whose bound EQUALS θ can still hold a score-tied
+    doc with a smaller docid (boost=0 makes every score 0)."""
+    rows = rows[np.argsort(-b.max_tfc[rows], kind="stable")]
+    bounds = _up(w * b.max_tfc[rows] + rest)
+    for sl in _chunks(rows.size):
+        if bounds[sl.start] < theta.value:
+            return
+        yield rows[sl]
+
+
 def _any_topk(q: _Spec, b: Blocks):
-    """Constant-score match-any: the k smallest matching docids.  Blocks
-    ascend by first_docid; once the kth-smallest docid found so far
-    precedes the next block's range, no later block can contribute."""
-    rows = b.rows_of(q.qmeta)
+    """Constant-score match-any: the k smallest docids matching the set
+    q.req[0].  Blocks ascend by first_docid; once the kth-smallest docid
+    found so far precedes the next block's range, no later block can
+    contribute."""
+    c = q.req[0]
+    rows = b.rows_of(c.tids)
     if rows.size == 0:
         return None
     tally(q.stats, "total_blocks", None, rows.size)
@@ -893,72 +893,55 @@ def _any_topk(q: _Spec, b: Blocks):
         d = decode(b, rows[sl], dl=False).d
         got = np.unique(np.concatenate((got, d)))[:q.k]
         tally(q.stats, "decoded_blocks", None, sl.stop - sl.start)
-    boost = next(iter(q.qmeta.values()))[1]
-    return got, np.full(got.size, float(boost))
+    return got, np.full(got.size, float(c.w))
 
 
 def _term_topk(q: _Spec, b: Blocks):
-    """Single-term block-max top-k: blocks in descending max-score
-    order, stopping once the kth best so far beats the next block's
-    bound.  Exact: a doc's whole score lives in exactly one block.
-    Strictly below θ: a block whose bound EQUALS θ can still hold a
-    score-tied doc with a smaller docid (e.g. boost=0 makes every score
-    0), which wins the (score desc, docid asc) tie-break."""
-    tid, (w, _boost) = next(iter(q.qmeta.items()))
-    rows = b.rows(tid)
+    """Single-term block-max top-k of the term q.req[0]: blocks by
+    descending bound (_by_bound), stopping once the kth best so far
+    beats the next block's bound.  Exact: a doc's whole score lives in
+    exactly one block."""
+    c = q.req[0]
+    rows = b.rows(c.tids[0])
     if rows.size == 0:
         return None
-    tally(q.stats, "total_blocks", tid, rows.size)
-    rows = rows[np.argsort(-b.max_tfc[rows], kind="stable")]
-    bounds = _up(w * b.max_tfc[rows])
+    tally(q.stats, "total_blocks", c.key, rows.size)
     theta = _Theta(q.k)
     out_d, out_s = [], []
-    for sl in _chunks(rows.size):
-        if bounds[sl.start] < theta.value:
-            break
-        dec = decode(b, rows[sl])
-        tally(q.stats, "decoded_blocks", tid, sl.stop - sl.start)
+    for r in _by_bound(b, rows, c.w, 0.0, theta):
+        dec = decode(b, r)
+        tally(q.stats, "decoded_blocks", c.key, r.size)
         out_d.append(dec.d)
-        out_s.append(w * _tfc(q, dec.tf, dec.dl))
+        out_s.append(c.w * _tfc(q, dec.tf, dec.dl))
         theta.push(out_s[-1])
     return _topk(np.concatenate(out_d), np.concatenate(out_s), q.k)
 
 
 def _and_topk(q: _Spec, b: Blocks):
-    """Block-max conjunction of terms (Lucene BlockMaxConjunctionScorer,
-    block-at-a-time).  The rarest term's blocks are processed in
-    descending block-max chunks; once θ exceeds a chunk's bound plus
-    the other terms' (and optional clauses') upper bounds, the remaining
-    rare blocks cannot host a top-k doc and are never decoded.  Within a
-    chunk the other terms decode only blocks overlapping the chunk's
-    surviving candidates, each block once.  Scores sum in clause order
-    whatever the per-segment term order, so equal docs tie exactly."""
+    """Conjunction of clauses of any kind (Lucene's ConjunctionScorer,
+    block-at-a-time).  The clause with the fewest postings here leads,
+    in chunks (_Match.lead: a term's stop once θ passes their bound
+    plus the other and optional clauses' bounds).  The others, by
+    ascending size, decode only blocks overlapping a chunk's survivors,
+    each block once.  The dv range mask rides the first decode that
+    carries dv streams.  Scores sum in clause order whatever the
+    per-segment order, so equal docs tie exactly."""
     if not all(c.present(b) for c in q.req):
-        return None  # a must-term has no postings in this segment
+        return None  # a conjunct cannot match in this segment
     opt = _Optionals(q, b)
     if not opt.feasible:
         return None
     excl = _Excluder(q, b)
-    terms = [_Match(q, c, b) for c in q.req]
-    rare, *others = sorted(terms, key=lambda m: int(b.count[m.rows].sum()))
-    ub_rest = sum(m.c.bound(b) for m in others)
-    w_r = rare.c.w
-    rrows = rare.rows[np.argsort(-b.max_tfc[rare.rows], kind="stable")]
-    bounds = _up(w_r * b.max_tfc[rrows] + (ub_rest + q.range_boost + opt.ub))
+    ms = [_Match(q, c, b) for c in q.req]
+    lead, *others = sorted(ms, key=_Match.size)
+    rest = sum(m.c.bound(b) for m in others) + q.range_boost + opt.ub
     theta = _Theta(q.k)
     out_d, out_s = [], []
-    for sl in _chunks(rrows.size):
-        if bounds[sl.start] < theta.value:
-            break  # strictly below θ: a bound-tied doc could still win
-        dec = decode(b, rrows[sl], dv=q.dv_want)
-        tally(q.stats, "decoded_blocks", rare.c.key, sl.stop - sl.start)
-        o = np.argsort(dec.d, kind="stable")
-        if q.ranges:
-            o = o[_dv_mask(q.ranges, {c: v[o] for c, v in dec.dv.items()})]
-        d = dec.d[o]
-        parts = {rare: w_r * _tfc(q, dec.tf[o], dec.dl[o])}
+    for d, s in lead.lead(theta, rest, bool(q.ranges)):
+        parts, dv = {lead: s}, bool(q.ranges) and not lead.c.streams
         for m in others:
-            got = m.match(d) if d.size else None
+            got = m.match(d, dv) if d.size else None
+            dv = dv and not m.c.streams
             if got is None:
                 d = d[:0]
                 break
@@ -966,7 +949,7 @@ def _and_topk(q: _Spec, b: Blocks):
             d, parts[m] = got
         if d.size == 0:
             continue
-        acc = sum(parts[m] for m in terms) + q.range_boost
+        acc = sum(parts[m] for m in ms) + q.range_boost
         km = excl.keep(d)
         d, acc = opt.add(d[km], acc[km])
         if d.size:
@@ -976,39 +959,6 @@ def _and_topk(q: _Spec, b: Blocks):
     if not out_d:
         return None
     return _topk(np.concatenate(out_d), np.concatenate(out_s), q.k)
-
-
-def _mixed_and_topk(q: _Spec, b: Blocks):
-    """Conjunction with phrase, set or group conjuncts: conjuncts are
-    intersected in ascending estimated-size order (_Clause.estimate).
-    No θ-pruning here (a phrase block carries no positional bound), but
-    every conjunct after the first decodes only blocks overlapping the
-    surviving candidates — the leapfrog of ref
-    TermPayloadClojureScoreQuery.java:237-257, applied uniformly.  The
-    dv range mask rides the first conjunct whose decode carries the dv
-    streams (plan_candidates adds an unscored phrase-leg term when only
-    phrases conjoin)."""
-    if not all(c.present(b) for c in q.req):
-        return None  # a conjunct cannot match in this segment
-    opt = _Optionals(q, b)
-    if not opt.feasible:
-        return None
-    sizes = b.sizes()
-    cand, parts, dv = None, {}, bool(q.ranges)
-    for c in sorted(q.req, key=lambda c: c.estimate(sizes)):
-        got = _Match(q, c, b).match(cand, dv)
-        dv = dv and not c.streams
-        if got is None or got[0].size == 0:
-            return None
-        if cand is not None:
-            parts = _narrow(parts, cand, got[0])
-        cand, parts[c] = got
-    acc = sum(parts[c] for c in q.req)
-    km = _Excluder(q, b).keep(cand)
-    d, acc = opt.add(cand[km], acc[km] + q.range_boost)
-    if d.size == 0:
-        return None
-    return _topk(d, acc, q.k)
 
 
 def _maxscore_topk(q: _Spec, b: Blocks):
@@ -1108,6 +1058,11 @@ def _maxscore_topk(q: _Spec, b: Blocks):
     return _topk(docs[ok], combined(total, ok), q.k)
 
 
+# The shape function of each FlatShape mode ("any": a constant set).
+_SHAPES = {"any": _any_topk, "term": _term_topk, "and": _and_topk,
+           "or": _maxscore_topk, "dismax": _maxscore_topk}
+
+
 def _make_kernel(qmeta: dict, mode: str, msm: int, k: int, avgdl: float,
                  neg_tids: list[int] | None = None,
                  ranges: list | None = None, stats: dict | None = None,
@@ -1122,7 +1077,8 @@ def _make_kernel(qmeta: dict, mode: str, msm: int, k: int, avgdl: float,
     """The block-max kernel of one planned query: blocks_pdf → one
     (docid, score) frame holding each segment's top-k, concatenated.
     The block frame becomes an array block set once (query.blocks);
-    each segment's slice then runs the function for the query's shape.
+    each segment's slice then runs the shape function of ``mode``
+    (_SHAPES), a small function over the clauses.
 
     The clauses are built here, once per plan.  ``req`` and ``opt`` are
     clauses plan_candidates resolved; direct callers may give them by
@@ -1156,15 +1112,7 @@ def _make_kernel(qmeta: dict, mode: str, msm: int, k: int, avgdl: float,
         neg.key = "neg"
     q = _Spec(mode, msm, k, avgdl, stats, list(ranges or []), tie, opt_msm,
               req, opt, neg)
-    if mode == "any":
-        shape = _any_topk
-    elif mode == "term":
-        shape = _term_topk
-    elif mode == "and":
-        mixed = any(c.kind != "term" for c in req)
-        shape = _mixed_and_topk if mixed else _and_topk
-    else:
-        shape = _maxscore_topk
+    shape = _SHAPES[mode]
 
     def kernel(blocks: pd.DataFrame, docs=None) -> pd.DataFrame:
         got = []  # a kernel reads no docs (KernelPlan.doc_cols is empty)
@@ -1401,14 +1349,9 @@ def plan_candidates(
         shape.terms or shape.multis or shape.groups
     ):
         # phrase-ONLY conjunction + dv range ("\"stack trace\" AND
-        # ts>X"): the positional kernel returns no dv streams and no
-        # other conjunct exists to carry them, but every match contains
-        # ALL legs of every required phrase, so the rarest leg
-        # intersects without changing the match set.  Synthesize it as
-        # UNSCORED membership (weight 0 — adds no score, leaves pruning
-        # bounds intact): its decode carries the dv streams and the
-        # range mask prunes candidates there, before any positional
-        # work.  (Set/group conjuncts carry dv at their own decode.)
+        # ts>X"): the positional kernel returns no dv streams, but every
+        # match holds every leg, so the rarest leg, as an UNSCORED term
+        # (weight 0), carries them without changing the match set.
         legs = {t for tids, *_ in shape.phrases for t in tids}
         carrier = min(legs, key=lambda t: (meta[t][1], t))
         req.insert(0, _Clause("term", (meta[carrier][0],), 0.0))

@@ -386,7 +386,7 @@ def test_sloppy_kernels_cross_check_pure():
     import random
 
     from bzzz_spark.oracle.pyoracle import _sloppy_phrase_freq
-    from bzzz_spark.query.phrase import _sloppy_freq_one, _sloppy_freqs_2
+    from bzzz_spark.query.phrase import _sloppy_freq_one, _sloppy_freqs_k
 
     rng = random.Random(7)
     for _ in range(500):
@@ -397,7 +397,7 @@ def test_sloppy_kernels_cross_check_pure():
         want = _sloppy_phrase_freq([adj_a, adj_b], slop)
         la = (np.zeros(na, dtype=np.int64), np.array(adj_a, dtype=np.int64))
         lb = (np.zeros(nb, dtype=np.int64), np.array(adj_b, dtype=np.int64))
-        dr, f = _sloppy_freqs_2(la, lb, slop, 1)
+        dr, f = _sloppy_freqs_k([la, lb], slop, 1)
         got = float(f[0]) if dr.size else 0.0
         assert math.isclose(got, want, abs_tol=1e-12), (adj_a, adj_b, slop)
     for _ in range(500):
@@ -415,8 +415,6 @@ def test_sloppy_kernels_cross_check_pure():
     # batched k-walk (_sloppy_freqs_k) vs the per-doc reference walk on
     # multi-doc batches — the round-4 vectorization must be a pure
     # speedup, bit-identical per doc
-    from bzzz_spark.query.phrase import _sloppy_freqs_k
-
     for _ in range(120):
         k = rng.randint(3, 5)
         n_docs = rng.randint(1, 8)

@@ -107,11 +107,13 @@ def test_unsupported_shapes_fall_back(small_index):
     assert classify(
         ast.Filtered(ast.Term("a"), ast.Range("turn_idx", min=1))
     ) is not None
-    # ... but or-queries and only-must_not filter Bools (which match
-    # NOTHING, not everything-but) still fall back
+    # ... and so do filtered or-queries, classified as their
+    # rewrite.normalize lowering (the filter drives a ReqOptSum); only
+    # must_not filter Bools (which match NOTHING, not everything-but)
+    # still fall back
     assert classify(
         ast.Filtered(ast.Bool(should=[ast.Term("a")]), ast.Term("b"))
-    ) is None
+    ) is not None
     # multi-term conjuncts ride the kernel as constant-score term SETS
     # (round 4); in should-position they ride the MaxScore kernel as
     # set clauses too (round 4, late)
@@ -171,7 +173,7 @@ def test_search_uses_wand_transparently(small_index, small_oracle):
 def test_segment_aligned_serving_is_narrow_and_identical(
     spark, small_transcripts, small_oracle
 ):
-    """persist(layout=\"segment\") pays one repartition at pin time and
+    """persist() pays one repartition at pin time and
     buys shuffle-free queries: the WAND/phrase kernels become narrow
     mapInPandas (NO Exchange in the executed plan), with results
     identical to the default grouped path."""
@@ -181,7 +183,7 @@ def test_segment_aligned_serving_is_narrow_and_identical(
         small_transcripts,
         IndexConfig(block_size=16, segment_size=64, num_partitions=4,
                     store_positions=True),
-    ).persist(layout="segment")
+    ).persist()
     assert idx.segment_aligned
     nodes = [
         ast.Term("the"),
@@ -859,6 +861,10 @@ REQ_OPT_QUERIES = [
              should=[ast.Term("the", boost=0.5)]),
     # the optional term is also required: both contributions apply
     ast.Bool(must=[ast.Term("error")], should=[ast.Term("error")]),
+    # a filtered disjunction classifies as its lowering: the filter
+    # drives candidates and the shoulds score
+    ast.Filtered(ast.Bool(should=[ast.Term("merge"), ast.Term("error")]),
+                 ast.Term("scan")),
 ]
 
 
